@@ -75,7 +75,9 @@ object Compaction {
     case IntegerType => v.toInt
     case LongType    => v.toLong
     case ShortType   => v.toShort
-    case StringType  => v
+    // Spark escapes `:`, `%`, `=` and friends in dir names (`a%3Ab`)
+    case StringType  =>
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(v)
     case DateType    => java.sql.Date.valueOf(v)
     case BooleanType => v.toBoolean
     case other => throw new IllegalArgumentException(
@@ -182,33 +184,18 @@ object Compaction {
         .drop("__graft_nf", "__graft_z")
     }).select(target.columns.map(col).toIndexedSeq: _*)
 
-    val staging = s"${path.stripSuffix("/")}__graft_staging"
-    // generation bump before the first in-place mutation (the rename
-    // loop below) — the staging write is outside the table and safe
-    spread.write.mode("overwrite").partitionBy(partCols: _*).parquet(staging)
-    FileManifest.bumpGeneration(spark, path)
-    // Commit by renaming the staged directories into place — NOT a second
+    // generation bump before the first in-place mutation (the swap) —
+    // the staging write is outside the table and safe.
+    // Commit by swapping the staged directories into place — NOT a second
     // dataframe write: re-reading the staging files would let the scan
     // coalesce small files back together (maxPartitionBytes packing), and
     // the rewrite would both undo the per-partition file-count target and
     // concatenate z-sorted files in arbitrary order, silently destroying
-    // the clustering this job just paid to restore. The rename keeps the
-    // staged files byte-for-byte (count, boundaries, internal sort); the
-    // delete+rename per directory is the same write-then-swap a table
-    // format's commit protocol performs, minus the manifest.
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    work.foreach { s =>
-      val rel = partCols.zip(s.values)
-        .map { case (c, v) => s"$c=$v" }.mkString("/")
-      val dst = new org.apache.hadoop.fs.Path(s"${path.stripSuffix("/")}/$rel")
-      val src = new org.apache.hadoop.fs.Path(s"$staging/$rel")
-      fs.delete(dst, true)
-      fs.mkdirs(dst.getParent)
-      require(fs.rename(src, dst), s"compaction commit failed renaming $src -> $dst")
-    }
-    val sp = new org.apache.hadoop.fs.Path(staging)
-    fs.delete(sp, true)
+    // the clustering this job just paid to restore. The swap keeps the
+    // staged files byte-for-byte (count, boundaries, internal sort).
+    val staging = Merge.stage(spark, spread, path, partCols)
+    FileManifest.bumpGeneration(spark, path)
+    Merge.commit(spark, staging, path, partCols.size)
     // a stats manifest indexes FILES, and compaction just replaced them in
     // the fragmented directories — refresh inside the commit (delta-sized:
     // only the rewritten directories' new files are re-scanned), same

@@ -89,6 +89,8 @@ object Dedup {
       maxDocFreq: Int = Int.MaxValue
   ): DataFrame = {
     requireIntegralId(docs, idCol, "jaccardPairs")
+    require(maxDocFreq >= 1,
+      s"jaccardPairs: maxDocFreq must be >= 1 (a shingle in more documents is dropped), got $maxDocFreq")
     // ONE shuffle does the doc-frequency cap AND the candidate gather
     // (r17, guide §2.3/2.4 — the d44 winnowing shape): each doc's
     // shingle-set SIZE rides the posting row as the capped_collect
@@ -481,6 +483,8 @@ object Dedup {
       maxDocFreq: Int = Int.MaxValue
   ): DataFrame = {
     requireIntegralId(docs, idCol, "containmentPairs")
+    require(maxDocFreq >= 1,
+      s"containmentPairs: maxDocFreq must be >= 1 (a shingle in more documents is dropped), got $maxDocFreq")
     // same one-shuffle capped gather + payload pair fan-out as
     // [[jaccardPairs]] (r17) — set sizes ride the postings, the two
     // join-backs and the staged persist are gone

@@ -394,7 +394,10 @@ object Graph {
       newCount = n
     }
     e.unpersist()
-    if (d == 0) visited else visited.drop("sk_new")
+    // zero rounds: nothing checkpointed the seed plan (for an incremental
+    // fold, the stored closure ∪ its escape seeds, joins included), so
+    // materialize it here — the result is a stored artifact either way
+    if (d == 0) truncate(visited) else visited.drop("sk_new")
   }
 
   /** INCREMENTAL reachability: fold an edge DELTA into a STORED closure

@@ -53,10 +53,8 @@ object Ivm {
       .agg(aggs.head, aggs.tail: _*)
       .select((keys.map(col) ++ addCols.map(c =>
         col(c).cast(stored.schema(c).dataType).as(c))): _*)
-    val staging = s"${viewPath.stripSuffix("/")}__graft_staging"
-    merged.write.mode("overwrite").parquet(staging)
-    spark.read.parquet(staging).write.mode("overwrite").parquet(viewPath)
-    val sp = new org.apache.hadoop.fs.Path(staging)
-    sp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(sp, true)
+    // written once beside the view, then swapped in whole (the merge reads
+    // the view, so it cannot overwrite it in place)
+    Merge.stageAndCommit(spark, merged, viewPath, Nil)
   }
 }

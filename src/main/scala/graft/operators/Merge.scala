@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Observation, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 /** MERGE INTO semantics (upsert / delete) over a hive-partitioned parquet
@@ -27,14 +29,29 @@ import org.apache.spark.sql.functions._
   *      outside the set are never listed, opened, or footer-read).
   *   3. Matched rows are dropped by a LEFT ANTI join on the key — the only
   *      shuffle, sized by the touched partitions, AQE-skew-splittable.
-  *   4. Survivors ∪ batch are staged to a side directory, then committed
-  *      with dynamic partition overwrite — only the touched directories
-  *      are replaced; every other partition's files are not even read.
-  *      The staging hop exists because Spark (correctly) refuses to
-  *      overwrite a path it is currently reading ("Cannot overwrite a
-  *      path that is also being read from") — the same
-  *      write-new-files-then-swap discipline a table format's commit
-  *      protocol enforces, minus the manifest.
+  *   4. Survivors ∪ batch are written ONCE, partitioned, to a sibling
+  *      staging directory, then committed by a directory swap: for each
+  *      staged leaf directory, delete the same relative path under the
+  *      table and rename the staged leaf into place. Only the touched
+  *      directories are replaced; every other partition's files are not
+  *      even read. Staging is a sibling because the write reads the very
+  *      directories it replaces — writing into the table in place would
+  *      delete its own input (Spark refuses it: "Cannot overwrite a path
+  *      that is also being read from"). The swap is exactly what Spark's
+  *      dynamic-partition-overwrite `commitJob` does per partition
+  *      (delete the final directory, rename the staged one in), so the
+  *      crash window is the same: a crash mid-swap leaves some touched
+  *      directories new and the rest old (or, for the one directory
+  *      caught between its delete and its rename, absent); a crash
+  *      before the swap leaves the table untouched, and the next attempt
+  *      clears the stale staging tree before it writes. Either way the
+  *      generation bump comes first, so a stats manifest fails loud
+  *      rather than serving vanished files. What it saves is the second
+  *      pass — no schema-inference job over the staging directory, no
+  *      second read and write of the rewritten rows. The stats ride the
+  *      single write as two `observe` metrics (pruned target rows;
+  *      written rows tagged batch vs survivor): no job only counts rows
+  *      and nothing is persisted.
   *
   * Idempotence: re-applying the same batch replaces the same rows with
   * the same rows (anti-join drops what the union re-adds), so a retried
@@ -45,13 +62,20 @@ import org.apache.spark.sql.functions._
   * keyed target rows always survive and NULL-keyed batch rows always
   * insert. Ship real keys.
   *
-  * Delete has one trap upsert does not: dynamic partition overwrite only
-  * replaces directories PRESENT in the written data, so a partition whose
-  * rows are ALL deleted produces no output rows, no staged directory — and
-  * would silently keep its old files. [[delete]] removes those directories
-  * explicitly after the commit.
+  * Delete has one trap upsert does not: the swap only replaces
+  * directories PRESENT in the staged output, so a partition whose rows
+  * are ALL deleted produces no staged directory — and would silently keep
+  * its old files. [[delete]] removes those directories explicitly: the
+  * touched directories that exist (from the pruned scan's file listing)
+  * minus the staged leaves — both sets are directory NAMES as Spark wrote
+  * them, so escaped partition values (`p=a%3Ab`, timestamps) compare
+  * correctly.
   */
 object Merge {
+
+  /** Marks batch rows in the union an upsert writes; dropped before the
+    * write, it only feeds the batch-row count observed on that write. */
+  private val BatchTag = "__graft_from_batch"
 
   /** Applied-change summary (all counts are rows/directories actually
     * touched — the observability a MERGE needs to be trusted). */
@@ -96,28 +120,102 @@ object Merge {
       }.reduce(_ && _)
     }.reduceOption(_ || _).getOrElse(lit(false))
 
-  /** Stage `out` beside `path`, then commit it with dynamic partition
-    * overwrite and drop the staging directory. */
-  private[operators] def stageAndCommit(
+  /** Write `out` once, partitioned by `partCols`, to the staging directory
+    * beside `path` (returned). Sibling, never inside `path`: the write may
+    * read `path`, and hive partition discovery wants the table tree to
+    * hold only `col=value` directories. Leftovers of a crashed attempt are
+    * removed first, so none of their files can reach the table. */
+  private[operators] def stage(
       spark: SparkSession, out: DataFrame, path: String,
-      partCols: Seq[String]): Unit = {
-    // Sibling, never inside `path`: parquet's "cannot overwrite a read
-    // path" guard and hive partition discovery both want the target tree
-    // to contain only `col=value` directories.
+      partCols: Seq[String]): String = {
     val staging = s"${path.stripSuffix("/")}__graft_staging"
-    out.write.mode("overwrite").partitionBy(partCols: _*).parquet(staging)
-    spark.read.parquet(staging)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCols: _*).parquet(path)
     rmDir(spark, staging)
+    out.write.mode("overwrite").partitionBy(partCols: _*).parquet(staging)
+    staging
   }
 
+  /** Commit a [[stage]]d write by directory swap: every staged leaf
+    * directory (`depth` levels of `col=value` names; `depth` 0 swaps the
+    * whole directory) replaces the same relative path under `path` —
+    * delete, make the parent, rename — then the staging directory goes.
+    * Per directory this is Spark's dynamic-overwrite `commitJob`, with
+    * its crash window. Returns the relative paths of the swapped leaves,
+    * as written (escaped) names. */
+  private[operators] def commit(
+      spark: SparkSession, staging: String, path: String,
+      depth: Int): Set[String] = {
+    val stagingP = new Path(staging)
+    val fs = stagingP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // Spark's listing rule: `_`/`.` names are metadata (`_SUCCESS`,
+    // `_temporary`, checksums) unless `_` starts a `col=value` name
+    def isData(name: String): Boolean =
+      !name.startsWith(".") && (!name.startsWith("_") || name.contains("="))
+    def leaves(dir: Path, d: Int): Seq[List[String]] =
+      if (d == 0) Seq(Nil)
+      else fs.listStatus(dir).toSeq
+        .filter(st => st.isDirectory && isData(st.getPath.getName))
+        .flatMap(st =>
+          leaves(st.getPath, d - 1).map(st.getPath.getName :: _))
+    val rels = leaves(stagingP, depth)
+    val tableP = new Path(path)
+    rels.foreach { rel =>
+      val src = rel.foldLeft(stagingP)(new Path(_, _))
+      val dst = rel.foldLeft(tableP)(new Path(_, _))
+      fs.delete(dst, true)
+      fs.mkdirs(dst.getParent)
+      require(fs.rename(src, dst), s"Merge commit: rename $src -> $dst failed")
+    }
+    fs.delete(stagingP, true)
+    rels.map(_.mkString("/")).toSet
+  }
+
+  /** [[stage]] then [[commit]] — for callers that need nothing between
+    * the write and the swap. */
+  private[operators] def stageAndCommit(
+      spark: SparkSession, out: DataFrame, path: String,
+      partCols: Seq[String]): Unit =
+    commit(spark, stage(spark, out, path, partCols), path, partCols.size)
+
   private[operators] def rmDir(spark: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
+    val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(p, true)
   }
+
+  /** Relative paths (as written, escaped) of the leaf directories that a
+    * partition-pruned scan of the table reads — the pruned file index's
+    * listing, which the read already holds: no job, no extra listing. */
+  private def scannedLeaves(pruned: DataFrame, depth: Int): Set[String] = {
+    val scans = pruned.queryExecution.sparkPlan.collect {
+      case s: FileSourceScanExec => s
+    }
+    // without the listing, emptied directories would silently survive
+    require(scans.nonEmpty, "Merge.delete needs a file-source parquet scan " +
+      s"of the table, got:\n${pruned.queryExecution.sparkPlan}")
+    scans.flatMap(s => s.relation.location.listFiles(s.partitionFilters, Nil))
+      .flatMap(_.files.map { f =>
+        Iterator.iterate(f.getPath.getParent)(_.getParent).take(depth)
+          .map(_.getName).toList.reverse.mkString("/")
+      }).toSet
+  }
+
+  /** An `observe` metric of the write that just ran, or `fallback` when it
+    * did not arrive: delivery is best-effort, and a plan rewrite that
+    * removes the observed node (AQE's empty-relation propagation) takes
+    * the metric with it. Callers pass a count over the still-unchanged
+    * table or staging directory, so the fallback must run before the
+    * swap. */
+  private def observed(obs: Observation, name: String)(fallback: => Long): Long =
+    GraftBridge.observedOrEmpty(obs).get(name) match {
+      case Some(v: Long) => v
+      case _ => fallback
+    }
+
+  /** Rows staged at `staging`, read with the written frame's schema (no
+    * inference job; an empty staged write has no files to infer from). */
+  private def stagedRows(
+      spark: SparkSession, out: DataFrame, staging: String): Long =
+    spark.read.schema(out.schema).parquet(staging).count()
 
   /** Upsert `batch` into the partitioned parquet table at `path`: rows
     * matching on `keyCols` are replaced by their batch row, the rest of the
@@ -141,22 +239,29 @@ object Merge {
 
     val target = spark.read.parquet(path)
     val affected = target.filter(touchedFilter(tuples, partCols))
-    val before = affected.count()
-    val survivors = affected.join(
-      batch.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-    val out = survivors.unionByName(batch.select(target.columns.map(col): _*))
-    val written = out.persist()
-    val nWritten = written.count()
+    val targetObs, outObs = Observation()
+    val survivors = affected.observe(targetObs, count(lit(1)).as("n"))
+      .join(batch.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
+    val out = survivors.withColumn(BatchTag, lit(false))
+      .unionByName(batch.select(target.columns.map(col): _*)
+        .withColumn(BatchTag, lit(true)))
+      .observe(outObs, count(lit(1)).as("n"),
+        count(when(col(BatchTag), 1)).as("batch"))
+      .drop(BatchTag)
+    val staging = stage(spark, out, path, partCols)
+    GraftBridge.drainListenerBus(spark)
+    val before = observed(targetObs, "n")(affected.count())
+    val nWritten = observed(outObs, "n")(stagedRows(spark, out, staging))
+    val nBatch = observed(outObs, "batch")(batch.count())
     // generation bump BEFORE the first file mutation: a crash anywhere
     // between here and the refresh leaves table gen ≠ manifest gen, and
     // every manifest read path fails loud instead of serving vanished
     // files (FileManifest's crash-safety contract)
     FileManifest.bumpGeneration(spark, path)
-    stageAndCommit(spark, written, path, partCols)
-    written.unpersist()
+    commit(spark, staging, path, partCols.size)
     refreshManifest(spark, path, manifestPath)
     MergeStats(tuples.length.toLong, before,
-      rowsReplaced = before - (nWritten - batch.count()) max 0L,
+      rowsReplaced = before - (nWritten - nBatch) max 0L,
       rowsWritten = nWritten)
   }
 
@@ -172,7 +277,7 @@ object Merge {
   /** Delete rows matching `keys` on `keyCols`. `keys` must carry the
     * partition columns (the prune set); only those directories are read
     * and rewritten. Partitions whose rows are ALL deleted are removed
-    * explicitly (the dynamic-overwrite blind spot documented above). */
+    * explicitly (the swap's blind spot documented above). */
   def delete(
       spark: SparkSession,
       path: String,
@@ -187,23 +292,21 @@ object Merge {
 
     val target = spark.read.parquet(path)
     val affected = target.filter(touchedFilter(tuples, partCols))
-    val before = affected.count()
-    val survivors = affected.join(
-      keys.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-    val written = survivors.persist()
-    val nWritten = written.count()
-    // bump BEFORE any mutation (commit AND the emptied-directory removals
-    // below are one logical commit; the window must cover both)
+    val existing = scannedLeaves(affected, partCols.size)
+    val targetObs, outObs = Observation()
+    val survivors = affected.observe(targetObs, count(lit(1)).as("n"))
+      .join(keys.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
+      .observe(outObs, count(lit(1)).as("n"))
+    val staging = stage(spark, survivors, path, partCols)
+    GraftBridge.drainListenerBus(spark)
+    val before = observed(targetObs, "n")(affected.count())
+    val nWritten = observed(outObs, "n")(stagedRows(spark, survivors, staging))
+    // bump BEFORE any mutation (the swap AND the emptied-directory
+    // removals below are one logical commit; the window must cover both)
     FileManifest.bumpGeneration(spark, path)
-    if (nWritten > 0) stageAndCommit(spark, written, path, partCols)
-    // Directories the delete emptied entirely: touched minus still-present.
-    val remaining = partTuples(written, partCols).toSet
-    written.unpersist()
-    tuples.filterNot(remaining.contains).foreach { t =>
-      val dir = partCols.zip(t)
-        .map { case (c, v) => s"$c=$v" }.mkString("/", "/", "")
-      rmDir(spark, path + dir)
-    }
+    val staged = commit(spark, staging, path, partCols.size)
+    // Directories the delete emptied entirely: touched minus re-staged.
+    (existing -- staged).foreach(rel => rmDir(spark, s"${path.stripSuffix("/")}/$rel"))
     refreshManifest(spark, path, manifestPath)
     MergeStats(tuples.length.toLong, before,
       rowsReplaced = before - nWritten, rowsWritten = nWritten)

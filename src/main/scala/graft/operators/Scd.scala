@@ -83,21 +83,13 @@ object Scd {
     val staged = dim.withColumn(FromCol, lit(version))
       .withColumn(ToCol, lit(null).cast("long"))
       .withColumn(PartCol, lit(Current))
-    val staging = s"${path.stripSuffix("/")}__graft_staging"
-    if (dim.isEmpty)
-      // an empty partitioned layout has no col=value dirs to infer a schema
-      // from (the writeLayout degenerate case) — keep the schema
-      // self-describing with a plain write of the zero-row frame
-      staged.write.mode("overwrite").parquet(staging)
-    else
-      staged.write.mode("overwrite").partitionBy(PartCol).parquet(staging)
+    // an empty partitioned layout has no col=value dirs to infer a schema
+    // from (the writeLayout degenerate case) — keep the schema
+    // self-describing with a plain write of the zero-row frame
+    val staging = Merge.stage(spark, staged, path,
+      if (dim.isEmpty) Nil else Seq(PartCol))
     FileManifest.bumpGeneration(spark, staging)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    require(fs.rename(new org.apache.hadoop.fs.Path(staging),
-      new org.apache.hadoop.fs.Path(path)),
-      s"Scd.init: commit rename $staging -> $path failed")
+    Merge.commit(spark, staging, path, depth = 0)
   }
 
   /** The open slice — one row per key, business columns + validity stamps.
@@ -185,7 +177,7 @@ object Scd {
       .withColumn(PartCol, lit(Current))
       .select(outCols.map(col): _*)
 
-    // one staged dynamic-overwrite commit covering exactly {cur, <v>} —
+    // one staged write swapped in over exactly {cur, <v>} —
     // generation-stamped like every in-place table mutation, so a stats
     // manifest maintained over the dimension fails loud (not stale)
     // until its owner refreshes it after the commit

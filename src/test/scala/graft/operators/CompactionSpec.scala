@@ -40,6 +40,21 @@ class CompactionSpec extends SparkSpec {
     assert(got == want, "compaction must be row-identical")
   }
 
+  test("escaped string partition values: the fragmented directory is compacted in place") {
+    val path = tmp("graft-compact-esc")
+    // `a:b` is written `p=a%3Ab`: the prune filter must match the value,
+    // and the swap must land on the directory as written
+    (1 to 200).map(i => (i.toLong, "a:b")).toDF("id", "p")
+      .repartition(6).write.partitionBy("p").parquet(path)
+    assert(fileSig(path, "p=a%3Ab").size == 6)
+    val st = Compaction.compact(spark, path, Seq("p"), targetBytes = 1L << 30)
+    assert(st == Compaction.CompactStats(1, 6, 1))
+    assert(new java.io.File(path).list().filter(_.startsWith("p=")).toSeq
+      == Seq("p=a%3Ab"))
+    assert(spark.read.parquet(path).select("id", "p").as[(Long, String)]
+      .collect().toSet == (1 to 200).map(i => (i.toLong, "a:b")).toSet)
+  }
+
   test("respects the per-partition size target (multiple output files when bytes demand it)") {
     val path = tmp("graft-compact-sz")
     (1 to 20000).map(i => (i.toLong, "x" * 100, 1)).toDF("id", "v", "yr")

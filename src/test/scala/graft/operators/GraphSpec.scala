@@ -290,6 +290,22 @@ class GraphSpec extends SparkSpec {
     assert(empty == storedD)
   }
 
+  test("incrementalReachable: a delta that reaches nothing still returns a materialized closure") {
+    import spark.implicits._
+    val old = Seq((0L, 1L), (1L, 2L), (5L, 6L)).toDF("src", "dst")
+    val stored = Graph.reachableFrom(old, Seq(0L).toDF("node"))
+    // 5 -> 6 leaves no node of the closure {0, 1, 2}: zero BFS rounds
+    val delta = Seq((5L, 6L)).toDF("src", "dst")
+    val folded = Graph.incrementalReachable(stored, old, delta)
+    // the zero-round exit must checkpoint too: reading the stored
+    // artifact must not replay the seed plan's semi/anti joins
+    val plan = folded.queryExecution.executedPlan.toString
+    assert(plan.contains("Scan ExistingRDD") && !plan.contains("Join"),
+      s"zero-round fold returned an unmaterialized plan:\n$plan")
+    assert(folded.as[(Long, Int)].collect().toMap ==
+      Map(0L -> 0, 1L -> 1, 2L -> 2))
+  }
+
   test("shortestPaths: cheap long path beats costly short path; parallel edges keep the cheapest") {
     import spark.implicits._
     // 0→3 direct costs 10; 0→1→2→3 costs 1+1+1 = 3 — the case hop-count

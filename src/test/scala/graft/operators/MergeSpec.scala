@@ -153,4 +153,106 @@ class MergeSpec extends SparkSpec {
     assert(st1.rowsWritten == 0 && st2.rowsWritten == 0)
     assert(Seq("yr=2023", "yr=2024", "yr=2025").map(fileSig(path, _)) == sig)
   }
+
+  test("escaped partition values: delete removes emptied dirs by their written names") {
+    // Spark escapes some characters of partition values in directory
+    // names (`a:b` is written `p=a%3Ab`): the emptied set must compare
+    // names as written, never re-format `col=value`
+    val path = tmp("graft-merge-esc")
+    val rows = Seq((1L, "a:b"), (2L, "x y"), (3L, "plain"), (4L, "plain"))
+      .toDF("id", "p")
+    graft.sources.Sinks.parquetPartitioned(rows, path, Seq("p"))
+    val sigPlain = fileSig(path, "p=plain")
+
+    val up = Merge.upsert(spark, path,
+      Seq((1L, "a:b"), (9L, "a:b")).toDF("id", "p"), Seq("id"), Seq("p"))
+    assert(up == Merge.MergeStats(1L, 1L, 1L, 2L))
+    val st = Merge.delete(spark, path,
+      Seq((1L, "a:b"), (9L, "a:b"), (2L, "x y")).toDF("id", "p"),
+      Seq("id"), Seq("p"))
+    assert(st == Merge.MergeStats(2L, 3L, 3L, 0L))
+    assert(spark.read.parquet(path).select("id").as[Long].collect().toSet
+      == Set(3L, 4L))
+    assert(new java.io.File(path).list().filterNot(_.startsWith("_"))
+      .filterNot(_.startsWith(".")).toSet == Set("p=plain"))
+    assert(fileSig(path, "p=plain") == sigPlain)
+  }
+
+  test("date and timestamp partitions: upsert swaps and delete empties the right leaves") {
+    import java.sql.{Date, Timestamp}
+    val path = tmp("graft-merge-dt")
+    val (d1, d2) = (Date.valueOf("2024-01-01"), Date.valueOf("2024-01-02"))
+    val (t1, t2) = (Timestamp.valueOf("2024-01-01 10:30:00"),
+      Timestamp.valueOf("2024-01-01 11:45:00"))
+    val rows = Seq((1L, d1, t1, "a"), (2L, d1, t2, "b"), (3L, d2, t1, "c"))
+      .toDF("id", "d", "ts", "v")
+    graft.sources.Sinks.parquetPartitioned(rows, path, Seq("d", "ts"))
+    val leaves = new java.io.File(s"$path/d=2024-01-01").list().sorted.toSeq
+    assert(leaves.size == 2)
+
+    val up = Merge.upsert(spark, path,
+      Seq((1L, d1, t1, "A!")).toDF("id", "d", "ts", "v"),
+      Seq("id"), Seq("d", "ts"))
+    assert(up == Merge.MergeStats(1L, 1L, 1L, 1L))
+    // empties (d1, t2) and (d2, t1); (d1, t1) keeps its one row
+    val st = Merge.delete(spark, path,
+      Seq((2L, d1, t2), (3L, d2, t1)).toDF("id", "d", "ts"),
+      Seq("id"), Seq("d", "ts"))
+    assert(st == Merge.MergeStats(2L, 2L, 2L, 0L))
+    assert(spark.read.parquet(path).select("id", "v").as[(Long, String)]
+      .collect().toSeq == Seq((1L, "A!")))
+    assert(!new java.io.File(s"$path/d=2024-01-02").list()
+      .exists(_.startsWith("ts=")))
+    assert(new java.io.File(s"$path/d=2024-01-01").list().toSeq == leaves.take(1))
+  }
+
+  test("upsert writes every row once: task recordsWritten equals rowsWritten") {
+    val path = tmp("graft-merge-once")
+    graft.sources.Sinks.parquetPartitioned(base(), path, Seq("yr"))
+    val batch = Seq((1L, "A!", 2023, 11.0), (4L, "D!", 2024, 44.0),
+      (99L, "new", 2024, 99.0)).toDF("id", "v", "yr", "amt")
+    val group = s"merge-once-${java.util.UUID.randomUUID()}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val written = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          stages.add(e.stageInfo.stageId)
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          written.addAndGet(e.taskMetrics.outputMetrics.recordsWritten)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "one upsert")
+      val st = try Merge.upsert(spark, path, batch, Seq("id"), Seq("yr"))
+        finally sc.clearJobGroup()
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      assert(st == Merge.MergeStats(2L, 5L, 2L, 6L))
+      assert(!stages.isEmpty)
+      assert(written.get == st.rowsWritten,
+        s"recordsWritten ${written.get} != rowsWritten ${st.rowsWritten}")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a crashed attempt's leftover staging tree never reaches the table") {
+    val path = tmp("graft-merge-leftover")
+    graft.sources.Sinks.parquetPartitioned(base(), path, Seq("yr"))
+    // what a crash between the staged write and the swap leaves behind: a
+    // staged leaf for a touched partition and one for an untouched one
+    Seq((500L, "stale", 2024, 0.0), (501L, "stale", 2030, 0.0))
+      .toDF("id", "v", "yr", "amt")
+      .write.partitionBy("yr").parquet(s"${path}__graft_staging")
+    val batch = Seq((4L, "D!", 2024, 44.0)).toDF("id", "v", "yr", "amt")
+    val st = Merge.upsert(spark, path, batch, Seq("id"), Seq("yr"))
+    assert(st == Merge.MergeStats(1L, 2L, 1L, 2L))
+    assert(spark.read.parquet(path).select("id").as[Long].collect().toSet
+      == Set(1L, 2L, 3L, 4L, 5L, 6L))
+    assert(!new java.io.File(s"$path/yr=2030").exists())
+    assert(!new java.io.File(s"${path}__graft_staging").exists())
+  }
 }

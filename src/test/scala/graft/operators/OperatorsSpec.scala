@@ -170,6 +170,17 @@ class DedupSpec extends SparkSpec {
     assert(jac == 0L, "Jaccard at 0.5 misses the quote-in-wrapper pair")
   }
 
+  test("pair finders reject maxDocFreq < 1 by name, not with an analyzer error") {
+    for ((fn, call) <- Seq[(String, Int => Any)](
+        "jaccardPairs" -> (m => Dedup.jaccardPairs(docs, maxDocFreq = m)),
+        "containmentPairs" -> (m => Dedup.containmentPairs(docs, maxDocFreq = m)));
+        m <- Seq(0, -1)) {
+      val e = intercept[IllegalArgumentException](call(m))
+      assert(e.getMessage.contains(s"$fn: maxDocFreq must be >= 1") &&
+        e.getMessage.contains(s"got $m"), e.getMessage)
+    }
+  }
+
   test("collapseClusters keeps one best representative per cluster, singletons pass") {
     val cDocs = Seq(
       TestDoc(1, "short"),
