@@ -16,117 +16,16 @@ import org.apache.spark.storage.StorageLevel
   *   2. label(u) := label(label(u))  — pointer jumping against the label
   *      table itself, which collapses chains so convergence needs
   *      O(log(diameter)) rounds rather than O(diameter).
-  * Rounds stop when no label changed. Lineage is truncated every round:
-  * without it the plan doubles per iteration and Catalyst analysis time,
-  * not the data, becomes the bottleneck. By default truncation uses
-  * `localCheckpoint` (executor-local blocks — fast, but lost under
-  * executor churn); pass `checkpointDir` to truncate via a durable parquet
-  * round-trip instead (self-cleaning, round n-1 deleted once round n is
-  * materialized) — the executable form of the cluster-robustness contract,
-  * same labels either way.
+  * Rounds stop when no label changed. The loop is [[Fixpoint]]: every round
+  * is materialized (localCheckpoint, or a durable parquet round-trip with
+  * `checkpointDir` — same labels either way) and the changed labels are
+  * counted inside that same job.
   *
   * 100 TB shape: every round's cost is two key-bounded shuffles over the
   * edge list (|E| for dedup output is orders of magnitude below |corpus|),
   * and the label table is one row per vertex that APPEARS in an edge —
   * singleton documents never enter the computation.
   */
-/** Per-round lineage truncation for the iterative-graph family — the shared
-  * mechanism [[Components.connected]]/[[Graph.pageRank]] inline: without a
-  * truncation the plan doubles per round and Catalyst analysis, not data,
-  * becomes the bottleneck. `localCheckpoint` by default (executor-local
-  * blocks); with a `checkpointDir`, a durable parquet round-trip that
-  * deletes round n−1 as soon as round n is materialized, so on-disk
-  * accumulation is O(|state|), not O(rounds·|state|). */
-/** [[Truncator]] that also RELEASES the superseded round's checkpoint
-  * blocks as soon as the next round materializes. In local-checkpoint
-  * mode each round's blocks otherwise pin executor storage for the
-  * session's lifetime until LRU pressure — the survivor-cache leak class
-  * pareto3d closed in r15, factored here (r16) so every iterative
-  * operator shares it instead of re-inlining the bookkeeping
-  * (shortestPaths carried the only copy). Each materialized truncation
-  * supersedes the previous one (the new checkpoint is self-contained),
-  * so the release is safe by construction; the FINAL checkpoint — the
-  * one backing the returned frame — is never released here. Durable
-  * (checkpointDir) mode adds no cached blocks; the file-deletion
-  * self-cleaning inside [[Truncator]] already covers it. */
-private[operators] final class ReleasingTruncator(
-    spark: org.apache.spark.sql.SparkSession,
-    checkpointDir: Option[String],
-    tag: String) {
-  private val truncate = new Truncator(spark, checkpointDir, tag)
-  private val prevCp = scala.collection.mutable.ListBuffer
-    .empty[org.apache.spark.rdd.RDD[_]]
-  def apply(df: DataFrame): DataFrame = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val out = truncate(df) // eager in local mode; durable adds no blocks
-    val added = (sc.getPersistentRDDs -- before).values
-    prevCp.foreach(_.unpersist(false))
-    prevCp.clear()
-    prevCp ++= added
-    out
-  }
-}
-
-/** Convergence metering FUSED into the truncation action (guide §1.2/2.4:
-  * the iterative family's per-round fixed cost is jobs, not bytes, at the
-  * small-round end — and one job per round is pure probe overhead). The
-  * "did anything change" aggregate rides the SAME job that materializes
-  * the round — an `observe` metric collected while the checkpoint/write
-  * executes — instead of a second filter+count job over the checkpointed
-  * blocks. Results are identical: the metric is a sum over exactly the
-  * rows the checkpoint wrote. Falls back to the plain count when the
-  * metric does not arrive (listener delivery is asynchronous;
-  * `drainListenerBus` makes the common path deterministic, the fallback
-  * keeps the probe an instrument rather than a dependency). */
-private[operators] object FusedProbe {
-  import org.apache.spark.sql.Column
-  /** Truncate `df` and return (truncated frame, count of rows where
-    * `flag` is true) — one materializing job total. */
-  def truncateCounting(
-      truncate: ReleasingTruncator,
-      df: DataFrame,
-      flag: Column): (DataFrame, Long) = {
-    val spark = df.sparkSession
-    val probe = org.apache.spark.sql.Observation()
-    val out = truncate(
-      df.observe(probe, sum(when(flag, 1L).otherwise(0L)).as("n")))
-    org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-    val n = org.apache.spark.sql.GraftBridge.observedOrEmpty(probe)
-        .get("n") match {
-      case Some(v: Long) => v
-      case Some(null) => 0L // sum over zero rows
-      case _ => out.filter(flag).count()
-    }
-    (out, n)
-  }
-}
-
-private[operators] final class Truncator(
-    spark: org.apache.spark.sql.SparkSession,
-    checkpointDir: Option[String],
-    tag: String) {
-  private val runDir = checkpointDir.map(d =>
-    s"$d/graft-$tag-${java.util.UUID.randomUUID().toString.take(8)}")
-  private var round = 0
-  private var prevPath: Option[String] = None
-  def apply(df: DataFrame): DataFrame = runDir match {
-    case Some(base) =>
-      val p = s"$base/round-$round"
-      round += 1
-      df.write.mode("overwrite").parquet(p)
-      val back = spark.read.parquet(p)
-      prevPath.foreach { old =>
-        val path = new org.apache.hadoop.fs.Path(old)
-        path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(path, true)
-      }
-      prevPath = Some(p)
-      back
-    case None => df.localCheckpoint(true)
-  }
-}
-
 object Components {
 
   /** @param edges undirected edge list; (srcCol, dstCol) pairs, any
@@ -135,12 +34,13 @@ object Components {
     *              label table as parquet under a per-call subdirectory of
     *              this path and reads it back (survives executor loss — the
     *              cluster mode). Each round's files are deleted as soon as
-    *              the next round is materialized, so on-disk accumulation is
-    *              O(|V|), not O(rounds·|V|); only the FINAL round's files
-    *              remain (they back the returned DataFrame) — callers may
-    *              delete the `graft-cc-*` subdirectory once the result is
-    *              consumed. No SparkContext-global state is touched. When
-    *              None, `localCheckpoint` (single-box / churn-free mode).
+    *              the next round is materialized ([[Fixpoint]]), so on-disk
+    *              accumulation is O(|V|), not O(rounds·|V|); only the FINAL
+    *              round's files remain (they back the returned DataFrame) —
+    *              callers may delete the `graft-cc-*` subdirectory once the
+    *              result is consumed. No SparkContext-global state is
+    *              touched. When None, `localCheckpoint` (single-box /
+    *              churn-free mode).
     * @return one row per vertex present in `edges`: (id, comp) where comp is
     *         the smallest vertex id reachable from id. */
   def connected(
@@ -150,13 +50,6 @@ object Components {
       maxIter: Int = 30,
       checkpointDir: Option[String] = None
   ): DataFrame = {
-    val spark = edges.sparkSession
-    // Parquet write + read-back (Truncator's durable mode) is the analog
-    // of df.checkpoint(eager = true): the write is an action (the round is
-    // fully materialized), the read-back has zero lineage, and the
-    // previous round's blocks — consumed entirely by this write — are
-    // deleted immediately.
-    val truncate = new ReleasingTruncator(spark, checkpointDir, "cc")
     val sym = edges
       .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
     val und = sym.union(sym.select(col("v").as("u"), col("u").as("v")))
@@ -164,11 +57,9 @@ object Components {
     // Seed with round 1 fused in: against identity labels the neighbor-min
     // is just min(v), so comp0 = min(u, min neighbor) costs one groupBy
     // instead of a full propagate+jump round.
-    var labels = truncate(und.groupBy("u")
-      .agg(least(col("u"), min(col("v"))).as("comp")))
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIter) {
+    val seed = und.groupBy("u").agg(least(col("u"), min(col("v"))).as("comp"))
+    val fix = Fixpoint.run(seed, maxIter, checkpointDir, "cc",
+        changed = Some("chg"), materializeInit = true) { (labels, _) =>
       // r17 (guide §2.4): the neighbor-min aggregate and the left join
       // back onto the label table fold into ONE aggregation — each
       // vertex's own label rides the union as an origin-0 row, so
@@ -184,25 +75,19 @@ object Components {
         .groupBy("u")
         .agg(min(col("c")).as("comp"),
           min(when(col("o") === 0, col("c"))).as("prev"))
-      // pointer jumping: follow the label one hop through the label table.
-      // Convergence is detected with a carried `chg` flag summed INSIDE the
-      // checkpoint job (FusedProbe) — no extra probe job per round.
-      val jumped = propagated.as("l")
+      // pointer jumping: follow the label one hop through the label table;
+      // `chg` marks the labels this round moved
+      propagated.as("l")
         .join(propagated.select(col("u").as("c0"), col("comp").as("cc")).as("m"),
           col("l.comp") === col("m.c0"), "left")
         .select(col("l.u").as("u"),
           coalesce(col("m.cc"), col("l.comp")).as("comp"),
           (coalesce(col("m.cc"), col("l.comp")) =!= col("l.prev")).as("chg"))
-      val (next, nChanged) =
-        FusedProbe.truncateCounting(truncate, jumped, col("chg"))
-      changed = nChanged
-      labels = next.drop("chg")
-      it += 1
     }
     und.unpersist()
-    require(changed == 0,
+    require(fix.converged,
       s"Components.connected did not converge in $maxIter rounds")
-    labels.select(col("u").as("id"), col("comp"))
+    fix.state.select(col("u").as("id"), col("comp"))
   }
 
   /** Incremental connected components: fold an edge DELTA into STORED

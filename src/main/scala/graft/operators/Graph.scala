@@ -32,11 +32,14 @@ import org.apache.spark.storage.StorageLevel
   * map-side-combined |E|→|V| aggregate (contributions by dst), one |V|
   * left join back onto the node set — all key-bounded shuffles, no
   * all-pairs anything. The edge list (joined once with its out-weights)
-  * persists across rounds; rank lineage is truncated every round
-  * (localCheckpoint by default, durable parquet round-trip via
-  * `checkpointDir` under executor churn — [[Components]]' contract),
-  * without which the plan doubles per iteration and Catalyst analysis,
-  * not data, becomes the bottleneck. Fixed iteration count, not a
+  * persists across rounds; rank lineage is truncated every third round
+  * and after the last ([[Fixpoint]]: localCheckpoint by default, durable
+  * parquet round-trip via `checkpointDir` under executor churn), without
+  * which the plan doubles per iteration and Catalyst analysis, not data,
+  * becomes the bottleneck. The rounds in between stay lazy and run as one
+  * job at the next truncation (each lazy round deepens the plan by ~3
+  * joins; 3 is where the saved jobs still beat the longer analysis).
+  * Fixed iteration count, not a
   * convergence test: at 100 TB a convergence check is an extra |V|
   * action per round, and fixed-K is what makes the result replayable.
   */
@@ -56,17 +59,6 @@ object Graph {
     *              web-scale |V| (leave false: both sides shuffle on the
     *              join key and AQE handles skew). Results identical
     *              either way — it only moves the data.
-    * @param truncateEvery rounds between lineage truncations. Rounds in
-    *              between stay LAZY — they chain into one composed plan
-    *              and execute as a single job at the next truncation, so
-    *              the per-round fixed cost (job scheduling, checkpoint
-    *              materialization) is paid iterations/truncateEvery
-    *              times, not iterations times. The plan deepens by ~3
-    *              joins per untruncated round: 2-4 is the sweet spot;
-    *              past that Catalyst analysis time starts buying back
-    *              what the saved jobs gained. Results are identical at
-    *              any setting (it only moves WHERE materialization
-    *              happens).
     * @return one row per node appearing in `edges`:
     *         (node, rank_millionths). */
   def pageRank(
@@ -76,13 +68,9 @@ object Graph {
       wCol: String = "w",
       iterations: Int = 6,
       checkpointDir: Option[String] = None,
-      truncateEvery: Int = 3,
       smallVertexSet: Boolean = false
   ): DataFrame = {
     require(iterations >= 1, s"iterations must be positive, got $iterations")
-    require(truncateEvery >= 1, s"truncateEvery must be positive, got $truncateEvery")
-    val spark = edges.sparkSession
-    val truncate = new ReleasingTruncator(spark, checkpointDir, "pr")
     val e0 = edges.groupBy(
         col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .agg(sum(col(wCol).cast("long")).as("w"))
@@ -93,25 +81,25 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     def maybeBcast(df: DataFrame): DataFrame =
       if (smallVertexSet) broadcast(df) else df
-    var pr = nodes.select(col("node"), lit(1000000L).as("rank"))
-    for (i <- 1 to iterations) {
+    val init = nodes.select(col("node"), lit(1000000L).as("rank"))
+    val fix = Fixpoint.run(init, iterations, checkpointDir, "pr",
+        cadence = 3) { (pr, _) =>
       // r17 (guide §2.4): per-edge contributions and the zero-contribution
       // node floor fold in ONE sum aggregation — the old plan aggregated
       // contributions by dst and then left-joined them back onto the node
       // set (an extra join + broadcast build per round). Integer sums are
       // order-free, so adding the nodes' 0-rows changes nothing.
-      val next = nodes.select(col("node"), lit(0L).as("s"))
+      nodes.select(col("node"), lit(0L).as("s"))
         .unionByName(e
           .join(maybeBcast(pr.withColumnRenamed("node", "src")), "src")
           .select(col("dst").as("node"), expr("(rank * w) DIV wout").as("s")))
         .groupBy("node").agg(sum(col("s")).as("s"))
         .select(col("node"),
           (lit(150000L) + expr("(850000 * s) DIV 1000000")).as("rank"))
-      pr = if (i % truncateEvery == 0 || i == iterations) truncate(next) else next
     }
     e.unpersist()
     nodes.unpersist()
-    pr.select(col("node"), col("rank").as("rank_millionths"))
+    fix.state.select(col("node"), col("rank").as("rank_millionths"))
   }
 
   /** Synchronous weighted LABEL PROPAGATION communities (Raghavan et al.
@@ -144,7 +132,8 @@ object Graph {
     * (dst, label)-key aggregate, one argmax per node (min over a
     * (-weight, label) struct — no window, no sort), one |V| left join;
     * `smallVertexSet` broadcasts the label table so the edges never
-    * move; lineage truncates every `truncateEvery` rounds.
+    * move; lineage truncates every second round and after the last
+    * ([[Fixpoint]]).
     *
     * @return one row per node appearing in the (symmetrized, de-looped)
     *         edge list: (node, label) — nodes sharing a label are one
@@ -156,13 +145,9 @@ object Graph {
       wCol: String = "w",
       iterations: Int = 4,
       checkpointDir: Option[String] = None,
-      truncateEvery: Int = 2,
       smallVertexSet: Boolean = false
   ): DataFrame = {
     require(iterations >= 1, s"iterations must be positive, got $iterations")
-    require(truncateEvery >= 1, s"truncateEvery must be positive, got $truncateEvery")
-    val spark = edges.sparkSession
-    val truncate = new ReleasingTruncator(spark, checkpointDir, "lpa")
     val dir0 = edges.select(
       col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"),
       col(wCol).cast("long").as("w"))
@@ -176,8 +161,9 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     def maybeBcast(df: DataFrame): DataFrame =
       if (smallVertexSet) broadcast(df) else df
-    var lbl = nodes.select(col("node"), col("node").as("lbl"))
-    for (i <- 1 to iterations) {
+    val init = nodes.select(col("node"), col("node").as("lbl"))
+    val fix = Fixpoint.run(init, iterations, checkpointDir, "lpa",
+        cadence = 2) { (lbl, _) =>
       // r17 (guide §2.4): the vote argmax and the keep-old-label fallback
       // fold into the second aggregation — carried labels ride as
       // lowest-priority vote rows (origin 1 behind every real vote's 0),
@@ -185,8 +171,7 @@ object Graph {
       // per-round broadcast build) disappears. A node with any real vote
       // picks the same (max weight, min label) winner; a node with none
       // keeps its label via its carried row.
-      val next = e
-        .join(maybeBcast(lbl.withColumnRenamed("node", "src")), "src")
+      e.join(maybeBcast(lbl.withColumnRenamed("node", "src")), "src")
         .groupBy(col("dst"), col("lbl")).agg(sum(col("w")).as("cw"))
         .select(col("dst").as("node"), lit(0).as("o"), (-col("cw")).as("nc"),
           col("lbl"))
@@ -195,11 +180,10 @@ object Graph {
         .groupBy(col("node"))
         .agg(min(struct(col("o"), col("nc"), col("lbl").as("l"))).as("m"))
         .select(col("node"), col("m.l").as("lbl"))
-      lbl = if (i % truncateEvery == 0 || i == iterations) truncate(next) else next
     }
     e.unpersist()
     nodes.unpersist()
-    lbl.select(col("node"), col("lbl").as("label"))
+    fix.state.select(col("node"), col("lbl").as("label"))
   }
 
   /** Exact triangle count via DEGREE ORIENTATION — the third member of
@@ -291,7 +275,7 @@ object Graph {
     * never to the walk count. Terminates on any graph (cycles included)
     * in ≤ eccentricity(sources) rounds; per round one key-bounded
     * |frontier⋈E| join + one anti join, lineage truncated every round
-    * ([[Truncator]], the iterative-family contract).
+    * ([[Fixpoint]], the iterative-family contract).
     *
     * @param sources one-column DataFrame of seed node ids (any integral
     *                type; duplicates collapse). Seeds absent from the
@@ -314,25 +298,23 @@ object Graph {
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
     val seedCol = sources.columns.head
     val seeds = sources.select(col(seedCol).cast("long").as("node")).distinct()
-      .withColumn("depth", lit(0))
-    bfs(edges, srcCol, dstCol, visited0 = seeds, frontier0 = seeds.select("node"),
-      maxDepth, checkpointDir, smallFrontier)
+      .select(col("node"), lit(0).as("depth"), lit(true).as("sk_new"))
+    bfs(edges, srcCol, dstCol, seeds, maxDepth, checkpointDir, smallFrontier)
   }
 
-  /** The shared level-synchronous BFS loop: expand `frontier0` over the
-    * edge list, never re-entering `visited0` (which must contain the
-    * frontier rows). Returns visited0 ∪ everything newly reached, each
-    * new node stamped with the round it first arrived in. */
+  /** The shared level-synchronous BFS loop: expand the frontier (the
+    * `visited0` rows whose `sk_new` is true) over the edge list, never
+    * re-entering a visited node. Returns (node, depth) for visited0 ∪
+    * everything newly reached, each new node stamped with the round it
+    * first arrived in. */
   private def bfs(
       edges: DataFrame,
       srcCol: String, dstCol: String,
-      visited0: DataFrame, frontier0: DataFrame,
+      visited0: DataFrame,
       maxDepth: Int,
       checkpointDir: Option[String],
-      smallFrontier: Boolean = false
+      smallFrontier: Boolean
   ): DataFrame = {
-    val spark = edges.sparkSession
-    val truncate = new ReleasingTruncator(spark, checkpointDir, "bfs")
     def maybeBcast(df: DataFrame): DataFrame =
       if (smallFrontier) broadcast(df) else df
     val e = edges
@@ -353,12 +335,11 @@ object Graph {
     // parquet read (incrementalReachable's closure: zero lineage already)
     // or a seed-set projection; round 1's fused checkpoint materializes
     // it, so the up-front copy of the WHOLE stored closure was one
-    // redundant O(|closure|) job per fold.
-    var visited = visited0
-    var frontier = frontier0
-    var newCount = frontier.count()
-    var d = 0
-    // (a TWO-levels-per-barrier variant — g02's truncateEvery discipline —
+    // redundant O(|closure|) job per fold. Nor is the frontier counted up
+    // front: an empty frontier costs one no-op round, whose checkpoint is
+    // the materialized result.
+    //
+    // (a TWO-levels-per-barrier variant — pageRank's lazy-round cadence —
     // was measured and REVERSED here: the second level's lazy plan
     // references level one three times, and the tripled subtree costs
     // more AQE stage-jobs than the saved barrier, 81 vs 73 jobs per fold)
@@ -376,28 +357,22 @@ object Graph {
     // d, and the priority field marks exactly the round's additions for
     // the fused count and the next frontier. One exchange, ~3 jobs per
     // level; profiled g08 fold 92 → 64 jobs.
-    while (newCount > 0 && d < maxDepth) {
-      d += 1
+    val fix = Fixpoint.run(visited0, maxDepth, checkpointDir, "bfs",
+        changed = Some("sk_new")) { (visited, d) =>
+      val frontier = visited.filter(col("sk_new")).select("node")
       val targets = e
         .join(maybeBcast(frontier.withColumnRenamed("node", "s")), "s")
         .select(col("d").as("node"), lit(d).as("depth"), lit(1).as("sk"))
-      val folded = visited
+      visited
         .select(col("node"), col("depth"), lit(0).as("sk"))
         .unionByName(targets)
         .groupBy("node")
         .agg(min(struct(col("sk"), col("depth"))).as("m"))
         .select(col("node"), col("m.depth").as("depth"),
           (col("m.sk") === 1).as("sk_new"))
-      val (mat, n) = FusedProbe.truncateCounting(truncate, folded, col("sk_new"))
-      visited = mat
-      frontier = visited.filter(col("sk_new")).select("node")
-      newCount = n
     }
     e.unpersist()
-    // zero rounds: nothing checkpointed the seed plan (for an incremental
-    // fold, the stored closure ∪ its escape seeds, joins included), so
-    // materialize it here — the result is a stored artifact either way
-    if (d == 0) truncate(visited) else visited.drop("sk_new")
+    fix.state.drop("sk_new")
   }
 
   /** INCREMENTAL reachability: fold an edge DELTA into a STORED closure
@@ -445,8 +420,10 @@ object Graph {
       .select("node").distinct()
       .join(c.select("node"), Seq("node"), "left_anti")
     bfs(edges, srcCol, dstCol,
-      visited0 = c.unionByName(seeds.withColumn("depth", lit(0))),
-      frontier0 = seeds, maxDepth, checkpointDir, smallFrontier)
+      visited0 = c.withColumn("sk_new", lit(false))
+        .unionByName(seeds.select(col("node"), lit(0).as("depth"),
+          lit(true).as("sk_new"))),
+      maxDepth, checkpointDir, smallFrontier)
   }
 
   /** Weighted SHORTEST PATHS from a seed set — bounded Bellman-Ford
@@ -473,26 +450,27 @@ object Graph {
     * in; the distance table only ever holds REACHED nodes (frontier-like
     * growth, never the full vertex set times rounds); `smallVertexSet`
     * broadcasts it so the edge list never moves; lineage truncates every
-    * `truncateEvery` rounds ([[Truncator]]).
+    * second round and after the last ([[Fixpoint]]).
     *
     * @param edges directed weighted edges; `wCol` is the non-negative
     *              integral COST of traversing the edge (parallel edges
-    *              keep the cheapest). A multiplicity-style weight where
-    *              bigger means closer should be inverted by the caller
-    *              (e.g. `1000000 DIV count`).
+    *              keep the cheapest non-NULL cost). An edge whose cost is
+    *              NULL cannot be traversed: it is dropped, so a node only
+    *              it reaches is not reached. A multiplicity-style weight
+    *              where bigger means closer should be inverted by the
+    *              caller (e.g. `1000000 DIV count`).
     * @param sources one-column frame of seed ids; duplicates collapse,
     *              every seed starts at distance 0.
     * @param converge when true, `rounds` becomes an UPPER BOUND and the
     *              loop stops at the first round that improves nothing —
-    *              one driver-side count per round (g02's class; kCore's
-    *              documented converge-at-scale pattern), each round
-    *              checkpointed so the counted frame is the carried
-    *              frame. At the stop the relaxation is a fixed point, so
-    *              the result is the TRUE shortest-path distance (on
-    *              non-negative weights) — the unbounded answer a
-    *              recursive-SQL engine computes — whenever the bound was
-    *              not hit. The fixed-K default stays the replayable
-    *              oracle-friendly contract.
+    *              every round is checkpointed and its improvements are
+    *              counted inside that checkpoint job ([[Fixpoint]]; kCore's
+    *              converge mode is the same loop). At the stop the
+    *              relaxation is a fixed point, so the result is the TRUE
+    *              shortest-path distance (on non-negative weights) — the
+    *              unbounded answer a recursive-SQL engine computes —
+    *              whenever the bound was not hit. The fixed-K default
+    *              stays the replayable oracle-friendly contract.
     * @return (node, min_cost) for every node reachable from the seeds
     *         within `rounds` edges. */
   def shortestPaths(
@@ -503,31 +481,24 @@ object Graph {
       wCol: String = "w",
       rounds: Int = 6,
       checkpointDir: Option[String] = None,
-      truncateEvery: Int = 2,
       smallVertexSet: Boolean = false,
       converge: Boolean = false
   ): DataFrame = {
     require(rounds >= 1, s"rounds must be positive, got $rounds")
-    require(truncateEvery >= 1, s"truncateEvery must be positive, got $truncateEvery")
-    val spark = edges.sparkSession
-    // releasing truncation ([[ReleasingTruncator]] — factored from this
-    // operator's r15 inline original): superseded checkpoint blocks
-    // release as soon as the next round materializes; converge mode
-    // checkpoints EVERY round, so it needs this most.
-    val truncateReleasing = new ReleasingTruncator(spark, checkpointDir, "sp")
+    // a NULL cost would relax to a NULL distance, which min(struct(dist,
+    // …)) ranks first: dropped once here, never per round
     val e = edges.groupBy(
         col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .agg(min(col(wCol).cast("long")).as("cost"))
+      .filter(col("cost").isNotNull)
       .persist(StorageLevel.MEMORY_AND_DISK)
     def maybeBcast(df: DataFrame): DataFrame =
       if (smallVertexSet) broadcast(df) else df
-    var dist = sources
+    val init = sources
       .select(col(sources.columns.head).cast("long").as("node")).distinct()
       .withColumn("dist", lit(0L))
-    var i = 0
-    var done = false
-    while (i < rounds && !done) {
-      i += 1
+    val fix = Fixpoint.run(init, rounds, checkpointDir, "sp", cadence = 2,
+        changed = if (converge) Some("sp_chg") else None) { (dist, _) =>
       // r17 (guide §2.4): the per-edge relaxation rows and the carried
       // distances fold in ONE aggregation — min(struct(dist, origin))
       // per node — where the old plan aggregated the relaxations and
@@ -546,22 +517,10 @@ object Graph {
         .agg(min(struct(col("dist"), col("sp_o"))).as("m"))
         .select(col("node"), col("m.dist").as("dist"),
           (col("m.sp_o") === 1).as("sp_chg"))
-      if (converge) {
-        // checkpoint every round; the improvement count rides INSIDE the
-        // checkpoint job (FusedProbe) — no separate probe job per round
-        val (mat, nImproved) =
-          FusedProbe.truncateCounting(truncateReleasing, next, col("sp_chg"))
-        done = nImproved == 0
-        dist = mat.drop("sp_chg")
-      } else {
-        val carried = next.drop("sp_chg")
-        dist = if (i % truncateEvery == 0 || i == rounds)
-          truncateReleasing(carried)
-        else carried
-      }
+      if (converge) next else next.drop("sp_chg")
     }
     e.unpersist()
-    dist.select(col("node"), col("dist").as("min_cost"))
+    fix.state.select(col("node"), col("dist").as("min_cost"))
   }
 
   /** k-CORE decomposition by iterative peeling (Seidman 1983; the
@@ -583,22 +542,23 @@ object Graph {
     *
     * Per round: one map-side-combined degree aggregate + two LEFT SEMI
     * joins of the edge table against the |V|-scale keep set (AQE
-    * broadcasts it when small) + a released checkpoint
-    * ([[ReleasingTruncator]] — without the truncation the plan doubles
-    * per round, the iterative-family trap g02 documents; without the
-    * release each round's superseded blocks pin executor storage for the
-    * session). Never anything wider than the edge table shuffles.
+    * broadcasts it when small; converge mode uses LEFT joins that flag
+    * the removed edges instead) + a released checkpoint ([[Fixpoint]] —
+    * without the truncation the plan doubles per round, the
+    * iterative-family trap g02 documents; without the release each
+    * round's superseded blocks pin executor storage for the session).
+    * Never anything wider than the edge table shuffles.
     *
     * @param converge when true, `rounds` becomes an UPPER BOUND and the
-    *              peel stops at the first round where no surviving vertex
-    *              has degree < k — one driver-side existence probe per
-    *              round over the just-checkpointed edge table
-    *              (`shortestPaths(converge)`'s pattern). At the stop the
-    *              peel is a fixed point, so the result IS the true k-core
-    *              whenever the bound was not hit — the unbounded answer a
-    *              recursive-SQL engine computes. The fixed-K default
-    *              stays the replayable oracle-friendly contract (the g06
-    *              oracle is fixed-K).
+    *              peel stops at the first round that removes no edge —
+    *              counted inside that round's checkpoint job
+    *              (`shortestPaths(converge)`'s loop). A vertex of degree
+    *              < k loses at least one edge, so a round that removes
+    *              none is exactly the fixed point: the result IS the
+    *              true k-core whenever the bound was not hit — the
+    *              unbounded answer a recursive-SQL engine computes. The
+    *              fixed-K default stays the replayable oracle-friendly
+    *              contract (the g06 oracle is fixed-K).
     * @return (item, degree) for every vertex of the surviving subgraph —
     *         its within-core degree (≥ k at convergence). */
   def kCore(
@@ -611,30 +571,34 @@ object Graph {
   ): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val truncate = new ReleasingTruncator(edges.sparkSession, None, "kcore")
     def degrees(e: DataFrame): DataFrame =
       e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
         .groupBy("v").agg(count(lit(1)).as("d"))
-    var e = truncate(edges.filter(col(srcCol) =!= col(dstCol))
+    // fixed mode carries the surviving edges; converge mode carries each
+    // round's input edges with a flag on those the peel removes, which the
+    // round's checkpoint job counts
+    def survivors(e: DataFrame): DataFrame =
+      if (converge) e.filter(!col("kc_gone")).select("a", "b") else e
+    val sym = edges.filter(col(srcCol) =!= col(dstCol))
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
-      .distinct())
-    var i = 0
-    var done = false
-    while (i < rounds && !done) {
-      i += 1
-      // converge mode probes BEFORE peeling (is the current subgraph
-      // already a fixed point?), so a converged graph costs one probe,
-      // not a full no-op peel round
-      if (converge &&
-          degrees(e).filter(col("d") < k).limit(1).isEmpty) done = true
-      else {
-        val keep = degrees(e).filter(col("d") >= k).select("v")
-        e = truncate(e
-          .join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
-          .join(keep.select(col("v").as("b")), Seq("b"), "left_semi"))
-      }
+      .distinct()
+    val init = if (converge) sym.withColumn("kc_gone", lit(false)) else sym
+    val fix = Fixpoint.run(init, rounds, None, "kcore",
+        changed = if (converge) Some("kc_gone") else None,
+        materializeInit = true) { (prev, _) =>
+      val e = survivors(prev)
+      val keep = degrees(e).filter(col("d") >= k).select("v")
+      if (converge)
+        e.join(keep.select(col("v").as("a"), lit(true).as("ka")), Seq("a"), "left")
+          .join(keep.select(col("v").as("b"), lit(true).as("kb")), Seq("b"), "left")
+          .select(col("a"), col("b"),
+            (col("ka").isNull || col("kb").isNull).as("kc_gone"))
+      else
+        e.join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
+          .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
     }
-    degrees(e).select(col("v").as("item"), col("d").as("degree"))
+    degrees(survivors(fix.state))
+      .select(col("v").as("item"), col("d").as("degree"))
   }
 }

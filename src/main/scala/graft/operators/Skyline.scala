@@ -61,7 +61,11 @@ object Skyline {
 
   /** Non-dominated rows of `df` under (minimize `xCol`, maximize `yCol`).
     * Returns the original columns. `buckets` sizes the prune grid — more
-    * buckets = tighter prune, always ≥ 1; exactness never depends on it. */
+    * buckets = tighter prune, always ≥ 1; exactness never depends on it.
+    * The returned front reads a `localCheckpoint` of the grid survivors:
+    * on a cluster it stays readable only while the executors holding
+    * those blocks live (executor loss fails the next read). Write it out
+    * if it must outlive them. */
   def pareto2d(df: DataFrame, xCol: String, yCol: String,
       buckets: Int = 256): DataFrame = {
     require(buckets > 0, "buckets must be positive")
@@ -242,9 +246,10 @@ object Skyline {
     val doms = qSide(survivors).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    val scratch = scala.collection.mutable.ListBuffer
-      .empty[org.apache.spark.rdd.RDD[_]]
     val m = doms.count()
+    // the chunked pass's latest lineage-truncation checkpoint: each one
+    // supersedes the one before, which is released at once
+    var ckpt: Option[DataFrame] = None
     val out =
       if (m <= maxBroadcastFront)
         survivors.join(broadcast(doms), dominated, "left_anti")
@@ -261,9 +266,12 @@ object Skyline {
           val chunk = doms.filter(chunkOf === c.toLong)
           rest = rest.join(broadcast(chunk), dominated, "left_anti")
           // truncate the BNLJ tower every few chunks (paretoLayers'
-          // measured discipline); intermediates are tracked for release
-          if ((c + 1) % 4 == 0 && c + 1 < chunks)
-            rest = checkpointTracked(rest, scratch)
+          // measured discipline)
+          if ((c + 1) % 4 == 0 && c + 1 < chunks) {
+            rest = rest.localCheckpoint(true)
+            ckpt.foreach(Fixpoint.release)
+            ckpt = Some(rest)
+          }
         }
         rest
       }
@@ -271,25 +279,8 @@ object Skyline {
       pts.unpersist()
       survivors.unpersist()
       doms.unpersist()
-      scratch.foreach(_.unpersist(false))
+      ckpt.foreach(Fixpoint.release)
     })
-  }
-
-  /** localCheckpoint(eager) that records the checkpoint's backing RDD(s)
-    * in `freed`, so the caller can unpersist internal lineage-truncation
-    * points once the final result is materialized. (A localCheckpointed
-    * Dataset exposes no public unpersist handle — the registry diff is
-    * the portable way to reclaim it. Diff-based, so concurrent persists
-    * from OTHER threads of the same session could be swept in; the
-    * operators using this are single-threaded per call.) */
-  private def checkpointTracked(df: DataFrame,
-      freed: scala.collection.mutable.ListBuffer[org.apache.spark.rdd.RDD[_]])
-      : DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val out = df.localCheckpoint(true)
-    freed ++= (sc.getPersistentRDDs -- before).values
-    out
   }
 
   /** Per-group 2-D skyline: the Pareto front WITHIN each `keyCols` group
@@ -300,7 +291,10 @@ object Skyline {
     * running max), and the same-x tie test. Parallelism = |groups|; one
     * giant group degenerates to one partition — the same hot-key hatch
     * note as every window family (split the key upstream or fall back to
-    * [[pareto2d]] per hot group). */
+    * [[pareto2d]] per hot group). The returned front is a
+    * `localCheckpoint`: on a cluster it stays readable only while the
+    * executors holding its blocks live; write it out if it must outlive
+    * them. */
   def pareto2dBy(df: DataFrame, keyCols: Seq[String], xCol: String,
       yCol: String): DataFrame = {
     // r17: the per-group front (the result) materializes eagerly so the

@@ -379,6 +379,23 @@ class GraphSpec extends SparkSpec {
     assert(repartitioned == got)
   }
 
+  test("shortestPaths: a NULL-cost edge cannot be traversed, in fixed and converge mode") {
+    // node 1 is reachable over the NULL-cost 0→1 and over 0→2→1 (cost 2);
+    // node 4 only over the NULL-cost 0→4. A NULL relaxation must neither
+    // win node 1's min nor reach node 4.
+    val edges = Seq[(Long, Long, Option[Long])](
+      (0L, 1L, None), (0L, 2L, Some(1L)), (2L, 1L, Some(1L)),
+      (1L, 3L, Some(1L)), (0L, 4L, None)).toDF("src", "dst", "w")
+    val seeds = Seq(0L).toDF("node")
+    val truth = Map(0L -> Some(0L), 2L -> Some(1L), 1L -> Some(2L), 3L -> Some(3L))
+    def run(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1))))
+      .toMap
+    assert(run(Graph.shortestPaths(edges, seeds, rounds = 4)) == truth)
+    assert(run(Graph.shortestPaths(edges, seeds, rounds = 20, converge = true))
+      == truth)
+  }
+
   test("reachableFrom: partitioning-independent; durable checkpoint mode agrees") {
     import spark.implicits._
     val rnd = new scala.util.Random(31)
