@@ -1,6 +1,6 @@
 package graft
 
-import graft.expressions.{ArrayDot, OrderedPairs, OrderedPairsGen, PolyHash, PortableMinHash, PortableSimHash, WordShingles}
+import graft.expressions.{ArrayDot, OrderedPairsGen, PolyHash, PortableMinHash, PortableSimHash, WordShingles}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -74,9 +74,6 @@ object GraftExtensions {
       new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
       (exprs: Seq[Expression]) =>
         WordShingles(exprs(0), intArg(exprs(1), "word_shingles"))),
-    (FunctionIdentifier("ordered_pairs"),
-      new ExpressionInfo(classOf[OrderedPairs].getName, "ordered_pairs"),
-      (exprs: Seq[Expression]) => OrderedPairs(exprs(0))),
     (FunctionIdentifier("ordered_pairs_gen"),
       new ExpressionInfo(classOf[OrderedPairsGen].getName, "ordered_pairs_gen"),
       (exprs: Seq[Expression]) => OrderedPairsGen(exprs(0))),

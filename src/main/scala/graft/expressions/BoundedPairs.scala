@@ -6,7 +6,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.TernaryLike
@@ -206,19 +206,9 @@ case class PayloadPairsGen(child: Expression)
     val data = child.eval(input)
     if (data == null) Iterator.empty
     else {
-      val arr = data.asInstanceOf[ArrayData]
-      val n = arr.numElements()
-      val ids = new Array[Long](n)
-      val pls = new Array[Long](n)
-      var idx = 0
-      while (idx < n) {
-        if (arr.isNullAt(idx)) throw new IllegalArgumentException(
-          s"payload_pairs_gen: null element at position $idx")
-        val st = arr.getStruct(idx, 2)
-        ids(idx) = st.getLong(0)
-        pls(idx) = st.getLong(1)
-        idx += 1
-      }
+      val (ids, pls) = PayloadPairsGen.unpack(
+        data.asInstanceOf[ArrayData], "payload_pairs_gen")
+      val n = ids.length
       new Iterator[InternalRow] {
         private var i = 0
         private var j = 1
@@ -240,4 +230,99 @@ case class PayloadPairsGen(child: Expression)
 object PayloadPairsGen {
   def apply(ds: Column): Column =
     GraftBridge.column(PayloadPairsGen(GraftBridge.expression(ds)))
+
+  /** One gathered group as parallel id / payload arrays — the unpack both
+    * pair loops ([[PayloadPairsGen]], [[HammingPairsGen]]) run before
+    * fanning out. A NULL element or field fails loudly: an unsafe array
+    * reads a NULL long as 0, which would surface as a phantom id 0. */
+  private[expressions] def unpack(
+      arr: ArrayData, fn: String): (Array[Long], Array[Long]) = {
+    val n = arr.numElements()
+    val ids = new Array[Long](n)
+    val pls = new Array[Long](n)
+    var idx = 0
+    while (idx < n) {
+      val st = if (arr.isNullAt(idx)) null else arr.getStruct(idx, 2)
+      if (st == null || st.isNullAt(0) || st.isNullAt(1))
+        throw new IllegalArgumentException(
+          s"$fn: null element at position $idx")
+      ids(idx) = st.getLong(0)
+      pls(idx) = st.getLong(1)
+      idx += 1
+    }
+    (ids, pls)
+  }
+}
+
+/** Hamming-verified ordered pairs from ONE bucket's (id, sig) list:
+  * candidate EMISSION and VERIFICATION fused at the bucket, so only pairs
+  * that already pass `bitCount(sig_a ^ sig_b) <= maxHamming` ever reach a
+  * shuffle. The plain [[OrderedPairsGen]] + join-signatures-back plan
+  * shuffles the full candidate multiset (on a near-dup-dense corpus that
+  * is orders of magnitude more rows than true pairs) and pays two joins;
+  * here the O(bucket²) probe loop — already bounded by the caller's
+  * `maxDocFreq` cap — runs over two primitive-long arrays in one compiled
+  * pass and emits survivors lazily. Input is [[CappedIdPayloadCollect]]'s
+  * (id, sig) output, sorted ascending by id, so a < b holds pairwise. */
+case class HammingPairsGen(left: Expression, right: Expression)
+    extends BinaryExpression
+    with org.apache.spark.sql.catalyst.expressions.Generator
+    with CodegenFallback {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(StructType(fields), _), IntegerType)
+          if fields.length == 2 && fields.forall(_.dataType == LongType) =>
+        TypeCheckResult.TypeCheckSuccess
+      case other =>
+        TypeCheckResult.TypeCheckFailure(
+          s"hamming_pairs_gen requires (ARRAY<STRUCT<BIGINT, BIGINT>>, INT), got $other")
+    }
+
+  override def elementSchema: StructType = StructType(Seq(
+    StructField("a", LongType, nullable = false),
+    StructField("b", LongType, nullable = false),
+    StructField("hamming", IntegerType, nullable = false)))
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val data = left.eval(input)
+    val maxH = right.eval(input)
+    if (data == null || maxH == null) Iterator.empty
+    else {
+      val (ids, sigs) = PayloadPairsGen.unpack(
+        data.asInstanceOf[ArrayData], "hamming_pairs_gen")
+      val n = ids.length
+      val mh = maxH.asInstanceOf[Int]
+      new Iterator[InternalRow] {
+        private var i = 0
+        private var j = 1
+        private var pending: InternalRow = advance()
+        private def advance(): InternalRow = {
+          while (i < n - 1) {
+            val h = java.lang.Long.bitCount(sigs(i) ^ sigs(j))
+            val r =
+              if (h <= mh) InternalRow(ids(i), ids(j), h) else null
+            j += 1
+            if (j >= n) { i += 1; j = i + 1 }
+            if (r != null) return r
+          }
+          null
+        }
+        override def hasNext: Boolean = pending != null
+        override def next(): InternalRow = {
+          val r = pending; pending = advance(); r
+        }
+      }
+    }
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): HammingPairsGen =
+    copy(left = newLeft, right = newRight)
+}
+
+object HammingPairsGen {
+  def apply(ds: Column, maxHamming: Column): Column =
+    GraftBridge.column(HammingPairsGen(
+      GraftBridge.expression(ds), GraftBridge.expression(maxHamming)))
 }

@@ -5,89 +5,20 @@ import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** All ordered pairs (ds[i], ds[j]) with i < j from a sorted ARRAY<BIGINT> —
-  * the candidate-pair fan-out step of shingle-keyed similarity joins
-  * (`Dedup.jaccardPairs`). One compiled O(n²) loop over primitive longs; the
-  * HOF formulation (`transform` + per-element `slice` + struct lambda) does
-  * the same work interpreted, with an array copy per element.
+/** All ordered pairs (ds[i], ds[j]) with i < j from a sorted ARRAY<BIGINT>,
+  * yielded LAZILY one row at a time — the candidate-pair fan-out of groups
+  * whose postings are not distinct per key (`Multimodal.keyframeDedup`),
+  * and `ordered_pairs_gen` in SQL. A group holding 10⁵ ids fans out to
+  * ~5·10⁹ pairs, which must stream through the downstream aggregation,
+  * never sit in one array. One compiled O(n²) loop over primitive longs.
   *
   * Null elements are rejected at runtime (a silent unsafe-array read would
   * emit 0-valued pairs); the caller sorts (so a < b holds pairwise when the
-  * input is ascending). Inputs large enough that n(n−1)/2 overflows the JVM
-  * array limit throw with a pointer to the generator form.
+  * input is ascending).
   */
-case class OrderedPairs(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"ordered_pairs requires ARRAY<BIGINT>, got $other")
-    }
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("a", LongType, nullable = false),
-      StructField("b", LongType, nullable = false))),
-    containsNull = false)
-
-  override def nullSafeEval(input: Any): Any = {
-    val ds = input.asInstanceOf[ArrayData]
-    val n = ds.numElements()
-    OrderedPairs.requireNoNulls(ds, n, "ordered_pairs")
-    val nPairs = n.toLong * (n - 1) / 2
-    if (nPairs > Int.MaxValue - 8) throw new IllegalArgumentException(
-      s"ordered_pairs: $n elements fan out to $nPairs pairs, beyond the " +
-        "JVM array limit — use ordered_pairs_gen (lazy generator) instead")
-    val out = new Array[Any](nPairs.toInt)
-    var idx = 0
-    var i = 0
-    while (i < n) {
-      val a = ds.getLong(i)
-      var j = i + 1
-      while (j < n) {
-        out(idx) = InternalRow(a, ds.getLong(j))
-        idx += 1
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): OrderedPairs =
-    copy(child = newChild)
-}
-
-object OrderedPairs {
-  def apply(ds: Column): Column =
-    GraftBridge.column(OrderedPairs(GraftBridge.expression(ds)))
-
-  /** GenericArrayData NPEs on getLong(null) while unsafe arrays silently
-    * read 0 — both are wrong for a SQL-registered function, so null
-    * elements fail loudly up front (one O(n) scan). */
-  private[expressions] def requireNoNulls(ds: ArrayData, n: Int, fn: String): Unit = {
-    var i = 0
-    while (i < n) {
-      if (ds.isNullAt(i)) throw new IllegalArgumentException(
-        s"$fn: null element at position $i — ids must be non-null BIGINTs")
-      i += 1
-    }
-  }
-}
-
-/** Generator (UDTF) form of [[OrderedPairs]]: yields the i<j pairs LAZILY,
-  * one row at a time, instead of materializing the n(n−1)/2 pair array per
-  * input row. This is the form the dedup operators use: an LSH bucket or
-  * shingle group holding 10⁵ documents fans out to ~5·10⁹ pairs, which must
-  * stream through the downstream aggregation, never sit in one array. */
 case class OrderedPairsGen(child: Expression)
     extends UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.Generator
@@ -113,7 +44,7 @@ case class OrderedPairsGen(child: Expression)
     else {
       val ds = data.asInstanceOf[ArrayData]
       val n = ds.numElements()
-      OrderedPairs.requireNoNulls(ds, n, "ordered_pairs_gen")
+      OrderedPairsGen.requireNoNulls(ds, n)
       new Iterator[InternalRow] {
         private var i = 0
         private var j = 1
@@ -135,88 +66,16 @@ case class OrderedPairsGen(child: Expression)
 object OrderedPairsGen {
   def apply(ds: Column): Column =
     GraftBridge.column(OrderedPairsGen(GraftBridge.expression(ds)))
-}
 
-/** Hamming-verified ordered pairs from ONE bucket's (id, sig) list:
-  * candidate EMISSION and VERIFICATION fused at the bucket, so only pairs
-  * that already pass `bitCount(sig_a ^ sig_b) <= maxHamming` ever reach a
-  * shuffle. The plain [[OrderedPairsGen]] + join-signatures-back plan
-  * shuffles the full candidate multiset (on a near-dup-dense corpus that
-  * is orders of magnitude more rows than true pairs) and pays two joins;
-  * here the O(bucket²) probe loop — already bounded by the caller's
-  * `maxDocFreq` cap — runs over two primitive-long arrays in one compiled
-  * pass and emits survivors lazily. Input must be sorted ascending by id
-  * (struct sort on unique first field), so a < b holds pairwise. */
-case class HammingPairsGen(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.Generator
-    with CodegenFallback {
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StructType(fields), _), IntegerType)
-          if fields.length == 2 && fields.forall(_.dataType == LongType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"hamming_pairs_gen requires (ARRAY<STRUCT<BIGINT, BIGINT>>, INT), got $other")
-    }
-
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("a", LongType, nullable = false),
-    StructField("b", LongType, nullable = false),
-    StructField("hamming", IntegerType, nullable = false)))
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val data = left.eval(input)
-    val maxH = right.eval(input)
-    if (data == null || maxH == null) Iterator.empty
-    else {
-      val arr = data.asInstanceOf[ArrayData]
-      val n = arr.numElements()
-      val ids = new Array[Long](n)
-      val sigs = new Array[Long](n)
-      var idx = 0
-      while (idx < n) {
-        if (arr.isNullAt(idx)) throw new IllegalArgumentException(
-          s"hamming_pairs_gen: null element at position $idx")
-        val st = arr.getStruct(idx, 2)
-        ids(idx) = st.getLong(0)
-        sigs(idx) = st.getLong(1)
-        idx += 1
-      }
-      val mh = maxH.asInstanceOf[Int]
-      new Iterator[InternalRow] {
-        private var i = 0
-        private var j = 1
-        private var pending: InternalRow = advance()
-        private def advance(): InternalRow = {
-          while (i < n - 1) {
-            val h = java.lang.Long.bitCount(sigs(i) ^ sigs(j))
-            val r =
-              if (h <= mh) InternalRow(ids(i), ids(j), h) else null
-            j += 1
-            if (j >= n) { i += 1; j = i + 1 }
-            if (r != null) return r
-          }
-          null
-        }
-        override def hasNext: Boolean = pending != null
-        override def next(): InternalRow = {
-          val r = pending; pending = advance(); r
-        }
-      }
+  /** GenericArrayData NPEs on getLong(null) while unsafe arrays silently
+    * read 0 — both are wrong for a SQL-registered function, so null
+    * elements fail loudly up front (one O(n) scan). */
+  private def requireNoNulls(ds: ArrayData, n: Int): Unit = {
+    var i = 0
+    while (i < n) {
+      if (ds.isNullAt(i)) throw new IllegalArgumentException(
+        s"ordered_pairs_gen: null element at position $i — ids must be non-null BIGINTs")
+      i += 1
     }
   }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HammingPairsGen =
-    copy(left = newLeft, right = newRight)
-}
-
-object HammingPairsGen {
-  def apply(ds: Column, maxHamming: Column): Column =
-    GraftBridge.column(HammingPairsGen(
-      GraftBridge.expression(ds), GraftBridge.expression(maxHamming)))
 }

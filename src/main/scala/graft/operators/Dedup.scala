@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** The pair-finding variants fan candidates out through the native
-    * `OrderedPairs(ARRAY<BIGINT>)` expression, so document ids must be
-    * integral (a silent cast would null string ids into wrong results). */
+  /** The pair-finding variants gather candidates as BIGINT ids
+    * ([[cappedGroups]]), so document ids must be integral (a silent cast
+    * would null string ids into wrong results). */
   private[operators] def requireIntegralId(docs: DataFrame, idCol: String, fn: String): Unit = {
     import org.apache.spark.sql.types._
     docs.schema(idCol).dataType match {
@@ -30,6 +30,35 @@ object Dedup {
         s"$fn: id column '$idCol' must be integral for candidate-pair " +
           s"generation, got $other — map ids to BIGINT first (e.g. xxhash64)")
     }
+  }
+
+  /** The one candidate gather of every grouped pair finder: per `key`
+    * group, `ds` = the (id, payload) postings as a sorted
+    * ARRAY<STRUCT<id BIGINT, payload BIGINT>>, fanned out afterwards by
+    * `payload_pairs_gen` or `hamming_pairs_gen`. A group holding more than
+    * `maxDocFreq` postings is dropped: a key shared by d documents costs
+    * O(d²) candidate pairs, so on a power-law corpus the hottest keys
+    * would dominate the shuffle. The cap and the gather share ONE
+    * aggregate, whose buffer is bounded at cap+1 — a boilerplate key in
+    * 10⁸ documents never concentrates its posting list on one task.
+    * Postings with a NULL id or payload are skipped. */
+  private[operators] def cappedGroups(
+      postings: DataFrame,
+      key: Seq[Column],
+      id: Column,
+      payload: Column,
+      maxDocFreq: Int,
+      fn: String
+  ): DataFrame = {
+    require(maxDocFreq >= 1,
+      s"$fn: maxDocFreq must be >= 1 (a key in more documents is dropped), got $maxDocFreq")
+    // capped_collect caps at 2^28; a wider cap is "no cap" operationally
+    // (a 2^28-doc posting list in one buffer is already off the table)
+    val cap = math.min(maxDocFreq.toLong, 1L << 28).toInt
+    postings.groupBy(key: _*)
+      .agg(graft.expressions.CappedIdPayloadCollect(
+        id.cast("long"), payload.cast("long"), cap).as("ds"))
+      .filter(col("ds").isNotNull)
   }
 
   /** Exact dedup: hash-groupBy on the raw text. One shuffle on md5(text);
@@ -75,10 +104,9 @@ object Dedup {
     * underestimated (conservative: never emits a false pair above threshold
     * due to the cap).
     *
-    * `idCol` must be an integral type (candidate pairs fan out through the
-    * native `ordered_pairs` expression over ARRAY&lt;BIGINT&gt;) — throws
-    * IllegalArgumentException otherwise; map string ids through e.g.
-    * `xxhash64` first.
+    * `idCol` must be an integral type (candidates are gathered as BIGINT
+    * ids) — throws IllegalArgumentException otherwise; map string ids
+    * through e.g. `xxhash64` first.
     */
   def jaccardPairs(
       docs: DataFrame,
@@ -89,21 +117,15 @@ object Dedup {
       maxDocFreq: Int = Int.MaxValue
   ): DataFrame = {
     requireIntegralId(docs, idCol, "jaccardPairs")
-    require(maxDocFreq >= 1,
-      s"jaccardPairs: maxDocFreq must be >= 1 (a shingle in more documents is dropped), got $maxDocFreq")
     // ONE shuffle does the doc-frequency cap AND the candidate gather
-    // (r17, guide §2.3/2.4 — the d44 winnowing shape): each doc's
-    // shingle-set SIZE rides the posting row as the capped_collect
-    // payload, `payload_pairs_gen` fans ordered pairs out locally with
-    // both sides' sizes attached, and the pair aggregate computes Jaccard
-    // directly — no per-doc sizes table, no two join-backs, no persist
-    // (the shingling scan runs exactly once). Capped-out shingles become
-    // NULL groups (dropped) but still counted toward each doc's set size
-    // at scan time — same conservative-underestimate contract as before,
-    // and the hot-shingle buffer is BOUNDED at cap+1 where collect_list
-    // materialized the full posting list before the size filter.
-    val inter = jaccardInter(docs, shingleK, idCol, textCol, maxDocFreq)
-    inter
+    // ([[cappedGroups]]): each doc's shingle-set SIZE rides the posting
+    // row as the payload, `payload_pairs_gen` fans ordered pairs out
+    // locally with both sides' sizes attached, and the pair aggregate
+    // computes Jaccard directly — no per-doc sizes table, no join-backs,
+    // no persist (the shingling scan runs exactly once). Capped-out
+    // shingles are dropped but still counted toward each doc's set size
+    // at scan time (the conservative-underestimate contract above).
+    jaccardInter(docs, shingleK, idCol, textCol, maxDocFreq, "jaccardPairs")
       .withColumn("jaccard",
         col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
       .filter(col("jaccard") >= threshold)
@@ -120,11 +142,9 @@ object Dedup {
       shingleK: Int,
       idCol: String,
       textCol: String,
-      maxDocFreq: Int
+      maxDocFreq: Int,
+      fn: String
   ): DataFrame = {
-    // capped_collect caps at 2^28; a wider cap is "no cap" operationally
-    // (a 2^28-doc posting list in one buffer is already off the table)
-    val cap = math.min(maxDocFreq.toLong, 1L << 28).toInt
     // eval_once: the filter inferred under the explode would otherwise
     // push through this projection and re-run the split+shingle assembly
     // per conjunct (guide §4.4's duplication hazard, r17)
@@ -134,10 +154,7 @@ object Dedup {
         array_distinct(shingles(col("ws"), shingleK))).as("shs"))
       .select(col("doc_id").cast("long").as("did"),
         size(col("shs")).cast("long").as("n"), explode(col("shs")).as("sh"))
-    posting.groupBy("sh")
-      .agg(graft.expressions.CappedIdPayloadCollect(
-        col("did"), col("n"), cap).as("ds"))
-      .filter(col("ds").isNotNull)
+    cappedGroups(posting, Seq(col("sh")), col("did"), col("n"), maxDocFreq, fn)
       .select(graft.expressions.PayloadPairsGen(col("ds")))
       .groupBy(col("a").as("a_id"), col("b").as("b_id"),
         col("pa").as("na"), col("pb").as("nb"))
@@ -241,10 +258,9 @@ object Dedup {
     * O(n²) pairwise scan); candidates are then verified with the exact
     * shingle-set Jaccard.
     *
-    * `idCol` must be an integral type (candidate pairs fan out through the
-    * native `ordered_pairs` expression over ARRAY&lt;BIGINT&gt;) — throws
-    * IllegalArgumentException otherwise; map string ids through e.g.
-    * `xxhash64` first.
+    * `idCol` must be an integral type (candidates are gathered as BIGINT
+    * ids) — throws IllegalArgumentException otherwise; map string ids
+    * through e.g. `xxhash64` first.
     */
   def minhashPairs(
       docs: DataFrame,
@@ -302,12 +318,13 @@ object Dedup {
         bandBucketsCol(numHashes, bands, portableHash)).as("bb"))
       .select(col("doc_id"), posexplode(col("bb")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-    // Candidates: ONE shuffle (groupBy bucket) + local ordered-pair fan-out
-    // per bucket, instead of shuffling both sides of a band self-join —
-    // identical pair set (a < b within each bucket, deduped across bands).
-    val cand = banded.groupBy("band", "bucket")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .select(graft.expressions.OrderedPairsGen(col("ds").cast("array<long>")))
+    // Candidates: ONE shuffle (the bucket gather, uncapped) + local
+    // ordered-pair fan-out per bucket, instead of shuffling both sides of a
+    // band self-join — identical pair set (a < b within each bucket,
+    // deduped across bands).
+    val cand = cappedGroups(banded, Seq(col("band"), col("bucket")),
+        col("doc_id"), lit(0L), Int.MaxValue, "minhashPairsFromSignatures")
+      .select(graft.expressions.PayloadPairsGen(col("ds")))
       .select(col("a").as("a_id"), col("b").as("b_id"))
       .dropDuplicates("a_id", "b_id")
     val shSets = sig.select(col("doc_id"), col("sh")) // reuse the persisted table
@@ -483,12 +500,10 @@ object Dedup {
       maxDocFreq: Int = Int.MaxValue
   ): DataFrame = {
     requireIntegralId(docs, idCol, "containmentPairs")
-    require(maxDocFreq >= 1,
-      s"containmentPairs: maxDocFreq must be >= 1 (a shingle in more documents is dropped), got $maxDocFreq")
     // same one-shuffle capped gather + payload pair fan-out as
     // [[jaccardPairs]] (r17) — set sizes ride the postings, the two
     // join-backs and the staged persist are gone
-    jaccardInter(docs, shingleK, idCol, textCol, maxDocFreq)
+    jaccardInter(docs, shingleK, idCol, textCol, maxDocFreq, "containmentPairs")
       .withColumn("containment_a", col("inter").cast("double") / col("na"))
       .withColumn("containment_b", col("inter").cast("double") / col("nb"))
       .filter(col("containment_a") >= threshold || col("containment_b") >= threshold)
@@ -903,10 +918,8 @@ object Dedup {
     // maxDocFreq²/2, shuffle volume by true-pair count · chunks — the
     // capped-bucket analog of the old plan's Hamming-inside-the-join
     // property, without its unbounded single-task probe loops.
-    val buckets = chunked.groupBy("chunk", "key")
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("sig")))).as("ds"))
-      .filter(size(col("ds")).between(2, maxDocFreq))
-    buckets
+    cappedGroups(chunked, Seq(col("chunk"), col("key")), col("doc_id"),
+        col("sig"), maxDocFreq, "simhashPairs")
       .select(graft.expressions.HammingPairsGen(col("ds"), lit(maxHamming)))
       .groupBy(col("a").as("a_id"), col("b").as("b_id"))
       .agg(min(col("hamming")).as("hamming"))

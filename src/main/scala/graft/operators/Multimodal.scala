@@ -177,7 +177,7 @@ object Multimodal {
     * bounded by `maxDocFreq`²/2 per fingerprint — a "black frame" shared by
     * millions of videos caps out (producing no candidates — conservative)
     * instead of exploding the pair join. Ids must be integral (the pair
-    * fan-out rides the native ordered_pairs expression over ARRAY<BIGINT>). */
+    * fan-out is the `ordered_pairs_gen` generator over ARRAY<BIGINT>). */
   def keyframeDedup(
       media: DataFrame,
       idCol: String = "doc_id",

@@ -121,24 +121,17 @@ object Winnowing {
       idCol: String = "doc_id",
       textCol: String = "text"
   ): DataFrame = {
+    Dedup.requireIntegralId(docs, idCol, "overlapPairs")
     // ONE shuffle does the doc-frequency cap AND the candidate gather
-    // (r16, guide §2.3/2.4): `capped_collect` folds each fingerprint's
-    // (did, nfp) postings — returning NULL past `maxDocFreq`, with the
-    // buffer BOUNDED at cap+1 so a degenerate boilerplate fingerprint
-    // never concentrates its posting list on one task (the same hot-key
-    // contract the previous count-then-join formulation had) — and
-    // `payload_pairs_gen` fans the ordered pairs out locally with each
-    // side's nfp riding along. This replaces the old 3-exchange plan
-    // (df aggregate + cap join + fp self-join) and both of its persists:
-    // the selection scan now runs exactly once, unpersisted.
+    // (`Dedup.cappedGroups` over each fingerprint's (did, nfp) postings),
+    // and `payload_pairs_gen` fans the ordered pairs out locally with each
+    // side's nfp riding along — no df aggregate, cap join or fp
+    // self-join, and the selection scan runs exactly once, unpersisted.
     val posting = fingerprints(docs, k, w, idCol, textCol)
-      .select(col(idCol).cast("long").as("did"),
-        size(col("fps")).cast("long").as("nfp"), explode(col("fps")).as("fp"))
-    val groups = posting.groupBy("fp")
-      .agg(graft.expressions.CappedIdPayloadCollect(
-        col("did"), col("nfp"), maxDocFreq).as("ds"))
-      .filter(col("ds").isNotNull)
-    groups
+      .select(col(idCol).as("did"), size(col("fps")).as("nfp"),
+        explode(col("fps")).as("fp"))
+    Dedup.cappedGroups(posting, Seq(col("fp")), col("did"), col("nfp"),
+        maxDocFreq, "overlapPairs")
       .select(graft.expressions.PayloadPairsGen(col("ds")))
       .groupBy(col("a").as("doc_a"), col("b").as("doc_b"),
         col("pa").as("nfp_a"), col("pb").as("nfp_b"))
@@ -349,25 +342,20 @@ object Winnowing {
       idCol: String = "doc_id",
       textCol: String = "text"
   ): DataFrame = {
-    // Same one-shuffle cap+gather as [[overlapPairs]] (r16): both sides'
+    Dedup.requireIntegralId(batch, idCol, "incrementalOverlapPairs")
+    // Same one-shuffle cap+gather as [[overlapPairs]]: both sides'
     // postings union with a side TAG packed into the payload's low bit
     // (payload = 2·nfp + tag — integer packing, engine-exact), the
     // df cap computes over index ∪ batch inside the same aggregate, and
-    // the local pair fan-out keeps only cross-side pairs. Replaces the
-    // df aggregate + two cap joins + new×history join (3 exchanges of
-    // posting-scale data) and the batch-side persist: the batch is
+    // the local pair fan-out keeps only cross-side pairs — the batch is
     // fingerprinted exactly once, unpersisted.
     val tagged = index
-      .select(col("did").cast("long").as("did"),
-        (col("nfp").cast("long") * 2).as("pl"), col("fp"))
+      .select(col("did"), (col("nfp").cast("long") * 2).as("pl"), col("fp"))
       .unionAll(fingerprintIndex(batch, k, w, idCol, textCol)
-        .select(col("did").cast("long").as("did"),
-          (col("nfp").cast("long") * 2 + 1).as("pl"), col("fp")))
-    val groups = tagged.groupBy("fp")
-      .agg(graft.expressions.CappedIdPayloadCollect(
-        col("did"), col("pl"), maxDocFreq).as("ds"))
-      .filter(col("ds").isNotNull)
-    groups
+        .select(col("did"), (col("nfp").cast("long") * 2 + 1).as("pl"),
+          col("fp")))
+    Dedup.cappedGroups(tagged, Seq(col("fp")), col("did"), col("pl"),
+        maxDocFreq, "incrementalOverlapPairs")
       .select(graft.expressions.PayloadPairsGen(col("ds")))
       .filter(col("pa") % 2 =!= col("pb") % 2) // cross-side pairs only
       .select(

@@ -217,39 +217,97 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("property: OrderedPairs emits exactly the i<j pairs of a sorted list") {
+  test("property: OrderedPairsGen emits exactly the i<j pairs of a sorted list") {
     forAll(Gen.chooseNum(0, 12).flatMap(n =>
       Gen.listOfN(n, Gen.chooseNum(0L, 50L))).map(_.distinct.sorted)) { ds =>
       val out = Seq(Tuple1(ds)).toDF("ds")
-        .select(org.apache.spark.sql.functions.explode(
-          graft.expressions.OrderedPairs($"ds")).as("p"))
-        .select("p.a", "p.b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toList
+        .select(graft.expressions.OrderedPairsGen($"ds"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toList
       val expect = (for {
         i <- ds.indices; j <- (i + 1) until ds.length
       } yield (ds(i), ds(j))).toList
       assert(out == expect)
-      // generator (streaming) form yields the identical pair sequence
-      val gen = Seq(Tuple1(ds)).toDF("ds")
-        .select(graft.expressions.OrderedPairsGen($"ds"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toList
-      assert(gen == expect)
     }
   }
 
-  test("OrderedPairs rejects null elements loudly in both forms") {
+  test("OrderedPairsGen rejects null elements loudly") {
     // GenericArrayData would NPE and unsafe arrays would silently read 0 —
-    // as SQL-registered functions both forms must fail with a clear message
+    // as a SQL-registered function it must fail with a clear message
     val df = Seq(Tuple1(Seq[java.lang.Long](1L, null, 3L))).toDF("ds")
-    val eager = intercept[Exception] {
-      df.select(org.apache.spark.sql.functions.explode(
-        graft.expressions.OrderedPairs($"ds"))).collect()
-    }
-    assert(chainMessages(eager).exists(_.contains("null element")))
     val gen = intercept[Exception] {
       df.select(graft.expressions.OrderedPairsGen($"ds")).collect()
     }
     assert(chainMessages(gen).exists(_.contains("null element")))
+  }
+
+  /** Corpora the pair finders must survive: empty texts, texts repeated
+    * across documents, and NULL ids (which never pair). */
+  private val pairCorpus: Gen[List[(Option[Long], String)]] = for {
+    pool <- Gen.chooseNum(1, 5).flatMap(m => Gen.listOfN(m, text))
+    n <- Gen.chooseNum(1, 14)
+    texts <- Gen.listOfN(n, Gen.oneOf("" :: pool))
+    nulls <- Gen.listOfN(n, Gen.chooseNum(0, 4))
+  } yield texts.zip(nulls).zipWithIndex.map { case ((t, z), i) =>
+    (if (z == 0) None else Some(i.toLong + 1), t)
+  }
+
+  /** All (a, b) id pairs, a < b, over the non-NULL-id documents. */
+  private def idPairs[A](docs: Seq[(Option[Long], A)]): Seq[((Long, A), (Long, A))] = {
+    val live = docs.collect { case (Some(id), a) => (id, a) }.sortBy(_._1)
+    for {
+      i <- live.indices; j <- (i + 1) until live.length
+    } yield (live(i), live(j))
+  }
+
+  test("property: uncapped jaccardPairs equals brute-force shingle Jaccard") {
+    forAll2(pairCorpus, Gen.chooseNum(1, 3), n = 12) { (docs, k) =>
+      val got = Dedup.jaccardPairs(docs.toDF("doc_id", "text"), shingleK = k,
+          threshold = 0.3, maxDocFreq = Int.MaxValue)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      def shs(t: String): Set[String] =
+        t.split(" ").filter(_.nonEmpty).sliding(k).filter(_.length == k)
+          .map(_.mkString(" ")).toSet
+      val expect = idPairs(docs.map { case (id, t) => (id, shs(t)) })
+        .collect { case ((a, sa), (b, sb)) if (sa & sb).nonEmpty =>
+          (a, b, (sa & sb).size.toDouble / (sa | sb).size) }
+        .filter(_._3 >= 0.3).toSet
+      assert(got == expect, s"docs=$docs k=$k")
+    }
+  }
+
+  test("property: uncapped simhashPairs with maxHamming < chunks equals brute-force popcount") {
+    forAll2(pairCorpus, Gen.chooseNum(2, 6), n = 12) { (docs, chunks) =>
+      val df = docs.toDF("doc_id", "text")
+      val maxHamming = chunks - 1
+      val got = Dedup.simhashPairs(df, maxHamming = maxHamming,
+          chunks = chunks, maxDocFreq = Int.MaxValue)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      // the signature is taken as given; the candidate gather is under test
+      val sigs = df.select(TextFunctions.simhash(TextFunctions.words($"text")))
+        .collect().map(_.getLong(0))
+      // pigeonhole: fewer than `chunks` differing bits leave a chunk equal,
+      // so every pair within maxHamming shares a bucket
+      val expect = idPairs(docs.map(_._1).zip(sigs))
+        .map { case ((a, sa), (b, sb)) => (a, b, java.lang.Long.bitCount(sa ^ sb)) }
+        .filter(_._3 <= maxHamming).toSet
+      assert(got == expect, s"docs=$docs chunks=$chunks")
+    }
+  }
+
+  test("property: a hot key pairs at exactly maxDocFreq postings and is dropped at one more") {
+    forAll(Gen.chooseNum(2, 8)) { cap =>
+      def corpus(n: Int) =
+        (1 to n).map(i => (i.toLong, "hot key here")).toDF("doc_id", "text")
+      def all(n: Int) = (for {
+        a <- 1 to n; b <- (a + 1) to n
+      } yield (a.toLong, b.toLong)).toSet
+      def jaccard(n: Int) = Dedup.jaccardPairs(corpus(n), maxDocFreq = cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      def simhash(n: Int) = Dedup.simhashPairs(corpus(n), maxDocFreq = cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(jaccard(cap) == all(cap) && simhash(cap) == all(cap))
+      assert(jaccard(cap + 1).isEmpty && simhash(cap + 1).isEmpty)
+    }
   }
 
   private def exceptionChain(e: Throwable): List[Throwable] =

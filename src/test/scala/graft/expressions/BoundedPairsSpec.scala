@@ -56,6 +56,18 @@ class BoundedPairsSpec extends SparkSpec {
     assert(got == Set((1L, 10L, 3L, 30L), (1L, 10L, 7L, 70L), (3L, 30L, 7L, 70L)))
   }
 
+  test("both pair generators reject a NULL id field instead of reading it as 0") {
+    val df = Seq(Seq[(java.lang.Long, Long)]((1L, 10L), (null, 20L)))
+      .toDF("arr")
+      .select(col("arr").cast("array<struct<id:bigint,payload:bigint>>").as("arr"))
+    for (gen <- Seq(PayloadPairsGen(col("arr")), HammingPairsGen(col("arr"), lit(60)))) {
+      val e = intercept[Exception](df.select(gen).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("null element at position 1"))),
+        e.getMessage)
+    }
+  }
+
   test("fused pair plan ≡ count-then-join pair plan on a posting table") {
     // the overlapPairs restructure in miniature: per-key capped gather +
     // local pair fan-out must equal the df-filter + self-join formulation

@@ -173,7 +173,11 @@ class DedupSpec extends SparkSpec {
   test("pair finders reject maxDocFreq < 1 by name, not with an analyzer error") {
     for ((fn, call) <- Seq[(String, Int => Any)](
         "jaccardPairs" -> (m => Dedup.jaccardPairs(docs, maxDocFreq = m)),
-        "containmentPairs" -> (m => Dedup.containmentPairs(docs, maxDocFreq = m)));
+        "containmentPairs" -> (m => Dedup.containmentPairs(docs, maxDocFreq = m)),
+        "simhashPairs" -> (m => Dedup.simhashPairs(docs, maxDocFreq = m)),
+        "overlapPairs" -> (m => Winnowing.overlapPairs(docs, maxDocFreq = m)),
+        "incrementalOverlapPairs" -> (m => Winnowing.incrementalOverlapPairs(
+          docs, Winnowing.fingerprintIndex(docs), maxDocFreq = m)));
         m <- Seq(0, -1)) {
       val e = intercept[IllegalArgumentException](call(m))
       assert(e.getMessage.contains(s"$fn: maxDocFreq must be >= 1") &&
@@ -352,6 +356,26 @@ class DedupSpec extends SparkSpec {
     val pairs = Dedup.simhashPairs(docs, maxHamming = 10, chunks = 4)
       .collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))).toSet
     assert(pairs.contains((1L, 2L)))
+  }
+
+  test("simhashPairs skips NULL ids instead of pairing them as id 0") {
+    val text = "the quick brown fox jumps over the lazy dog"
+    val withNull = Seq[(java.lang.Long, String)](
+      (1L, text), (null, text), (3L, text)).toDF("doc_id", "text")
+    val got = Dedup.simhashPairs(withNull).collect()
+      .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"),
+        r.getAs[Int]("hamming"))).toSet
+    assert(got == Set((1L, 3L, 0)), s"got $got")
+  }
+
+  test("simhashPairs accepts the INT ids requireIntegralId admits") {
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      Dedup.simhashPairs(df, maxHamming = 10).collect()
+        .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"),
+          r.getAs[Int]("hamming"))).toSet
+    val intIds = docs.select($"doc_id".cast("int").as("doc_id"), $"text")
+    val got = pairs(intIds)
+    assert(got.nonEmpty && got == pairs(docs), s"got $got")
   }
 }
 
@@ -877,10 +901,6 @@ class SimilaritySpec extends SparkSpec {
       "SELECT word_shingles(array('a', 'b', 'c', 'd'), 2 + 1) AS sh")
       .head().getSeq[String](0)
     assert(ws == Seq("a b c", "b c d"))
-    val op = spark.sql(
-      "SELECT ordered_pairs(array(1L, 2L, 3L)) AS p").head()
-      .getSeq[org.apache.spark.sql.Row](0).map(r => (r.getLong(0), r.getLong(1)))
-    assert(op == Seq((1L, 2L), (1L, 3L), (2L, 3L)))
   }
 }
 

@@ -181,6 +181,21 @@ class WinnowingSpec extends SparkSpec {
     assert(e2.getMessage.contains("torn or stale"), e2.getMessage)
   }
 
+  test("overlapPairs and incrementalOverlapPairs reject non-integral ids up front") {
+    val strDocs = Seq(("a", "one two three four five six seven"),
+      ("b", "one two three four five six eight")).toDF("doc_id", "text")
+    val idx = Winnowing.fingerprintIndex(
+      Seq((1L, "one two three four five six")).toDF("doc_id", "text"))
+    for ((fn, call) <- Seq[(String, () => Any)](
+        "overlapPairs" -> (() => Winnowing.overlapPairs(strDocs)),
+        "incrementalOverlapPairs" ->
+          (() => Winnowing.incrementalOverlapPairs(strDocs, idx)))) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(s"$fn: id column 'doc_id' must be integral"),
+        e.getMessage)
+    }
+  }
+
   test("appendIndex: cross pairs through the appended index equal overlapPairs on the union, at every uneven cut") {
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
     val hist = docs.filter(col("doc_id") < 250)
