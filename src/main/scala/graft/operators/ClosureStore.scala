@@ -32,15 +32,10 @@ import org.apache.spark.sql.functions._
   * == Generations ==
   *
   * All five components plus the `batches/` directory live inside ONE
-  * generation directory `gen-NNNNNNN/`; a base rewrite ([[build]] over a
-  * live store, [[compact]]) stages the next generation complete under a
-  * dot-prefixed name and publishes it with a SINGLE atomic rename —
-  * readers always resolve the highest committed generation, so every
-  * crash point of a rewrite leaves the PREVIOUS generation fully
-  * readable (staging is invisible; a crash after the publish rename but
-  * before old-generation cleanup leaves two complete generations and
-  * readers pick the newer). This is what makes rebuilding over a live
-  * store safe: the new base can never silently compose with the old
+  * generation directory `gen-NNNNNNN/` ([[Generations]]); a base rewrite
+  * ([[build]] over a live store, [[compact]]) publishes the next
+  * generation whole. This is what makes rebuilding over a live store
+  * safe: the new base can never silently compose with the old
   * generation's batch directories, because those live inside the old
   * generation and are superseded wholesale.
   *
@@ -64,23 +59,16 @@ import org.apache.spark.sql.functions._
   * the [[FileManifest]] stamp mechanism); every read path verifies the
   * stamps align and fails loud otherwise, so a crash between component
   * writes of a hand-rolled rebuild can never silently join yesterday's
-  * closure against today's edges. [[advance]] commits go through a
-  * different mechanism fitting their shape — all four deltas in ONE
-  * batch directory published by a single atomic rename, so a batch is
-  * either wholly visible or not at all and needs no cross-directory
-  * stamp. Document ids must be unique ACROSS the store and every
-  * folded batch.
+  * closure against today's edges. [[advance]] commits all four deltas
+  * as ONE batch directory, wholly visible or not at all, so a batch
+  * needs no cross-directory stamp. Document ids must be unique ACROSS
+  * the store and every folded batch.
   */
 object ClosureStore {
 
   private def parts(gen: String): Seq[String] =
     Seq(s"$gen/postings", s"$gen/edges", s"$gen/closure", s"$gen/meta",
       s"$gen/ingested")
-
-  private def hadoopFs(spark: SparkSession,
-      path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** The live generation — the highest committed `gen-NNNNNNN`
     * ([[Generations]]). Every read and every [[advance]] resolves
@@ -98,13 +86,8 @@ object ClosureStore {
     * masking in [[readEdges]] and silently serve a stale star. (Dir
     * names are sequence numbers assigned at commit — single-writer, the
     * COW contract.) */
-  private def batchDirs(spark: SparkSession, gen: String): Seq[String] = {
-    val fs = hadoopFs(spark, gen)
-    val root = new org.apache.hadoop.fs.Path(s"$gen/batches")
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.filter(_.isDirectory)
-      .map(_.getPath.toString).sortBy(dirSeq)
-  }
+  private def batchDirs(spark: SparkSession, gen: String): Seq[String] =
+    Generations.listBatches(spark, gen).map(_._2).sortBy(dirSeq)
 
   /** The numeric sequence prefix of a committed batch directory
     * (`NNNNNN-<batchId>`, width ≥ 6). */
@@ -261,11 +244,9 @@ object ClosureStore {
     * posting/edge/closure reads (exactly what every fold consumes) are
     * rewritten as plain single-directory tables, the replay ledger
     * absorbs the batch ids, and the result publishes as the next
-    * generation with a single rename. Read cost of the merge-on-read
-    * edge composition grows with the batch count; this is the cadence
-    * job that resets it. A crash anywhere mid-compact leaves the old
-    * generation fully readable (staging is invisible; the publish rename
-    * is the commit point). Folding, reading, and [[batchIngested]]
+    * generation. Read cost of the merge-on-read edge composition grows
+    * with the batch count; this is the cadence job that resets it.
+    * Folding, reading, and [[batchIngested]]
     * answers are invariant across a compact — spec-pinned. */
   def compact(spark: SparkSession, path: String): Unit = {
     import spark.implicits._
@@ -373,9 +354,9 @@ object ClosureStore {
 
   /** COMMIT today's fold — the write half of the daily cycle, so the
     * store genuinely rolls forward instead of rebuilding on a cadence.
-    * One batch directory carries all four deltas and publishes with a
-    * SINGLE rename ([[EditDistance.appendIndex]]'s atomic-batch
-    * discipline):
+    * One batch directory carries all four deltas and commits whole
+    * through [[Generations.commitBatch]] ([[EditDistance.appendIndex]]'s
+    * atomic-batch discipline):
     *
     *   - `postings` — the batch's chunk postings (append-only: history
     *     postings never change).
@@ -386,8 +367,7 @@ object ClosureStore {
     *   - `closure` — only the NEWLY-reached nodes (the closure is
     *     append-only under inserts: old nodes keep their rows).
     *
-    * A crash mid-stage leaves a dot-prefixed directory no reader lists;
-    * re-submitting a committed batchId fails loud ([[batchIngested]] is
+    * Re-submitting a committed batchId fails loud ([[batchIngested]] is
     * the retry probe). Read cost grows with the batch count — run
     * [[compact]] on whatever cadence folding the batches in is worth.
     * Returns the post-commit closure (the fold result). */
@@ -399,8 +379,7 @@ object ClosureStore {
       idCol: String = "doc_id",
       textCol: String = "text"
   ): DataFrame = {
-    require(batchId.nonEmpty && !batchId.exists(c => c == '/' || c == '.'),
-      s"batchId must be a plain directory name, got '$batchId'")
+    Generations.requirePlain(batchId)
     val spark = newDocs.sparkSession
     val gen = currentGen(spark, path)
     if (batchIngested(spark, path, batchId)) throw new IllegalStateException(
@@ -408,39 +387,20 @@ object ClosureStore {
         "retry would re-mask chunks and duplicate postings; probe " +
         "batchIngested before advancing, or pick a new batch id")
     val fold = foldCore(newDocs, newSeeds, path, idCol, textCol)
-    val fs = hadoopFs(spark, path)
-    val staging = new org.apache.hadoop.fs.Path(s"$gen/.batch-$batchId.inprogress")
-    fs.delete(staging, true) // leftover from a crashed attempt: restage whole
-    fold.newPostings.write.mode("overwrite").parquet(s"$staging/postings")
-    fold.recomputedStars.write.mode("overwrite").parquet(s"$staging/stars")
-    fold.touched.write.mode("overwrite").parquet(s"$staging/touched")
-    // the fold result is already materialized (the BFS returns
-    // checkpointed rows), so the anti join below re-reads blocks, not
-    // the whole fold lineage
-    fold.result
-      .join(fold.closure.select(col(fold.closure.columns.head).as("node")),
-        Seq("node"), "left_anti")
-      .write.mode("overwrite").parquet(s"$staging/closure")
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$gen/batches"))
     val seq = batchDirs(spark, gen).size
-    val target = new org.apache.hadoop.fs.Path(
-      f"$gen%s/batches/$seq%06d-$batchId%s")
-    require(fs.rename(staging, target),
-      s"ClosureStore commit of batch '$batchId' failed to publish " +
-        "(concurrent advance?)")
-    // defense in depth for the single-writer contract ([[Generations]]):
-    // if a rewrite published a new generation while this fold ran, the
-    // batch just landed inside the SUPERSEDED generation — readers
-    // resolve the new one, whose ledger lacks this id, so without this
-    // probe the data would be silently dropped while the streaming
-    // checkpoint records the batch delivered. Fail loud instead: the
-    // caller replays, batchIngested (against the NEW generation) says
-    // false, and the re-advance commits where readers actually look.
-    if (currentGen(spark, path) != gen) throw new IllegalStateException(
-      s"ClosureStore batch '$batchId' committed into a generation that a " +
-        s"concurrent rewrite superseded ($gen) — batch commits and " +
-        "rewrites must be serialized by one writer; replay the batch " +
-        "against the current generation")
+    Generations.commitBatch(spark, path, gen, "ClosureStore",
+        f"$seq%06d-$batchId%s") { staging =>
+      fold.newPostings.write.mode("overwrite").parquet(s"$staging/postings")
+      fold.recomputedStars.write.mode("overwrite").parquet(s"$staging/stars")
+      fold.touched.write.mode("overwrite").parquet(s"$staging/touched")
+      // the fold result is already materialized (the BFS returns
+      // checkpointed rows), so the anti join below re-reads blocks, not
+      // the whole fold lineage
+      fold.result
+        .join(fold.closure.select(col(fold.closure.columns.head).as("node")),
+          Seq("node"), "left_anti")
+        .write.mode("overwrite").parquet(s"$staging/closure")
+    }
     fold.result
   }
 }

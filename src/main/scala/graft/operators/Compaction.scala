@@ -127,6 +127,7 @@ object Compaction {
     require(curve != "hilbert" || zorderBy.isEmpty || zorderBy.size == 2,
       s"curve 'hilbert' is 2-D (Layout.hilbertValue's xy2d walk), " +
         s"got ${zorderBy.size} zorderBy columns")
+    Merge.recover(spark, path)
     val all = stats(spark, path, partCols)
     def targetFiles(s: PartStats): Int =
       math.max(minFiles, math.ceil(s.bytes.toDouble / targetBytes).toInt)

@@ -218,8 +218,8 @@ object EditDistance {
     *
     * Storage is [[Generations]]-structured (the ClosureStore layout):
     * base components + an `ingested/` replay ledger + the `batches/`
-    * directory live inside one `gen-NNNNNNN` published by a single
-    * rename. Rebuilding over a LIVE index is therefore safe — the new
+    * directory live inside one `gen-NNNNNNN` published whole.
+    * Rebuilding over a LIVE index is therefore safe — the new
     * base supersedes the old base AND its batch directories together
     * (an in-place rewrite would have silently composed the new base
     * with stale batch segments), and the ledger carries forward (old
@@ -251,8 +251,7 @@ object EditDistance {
     * from the STORED artifacts only, zero re-fingerprinting: the
     * composed segs/shorts reads are rewritten as single-directory
     * tables, the replay ledger absorbs the batch ids, and the result
-    * publishes as the next generation with one rename (crash anywhere
-    * mid-compact leaves the old generation fully readable). The read
+    * publishes as the next generation. The read
     * side is a plain multi-directory union, so what compaction buys is
     * file-count hygiene: a year of daily [[appendIndex]] batches is
     * ~700 small parquet directories whose listing and tiny files tax
@@ -324,10 +323,9 @@ object EditDistance {
     * plain append crashing between the segs and shorts writes would
     * leave a half-folded batch, and a retry after a successful append
     * would duplicate every segment — silently inflating candidates
-    * forever. Both tables stage under one dot-prefixed directory
-    * (invisible to readers) and publish with a SINGLE rename to
-    * `batches/<batchId>`; a crash leaves either nothing visible or the
-    * whole batch. Re-submitting a committed batchId fails loud —
+    * forever. Both tables commit as one `batches/<batchId>` directory
+    * ([[Generations.commitBatch]]), wholly visible or not at all.
+    * Re-submitting a committed batchId fails loud —
     * retrying jobs probe [[batchIngested]] first (delete-by-key
     * idempotence cannot apply here: segment rows are not deduped at
     * read, by design — the read side is a straight multi-directory
@@ -338,8 +336,9 @@ object EditDistance {
     val gen = currentVerified(spark, path)
     val k = indexK(spark, gen)
     val strs = strings(batch, idCol, strCol)
-    Generations.commitBatch(spark, path, gen, "editdist index", batchId,
-      "a blind retry would double every segment of the batch") { staging =>
+    Generations.requireNewBatch(spark, path, "editdist index", batchId,
+      "a blind retry would double every segment of the batch")
+    Generations.commitBatch(spark, path, gen, "editdist index", batchId) { staging =>
       segments(strs, k).write.mode("overwrite").parquet(s"$staging/segs")
       strs.filter(col("len") <= 2 * k + 1)
         .write.mode("overwrite").parquet(s"$staging/shorts")

@@ -34,18 +34,15 @@ import org.apache.spark.sql.functions._
   * == Generation stamps: the crash-safety half of the freshness contract ==
   *
   * "Refresh inside the commit" is mechanical but not ATOMIC: a driver
-  * crash between the maintenance commit's rename and the refresh leaves a
-  * fresh table with a stale manifest whose listed files no longer exist —
-  * a pruned read would hand Spark dead paths, and [[countFast]]'s stored
-  * row counts could silently answer from the pre-commit state. The
-  * reference's only metadata is the live directory listing
-  * (helpers.py:10-32), which CANNOT go stale; a secondary index
-  * reintroduces exactly the failure mode table formats version-stamp
-  * away — so this one is version-stamped too. Every mutation
+  * crash between the maintenance commit and the refresh leaves a fresh
+  * table with a stale manifest whose listed files no longer exist — a
+  * pruned read would hand Spark dead paths, and [[countFast]]'s stored
+  * row counts could silently answer from the pre-commit state. So the
+  * manifest is version-stamped, as table formats do. Every mutation
   * ([[Merge.upsert]]/[[Merge.delete]]/[[Compaction.compact]]) writes a
   * fresh generation id to `<table>/_graft_generation` BEFORE touching any
-  * file; [[refresh]] copies the table's stamp to
-  * `<manifest>/_graft_generation` after the manifest swap; every manifest
+  * file; the manifest commits with the table's stamp inside it
+  * ([[Commit]]); every manifest
   * read path ([[prunedRead]]/[[prunedReadPoint]]/[[countFast]]) verifies
   * the two stamps match and FAILS LOUD on mismatch (IllegalStateException
   * naming the fix: refresh). The fail-loud window thus covers the entire
@@ -61,50 +58,29 @@ object FileManifest {
 
   private val StampFile = "_graft_generation"
 
-  private def fsFor(spark: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  /** Write a generation stamp into `dir` (table root or manifest root) —
-    * create-then-rename, never create-in-place: a reader racing a plain
-    * overwrite could observe an empty stamp file (a phantom third
-    * generation); the rename publishes the new stamp atomically on
-    * rename-atomic filesystems, the same discipline as the streaming
-    * sink's commit markers. Writers don't race each other: the single
-    * maintenance driver is the COW contract. */
+  /** Write a generation stamp into `dir` (table root or manifest root)
+    * through [[Commit]]: a reader never observes a half-written stamp (a
+    * phantom third generation), and a crash leaves the old stamp or the
+    * new one. Writers don't race each other: the single maintenance
+    * driver is the COW contract. */
   private[operators] def writeStamp(
-      spark: SparkSession, dir: String, gen: String): Unit = {
-    val (fs, p) = fsFor(spark, dir)
-    val tmp = new org.apache.hadoop.fs.Path(p, s".$StampFile.inprogress")
-    val dst = new org.apache.hadoop.fs.Path(p, StampFile)
-    val out = fs.create(tmp, true)
-    try out.write(gen.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(dst, false)
-    require(fs.rename(tmp, dst), s"failed to publish generation stamp at $dst")
-  }
+      spark: SparkSession, dir: String, gen: String): Unit =
+    Commit.replace(spark, s"${dir.stripSuffix("/")}/$StampFile") { staged =>
+      val out = Commit.fs(spark, staged).create(new org.apache.hadoop.fs.Path(staged), true)
+      try out.write(gen.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
 
-  /** The generation currently stamped on `dir`, None if never stamped.
-    * A reader racing [[writeStamp]]'s delete-then-rename republication can
-    * see the stamp momentarily absent (the rename pair is not atomic as a
-    * whole) — one retry bridges that microsecond window; a second miss
-    * means genuinely unstamped. */
+  /** The generation currently stamped on `dir`, None if never stamped —
+    * both the directory and the stamp resolve through [[Commit]], so a
+    * crash mid-publish of either still reads the committed stamp. */
   def readStamp(spark: SparkSession, dir: String): Option[String] = {
-    val (fs, p) = fsFor(spark, dir)
-    val f = new org.apache.hadoop.fs.Path(p, StampFile)
-    def attempt(): Option[String] =
-      try {
-        val in = fs.open(f)
-        try {
-          val bytes = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](256)
-          var n = in.read(buf)
-          while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-          Some(new String(bytes.toByteArray, java.nio.charset.StandardCharsets.UTF_8))
-        } finally in.close()
-      } catch { case _: java.io.FileNotFoundException => None }
-    attempt().orElse { Thread.sleep(20); attempt() }
+    val f = Commit.resolve(spark, s"${Commit.resolve(spark, dir)}/$StampFile")
+    try {
+      val in = Commit.fs(spark, f).open(new org.apache.hadoop.fs.Path(f))
+      try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
+      finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
   }
 
   /** Bump the table's generation — called by every maintenance operator
@@ -148,23 +124,24 @@ object FileManifest {
   ): Unit = {
     require(cols.nonEmpty, "cols must be non-empty")
     val aggs = statAggs(cols, Nil, 0L, 0L)
-    spark.read.parquet(tablePath)
+    publish(spark, tablePath, manifestPath, spark.read.parquet(tablePath)
       .groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(manifestPath)
-    alignStamps(spark, tablePath, manifestPath)
+      .agg(aggs.head, aggs.tail: _*))
   }
 
-  /** After a full build or refresh the manifest describes the table as it
-    * stands — record that by copying the table's generation onto the
-    * manifest (seeding a generation first if the table was never
-    * stamped, so the stamp discipline starts at build time). */
-  private def alignStamps(
-      spark: SparkSession, tablePath: String, manifestPath: String): Unit = {
+  /** Publish `manifest` at `manifestPath` through [[Commit]], stamped
+    * with the table's generation INSIDE the staged directory, so the
+    * manifest and its stamp commit in one rename (the table is stamped
+    * first if it never was, so the stamp discipline starts at build
+    * time). */
+  private def publish(spark: SparkSession, tablePath: String,
+      manifestPath: String, manifest: DataFrame): Unit = {
     val gen = readStamp(spark, tablePath)
       .getOrElse(bumpGeneration(spark, tablePath))
-    writeStamp(spark, manifestPath, gen)
+    Commit.replace(spark, manifestPath) { staged =>
+      manifest.coalesce(1).write.parquet(staged)
+      writeStamp(spark, staged, gen)
+    }
   }
 
   final case class RefreshStats(filesAdded: Long, filesDropped: Long, filesKept: Long)
@@ -214,7 +191,7 @@ object FileManifest {
       tablePath: String,
       manifestPath: String
   ): RefreshStats = {
-    val schema = spark.read.parquet(manifestPath).schema
+    val schema = spark.read.parquet(Commit.resolve(spark, manifestPath)).schema
     val rangeCols = schema.fieldNames.toSeq.collect {
       case f if f.startsWith("min_") => f.stripPrefix("min_")
     }
@@ -233,6 +210,7 @@ object FileManifest {
       bloomCols: Seq[String],
       manifestPath: String
   ): RefreshStats = {
+    Commit.recover(spark, manifestPath)
     // inputFiles is the driver's directory listing — the same metadata any
     // scan of the table already materializes
     val current = spark.read.parquet(tablePath).inputFiles.toSeq.sorted
@@ -256,15 +234,9 @@ object FileManifest {
         spark.read.parquet(added: _*)
           .groupBy(input_file_name().as("file"))
           .agg(aggs.head, aggs.tail: _*))
-    // stage beside, then swap — the manifest is read by the union above,
-    // and a half-written manifest must never be observable
-    val staging = s"${manifestPath.stripSuffix("/")}__staging"
-    fresh.coalesce(1).write.mode("overwrite").parquet(staging)
-    spark.read.parquet(staging).coalesce(1)
-      .write.mode("overwrite").parquet(manifestPath)
-    val sp = new org.apache.hadoop.fs.Path(staging)
-    sp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(sp, true)
-    alignStamps(spark, tablePath, manifestPath)
+    // staged beside and swapped in: the manifest is read by the union
+    // above, and a half-written manifest must never be observable
+    publish(spark, tablePath, manifestPath, fresh)
     RefreshStats(added.length.toLong, dropped, knownTotal - dropped)
   }
 
@@ -298,7 +270,7 @@ object FileManifest {
       manifestPath: String,
       ranges: Seq[(String, Any, Any)]
   ): (Seq[String], PruneStats) = {
-    val m = spark.read.parquet(manifestPath)
+    val m = spark.read.parquet(Commit.resolve(spark, manifestPath))
     val total = m.count()
     val cond = ranges.map { case (c, lo, hi) =>
       col(s"min_$c").isNull || col(s"max_$c").isNull ||
@@ -323,7 +295,7 @@ object FileManifest {
   ): (Long, PruneStats) = {
     require(ranges.nonEmpty, "ranges must be non-empty")
     verifyGeneration(spark, tablePath, manifestPath)
-    val m = spark.read.parquet(manifestPath)
+    val m = spark.read.parquet(Commit.resolve(spark, manifestPath))
     val intersects = ranges.map { case (c, lo, hi) =>
       col(s"min_$c").isNull || col(s"max_$c").isNull ||
         (col(s"min_$c") <= lit(hi) && col(s"max_$c") >= lit(lo))
@@ -365,12 +337,9 @@ object FileManifest {
     require(rangeCols.nonEmpty || bloomCols.nonEmpty, "need at least one indexed column")
     val bits = RuntimeFilter.optimalNumBits(expectedPerFile, fpp)
     val aggs = statAggs(rangeCols, bloomCols, expectedPerFile, bits)
-    spark.read.parquet(tablePath)
+    publish(spark, tablePath, manifestPath, spark.read.parquet(tablePath)
       .groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(manifestPath)
-    alignStamps(spark, tablePath, manifestPath)
+      .agg(aggs.head, aggs.tail: _*))
   }
 
   /** Point-lookup read through the per-file blooms: keeps files whose
@@ -389,7 +358,7 @@ object FileManifest {
   ): (DataFrame, PruneStats) = {
     require(values.nonEmpty, "values must be non-empty")
     verifyGeneration(spark, tablePath, manifestPath)
-    val m = spark.read.parquet(manifestPath)
+    val m = spark.read.parquet(Commit.resolve(spark, manifestPath))
     val total = m.count()
     val files = bloomProbe(spark, m, column, values)
       .collect().sorted.toSeq

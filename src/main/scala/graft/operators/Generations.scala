@@ -12,21 +12,13 @@ import org.apache.spark.sql.functions.col
   * a plausible wrong answer, not an error. Under generations, base and
   * batches live inside ONE `gen-NNNNNNN` directory:
   *
-  *   - a rewrite (bootstrap-over-live or compaction) stages the next
-  *     generation COMPLETE under a dot-prefixed name and publishes it
-  *     with a SINGLE atomic rename — the commit point;
-  *   - readers always resolve the HIGHEST committed generation, so every
-  *     crash point of a rewrite leaves the previous generation fully
-  *     readable (staging is invisible; a crash after the rename but
-  *     before old-generation cleanup leaves two complete generations and
-  *     readers pick the newer);
-  *   - superseded generations are deleted only after the rename lands,
-  *     and the IMMEDIATELY-PREVIOUS generation is retained one cycle as
-  *     a reader grace window: a job holding a lazy frame resolved
-  *     against the old generation keeps scanning files that still exist
-  *     while the writer moves on (it is reclaimed by the next publish —
-  *     readers slower than a whole maintenance cycle should
-  *     re-resolve).
+  *   - a rewrite (bootstrap-over-live or compaction) publishes the next
+  *     generation whole through [[Commit]]; readers resolve the HIGHEST
+  *     committed generation, so they see the previous one until then;
+  *   - superseded generations are deleted only after the publish, and
+  *     the IMMEDIATELY-PREVIOUS one is kept one cycle as a reader grace
+  *     window for lazy frames resolved against it (readers slower than
+  *     a whole maintenance cycle should re-resolve).
   *
   * Single-writer means ONE writer across BOTH write families: batch
   * commits (advance/appendIndex) and base rewrites (build/compact) must
@@ -34,12 +26,9 @@ import org.apache.spark.sql.functions.col
   * otherwise land its directory inside the generation the rewrite is
   * superseding, and the new generation's ledger would lack the batch id
   * while the streaming checkpoint records it delivered: the batch's
-  * data silently gone with no replay. Defense in depth for the races
-  * the contract forbids: batch committers re-resolve the current
-  * generation AFTER their rename and fail loud if it moved (the
-  * ClosureStore.advance / EditDistance.appendIndex post-commit probe),
-  * so a violated contract surfaces as an exception and a replay, never
-  * as silent loss. Cross-component torn protection WITHIN a generation
+  * data silently gone with no replay ([[commitBatch]]'s post-publish
+  * probe turns that into an exception). Cross-component torn
+  * protection WITHIN a generation
   * stays [[ArtifactStamp]]'s job. Flat layouts predating the generation
   * structure are NOT migrated: reads fail loud (below) and a fresh
   * build publishes `gen-0000001` beside — not composed with — any
@@ -59,17 +48,12 @@ private[operators] object Generations {
   def genSeq(dir: String): Long =
     dir.substring(dir.lastIndexOf('/') + 1).drop(4).toLong
 
-  private def hadoopFs(spark: SparkSession,
-      path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Committed generation directories, ascending by NUMERIC sequence
     * (lexicographic order breaks once a sequence outgrows the 7-char
     * zero padding: "gen-10000000" < "gen-9999999" as strings). Staging
     * is dot-prefixed and never matches. */
   def dirs(spark: SparkSession, path: String): Seq[String] = {
-    val fs = hadoopFs(spark, path)
+    val fs = Commit.fs(spark, path)
     val root = new org.apache.hadoop.fs.Path(path)
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq.filter(_.isDirectory)
@@ -109,18 +93,20 @@ private[operators] object Generations {
       (readLedger(spark, gen) ++ liveBatchIds(gen)).toSeq.sorted
     }
 
-  /** Committed batch directories of a generation as (batchId, dir) pairs,
-    * ascending id — the RAW-named layout (`batches/<batchId>`) shared by
-    * the EditDistance / VectorIndex / Winnowing stores, where commit
-    * order carries no read semantics (their reads are plain unions).
-    * ClosureStore keeps its own seq-prefixed naming: its merge-on-read
-    * edge masking depends on commit order. Staging dirs are dot-prefixed
-    * and never listed. */
+  /** Committed batch directories of a generation as (name, dir) pairs,
+    * ascending name — for the RAW-named layout (`batches/<batchId>`)
+    * shared by the EditDistance / VectorIndex / Winnowing stores the
+    * name is the batch id, and commit order carries no read semantics
+    * (their reads are plain unions). ClosureStore names its batches
+    * `NNNNNN-<batchId>` and orders them by that sequence: its
+    * merge-on-read edge masking depends on commit order. [[Commit]]'s
+    * dot-prefixed staging is never listed. */
   def listBatches(spark: SparkSession, gen: String): Seq[(String, String)] = {
-    val fs = hadoopFs(spark, gen)
+    val fs = Commit.fs(spark, gen)
     val root = new org.apache.hadoop.fs.Path(s"$gen/batches")
     if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.filter(_.isDirectory)
+    else fs.listStatus(root).toSeq
+      .filter(s => s.isDirectory && !s.getPath.getName.startsWith("."))
       .map(s => (s.getPath.getName, s.getPath.toString)).sortBy(_._1)
   }
 
@@ -134,63 +120,58 @@ private[operators] object Generations {
       readLedger(spark, gen).contains(batchId)
   }
 
-  /** Atomically commit one batch into generation `gen` (raw-named
-    * layout): `write` fills a dot-prefixed staging directory (leftovers
-    * of a crashed attempt are restaged whole), ONE rename publishes it
-    * as `batches/<batchId>`, then the current generation is re-resolved
-    * and the commit fails loud if a concurrent rewrite superseded it —
-    * the single-writer defense: a batch stranded in a superseded
-    * generation would otherwise be silently invisible to readers while
-    * the caller's checkpoint records it delivered. `dupMsg` is the
+  /** Fail loud when `batchId` is not a plain directory name or was
+    * already committed (raw-named layout). `dupMsg` is the
     * store-specific consequence line of a duplicate commit (what a
     * double-ingest would silently corrupt). */
-  def commitBatch(spark: SparkSession, path: String, gen: String,
-      what: String, batchId: String, dupMsg: String)(
-      write: String => Unit): Unit = {
-    require(batchId.nonEmpty && !batchId.exists(c => c == '/' || c == '.'),
-      s"batchId must be a plain directory name, got '$batchId'")
+  def requireNewBatch(spark: SparkSession, path: String, what: String,
+      batchId: String, dupMsg: String): Unit = {
+    requirePlain(batchId)
     if (batchKnown(spark, path, what, batchId))
       throw new IllegalStateException(
         s"$what at $path already ingested batch '$batchId' — $dupMsg; " +
           "probe the ingest state before appending, or pick a new batch id")
-    val fs = hadoopFs(spark, gen)
-    val staging = new org.apache.hadoop.fs.Path(s"$gen/.batch-$batchId.inprogress")
-    fs.delete(staging, true) // leftover from a crashed attempt: restage whole
-    write(staging.toString)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$gen/batches"))
-    require(fs.rename(staging,
-        new org.apache.hadoop.fs.Path(s"$gen/batches/$batchId")),
-      s"$what commit of batch '$batchId' failed to publish " +
-        "(concurrent append of the same id?)")
+  }
+
+  def requirePlain(batchId: String): Unit =
+    require(batchId.nonEmpty && !batchId.exists(c => c == '/' || c == '.'),
+      s"batchId must be a plain directory name, got '$batchId'")
+
+  /** Commit one batch directory `batches/<name>` into generation `gen`
+    * through [[Commit]] (`write` fills the staged copy), then re-resolve
+    * the current generation and fail loud if a concurrent rewrite
+    * superseded `gen` — the single-writer defense: a batch stranded in a
+    * superseded generation would otherwise be silently invisible to
+    * readers while the caller's checkpoint records it delivered. The
+    * caller replays; its probe, run against the new generation, says the
+    * batch is not there. */
+  def commitBatch(spark: SparkSession, path: String, gen: String,
+      what: String, name: String)(write: String => Unit): Unit = {
+    requirePlain(name)
+    Commit.replace(spark, s"$gen/batches/$name")(write)
     if (current(spark, path, what) != gen)
       throw new IllegalStateException(
-        s"$what batch '$batchId' committed into a generation that a " +
+        s"$what batch '$name' committed into a generation that a " +
           s"concurrent rewrite superseded ($gen) — batch commits and " +
           "rewrites must be serialized by one writer; replay the batch")
   }
 
-  /** Publish the next generation: `write` fills the staged directory,
-    * `parts` names the components to stamp with one fresh generation id
-    * ([[ArtifactStamp]]), then ONE rename commits and superseded
-    * generations are best-effort deleted. A crash before the rename
-    * leaves the old generation untouched; after it, readers already
-    * resolve the new one. */
+  /** Publish the next generation through [[Commit]]: `write` fills the
+    * staged directory and `parts` names the components stamped with one
+    * fresh generation id ([[ArtifactStamp]]) before the rename, then
+    * superseded generations are best-effort deleted. */
   def publish(spark: SparkSession, path: String,
       parts: String => Seq[String])(write: String => Unit): Unit = {
-    val fs = hadoopFs(spark, path)
     val old = dirs(spark, path)
     val seq = old.lastOption.map(genSeq).getOrElse(0L) + 1
-    val name = f"gen-$seq%07d"
-    val staging = new org.apache.hadoop.fs.Path(s"$path/.$name.inprogress")
-    fs.delete(staging, true) // leftover from a crashed attempt: restage whole
-    write(staging.toString)
-    ArtifactStamp.stampAll(spark, parts(staging.toString))
-    fs.mkdirs(new org.apache.hadoop.fs.Path(path))
-    require(fs.rename(staging, new org.apache.hadoop.fs.Path(s"$path/$name")),
-      s"generation publish of $name under $path failed (concurrent rewrite?)")
+    Commit.replace(spark, f"$path/gen-$seq%07d") { staging =>
+      write(staging)
+      ArtifactStamp.stampAll(spark, parts(staging))
+    }
     // keep the immediately-previous generation one cycle (reader grace —
     // in-flight lazy frames resolved before this publish keep their
     // files); everything older is reclaimed now
+    val fs = Commit.fs(spark, path)
     old.dropRight(1).foreach(d =>
       fs.delete(new org.apache.hadoop.fs.Path(d), true))
   }

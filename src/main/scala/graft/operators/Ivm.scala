@@ -45,6 +45,7 @@ object Ivm {
       addCols: Seq[String]
   ): Unit = {
     require(keys.nonEmpty && addCols.nonEmpty, "keys and addCols must be non-empty")
+    Merge.recover(spark, viewPath)
     val stored = spark.read.parquet(viewPath)
     val aggs = addCols.map(c => sum(col(c)).as(c))
     val merged = stored.select((keys ++ addCols).map(col): _*)

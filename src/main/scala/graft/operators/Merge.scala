@@ -30,28 +30,23 @@ import org.apache.spark.sql.functions._
   *   3. Matched rows are dropped by a LEFT ANTI join on the key — the only
   *      shuffle, sized by the touched partitions, AQE-skew-splittable.
   *   4. Survivors ∪ batch are written ONCE, partitioned, to a sibling
-  *      staging directory, then committed by a directory swap: for each
-  *      staged leaf directory, delete the same relative path under the
-  *      table and rename the staged leaf into place. Only the touched
-  *      directories are replaced; every other partition's files are not
-  *      even read. Staging is a sibling because the write reads the very
-  *      directories it replaces — writing into the table in place would
-  *      delete its own input (Spark refuses it: "Cannot overwrite a path
-  *      that is also being read from"). The swap is exactly what Spark's
-  *      dynamic-partition-overwrite `commitJob` does per partition
-  *      (delete the final directory, rename the staged one in), so the
-  *      crash window is the same: a crash mid-swap leaves some touched
-  *      directories new and the rest old (or, for the one directory
-  *      caught between its delete and its rename, absent); a crash
-  *      before the swap leaves the table untouched, and the next attempt
-  *      clears the stale staging tree before it writes. Either way the
-  *      generation bump comes first, so a stats manifest fails loud
-  *      rather than serving vanished files. What it saves is the second
-  *      pass — no schema-inference job over the staging directory, no
-  *      second read and write of the rewritten rows. The stats ride the
-  *      single write as two `observe` metrics (pruned target rows;
-  *      written rows tagged batch vs survivor): no job only counts rows
-  *      and nothing is persisted.
+  *      staging directory, and each staged leaf directory is published
+  *      over the same relative path under the table by [[Commit]]'s
+  *      rename-aside swap. Only the touched directories are replaced;
+  *      every other partition's files are not even read. Staging is a
+  *      sibling because the write reads the very directories it
+  *      replaces — writing into the table in place would delete its own
+  *      input (Spark refuses it: "Cannot overwrite a path that is also
+  *      being read from"). Each leaf is its own commit: a crash
+  *      mid-commit leaves some touched leaves new and the rest old, and
+  *      the leaf caught between its two renames waits in its hidden
+  *      aside until [[recover]] — which every writer of the table runs
+  *      before it reads — rolls it forward ([[Commit]]'s crash
+  *      contract). The generation bump comes before the first rename, so
+  *      a stats manifest fails loud rather than serving vanished files.
+  *      The stats ride the single write as two `observe` metrics (pruned
+  *      target rows; written rows tagged batch vs survivor): no job only
+  *      counts rows and nothing is persisted.
   *
   * Idempotence: re-applying the same batch replaces the same rows with
   * the same rows (anti-join drops what the union re-adds), so a retried
@@ -120,52 +115,71 @@ object Merge {
       }.reduce(_ && _)
     }.reduceOption(_ || _).getOrElse(lit(false))
 
+  private def stagingOf(path: String): String =
+    s"${path.stripSuffix("/")}__graft_staging"
+
+  /** Names of the partition directories directly under `dir` — Spark's
+    * listing rule: `_`/`.` names are metadata (`_SUCCESS`, `_temporary`,
+    * checksums, [[Commit]]'s hidden siblings) unless `_` starts a
+    * `col=value` name. Sorted: leaves commit in name order. */
+  private def dataDirs(spark: SparkSession, dir: Path): Seq[String] =
+    Commit.fs(spark, dir.toString).listStatus(dir).toSeq
+      .map(st => (st, st.getPath.getName))
+      .collect { case (st, n) if st.isDirectory && !n.startsWith(".") &&
+        (!n.startsWith("_") || n.contains("=")) => n }.sorted
+
+  private def under(root: String, rel: Seq[String]): String =
+    rel.foldLeft(new Path(root))(new Path(_, _)).toString
+
+  /** Finish or discard a crashed attempt's commit of the table at `path`;
+    * every writer runs this before it reads the table. A staged leaf
+    * whose swap had begun (its [[Commit.aside]] exists) is rolled
+    * forward; every other staged leaf never began and is discarded with
+    * the staging tree. No-op (one existence probe) after a clean run. */
+  private[operators] def recover(spark: SparkSession, path: String): Unit = {
+    val staging = stagingOf(path)
+    val fs = Commit.fs(spark, path)
+    def walk(rel: List[String]): Unit = {
+      val (s, t) = (under(staging, rel), under(path, rel))
+      if (fs.exists(new Path(Commit.aside(t)))) Commit.recover(spark, s, t)
+      else dataDirs(spark, new Path(s)).foreach(n => walk(rel :+ n))
+    }
+    if (fs.exists(new Path(staging))) {
+      walk(Nil)
+      rmDir(spark, staging)
+    }
+  }
+
   /** Write `out` once, partitioned by `partCols`, to the staging directory
-    * beside `path` (returned). Sibling, never inside `path`: the write may
-    * read `path`, and hive partition discovery wants the table tree to
-    * hold only `col=value` directories. Leftovers of a crashed attempt are
-    * removed first, so none of their files can reach the table. */
+    * beside `path` (returned), after [[recover]]ing the table. Sibling,
+    * never inside `path`: the write may read `path`, and hive partition
+    * discovery wants the table tree to hold only `col=value`
+    * directories. */
   private[operators] def stage(
       spark: SparkSession, out: DataFrame, path: String,
       partCols: Seq[String]): String = {
-    val staging = s"${path.stripSuffix("/")}__graft_staging"
-    rmDir(spark, staging)
-    out.write.mode("overwrite").partitionBy(partCols: _*).parquet(staging)
+    recover(spark, path)
+    val staging = stagingOf(path)
+    out.write.partitionBy(partCols: _*).parquet(staging)
     staging
   }
 
-  /** Commit a [[stage]]d write by directory swap: every staged leaf
-    * directory (`depth` levels of `col=value` names; `depth` 0 swaps the
-    * whole directory) replaces the same relative path under `path` —
-    * delete, make the parent, rename — then the staging directory goes.
-    * Per directory this is Spark's dynamic-overwrite `commitJob`, with
-    * its crash window. Returns the relative paths of the swapped leaves,
-    * as written (escaped) names. */
+  /** Commit a [[stage]]d write: every staged leaf directory (`depth`
+    * levels of `col=value` names; `depth` 0 swaps the whole directory)
+    * is published over the same relative path under `path` by
+    * [[Commit.publish]], then the staging directory goes. Returns the
+    * relative paths of the swapped leaves, as written (escaped) names. */
   private[operators] def commit(
       spark: SparkSession, staging: String, path: String,
       depth: Int): Set[String] = {
-    val stagingP = new Path(staging)
-    val fs = stagingP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Spark's listing rule: `_`/`.` names are metadata (`_SUCCESS`,
-    // `_temporary`, checksums) unless `_` starts a `col=value` name
-    def isData(name: String): Boolean =
-      !name.startsWith(".") && (!name.startsWith("_") || name.contains("="))
-    def leaves(dir: Path, d: Int): Seq[List[String]] =
-      if (d == 0) Seq(Nil)
-      else fs.listStatus(dir).toSeq
-        .filter(st => st.isDirectory && isData(st.getPath.getName))
-        .flatMap(st =>
-          leaves(st.getPath, d - 1).map(st.getPath.getName :: _))
-    val rels = leaves(stagingP, depth)
-    val tableP = new Path(path)
-    rels.foreach { rel =>
-      val src = rel.foldLeft(stagingP)(new Path(_, _))
-      val dst = rel.foldLeft(tableP)(new Path(_, _))
-      fs.delete(dst, true)
-      fs.mkdirs(dst.getParent)
-      require(fs.rename(src, dst), s"Merge commit: rename $src -> $dst failed")
-    }
-    fs.delete(stagingP, true)
+    def leaves(rel: List[String], d: Int): Seq[List[String]] =
+      if (d == 0) Seq(rel)
+      else dataDirs(spark, new Path(under(staging, rel)))
+        .flatMap(n => leaves(rel :+ n, d - 1))
+    val rels = leaves(Nil, depth)
+    rels.foreach(rel =>
+      Commit.publish(spark, under(staging, rel), under(path, rel)))
+    rmDir(spark, staging)
     rels.map(_.mkString("/")).toSet
   }
 
@@ -176,11 +190,8 @@ object Merge {
       partCols: Seq[String]): Unit =
     commit(spark, stage(spark, out, path, partCols), path, partCols.size)
 
-  private[operators] def rmDir(spark: SparkSession, dir: String): Unit = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-  }
+  private[operators] def rmDir(spark: SparkSession, dir: String): Unit =
+    Commit.fs(spark, dir).delete(new Path(dir), true)
 
   /** Relative paths (as written, escaped) of the leaf directories that a
     * partition-pruned scan of the table reads — the pruned file index's
@@ -237,6 +248,7 @@ object Merge {
     val tuples = partTuples(batch, partCols)
     if (tuples.isEmpty) return MergeStats(0L, 0L, 0L, 0L)
 
+    recover(spark, path)
     val target = spark.read.parquet(path)
     val affected = target.filter(touchedFilter(tuples, partCols))
     val targetObs, outObs = Observation()
@@ -290,6 +302,7 @@ object Merge {
     val tuples = partTuples(keys, partCols)
     if (tuples.isEmpty) return MergeStats(0L, 0L, 0L, 0L)
 
+    recover(spark, path)
     val target = spark.read.parquet(path)
     val affected = target.filter(touchedFilter(tuples, partCols))
     val existing = scannedLeaves(affected, partCols.size)
@@ -305,8 +318,11 @@ object Merge {
     // removals below are one logical commit; the window must cover both)
     FileManifest.bumpGeneration(spark, path)
     val staged = commit(spark, staging, path, partCols.size)
-    // Directories the delete emptied entirely: touched minus re-staged.
-    (existing -- staged).foreach(rel => rmDir(spark, s"${path.stripSuffix("/")}/$rel"))
+    // Directories the delete emptied entirely: touched minus re-staged. A
+    // leftover aside goes first: one outliving its leaf would make a later
+    // attempt's never-begun staged copy of that leaf look like a begun swap
+    (existing -- staged).map(rel => s"${path.stripSuffix("/")}/$rel")
+      .foreach(d => Seq(Commit.aside(d), d).foreach(rmDir(spark, _)))
     refreshManifest(spark, path, manifestPath)
     MergeStats(tuples.length.toLong, before,
       rowsReplaced = before - nWritten, rowsWritten = nWritten)

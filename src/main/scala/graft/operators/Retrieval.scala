@@ -149,13 +149,9 @@ object Retrieval {
     * [[Generations]] directory stamped with ONE generation id: a crash
     * between the component writes of a rebuild would otherwise leave
     * yesterday's df beside today's postings, and BM25 scored with
-    * mismatched df/stats is silently mis-ranked, not an error. The
-    * generation publish (r16) closes the availability half of that
-    * story too: rewriting a LIVE index stages the next generation
-    * complete and commits with a single rename, so a crash mid-rewrite
-    * leaves the previous index fully SERVABLE — the stamp-only layout
-    * this replaces failed loud but left no readable index until a
-    * rebuild completed. */
+    * mismatched df/stats is silently mis-ranked, not an error. A rewrite
+    * of a LIVE index publishes the next generation whole, so the
+    * previous index keeps serving until it lands. */
   def writeBm25Index(
       docs: DataFrame,
       path: String,

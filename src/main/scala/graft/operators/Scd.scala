@@ -41,11 +41,12 @@ import org.apache.spark.sql.functions._
   * Idempotence: change detection is null-safe payload equality against the
   * current slice, so re-applying a committed batch finds zero changed keys
   * and zero new keys and returns without writing. A crash INSIDE the
-  * commit is covered by replay: the rewrite of `cur` and the fresh `<v>`
-  * directory are re-derived deterministically from (old state, batch) — a
-  * torn commit's replay converges because a batch row either still
-  * differs from `cur` (re-closed with identical rows) or already matches
-  * (no-op).
+  * commit is covered by recovery and replay ([[Commit]]'s crash
+  * contract): leaves publish in name order, so the fresh `<v>` directory
+  * lands before `cur` is replaced, and both are re-derived
+  * deterministically from (old state, batch) — a replay after a crash
+  * that left `<v>` new and `cur` old re-closes the same rows, and one
+  * after both landed finds nothing changed (no-op).
   *
   * Contract: `batch` carries exactly the dimension's business columns
   * (keys + attributes) and at most ONE row per key — two open versions for
@@ -72,14 +73,13 @@ object Scd {
   def init(
       spark: SparkSession, path: String, dim: DataFrame,
       version: Long = 1L): Unit = {
-    // Stage-and-rename, stamp INSIDE the staging dir before the swap: a
-    // plain overwrite would delete the directory (old stamp included) and
-    // re-stamp only after the write — a crash in that window leaves a
+    // Stage, stamp INSIDE the staging dir, then swap the whole directory:
+    // a plain overwrite would delete the directory (old stamp included)
+    // and re-stamp only after the write — a crash in that window leaves a
     // REWRITTEN table with NO stamp, which verifyGeneration treats as
     // never-stamped and passes trivially, i.e. a pre-existing manifest
-    // would silently serve vanished files. With the rename, the stamp
-    // lands atomically WITH the data; a crash between delete and rename
-    // leaves no table at all — reads fail loud, never stale.
+    // would silently serve vanished files. With the swap the stamp
+    // commits WITH the data ([[Commit]]'s crash contract).
     val staged = dim.withColumn(FromCol, lit(version))
       .withColumn(ToCol, lit(null).cast("long"))
       .withColumn(PartCol, lit(Current))
@@ -131,6 +131,7 @@ object Scd {
       "SCD2 batch has duplicate keys — one open version per key is the " +
         "representable state; pre-aggregate the batch to its latest row")
 
+    Merge.recover(spark, path)
     val cur = spark.read.parquet(path).filter(col(PartCol) === Current)
 
     // Null-safe payload comparison via ONE left join of the delta against
@@ -146,45 +147,46 @@ object Scd {
         col("_cur_payload").isNotNull &&
           !(col("_cur_payload") <=> col("_new_payload")))
       .persist()
-    val agg = probe.agg(
-      sum(when(col("_is_changed"), 1L).otherwise(0L)).as("chg"),
-      sum(when(col("_is_new"), 1L).otherwise(0L)).as("ins")).head()
-    val (nChanged, nInserted) =
-      (Option(agg.get(0)).fold(0L)(_.asInstanceOf[Long]),
-        Option(agg.get(1)).fold(0L)(_.asInstanceOf[Long]))
-    if (nChanged == 0 && nInserted == 0) {
-      probe.unpersist()
-      return ScdStats(0L, 0L, 0L) // committed-batch replay lands here
-    }
+    // released on every exit: a failed attempt's cached probe would
+    // otherwise answer its retry (same plan) with the pre-commit changes
+    try {
+      val agg = probe.agg(
+        sum(when(col("_is_changed"), 1L).otherwise(0L)).as("chg"),
+        sum(when(col("_is_new"), 1L).otherwise(0L)).as("ins")).head()
+      val (nChanged, nInserted) =
+        (Option(agg.get(0)).fold(0L)(_.asInstanceOf[Long]),
+          Option(agg.get(1)).fold(0L)(_.asInstanceOf[Long]))
+      if (nChanged == 0 && nInserted == 0)
+        return ScdStats(0L, 0L, 0L) // committed-batch replay lands here
 
-    val changedKeys = probe.filter(col("_is_changed"))
-      .select(keyCols.map(col): _*)
-    val newKeys = probe.filter(col("_is_new")).select(keyCols.map(col): _*)
+      val changedKeys = probe.filter(col("_is_changed"))
+        .select(keyCols.map(col): _*)
+      val newKeys = probe.filter(col("_is_new")).select(keyCols.map(col): _*)
 
-    val outCols = bizCols ++ Seq(FromCol, ToCol, PartCol)
-    // closed versions: the old rows of changed keys, stamped and moved to
-    // the append-only scd_part=<version> directory
-    val closed = cur.join(changedKeys, keyCols, "semi")
-      .withColumn(ToCol, lit(version))
-      .withColumn(PartCol, lit(version.toString))
-      .select(outCols.map(col): _*)
-    val opened = batch.join(changedKeys.unionByName(newKeys), keyCols, "semi")
-      .withColumn(FromCol, lit(version))
-      .withColumn(ToCol, lit(null).cast("long"))
-      .withColumn(PartCol, lit(Current))
-      .select(outCols.map(col): _*)
-    val carried = cur.join(changedKeys, keyCols, "left_anti")
-      .withColumn(PartCol, lit(Current))
-      .select(outCols.map(col): _*)
+      val outCols = bizCols ++ Seq(FromCol, ToCol, PartCol)
+      // closed versions: the old rows of changed keys, stamped and moved to
+      // the append-only scd_part=<version> directory
+      val closed = cur.join(changedKeys, keyCols, "semi")
+        .withColumn(ToCol, lit(version))
+        .withColumn(PartCol, lit(version.toString))
+        .select(outCols.map(col): _*)
+      val opened = batch.join(changedKeys.unionByName(newKeys), keyCols, "semi")
+        .withColumn(FromCol, lit(version))
+        .withColumn(ToCol, lit(null).cast("long"))
+        .withColumn(PartCol, lit(Current))
+        .select(outCols.map(col): _*)
+      val carried = cur.join(changedKeys, keyCols, "left_anti")
+        .withColumn(PartCol, lit(Current))
+        .select(outCols.map(col): _*)
 
-    // one staged write swapped in over exactly {cur, <v>} —
-    // generation-stamped like every in-place table mutation, so a stats
-    // manifest maintained over the dimension fails loud (not stale)
-    // until its owner refreshes it after the commit
-    FileManifest.bumpGeneration(spark, path)
-    Merge.stageAndCommit(spark,
-      carried.unionByName(opened).unionByName(closed), path, Seq(PartCol))
-    probe.unpersist()
-    ScdStats(nChanged, nInserted, rowsClosed = nChanged)
+      // one staged write swapped in over exactly {cur, <v>} —
+      // generation-stamped like every in-place table mutation, so a stats
+      // manifest maintained over the dimension fails loud (not stale)
+      // until its owner refreshes it after the commit
+      FileManifest.bumpGeneration(spark, path)
+      Merge.stageAndCommit(spark,
+        carried.unionByName(opened).unionByName(closed), path, Seq(PartCol))
+      ScdStats(nChanged, nInserted, rowsClosed = nChanged)
+    } finally probe.unpersist()
   }
 }

@@ -120,28 +120,21 @@ object Snapshot {
   // directory (hive-style on purpose: reading the ROOT yields every
   // version with a `v` column, so cross-version audits are one scan with
   // version predicates pruning directories like any partition filter).
-  // A publish stages to a dot-prefixed dir (hidden from readers) and
-  // renames — readers never observe a half-written version.
+  // A publish goes through [[Commit]] — readers never observe a
+  // half-written version.
 
   /** Publish `df` as the next immutable version under `root`; returns the
     * new version number (1-based). */
   def publish(df: DataFrame, root: String): Int = {
     val spark = df.sparkSession
     val next = versions(spark, root).lastOption.getOrElse(0) + 1
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(rootP, s".v=$next.inprogress")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    val fin = new org.apache.hadoop.fs.Path(rootP, s"v=$next")
-    require(fs.rename(tmp, fin),
-      s"publish: rename to $fin failed (concurrent publish of the same version?)")
+    Commit.replace(spark, s"$root/v=$next")(df.write.parquet(_))
     next
   }
 
   /** Published version numbers under `root`, ascending. */
   def versions(spark: SparkSession, root: String): Seq[Int] = {
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, rootP) = (Commit.fs(spark, root), new org.apache.hadoop.fs.Path(root))
     if (!fs.exists(rootP)) Seq.empty
     else fs.listStatus(rootP).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
@@ -166,9 +159,8 @@ object Snapshot {
     require(keep >= 1, s"keep must be >= 1, got $keep")
     val vs = versions(spark, root)
     val drop = vs.dropRight(keep)
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    drop.foreach(v => fs.delete(new org.apache.hadoop.fs.Path(rootP, s"v=$v"), true))
+    drop.foreach(v => Commit.fs(spark, root)
+      .delete(new org.apache.hadoop.fs.Path(s"$root/v=$v"), true))
     drop
   }
 }

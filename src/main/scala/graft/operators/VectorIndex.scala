@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *
   * Layout is [[Generations]]-structured (the ClosureStore/EditDistance
   * discipline): all components live inside one `gen-NNNNNNN` directory
-  * published by a single atomic rename —
+  * published whole —
   *   - `params/`    one row: m, sd, ks, dim, residual, k_cells
   *   - `centroids/` (cluster, cvec ARRAY<DOUBLE>, cnorm2) — broadcast side
   *   - `codebooks/` (subspace, code, center ARRAY<DOUBLE>) — m·ks rows,
@@ -29,12 +29,11 @@ import org.apache.spark.sql.functions._
   *     across [[compactIndex]] and rebuilds so [[batchIngested]] stays
   *     truthful after the batch directories themselves are gone
   *   - `batches/<batchId>/codes/` — committed [[appendBatch]] increments,
-  *     each published by ONE rename (wholly visible or not at all)
+  *     each wholly visible or not at all
   *
   * A rebuild over a LIVE index publishes a whole new generation, so the
   * new fits can never silently compose with codes encoded under the old
-  * ones, and a crash mid-rewrite leaves the previous generation fully
-  * readable. A crashed or speculatively-retried ingest job is caught by
+  * ones. A crashed or speculatively-retried ingest job is caught by
   * the [[batchIngested]] probe — the raw-parquet-append design this
   * replaces would double-encode the batch silently (duplicate code rows
   * inflate candidate multiplicity and can displace distinct neighbors in
@@ -183,9 +182,8 @@ object VectorIndex {
     * from the STORED artifacts only, zero re-encoding: the composed
     * codes read is rewritten as one single-directory table, fits and
     * params copy over verbatim, the replay ledger absorbs the batch
-    * ids, and the result publishes as the next generation with one
-    * rename (a crash anywhere mid-compact leaves the old generation
-    * fully readable). Searches, appends, and [[batchIngested]] answers
+    * ids, and the result publishes as the next generation. Searches,
+    * appends, and [[batchIngested]] answers
     * are invariant across a compact (spec-pinned). */
   def compactIndex(spark: SparkSession, path: String): Unit = {
     import spark.implicits._
@@ -214,11 +212,10 @@ object VectorIndex {
     * until the next rebuild, in exchange for O(batch) ingest cost.
     *
     * The commit is ATOMIC and REPLAY-SAFE, not a parquet append
-    * ([[EditDistance.appendIndex]]'s discipline): the encoded codes stage
-    * under one dot-prefixed directory (invisible to readers) and publish
-    * with a SINGLE rename to `batches/<batchId>` — a crash leaves either
-    * nothing visible or the whole batch, and re-submitting a committed
-    * batchId fails loud (retrying jobs probe [[batchIngested]] first).
+    * ([[EditDistance.appendIndex]]'s discipline): the encoded codes
+    * commit as one `batches/<batchId>` directory, wholly visible or not
+    * at all, and re-submitting a committed batchId fails loud (retrying
+    * jobs probe [[batchIngested]] first).
     * The raw append this replaces was the one stored artifact whose
     * failure/retry semantics contradicted the repo's standard: a retried
     * ingest double-encoded the batch silently, and only `codes` changed,
@@ -248,10 +245,11 @@ object VectorIndex {
     val coded = books.zipWithIndex.foldLeft(codeInput) { case (d, (cbook, i)) =>
       d.withColumn(s"c_$i", mkPredictor(cbook)(subVec(col("vh"), i, sd)))
     }.withColumn("codes", array((0 until m).map(i => col(s"c_$i")): _*))
-    Generations.commitBatch(spark, path, gen, "IVFADC index", batchId,
+    Generations.requireNewBatch(spark, path, "IVFADC index", batchId,
       "a blind retry would double-encode the batch (duplicate code rows " +
         "inflate candidate multiplicity and can displace distinct " +
-        "neighbors in the ADC shortlist)") { staging =>
+        "neighbors in the ADC shortlist)")
+    Generations.commitBatch(spark, path, gen, "IVFADC index", batchId) { staging =>
       coded.select(col("vid"), col("cluster"), col("codes"), col("vh0").as("vh"))
         .write.mode("overwrite").parquet(s"$staging/codes")
     }

@@ -155,10 +155,14 @@ object Winnowing {
       w: Int = 4,
       idCol: String = "doc_id",
       textCol: String = "text"
-  ): DataFrame =
+  ): DataFrame = {
+    // the probe side casts `did` to BIGINT: a string-id index would
+    // build fine and fail mid-job on its first incremental probe
+    Dedup.requireIntegralId(docs, idCol, "fingerprintIndex")
     fingerprints(docs, k, w, idCol, textCol)
       .select(col(idCol).as("did"), size(col("fps")).as("nfp"),
         explode(col("fps")).as("fp"))
+  }
 
   /** Publish a [[fingerprintIndex]] to disk: `postings/` plus a `meta/`
     * row pinning (k, w) — the winnowing scheme is a function of both, so
@@ -171,11 +175,8 @@ object Winnowing {
     * EditDistance / VectorIndex layout): base components + an
     * `ingested/` replay ledger + the `batches/` directory of committed
     * [[appendIndex]] increments live inside one `gen-NNNNNNN` published
-    * by a single rename. A torn rebuild (postings rewritten, meta not,
-    * or either alone) stays an error ([[ArtifactStamp]]), AND a crash
-    * mid-rewrite now leaves the previous generation fully servable —
-    * the stamp-only flat layout this replaces failed loud but left no
-    * readable index until a rebuild completed. Rebuilding over a LIVE
+    * whole. A torn rebuild (postings rewritten, meta not, or either
+    * alone) stays an error ([[ArtifactStamp]]). Rebuilding over a LIVE
     * index supersedes the old base and its batch directories together;
     * the ledger carries forward (old ledger ∪ old batch ids), so a
     * streaming replay of a batch folded before the rebuild is still
@@ -250,11 +251,10 @@ object Winnowing {
     * postings IS the next day's index". O(|batch|) fingerprinting under
     * the STORED (k, w) scheme (no caller-supplied scheme to mismatch),
     * history untouched. The commit is ATOMIC and REPLAY-SAFE
-    * ([[EditDistance.appendIndex]]'s discipline): postings stage under a
-    * dot-prefixed directory and publish with a SINGLE rename to
-    * `batches/<batchId>` — a crash leaves either nothing visible or the
-    * whole batch, and re-submitting a committed batchId fails loud
-    * (retrying jobs probe [[batchIngested]] first). */
+    * ([[EditDistance.appendIndex]]'s discipline): postings commit as
+    * one `batches/<batchId>` directory, wholly visible or not at all,
+    * and re-submitting a committed batchId fails loud (retrying jobs
+    * probe [[batchIngested]] first). */
   def appendIndex(
       batch: DataFrame,
       path: String,
@@ -265,9 +265,10 @@ object Winnowing {
     val spark = batch.sparkSession
     val gen = currentVerified(spark, path)
     val (k, w) = storedScheme(spark, gen)
-    Generations.commitBatch(spark, path, gen, "winnowing index", batchId,
+    Generations.requireNewBatch(spark, path, "winnowing index", batchId,
       "a blind retry would double every posting of the batch (inflating " +
-        "n_shared counts and overlap fractions silently)") { staging =>
+        "n_shared counts and overlap fractions silently)")
+    Generations.commitBatch(spark, path, gen, "winnowing index", batchId) { staging =>
       fingerprintIndex(batch, k, w, idCol, textCol)
         .write.mode("overwrite").parquet(s"$staging/postings")
     }
@@ -277,9 +278,8 @@ object Winnowing {
     * from the STORED postings only, zero re-fingerprinting: the composed
     * posting read is rewritten as one table, meta copies verbatim (the
     * (k, w) pin survives), the replay ledger absorbs the batch ids, and
-    * the result publishes as the next generation with one rename (a
-    * crash anywhere mid-compact leaves the old generation fully
-    * readable). Probes, appends, and [[batchIngested]] answers are
+    * the result publishes as the next generation. Probes, appends, and
+    * [[batchIngested]] answers are
     * invariant across a compact (spec-pinned). */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {

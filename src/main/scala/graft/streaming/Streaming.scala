@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.core._
+import graft.operators.Commit
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -652,8 +653,9 @@ object Streaming {
     * BEFORE the checkpoint records it, restart re-delivers batch N.
     *
     * This wrapper closes that window with a sink-side commit manifest: a
-    * `batch-<id>` marker file is written (atomic rename) only after `fn`
-    * returns, and re-delivered batchIds whose marker exists are skipped.
+    * `batch-<id>` marker file is committed ([[graft.operators.Commit]])
+    * only after `fn` returns, and re-delivered batchIds whose marker
+    * exists are skipped.
     * `fn` itself may still run more than once for a batch that FAILED
     * mid-write (markers only demote re-delivery of COMMITTED batches), so
     * `fn`'s writes should target an idempotent key when the external system
@@ -668,23 +670,28 @@ object Streaming {
       trigger: Trigger = Trigger.AvailableNow())(
       fn: (DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
     df.writeStream.trigger(trigger).foreachBatch { (batch: DataFrame, id: Long) =>
-      val conf = batch.sparkSession.sparkContext.hadoopConfiguration
-      val dir = new org.apache.hadoop.fs.Path(manifestDir)
-      val fs = dir.getFileSystem(conf)
-      val marker = new org.apache.hadoop.fs.Path(dir, s"batch-$id")
-      if (!fs.exists(marker)) {
-        fn(batch, id)
-        val tmp = new org.apache.hadoop.fs.Path(dir, s".batch-$id.inprogress")
-        val out = fs.create(tmp, true)
-        out.close()
-        if (!fs.rename(tmp, marker)) {
-          // lost a race with a concurrent attempt of the same batch — the
-          // marker now exists either way, which is all correctness needs
-          fs.delete(tmp, false)
-        }
-        ()
-      }
+      applyMarkedBatch(batch, id, manifestDir)(fn)
+      ()
     }
+
+  /** One micro-batch of [[idempotentForeachBatchSink]], factored out so
+    * replay semantics are directly testable. Returns true when `fn` ran,
+    * false when the batch's marker showed it already committed. */
+  private[graft] def applyMarkedBatch(batch: DataFrame, id: Long,
+      manifestDir: String)(fn: (DataFrame, Long) => Unit): Boolean = {
+    val spark = batch.sparkSession
+    val marker = s"$manifestDir/batch-$id"
+    if (pathExists(spark, Commit.resolve(spark, marker))) false
+    else {
+      fn(batch, id)
+      Commit.replace(spark, marker)(staged => Commit.fs(spark, staged)
+        .create(new org.apache.hadoop.fs.Path(staged), true).close())
+      true
+    }
+  }
+
+  private def pathExists(spark: SparkSession, path: String): Boolean =
+    Commit.fs(spark, path).exists(new org.apache.hadoop.fs.Path(path))
 
   /** Streaming UPSERT sink: each micro-batch MERGEs into a partitioned
     * parquet table through [[graft.operators.Merge.upsert]] — the
@@ -743,12 +750,10 @@ object Streaming {
             .filter(!org.apache.spark.sql.functions.col("passed"))
             .write.mode("overwrite").json(s"$quarantinePath/batch-$id.report")
         } else {
-          val fs = new org.apache.hadoop.fs.Path(tablePath)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(new org.apache.hadoop.fs.Path(tablePath))) {
+          if (!pathExists(spark, tablePath)) {
             // first admitted batch bootstraps the table (Merge needs a target)
-            batch.write.mode("overwrite")
-              .partitionBy(partCols: _*).parquet(tablePath)
+            Commit.replace(spark, tablePath)(
+              batch.write.partitionBy(partCols: _*).parquet(_))
           } else {
             graft.operators.Merge.upsert(spark, tablePath, batch, keyCols, partCols)
             ()
@@ -811,13 +816,14 @@ object Streaming {
     * batches' distinct docs — arrival order, batch boundaries, and
     * re-deliveries cannot change it (spec-pinned).
     *
-    * Artifact layout: `path/sample` (the bottom-k priority rows) and
-    * `path/stats` (1 row: running token total + doc count + last applied
-    * batch id). The token total accumulates per BATCH, so it is guarded
-    * by the batch id — a crash-replayed committed batch is detected
-    * (`batchId <= last_batch_id`) and skipped whole, the standard
-    * idempotent-foreachBatch recipe. Per batch: one batch scan (its own
-    * bottom-k pre-cut), a k+k-row merge, two KB-scale staged overwrites.
+    * Artifact layout: `path/current/sample` (the bottom-k priority rows)
+    * and `path/current/stats` (1 row: running token total + doc count +
+    * last applied batch id), committed together as one directory
+    * ([[committed]]). The token total accumulates per BATCH, so it is
+    * guarded by the batch id — a crash-replayed committed batch is
+    * detected (`batchId <= last_batch_id`) and skipped whole, the
+    * standard idempotent-foreachBatch recipe. Per batch: one batch scan
+    * (its own bottom-k pre-cut), a k+k-row merge, one KB-scale commit.
     * Read the weighted sample back with [[storedPpsSample]]. */
   def ppsSampleSink(
       docs: DataFrame,
@@ -842,11 +848,10 @@ object Streaming {
       batchId: Long): Boolean = {
     import org.apache.spark.sql.functions._
     val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statsPath = s"$path/stats"
-    val samplePath = s"$path/sample"
-    val hasStats = fs.exists(new org.apache.hadoop.fs.Path(statsPath))
+    val dir = committed(spark, path)
+    val statsPath = s"$dir/stats"
+    val samplePath = s"$dir/sample"
+    val hasStats = pathExists(spark, statsPath)
     val (oldW, oldN, lastId) =
       if (!hasStats) (0L, 0L, -1L)
       else {
@@ -877,20 +882,38 @@ object Streaming {
             col("m.priority").as("priority"))
       else cand)
         .orderBy(col("priority"), col("doc_id")).limit(k)
-        .localCheckpoint(true) // materialize before overwriting its source
+        .localCheckpoint(true) // materialize before replacing its source
     pri.unpersist()
-    merged.coalesce(1).write.mode("overwrite").parquet(samplePath)
     import spark.implicits._
-    Seq((oldW + bw, oldN + bn, batchId))
-      .toDF("w_total", "n_docs", "last_batch_id")
-      .coalesce(1).write.mode("overwrite").parquet(statsPath)
+    Commit.replace(spark, dir) { staged =>
+      merged.coalesce(1).write.parquet(s"$staged/sample")
+      Seq((oldW + bw, oldN + bn, batchId))
+        .toDF("w_total", "n_docs", "last_batch_id")
+        .coalesce(1).write.parquet(s"$staged/stats")
+    }
     true
   }
 
+  /** The committed directory of a replay-guarded sink artifact
+    * ([[ppsSampleSink]], [[ewmaSink]], [[paretoSink]]): `path/current`,
+    * holding the state beside `stats`, its `last_batch_id` ledger, so
+    * one [[Commit]] publishes both. Recovered first: the writer reads it
+    * next. */
+  private def committed(spark: SparkSession, path: String): String = {
+    val dir = s"$path/current"
+    Commit.recover(spark, dir)
+    dir
+  }
+
+  /** The last batch id committed under `dir`, -1 before the first. */
+  private def lastBatchId(spark: SparkSession, dir: String): Long =
+    if (!pathExists(spark, s"$dir/stats")) -1L
+    else spark.read.parquet(s"$dir/stats").head().getAs[Long]("last_batch_id")
+
   /** STREAM-MAINTAINED EWMA state — ts04's control chart as a continuously
-    * updated artifact (`path/state`: one row per key, (k, last_t, ewma)).
-    * Each micro-batch of (key, t, x) CELLS folds into the stored level with
-    * the same integer fixed-point recurrence as
+    * updated artifact (`path/current/state`: one row per key,
+    * (k, last_t, ewma)). Each micro-batch of (key, t, x) CELLS folds into
+    * the stored level with the same integer fixed-point recurrence as
     * [[graft.operators.Ewma.smooth]], seeded per key by the stored ewma, so
     * stored-state-after-any-prefix ≡ the batch fold over the delivered
     * cells (spec-pinned across uneven batch boundaries) — PROVIDED cells
@@ -903,7 +926,8 @@ object Streaming {
     * idempotent-foreachBatch recipe): a crash-replayed committed batch is
     * recognized and skipped whole, so no cell ever double-folds. Everything
     * is |keys|-scale — the corpus-scale reduction to cells happens
-    * upstream. */
+    * upstream. State and ledger commit as one directory (`path/current`,
+    * [[ppsSampleSink]]'s layout). */
   def ewmaSink(
       cells: DataFrame,
       path: String,
@@ -930,21 +954,15 @@ object Streaming {
       xCol: String, alphaPpm: Long, batchId: Long): Boolean = {
     import org.apache.spark.sql.functions._
     val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statePath = s"$path/state"
-    val statsPath = s"$path/stats"
-    val lastId =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(statsPath))) -1L
-      else spark.read.parquet(statsPath).head().getAs[Long]("last_batch_id")
-    if (batchId <= lastId) return false // replay of a committed batch
+    val dir = committed(spark, path)
+    val statePath = s"$dir/state"
+    if (batchId <= lastBatchId(spark, dir)) return false // replay of a committed batch
     val beta = 1000000L - alphaPpm
     val newCells = batch
       .select(col(keyCol).as("k"), col(tCol).as("t"), col(xCol).cast("long").as("x"))
       .groupBy("k", "t").agg(sum(col("x")).as("x"))
-    val hasState = fs.exists(new org.apache.hadoop.fs.Path(statePath))
     val st =
-      if (hasState) spark.read.parquet(statePath)
+      if (pathExists(spark, statePath)) spark.read.parquet(statePath)
       // typed empty frame: borrow the cell schema so k/t types always match
       else newCells.select(col("k"), col("t").as("last_t"),
         col("x").as("ewma")).limit(0)
@@ -966,23 +984,23 @@ object Streaming {
     // keys untouched this batch (no cells, or only late cells) carry over
     val newState = st.join(folded.select("k"), Seq("k"), "left_anti")
       .unionByName(folded)
-      .localCheckpoint(true) // materialize before overwriting its source
-    newState.coalesce(1).write.mode("overwrite").parquet(statePath)
+      .localCheckpoint(true) // materialize before replacing its source
     import spark.implicits._
-    Seq(batchId).toDF("last_batch_id")
-      .coalesce(1).write.mode("overwrite").parquet(statsPath)
+    Commit.replace(spark, dir) { staged =>
+      newState.coalesce(1).write.parquet(s"$staged/state")
+      Seq(batchId).toDF("last_batch_id").coalesce(1).write.parquet(s"$staged/stats")
+    }
     true
   }
 
   /** The read path of the [[ewmaSink]] artifact: current per-key smoothed
     * level — the |keys|-row table an alerting job joins today's volume
     * against. */
-  def storedEwmaState(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/state")
+  def storedEwmaState(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(s"${Commit.resolve(spark, s"$path/current")}/state")
 
   /** STREAM-MAINTAINED PARETO FRONTIER — sk01's skyline as a continuously
-    * updated artifact (`path/front`): each micro-batch folds as
+    * updated artifact (`path/current/front`): each micro-batch folds as
     * frontier' = pareto2d(frontier ∪ batch). The skyline is an
     * online-foldable summary under insert-only streams: dominance is
     * monotone (points are only ever added, and it is transitive — a point
@@ -1009,57 +1027,28 @@ object Streaming {
 
   /** One micro-batch of [[paretoSink]], factored out so replay semantics
     * are directly testable. Returns true when the batch was applied,
-    * false when recognized as already-committed.
-    *
-    * Crash safety: the front is never overwritten in place — an
-    * interrupted in-place overwrite (old directory deleted, new write
-    * uncommitted) would silently LOSE the accumulated frontier, and the
-    * stamp (still at the prior batch id) would have replay rebuild from
-    * an empty front. Instead the new front stages to a dot-prefixed dir
-    * (invisible to readers), the old front is renamed aside to
-    * `front.old`, the staging dir renames in, and `front.old` drops.
-    * Every crash point leaves a recoverable state: before the aside-
-    * rename, `front` is intact; between the renames, `front.old` IS the
-    * pre-batch front and the read path falls back to it; after the new
-    * front lands, the fold is IDEMPOTENT (skyline(skyline(A∪B) ∪ B) =
-    * skyline(A∪B)), so re-applying the batch over the new front changes
-    * nothing — the stamp only saves the redundant work. */
+    * false when recognized as already-committed. The front and its
+    * ledger commit as one directory ([[ppsSampleSink]]'s layout): the
+    * front is never overwritten in place, which would let a crash LOSE
+    * the accumulated frontier while the ledger had replay rebuild from
+    * an empty front. */
   private[graft] def applyParetoBatch(
       batch: DataFrame, path: String, xCol: String, yCol: String,
       batchId: Long): Boolean = {
     val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statsPath = s"$path/stats"
-    val lastId =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(statsPath))) -1L
-      else spark.read.parquet(statsPath).head().getAs[Long]("last_batch_id")
-    if (batchId <= lastId) return false // replay of a committed batch
-    val front = currentParetoFront(spark, path).getOrElse(batch.limit(0))
+    val dir = committed(spark, path)
+    if (batchId <= lastBatchId(spark, dir)) return false // replay of a committed batch
+    val front =
+      if (pathExists(spark, s"$dir/front")) spark.read.parquet(s"$dir/front")
+      else batch.limit(0)
     val merged = graft.operators.Skyline
       .pareto2d(front.unionByName(batch), xCol, yCol)
-      .localCheckpoint(true) // materialize before swapping out its source
-    val frontP = new org.apache.hadoop.fs.Path(s"$path/front")
-    val oldP = new org.apache.hadoop.fs.Path(s"$path/front.old")
-    val stageP = new org.apache.hadoop.fs.Path(s"$path/.front.inprogress")
-    fs.delete(stageP, true)
-    merged.coalesce(1).write.mode("overwrite").parquet(stageP.toString)
-    // `front.old` is deleted only while `front` exists: when recovering
-    // from a mid-swap crash (front absent, front.old the only committed
-    // copy — already folded into `merged` via the read fallback), deleting
-    // it BEFORE the publish rename would destroy the sole committed front,
-    // and a crash in that window would lose the accumulated frontier. With
-    // the publish-first order every crash point still has a committed copy
-    // on disk: front, or front.old, or both (reads prefer front).
-    if (fs.exists(frontP)) {
-      fs.delete(oldP, true) // leftover from a crash after a completed swap
-      require(fs.rename(frontP, oldP), s"paretoSink: rename-aside of $frontP failed")
-    }
-    require(fs.rename(stageP, frontP), s"paretoSink: publish of $frontP failed")
-    fs.delete(oldP, true)
+      .localCheckpoint(true) // materialize before replacing its source
     import spark.implicits._
-    Seq(batchId).toDF("last_batch_id")
-      .coalesce(1).write.mode("overwrite").parquet(statsPath)
+    Commit.replace(spark, dir) { staged =>
+      merged.coalesce(1).write.parquet(s"$staged/front")
+      Seq(batchId).toDF("last_batch_id").coalesce(1).write.parquet(s"$staged/stats")
+    }
     true
   }
 
@@ -1307,25 +1296,14 @@ object Streaming {
     true
   }
 
-  /** The stored front if any batch ever committed: `front`, or the
-    * `front.old` a crash between the swap renames left behind. */
-  private def currentParetoFront(
-      spark: org.apache.spark.sql.SparkSession, path: String): Option[DataFrame] = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(s"$path/front", s"$path/front.old")
-      .find(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-      .map(spark.read.parquet(_))
-  }
-
   /** The read path of the [[paretoSink]] artifact: the current
-    * non-dominated set over everything delivered so far (falling back to
-    * the rename-aside copy if a crash interrupted a front swap — the
-    * pre-batch front, which the uncommitted stamp has replay re-fold). */
-  def storedParetoFront(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    currentParetoFront(spark, path).getOrElse(
-      throw new IllegalStateException(s"no pareto front stored under $path"))
+    * non-dominated set over everything delivered so far. */
+  def storedParetoFront(spark: SparkSession, path: String): DataFrame = {
+    val front = s"${Commit.resolve(spark, s"$path/current")}/front"
+    if (!pathExists(spark, front))
+      throw new IllegalStateException(s"no pareto front stored under $path")
+    spark.read.parquet(front)
+  }
 
   /** The weighted read path of the [[ppsSampleSink]] artifact: the stored
     * bottom-k rows with Horvitz–Thompson weights derived from the stored
@@ -1333,9 +1311,10 @@ object Streaming {
   def storedPpsSample(
       spark: org.apache.spark.sql.SparkSession, path: String, k: Int): DataFrame = {
     import org.apache.spark.sql.functions._
+    val dir = Commit.resolve(spark, s"$path/current")
     graft.operators.Curation.ppsWeighted(
-      spark.read.parquet(s"$path/sample"), k,
-      spark.read.parquet(s"$path/stats").select(col("w_total")))
+      spark.read.parquet(s"$dir/sample"), k,
+      spark.read.parquet(s"$dir/stats").select(col("w_total")))
   }
 
   /** Streaming DELETE sink — [[mergeUpsertSink]]'s retraction twin, the

@@ -196,6 +196,25 @@ class WinnowingSpec extends SparkSpec {
     }
   }
 
+  test("fingerprintIndex and the stored index writers reject non-integral ids up front") {
+    // a string-id index used to build `did STRING` and fail mid-job with
+    // CAST_INVALID_INPUT on its first incremental probe
+    val strDocs = Seq(("a", "one two three four five six seven"))
+      .toDF("doc_id", "text")
+    val root = java.nio.file.Files.createTempDirectory("winnow-strid").toString
+    Winnowing.writeFingerprintIndex(
+      Seq((1L, "one two three four five six")).toDF("doc_id", "text"), root)
+    for (call <- Seq[() => Any](
+        () => Winnowing.fingerprintIndex(strDocs),
+        () => Winnowing.writeFingerprintIndex(strDocs, s"$root-fresh"),
+        () => Winnowing.appendIndex(strDocs, root, "day1"))) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(
+        "fingerprintIndex: id column 'doc_id' must be integral"), e.getMessage)
+    }
+    assert(!Winnowing.batchIngested(spark, root, "day1"))
+  }
+
   test("appendIndex: cross pairs through the appended index equal overlapPairs on the union, at every uneven cut") {
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
     val hist = docs.filter(col("doc_id") < 250)

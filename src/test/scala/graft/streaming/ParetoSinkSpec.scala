@@ -50,7 +50,7 @@ class ParetoSinkSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet == before)
   }
 
-  test("crash between the swap renames: reads fall back to front.old and replaying the batch converges") {
+  test("crash between the swap renames: reads fall back to the aside and replaying the batch converges") {
     val root = java.nio.file.Files.createTempDirectory("pareto-crash").toString
     val all = pts(0 until 90)
     assert(Streaming.applyParetoBatch(
@@ -58,12 +58,13 @@ class ParetoSinkSpec extends SparkSpec {
     val preBatch = Streaming.storedParetoFront(spark, root)
       .as[(Long, Long, Long)].collect().toSet
     // simulate a crash AFTER the rename-aside, BEFORE the publish rename:
-    // `front` is gone, `front.old` holds the pre-batch front, the stamp
-    // still says batch 0 — exactly the mid-swap state
+    // the committed directory (front + its ledger, still at batch 0) sits
+    // at its aside and `current` is gone — exactly the mid-swap state
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$root/front"),
-      new org.apache.hadoop.fs.Path(s"$root/front.old")))
+    val aside = graft.operators.Commit.aside(s"$root/current")
+    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$root/current"),
+      new org.apache.hadoop.fs.Path(aside)))
     // the read path serves the aside copy instead of failing or emptying
     assert(Streaming.storedParetoFront(spark, root)
       .as[(Long, Long, Long)].collect().toSet == preBatch)
@@ -76,7 +77,7 @@ class ParetoSinkSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().toSet
     assert(Streaming.storedParetoFront(spark, root)
       .as[(Long, Long, Long)].collect().toSet == expected)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/front.old")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(aside)))
   }
 
   test("a partial staging write left by a crash is discarded, never read") {
@@ -86,7 +87,7 @@ class ParetoSinkSpec extends SparkSpec {
       all.take(40).toDF("id", "x", "y"), root, "x", "y", 0L))
     // a crashed batch left a half-written staging dir with garbage rows
     Seq((999L, -1L, -1L)).toDF("id", "x", "y")
-      .write.parquet(s"$root/.front.inprogress")
+      .write.parquet(s"${graft.operators.Commit.staging(s"$root/current")}/front")
     val expected = graft.operators.Skyline
       .pareto2d(all.toDF("id", "x", "y"), "x", "y")
       .as[(Long, Long, Long)].collect().toSet

@@ -42,13 +42,14 @@ class PpsSinkSpec extends SparkSpec {
     val b1 = (41L to 80L).map(i => (i, words((i % 7).toInt + 1))).toDF("doc_id", "text")
     assert(Streaming.applyPpsBatch(b0, root, k = 10, salt = "", batchId = 0L))
     assert(Streaming.applyPpsBatch(b1, root, k = 10, salt = "", batchId = 1L))
-    val before = spark.read.parquet(s"$root/stats").head()
-    val sampleBefore = spark.read.parquet(s"$root/sample")
+    // state and ledger live in one committed directory, `current`
+    val before = spark.read.parquet(s"$root/current/stats").head()
+    val sampleBefore = spark.read.parquet(s"$root/current/sample")
       .collect().map(_.toSeq).toSet
     // replay of batch 1 (same id): must be a no-op
     assert(!Streaming.applyPpsBatch(b1, root, k = 10, salt = "", batchId = 1L))
-    assert(spark.read.parquet(s"$root/stats").head() == before)
-    assert(spark.read.parquet(s"$root/sample")
+    assert(spark.read.parquet(s"$root/current/stats").head() == before)
+    assert(spark.read.parquet(s"$root/current/sample")
       .collect().map(_.toSeq).toSet == sampleBefore)
     // the running total equals the one-shot total over both batches
     val w = graft.operators.Curation.ppsSample(
