@@ -51,13 +51,15 @@ object Bench {
       .withExtensions(new graft.GraftExtensions)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // r17 (guide §2.2/§9): honor the advisory partition-size target when
-      // AQE coalesces — Spark's own docs recommend parallelismFirst=false
-      // ("respect the configured target size"). With the default true, every
-      // sub-target shuffle is still split into defaultParallelism reduce
-      // tasks, so iterative/tiny-stage operators pay cores-many empty tasks
-      // per exchange (the measured 8c-faster-than-32c inversions). Scale-
-      // neutral: at real data volumes the 64MB advisory target governs.
+      // Honor the advisory partition-size target when AQE coalesces, as
+      // Spark's docs recommend ("respect the configured target size"). With
+      // the default true, every sub-target shuffle is still split into
+      // defaultParallelism reduce tasks, so iterative/tiny-stage operators
+      // pay cores-many empty tasks per exchange (the measured
+      // 8c-faster-than-32c inversions). Operators whose rows expand after an
+      // exchange (the capped pair finders) are not merged onto one core by
+      // this: they carry their own partition floor (`Dedup.partitionFloor`).
+      // Scale-neutral: at real data volumes the 64MB advisory target governs.
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

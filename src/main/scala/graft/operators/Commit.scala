@@ -58,16 +58,19 @@ object Commit {
     publish(spark, staging(target), target)
   }
 
-  /** Swap the complete copy at `staged` in as `target`. */
+  /** Swap the complete copy at `staged` in as `target`. Like [[recover]],
+    * deletes only paths that exist: an HDFS delete takes the NameNode's
+    * write lock even when it finds nothing. */
   def publish(spark: SparkSession, staged: String, target: String): Unit = {
     val (s, t, a) = (new Path(staged), new Path(target), new Path(aside(target)))
     val f = fs(spark, target)
-    if (f.exists(t)) {
-      f.delete(a, true) // left by a swap that completed: `t` is committed
+    val replacing = f.exists(t)
+    if (replacing) {
+      if (f.exists(a)) f.delete(a, true) // left by a swap that completed: `t` is committed
       rename(f, t, a)
     } else f.mkdirs(t.getParent)
     rename(f, s, t)
-    f.delete(a, true)
+    if (replacing) f.delete(a, true)
   }
 
   /** The committed copy of `target`: the target itself, or its aside when
@@ -91,9 +94,10 @@ object Commit {
     val (s, t, a) = (new Path(staged), new Path(target), new Path(aside(target)))
     val f = fs(spark, target)
     if (f.exists(a)) {
-      if (!f.exists(t)) rename(f, if (f.exists(s)) s else a, t)
-      f.delete(a, true)
+      if (f.exists(t)) f.delete(a, true)
+      else if (f.exists(s)) { rename(f, s, t); f.delete(a, true) }
+      else rename(f, a, t)
     }
-    f.delete(s, true)
+    if (f.exists(s)) f.delete(s, true)
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Deduplication operators for document corpora, designed for the 100 TB
   * regime: every variant is shuffle-bounded by keys (hash buckets, LSH bands)
@@ -41,7 +42,16 @@ object Dedup {
     * would dominate the shuffle. The cap and the gather share ONE
     * aggregate, whose buffer is bounded at cap+1 — a boilerplate key in
     * 10⁸ documents never concentrates its posting list on one task.
-    * Postings with a NULL id or payload are skipped. */
+    * Postings with a NULL id or payload are skipped.
+    *
+    * Partition floor ([[partitionFloor]]): when the postings are estimated
+    * below `defaultParallelism × spark.sql.adaptive.advisoryPartitionSizeInBytes`,
+    * they are re-keyed by `key` into `spark.sql.shuffle.partitions`
+    * partitions before the aggregate, which then combines on the reduce
+    * side only. Skew is then bounded by the gate (the whole input is
+    * estimated under one advisory partition per core) and memory by the
+    * cap. At or above the gate the plan is unchanged, and the map-side
+    * partial aggregate bounds the hot-key buffer as described above. */
   private[operators] def cappedGroups(
       postings: DataFrame,
       key: Seq[Column],
@@ -55,10 +65,33 @@ object Dedup {
     // capped_collect caps at 2^28; a wider cap is "no cap" operationally
     // (a 2^28-doc posting list in one buffer is already off the table)
     val cap = math.min(maxDocFreq.toLong, 1L << 28).toInt
-    postings.groupBy(key: _*)
+    partitionFloor(postings, key, postings).groupBy(key: _*)
       .agg(graft.expressions.CappedIdPayloadCollect(
         id.cast("long"), payload.cast("long"), cap).as("ds"))
       .filter(col("ds").isNotNull)
+  }
+
+  /** `rows` re-keyed by `keys` into `spark.sql.shuffle.partitions`
+    * partitions when the optimizer's size estimate of `input` is below
+    * `defaultParallelism × spark.sql.adaptive.advisoryPartitionSizeInBytes`,
+    * else `rows` unchanged. Below that size AQE with
+    * `parallelismFirst=false` coalesces an exchange under one partition per
+    * core, and bytes cannot show that a pair finder's rows fan out after
+    * it (5,000 documents, postings estimated at 200 KB, become 1.1M
+    * candidate pairs on one task). An explicit count (`REPARTITION_BY_NUM`)
+    * is the one exchange origin AQE never coalesces; a rebalance or a
+    * `repartition(cols)` would be merged again. The decision reads plan
+    * statistics only, so it starts no job; the exchanges of one operator
+    * call pass the same `input` and so decide alike. */
+  private[operators] def partitionFloor(
+      rows: DataFrame, keys: Seq[Column], input: DataFrame): DataFrame = {
+    val spark = input.sparkSession
+    val conf = spark.sessionState.conf
+    val gate = BigInt(spark.sparkContext.defaultParallelism) *
+      conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    if (input.queryExecution.optimizedPlan.stats.sizeInBytes < gate)
+      rows.repartition(conf.numShufflePartitions, keys: _*)
+    else rows
   }
 
   /** Exact dedup: hash-groupBy on the raw text. One shuffle on md5(text);
@@ -135,8 +168,9 @@ object Dedup {
   /** Shared candidate core of [[jaccardPairs]] / [[containmentPairs]]:
     * (a_id, b_id, na, nb, inter) for every pair sharing ≥1 surviving
     * shingle — one shuffle on the shingle (capped gather), one on the
-    * pair. Sizes count ALL of a doc's distinct shingles (capped-out ones
-    * included), matching the split formulation this fused. */
+    * pair, both under the same [[partitionFloor]] decision. Sizes count
+    * ALL of a doc's distinct shingles (capped-out ones included),
+    * matching the split formulation this fused. */
   private def jaccardInter(
       docs: DataFrame,
       shingleK: Int,
@@ -154,8 +188,9 @@ object Dedup {
         array_distinct(shingles(col("ws"), shingleK))).as("shs"))
       .select(col("doc_id").cast("long").as("did"),
         size(col("shs")).cast("long").as("n"), explode(col("shs")).as("sh"))
-    cappedGroups(posting, Seq(col("sh")), col("did"), col("n"), maxDocFreq, fn)
+    val pairs = cappedGroups(posting, Seq(col("sh")), col("did"), col("n"), maxDocFreq, fn)
       .select(graft.expressions.PayloadPairsGen(col("ds")))
+    partitionFloor(pairs, Seq(col("a"), col("b")), posting)
       .groupBy(col("a").as("a_id"), col("b").as("b_id"),
         col("pa").as("na"), col("pb").as("nb"))
       .agg(count(lit(1)).as("inter"))
