@@ -8,6 +8,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: runMain graft.PlanDump <outDir> <suffix> <query1,query2,...> [sfDir]
   * Writes <outDir>/<query>_<suffix>.txt per query. Short codes accepted.
+  * Expression and plan ids are written as `#n` / `plan_id=n`: they count
+  * up per session, so two dumps of one plan would otherwise differ in
+  * them alone; so do lambda class names, written as `$$Lambda`. The first line counts the Spark jobs the query's
+  * construction ran (fits, guard probes), before any action on the result.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -26,14 +30,23 @@ object PlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    })
     val sel = SparkEntry.queries.filter { case (n, _) =>
       wanted.contains(n) || wanted.contains(n.takeWhile(_ != '_'))
     }
     sel.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
+        jobs.set(0)
         val df = fn(spark, sfDir)
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+        val txt = s"construction jobs: ${jobs.get}\n" +
+          withoutIds(df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"),
           txt.getBytes("UTF-8"))
@@ -45,4 +58,8 @@ object PlanDump {
     }
     spark.stop()
   }
+
+  private[graft] def withoutIds(plan: String): String =
+    plan.replaceAll("#\\d+", "#n").replaceAll("plan_id=\\d+", "plan_id=n")
+      .replaceAll("\\$\\$Lambda[$/\\w]*@\\w+", "\\$\\$Lambda")
 }

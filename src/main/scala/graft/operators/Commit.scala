@@ -58,9 +58,11 @@ object Commit {
     publish(spark, staging(target), target)
   }
 
-  /** Swap the complete copy at `staged` in as `target`. Like [[recover]],
-    * deletes only paths that exist: an HDFS delete takes the NameNode's
-    * write lock even when it finds nothing. */
+  /** Swap the complete copy at `staged` in as `target`, whose parent
+    * directory must exist: it does when `staged` is the sibling
+    * [[staging]] path. Like [[recover]], deletes only paths that exist:
+    * an HDFS delete takes the NameNode's write lock even when it finds
+    * nothing. */
   def publish(spark: SparkSession, staged: String, target: String): Unit = {
     val (s, t, a) = (new Path(staged), new Path(target), new Path(aside(target)))
     val f = fs(spark, target)
@@ -68,7 +70,7 @@ object Commit {
     if (replacing) {
       if (f.exists(a)) f.delete(a, true) // left by a swap that completed: `t` is committed
       rename(f, t, a)
-    } else f.mkdirs(t.getParent)
+    }
     rename(f, s, t)
     if (replacing) f.delete(a, true)
   }

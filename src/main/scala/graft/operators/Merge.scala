@@ -167,8 +167,10 @@ object Merge {
   /** Commit a [[stage]]d write: every staged leaf directory (`depth`
     * levels of `col=value` names; `depth` 0 swaps the whole directory)
     * is published over the same relative path under `path` by
-    * [[Commit.publish]], then the staging directory goes. Returns the
-    * relative paths of the swapped leaves, as written (escaped) names. */
+    * [[Commit.publish]], then the staging directory goes. The staging
+    * tree is not under `path`, so a new leaf's parent may not exist yet:
+    * missing parents are made first. Returns the relative paths of the
+    * swapped leaves, as written (escaped) names. */
   private[operators] def commit(
       spark: SparkSession, staging: String, path: String,
       depth: Int): Set[String] = {
@@ -177,6 +179,9 @@ object Merge {
       else dataDirs(spark, new Path(under(staging, rel)))
         .flatMap(n => leaves(rel :+ n, d - 1))
     val rels = leaves(Nil, depth)
+    val fs = Commit.fs(spark, path)
+    rels.map(rel => new Path(under(path, rel)).getParent).distinct
+      .filterNot(fs.exists).foreach(fs.mkdirs)
     rels.foreach(rel =>
       Commit.publish(spark, under(staging, rel), under(path, rel)))
     rmDir(spark, staging)

@@ -1,50 +1,146 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over embedding columns.
   *
-  * Two paths:
-  *  - [[bruteForceTopK]]: exact cosine top-k of a (small, broadcast) query
-  *    set against the full corpus — the correctness baseline. The corpus side
-  *    streams; only queries are broadcast, so it scales to any corpus size
-  *    at O(|corpus| × |queries|) work.
-  *  - [[lshTopK]]: hyperplane-LSH bucketed variant — corpus and queries are
-  *    bucketed by signature, candidates only meet within a bucket (one
-  *    shuffle on the bucket key), then exact cosine ranks candidates. The
-  *    100 TB path: work is O(bucket²) per bucket instead of |corpus| per
-  *    query. Recall is tuned by `planes` (fewer planes → bigger buckets →
-  *    higher recall) and `tables` (independent signatures OR'd together).
+  * Seven top-k operators — exact ([[bruteForceTopK]], [[filteredTopK]]),
+  * cell-probed ([[ivfTopK]]), code-scanned ([[pqTopK]]), both
+  * ([[ivfPqTopK]], and [[VectorIndex.searchLoaded]] over a stored index)
+  * and bucketed ([[lshTopK]]) — plus the cell-partitioned [[semDedup]] and
+  * [[cellCapSample]]. They share one definition of each stage:
+  *  - [[topKBySim]], every top-k operator's last step: each query's k best
+  *    rows by exact cosine. It checks `k` when the operator is called.
+  *    [[firstPer]] is the per-group ranking under it, also used by the
+  *    cell probe, the ADC shortlist and [[cellCapSample]]'s cap.
+  *  - [[vectorShape]], the guard job of the operators that must know the
+  *    dimensionality before planning ([[pqTopK]], [[ivfPqTopK]],
+  *    [[lshTopK]], [[semDedup]], [[cellCapSample]], [[fitPqCodebooks]],
+  *    [[VectorIndex.searchLoaded]]): empty inputs short-cut to a typed
+  *    empty result ([[emptyTopK]]), mixed dimensionality fails by name.
+  *    The exact and cell-probed operators run no guard job; they check
+  *    lengths in the plan instead ([[sameDim]]).
+  *  - [[normalized]]: the unit vectors every IVF/PQ fit, encode and
+  *    search works on.
+  *  - The IVF pieces: [[fitCoarse]] (the coarse KMeans),
+  *    [[centroidTable]], [[residuals]] (v̂ − centroid) and [[probeCells]]
+  *    (used by [[ivfTopK]] and [[ivfAdcSearch]]).
+  *  - [[ivfAdcSearch]]: probes, per-probe ADC tables, candidate join on the
+  *    cell, then [[rerankShortlist]] (ADC shortlist, exact re-rank, top-k).
+  *    [[ivfPqTopK]] and [[VectorIndex.searchLoaded]] both run it, which is
+  *    why a stored index answers exactly like the one-shot search;
+  *    [[pqTopK]] runs [[rerankShortlist]] after its flat ADC scan.
   */
 object Similarity {
+  import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
+  import org.apache.spark.ml.functions.array_to_vector
 
   private[operators] def withVec(df: DataFrame, idCol: String, vecCol: String) =
     df.select(col(idCol).as("vid"), asDouble(col(vecCol)).as("v"))
       .withColumn("nrm", norm2(col("v")))
 
+  /** [[withVec]] plus the unit vector `vh = v / ‖v‖`. */
+  private[operators] def normalized(df: DataFrame, idCol: String, vecCol: String) =
+    withVec(df, idCol, vecCol).withColumn("vh", transform(col("v"), x => x / col("nrm")))
+
   /** i-th length-`sd` subvector of an array column (1-based slice). */
   private[operators] def subVec(c: Column, i: Int, sd: Int) = slice(c, i * sd + 1, sd)
 
-  /** Auto-sizing laws shared by the IVF family. Cells: ⌈√n⌉ keeps both the
+  /** The family's guard: ONE aggregate job over all `inputs`' vector
+    * lengths. `None` when any input is empty (or has no vector length at
+    * all); otherwise the common
+    * dimensionality and the row count of the first input. Mixed lengths
+    * fail naming `op`: ArrayDot dots over the shorter array, so ragged
+    * vectors would give wrong answers silently. */
+  private[operators] def vectorShape(op: String, vecCol: String,
+      inputs: DataFrame*): Option[(Int, Long)] = {
+    val sizes = inputs.zipWithIndex
+      .map { case (df, i) => df.select(lit(i).as("side"), size(col(vecCol)).as("d")) }
+      .reduce(_ union _)
+    val r = sizes.agg(min(col("d")), (max(col("d")) +: inputs.indices.map(i =>
+      count(when(col("side") === i, 1)))): _*).head()
+    if (r.isNullAt(0) || inputs.indices.exists(i => r.getLong(2 + i) == 0)) None
+    else {
+      require(r.getInt(0) == r.getInt(1),
+        s"$op: vector column '$vecCol' has mixed dimensionality " +
+          s"(${r.getInt(0)}..${r.getInt(1)})")
+      Some((r.getInt(0), r.getLong(2)))
+    }
+  }
+
+  /** `v`, or a task failure naming `op` when its length is not `dim`: the
+    * dimensionality check of the operators that run no guard job. */
+  private[operators] def sameDim(op: String, v: Column, dim: Column): Column =
+    when(size(v) === dim, v).otherwise(raise_error(format_string(
+      s"$op: mixed dimensionality (%d against %d)", size(v), dim)))
+
+  /** The empty top-k result: `q_id` typed as the queries' id column,
+    * `neighbor_id` as the corpus one, so it matches the non-empty schema
+    * even when the two differ. */
+  private[operators] def emptyTopK(corpus: DataFrame, queries: DataFrame,
+      idCol: String): DataFrame =
+    queries.select(col(idCol).as("q_id")).limit(0)
+      .crossJoin(corpus.select(col(idCol).as("neighbor_id")).limit(0))
+      .withColumn("sim", lit(0.0)).withColumn("rank", lit(0))
+
+  /** The first `n` rows of each `key` group by `order`, numbered from 1 in
+    * `rankCol` — the one per-group ranking of the family. */
+  private[operators] def firstPer(df: DataFrame, key: String, n: Column,
+      rankCol: String, order: Column*): DataFrame =
+    df.withColumn(rankCol,
+        row_number().over(Window.partitionBy(col(key)).orderBy(order: _*)))
+      .filter(col(rankCol) <= n)
+
+  /** The last step of every top-k operator: each query's `k` best rows by
+    * `sim`, ties to the smaller neighbor id `nid`, as (q_id, neighbor_id,
+    * sim, rank). Built when the operator is called, so a bad `k` fails
+    * before any fit or guard job runs. */
+  private[operators] def topKBySim(op: String, k: Int,
+      nid: String = "vid"): DataFrame => DataFrame = {
+    require(k >= 1, s"$op: k must be >= 1, got $k")
+    scored => firstPer(scored, "q_id", lit(k), "rn", col("sim").desc, col(nid))
+      .select(col("q_id"), col(nid).as("neighbor_id"), col("sim"),
+        col("rn").as("rank"))
+  }
+
+  /** Sizing laws shared by the IVF family: a positive request is taken
+    * as is, `<= 0` sizes from the data. Cells: ⌈√n⌉ keeps both the
     * centroid table (broadcast) and the per-cell row count sublinear.
-    * Probes: ⌈3·√kCells⌉ keeps probed-candidate volume `probeN·n/kCells`
-    * sublinear when kCells tracks √n; the 3× constant is calibrated on the
-    * weakly-clustered synthetic corpus (IVF's adversarial case — see
-    * [[ivfPqTopK]]'s inline notes for the measured sweep). */
-  private[operators] def autoCellCount(n: Long): Int =
-    math.max(1, math.ceil(math.sqrt(n.toDouble)).toInt)
-  private[operators] def autoProbeCount(kCells: Int): Int =
-    math.min(kCells, math.ceil(3.0 * math.sqrt(kCells.toDouble)).toInt)
+    * Probes: ⌈3·√kCells⌉ (capped at kCells) keeps probed-candidate volume
+    * `probeN·n/kCells` sublinear when kCells tracks √n; the 3× constant is
+    * calibrated on the weakly-clustered synthetic corpus (IVF's adversarial
+    * case: 1·√kCells probes 9/71 cells at n=5000 for recall 0.59,
+    * 3·√kCells probes 24 for 0.86). Clustered real corpora hold recall at
+    * lower multiples — pin nProbe there; auto mode buys scale-safety, not
+    * optimality. */
+  private def cellCount(nCentroids: Int, n: Long): Int =
+    if (nCentroids > 0) nCentroids
+    else math.max(1, math.ceil(math.sqrt(n.toDouble)).toInt)
+  private[operators] def probeCount(nProbe: Int, kCells: Int): Int =
+    if (nProbe > 0) nProbe
+    else math.min(kCells, math.ceil(3.0 * math.sqrt(kCells.toDouble)).toInt)
+
+  /** IVFADC shortlist size. A pinned `refine` keeps the constant `k·refine`
+    * exact re-ranks per query (corpus-size independent, the difference from
+    * [[pqTopK]]). `refine <= 0` floors it at 3·√n, the same law as
+    * [[pqTopK]], because ADC precision on weakly-clustered data decays with
+    * candidate count (measured at n=5000: shortlist 72 → 0.74 recall even
+    * probing ALL cells, 144 → 0.87; the 3× constant holds auto mode within
+    * 0.05 of the sweep-tuned pinned recall at both verification scales).
+    * `n` is only evaluated in auto mode. */
+  private[operators] def ivfShortlistSize(k: Int, refine: Int, n: => Long): Long =
+    if (refine > 0) k.toLong * refine
+    else math.max(8L * k, math.ceil(3.0 * math.sqrt(n.toDouble)).toLong)
 
   /** A fitted coarse quantizer (the IVF cell assignment), reusable across
     * [[ivfTopK]] / [[ivfPqTopK]] calls and sessions-worth of queries over
     * the same corpus: the fit is seeded and deterministic for a given
     * input, so reuse changes wall-clock, never results. Features are the
     * L2-normalized vectors as `fcoarse`; predictions land in `cluster`. */
-  final case class CoarseFit(model: org.apache.spark.ml.clustering.KMeansModel) {
+  final case class CoarseFit(model: KMeansModel) {
     def kCells: Int = model.clusterCenters.length
     def dim: Int = model.clusterCenters.head.size
   }
@@ -55,9 +151,47 @@ object Similarity {
     * identical seeded fits. For residual-mode IVFADC the codebooks are
     * defined relative to a coarse quantizer (they encode v̂ − centroid);
     * pass the pair that was fitted together. */
-  final case class PqFit(
-      models: IndexedSeq[org.apache.spark.ml.clustering.KMeansModel],
-      m: Int, sd: Int, ks: Int)
+  final case class PqFit(models: IndexedSeq[KMeansModel], m: Int, sd: Int, ks: Int)
+
+  /** The coarse KMeans over `fcoarse` (spherical: the features are unit
+    * vectors), predicting `cluster`. Seeded, so a fit is deterministic for
+    * a given input and partitioning. */
+  private def fitCoarse(base: DataFrame, kCells: Int): KMeansModel =
+    new KMeans().setK(kCells).setSeed(42).setMaxIter(3)
+      .setFeaturesCol("fcoarse").setPredictionCol("cluster").fit(base)
+
+  /** `df` (carrying `vh`) with each row's coarse cell in `cluster`. */
+  private[operators] def assignCells(coarse: KMeansModel, df: DataFrame): DataFrame =
+    coarse.transform(df.withColumn("fcoarse", array_to_vector(col("vh"))))
+
+  /** The centroid table (cluster, cvec, cnorm2 = ‖cvec‖²): the broadcast
+    * side of cell probes and residual joins, and a stored index's
+    * `centroids/`. */
+  private[operators] def centroidTable(spark: SparkSession,
+      coarse: KMeansModel): DataFrame = {
+    import spark.implicits._
+    coarse.clusterCenters.zipWithIndex
+      .map { case (cv, i) => (i, cv.toArray.toSeq, cv.toArray.map(x => x * x).sum) }
+      .toSeq.toDF("cluster", "cvec", "cnorm2")
+  }
+
+  /** `v − cvec`, elementwise: a vector's residual against its cell's
+    * centroid. */
+  private def minusCentroid(v: Column): Column =
+    zip_with(v, col("cvec"), (a, b) => a - b)
+
+  /** `df` (carrying `cluster`) with `vh := from − centroid(cluster)`. The
+    * centroid lookup is a broadcast join on the cell id, so auto-√n cell
+    * counts never become a giant literal in the plan. */
+  private[operators] def residuals(df: DataFrame, centroids: DataFrame,
+      from: String): DataFrame =
+    df.join(broadcast(centroids.select("cluster", "cvec")), "cluster")
+      .withColumn("vh", minusCentroid(col(from)))
+
+  /** The rows KMeans trains on: all of `df`, or a seeded sample. */
+  private def trainSample(df: DataFrame, trainFraction: Double): DataFrame =
+    if (trainFraction < 1.0) df.sample(withReplacement = false, trainFraction, seed = 42)
+    else df
 
   /** Fit the coarse quantizer alone: `nCentroids <= 0` auto-sizes to
     * ⌈√n⌉ cells. One persisted pass over the normalized corpus (KMeans
@@ -68,10 +202,7 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding"
   ): CoarseFit = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val base = withVec(corpus, idCol, vecCol)
-      .withColumn("vh", transform(col("v"), x => x / col("nrm")))
+    val base = normalized(corpus, idCol, vecCol)
       .withColumn("fcoarse", array_to_vector(col("vh")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = base.count()
@@ -79,10 +210,7 @@ object Similarity {
     // cryptic "parameter k given invalid value 1" from auto-sizing
     require(n > 0, "fitCoarseQuantizer: empty corpus — an IVF quantizer " +
       "cannot be fit on zero vectors (check the corpus filter/path)")
-    val kCells =
-      if (nCentroids > 0) nCentroids else autoCellCount(n)
-    val model = new KMeans().setK(kCells).setSeed(42).setMaxIter(3)
-      .setFeaturesCol("fcoarse").setPredictionCol("cluster").fit(base)
+    val model = fitCoarse(base, cellCount(nCentroids, n))
     base.unpersist(blocking = false)
     CoarseFit(model)
   }
@@ -98,20 +226,13 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding"
   ): PqFit = {
-    val head = corpus.agg(min(size(col(vecCol))).as("mn"),
-      max(size(col(vecCol))).as("mx")).head()
-    require(!head.isNullAt(0), "fitPqCodebooks: empty corpus")
-    require(head.getInt(0) == head.getInt(1),
-      s"fitPqCodebooks: mixed dimensionality ${head.getInt(0)}..${head.getInt(1)}")
-    val dim = head.getInt(0)
+    val shape = vectorShape("fitPqCodebooks", vecCol, corpus)
+    require(shape.nonEmpty, "fitPqCodebooks: empty corpus")
+    val dim = shape.get._1
     require(dim % m == 0, s"fitPqCodebooks: dim $dim not divisible into $m subspaces")
     val sd = dim / m
-    val n = withVec(corpus, idCol, vecCol)
-      .withColumn("vh", transform(col("v"), x => x / col("nrm")))
-    val trainBase =
-      if (trainFraction < 1.0) n.sample(withReplacement = false, trainFraction, seed = 42)
-      else n
-    PqFit(fitCodebooks(trainBase, m, sd, ks), m, sd, ks)
+    PqFit(fitCodebooks(trainSample(normalized(corpus, idCol, vecCol), trainFraction),
+      m, sd, ks), m, sd, ks)
   }
 
   /** Residual-mode codebooks for a GIVEN coarse quantizer: codebooks are
@@ -128,31 +249,18 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding"
   ): PqFit = {
-    import org.apache.spark.ml.functions.array_to_vector
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val dim = coarse.dim
     require(dim % m == 0,
       s"fitResidualPqCodebooks: dim $dim not divisible into $m subspaces")
     val sd = dim / m
-    val normalized = withVec(corpus, idCol, vecCol)
-      .withColumn("vh", transform(col("v"), x => x / col("nrm")))
-    val trainBase0 =
-      if (trainFraction < 1.0)
-        normalized.sample(withReplacement = false, trainFraction, seed = 42)
-      else normalized
-    val cents = coarse.model.clusterCenters.zipWithIndex
-      .map { case (cv, i) => (i, cv.toArray.toSeq) }
-      .toSeq.toDF("cluster", "cvec")
-    val resTrain = coarse.model.transform(
-      trainBase0.withColumn("fcoarse", array_to_vector(col("vh"))))
-      .join(broadcast(cents), "cluster")
-      .withColumn("vh", zip_with(col("vh"), col("cvec"), (a, b) => a - b))
+    val resTrain = residuals(
+      assignCells(coarse.model, trainSample(normalized(corpus, idCol, vecCol), trainFraction)),
+      centroidTable(corpus.sparkSession, coarse.model), "vh")
     PqFit(fitCodebooks(resTrain, m, sd, ks), m, sd, ks)
   }
 
-  private[operators] def checkPqFit(f: PqFit, m: Int, sd: Int, ks: Int): IndexedSeq[
-      org.apache.spark.ml.clustering.KMeansModel] = {
+  private[operators] def checkPqFit(f: PqFit, m: Int, sd: Int, ks: Int)
+      : IndexedSeq[KMeansModel] = {
     require(f.m == m && f.sd == sd && f.ks == ks,
       s"pre-fitted codebooks are (m=${f.m}, sd=${f.sd}, ks=${f.ks}); " +
         s"call-site wants (m=$m, sd=$sd, ks=$ks)")
@@ -167,9 +275,7 @@ object Similarity {
     * (seeded), unaffected by completion order. Prediction columns are
     * `c_0..c_{m-1}` over feature columns `f_0..f_{m-1}`. */
   private def fitCodebooks(trainBase: DataFrame, m: Int, sd: Int, ks: Int)
-      : IndexedSeq[org.apache.spark.ml.clustering.KMeansModel] = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
+      : IndexedSeq[KMeansModel] = {
     val train = (0 until m).foldLeft(trainBase) { (df, i) =>
       df.withColumn(s"f_$i", array_to_vector(subVec(col("vh"), i, sd)))
     }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -188,12 +294,16 @@ object Similarity {
     models
   }
 
+  /** Per-subspace, code-ordered codebook centers: the form ADC tables are
+    * built from, and the form a stored index keeps them in. */
+  private def centersOf(models: IndexedSeq[KMeansModel])
+      : IndexedSeq[IndexedSeq[Array[Double]]] =
+    models.map(_.clusterCenters.toIndexedSeq.map(_.toArray))
+
   /** Append `codes` (per-subspace centroid ids) to a frame carrying `vh`:
     * m chained KMeans assignments, fused into one scan by Catalyst. */
-  private[operators] def encodeWith(
-      models: IndexedSeq[org.apache.spark.ml.clustering.KMeansModel],
+  private[operators] def encodeWith(models: IndexedSeq[KMeansModel],
       df: DataFrame, m: Int, sd: Int): DataFrame = {
-    import org.apache.spark.ml.functions.array_to_vector
     val withFeatures = (0 until m).foldLeft(df) { (d, i) =>
       d.withColumn(s"f_$i", array_to_vector(subVec(col("vh"), i, sd)))
     }
@@ -205,16 +315,8 @@ object Similarity {
     * dtab[i][j] = ‖C[i][j]‖² − 2·qᵢ·C[i][j] — rank-equivalent to
     * ‖qᵢ − C[i][j]‖² up to the per-row constant ‖q‖² (cosine-faithful on
     * normalized vectors; residual callers that rank ACROSS tables must add
-    * ‖q‖² back, see [[ivfPqTopK]]). One native dot per
+    * ‖q‖² back, see [[ivfAdcSearch]]). One native dot per
     * (subspace, centroid). */
-  private def adcTable(
-      models: IndexedSeq[org.apache.spark.ml.clustering.KMeansModel],
-      sd: Int, qcol: Column = col("qvh")): Column =
-    adcTableFrom(
-      models.map(_.clusterCenters.toIndexedSeq.map(_.toArray)), sd, qcol)
-
-  /** [[adcTable]] from raw per-subspace center arrays — the form a STORED
-    * index reconstitutes its codebooks in (no KMeansModel round-trip). */
   private[operators] def adcTableFrom(
       centers: IndexedSeq[IndexedSeq[Array[Double]]],
       sd: Int, qcol: Column): Column =
@@ -233,6 +335,67 @@ object Similarity {
         element_at(element_at(col("dtab"), i + 1),
           element_at(col("codes"), i + 1) + 1))
 
+  /** The cell probe: each query's `probeN` nearest cells by the assignment
+    * metric ‖q̂ − c‖² = 1 + ‖c‖² − 2·q̂·c (the constant ‖q̂‖² = 1 drops out
+    * of the ranking), against the broadcast centroid table. `queries`
+    * carries (q_id, qvh); each probe row keeps its centroid's columns. */
+  private[operators] def probeCells(queries: DataFrame, centroids: DataFrame,
+      probeN: Int): DataFrame =
+    firstPer(queries.crossJoin(broadcast(centroids))
+        .withColumn("cdist", col("cnorm2") - lit(2.0) * dot(col("qvh"), col("cvec"))),
+      "q_id", lit(probeN), "prn", col("cdist"), col("cluster"))
+
+  /** ADC is a shortlist metric, not a final ranking: quantization noise
+    * swamps the tiny margins between true top-k candidates. So each
+    * query's `shortlistN` best candidates by `adist` (rows of q_id, qvh,
+    * vid) are re-scored by exact cosine against `vectors` (vid, vh) and
+    * ranked by `topK`. The shortlist is small and broadcasts back onto the
+    * vectors. */
+  private[operators] def rerankShortlist(cand: DataFrame, vectors: DataFrame,
+      shortlistN: Long, topK: DataFrame => DataFrame): DataFrame = {
+    val shortlist = firstPer(cand, "q_id", lit(shortlistN), "srn", col("adist"), col("vid"))
+      .select(col("q_id"), col("qvh"), col("vid"))
+    topK(broadcast(shortlist).join(vectors, "vid")
+      .withColumn("sim", dot(col("qvh"), col("vh"))))
+  }
+
+  /** The IVFADC search, once the index exists — the one path of
+    * [[ivfPqTopK]] (over its in-memory encode) and
+    * [[VectorIndex.searchLoaded]] (over a stored index):
+    *  - probe: `probeN` cells per query ([[probeCells]]);
+    *  - tables: each probe row carries its ADC table. Non-residual: one
+    *    table per query. Residual: one per (query, probed cell) over the
+    *    residual query q̂ − c, built after the probe filter so only probed
+    *    cells pay the m·ks dots, plus the constant ‖q̂ − c‖² (`qc2`) that
+    *    makes distances from different cells' tables comparable;
+    *  - candidates: the code scan `codes` (vid, cluster, codes) joins the
+    *    broadcast probes on the cell id, so the corpus side never shuffles
+    *    and never touches floats;
+    *  - [[rerankShortlist]] against `vectors` (vid, vh).
+    * `queries` carries (q_id, qvh), `centroids` is a [[centroidTable]] and
+    * `centers` the codebooks in [[adcTableFrom]]'s form. */
+  private[operators] def ivfAdcSearch(
+      queries: DataFrame, centroids: DataFrame,
+      centers: IndexedSeq[IndexedSeq[Array[Double]]],
+      codes: DataFrame, vectors: DataFrame,
+      residual: Boolean, m: Int, sd: Int, probeN: Int, shortlistN: Long,
+      topK: DataFrame => DataFrame): DataFrame = {
+    val probed = probeCells(queries, centroids, probeN)
+    val probes =
+      if (residual)
+        probed.withColumn("rqvh", minusCentroid(col("qvh")))
+          .withColumn("dtab", adcTableFrom(centers, sd, col("rqvh")))
+          .withColumn("qc2", dot(col("rqvh"), col("rqvh")))
+      else probed
+        .withColumn("dtab", adcTableFrom(centers, sd, col("qvh")))
+        .withColumn("qc2", lit(0.0))
+    val cand = codes.join(broadcast(probes.select(col("q_id"), col("qvh"),
+        col("dtab"), col("qc2"), col("cluster"))), Seq("cluster"))
+      .filter(col("vid") =!= col("q_id"))
+      .withColumn("adist", col("qc2") + adcDist(m))
+    rerankShortlist(cand, vectors, shortlistN, topK)
+  }
+
   /** Exact top-k neighbors for each query vector (queries broadcast). */
   def bruteForceTopK(
       corpus: DataFrame,
@@ -241,15 +404,16 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding"
   ): DataFrame = {
+    val topK = topKBySim("bruteForceTopK", k)
     val c = withVec(corpus, idCol, vecCol)
     val q = withVec(queries, idCol, vecCol)
       .withColumnRenamed("vid", "q_id")
       .withColumnRenamed("v", "qv").withColumnRenamed("nrm", "qnrm")
     val scored = c.join(broadcast(q), col("vid") =!= col("q_id"))
-      .withColumn("sim", dot(col("qv"), col("v")) / (col("qnrm") * col("nrm")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("vid"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("q_id"), col("vid").as("neighbor_id"), col("sim"))
+      .withColumn("sim", dot(col("qv"),
+          sameDim("bruteForceTopK", col("v"), size(col("qv"))))
+        / (col("qnrm") * col("nrm")))
+    topK(scored).drop("rank")
   }
 
   /** Attribute-filtered exact top-k: each query searches only the corpus
@@ -277,28 +441,25 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding"
   ): DataFrame = {
+    val topK = topKBySim("filteredTopK", k, nid = "nid")
     // norms staged scan-side: one fold per ROW before the join, not one
     // per candidate pair
     val c = corpus.withColumn("__v", asDouble(col(vecCol)))
       .withColumn("__nrm", norm2(col("__v"))).as("c")
     val q = queries.withColumn("__v", asDouble(col(vecCol)))
       .withColumn("__nrm", norm2(col("__v"))).as("q")
-    val scored = c.join(broadcast(q),
+    topK(c.join(broadcast(q),
         col(s"c.$idCol") =!= col(s"q.$idCol") && filter)
       .select(col(s"q.$idCol").as("q_id"), col(s"c.$idCol").as("nid"),
-        (dot(col("q.__v"), col("c.__v"))
-          / (col("q.__nrm") * col("c.__nrm"))).as("sim"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("q_id"), col("nid").as("neighbor_id"), col("sim"),
-        col("rn").cast("int").as("rank"))
+        (dot(col("q.__v"), sameDim("filteredTopK", col("c.__v"), size(col("q.__v"))))
+          / (col("q.__nrm") * col("c.__nrm"))).as("sim")))
   }
 
   /** IVF (inverted-file) ANN: cluster the corpus into `nCentroids` cells
     * with spherical KMeans (KMeans over L2-normalized vectors, so Euclidean
     * cell assignment coincides with cosine — the metric the search targets),
     * then search each query only in its `nProbe` nearest cells, ranked by
-    * the SAME metric the assignment used: ‖q̂ − c‖² = 1 + ‖c‖² − 2·q̂·c.
+    * the SAME metric the assignment used ([[probeCells]]).
     * The 100 TB path where LSH recall is insufficient: the corpus shuffles
     * once on cluster id, per-query work is bounded by cell size × nProbe,
     * and the (tiny) centroid table broadcasts.
@@ -311,7 +472,8 @@ object Similarity {
     * instead of silently losing recall against more, smaller cells.
     * Pass `coarseFitted` (from [[fitCoarseQuantizer]]) to reuse a
     * quantizer across calls/operators — seeded fits are deterministic, so
-    * reuse changes wall-clock, never results. */
+    * reuse changes wall-clock, never results. Queries whose length is not
+    * the quantizer's dimensionality fail the search by name. */
   def ivfTopK(
       corpus: DataFrame,
       queries: DataFrame,
@@ -322,49 +484,19 @@ object Similarity {
       vecCol: String = "embedding",
       coarseFitted: Option[CoarseFit] = None
   ): DataFrame = {
-    import org.apache.spark.ml.functions.array_to_vector
-    val spark = corpus.sparkSession
-    // Fit (one persisted pass, released inside) or reuse a caller-supplied
-    // quantizer — the seeded fit is deterministic, so reuse changes
-    // wall-clock only. nCentroids is read from the supplied model's k when
-    // pre-fitted.
+    val topK = topKBySim("ivfTopK", k)
+    // nCentroids is read from the supplied model's k when pre-fitted
     val fit = coarseFitted.getOrElse(
       fitCoarseQuantizer(corpus, nCentroids, idCol, vecCol))
-    val kCells = fit.kCells
-    // nProbe <= 0 → the shared ⌈3·√kCells⌉ auto law (capped at kCells):
-    // composes with auto-k so turning on nCentroids <= 0 at a new scale
-    // scales the probe count too, instead of silently losing recall.
-    val probeN = if (nProbe > 0) nProbe else autoProbeCount(kCells)
-    val normalized = withVec(corpus, idCol, vecCol)
-      .withColumn("vh", transform(col("v"), x => x / col("nrm")))
-    val assigned = fit.model.transform(
-      normalized.withColumn("fcoarse", array_to_vector(col("vh"))))
+    val assigned = assignCells(fit.model, normalized(corpus, idCol, vecCol))
       .select(col("vid"), col("vh"), col("cluster"))
-    import spark.implicits._
-    val centroids = fit.model.clusterCenters.zipWithIndex
-      .map { case (cv, i) =>
-        (i, cv.toArray.toSeq, cv.toArray.map(x => x * x).sum) }
-      .toSeq.toDF("cluster", "cvec", "cnorm2")
-    val q = withVec(queries, idCol, vecCol)
-      .withColumn("qvh", transform(col("v"), x => x / col("nrm")))
-      .select(col("vid").as("q_id"), col("qvh"))
-    // probeN nearest cells per query, by the assignment metric: Euclidean
-    // distance between the normalized query and the centroid (the constant
-    // ‖q̂‖² = 1 term drops out of the ranking). Centroid table broadcast.
-    val wProbe = Window.partitionBy(col("q_id")).orderBy(col("cdist"), col("cluster"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("cdist",
-        col("cnorm2") - lit(2.0) * dot(col("qvh"), col("cvec")))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter(col("prn") <= probeN)
-      .select(col("q_id"), col("qvh"), col("cluster"))
-    val cand = probes.join(assigned, "cluster")
+    val q = normalized(queries, idCol, vecCol).select(col("vid").as("q_id"),
+      sameDim("ivfTopK", col("vh"), lit(fit.dim)).as("qvh"))
+    val probes = probeCells(q, centroidTable(corpus.sparkSession, fit.model),
+      probeCount(nProbe, fit.kCells)).select(col("q_id"), col("qvh"), col("cluster"))
+    topK(probes.join(assigned, "cluster")
       .filter(col("vid") =!= col("q_id"))
-      .withColumn("sim", dot(col("qvh"), col("vh")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("vid"))
-    cand.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("q_id"), col("vid").as("neighbor_id"), col("sim"),
-        col("rn").cast("int").as("rank"))
+      .withColumn("sim", dot(col("qvh"), col("vh"))))
   }
 
   /** Product-quantization ANN (IVF-less ADC scan): split the D-dim space
@@ -388,12 +520,11 @@ object Similarity {
     * `‖q̂‖² = 1` is constant per query, the table stores the rank-equivalent
     * `‖C[i][j]‖² − 2·q̂ᵢ·C[i][j]` (cosine-faithful on normalized vectors).
     *
-    * ADC is a shortlist metric, not a final ranking: quantization noise
-    * swamps the tiny margins between true top-k candidates, so the scan
-    * keeps the best `max(k·refine, shortlistC·√n)` rows per query by ADC
-    * and re-ranks that shortlist with exact cosine (the standard two-stage
-    * PQ design). The √n floor — NOT a corpus fraction — absorbs the
-    * recall decay of a constant shortlist as the flat ADC scan grows
+    * ADC is a shortlist metric, not a final ranking ([[rerankShortlist]]):
+    * the scan keeps the best `max(k·refine, shortlistC·√n)` rows per query
+    * by ADC and re-ranks that shortlist with exact cosine (the standard
+    * two-stage PQ design). The √n floor — NOT a corpus fraction — absorbs
+    * the recall decay of a constant shortlist as the flat ADC scan grows
     * (recall@3 measured 0.83 → 0.51 going 500 → 5000 vectors with a fixed
     * 24-row shortlist) while keeping the exact pass sublinear in the
     * corpus. When even √n per query is too much, compose the cells with
@@ -412,57 +543,30 @@ object Similarity {
       shortlistC: Double = 3.0,
       fitted: Option[PqFit] = None
   ): DataFrame = {
+    val topK = topKBySim("pqTopK", k)
     require(refine >= 1, s"refine must be >= 1, got $refine")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // same up-front guards as lshTopK, but per side: an empty CORPUS must
-    // return the empty typed result BEFORE KMeans is asked to fit nothing,
-    // and ragged dims would silently mis-slice subvectors
-    // same cross-input construction as lshTopK: neighbor_id must carry the
-    // corpus id type, not the queries one
-    val emptyResult = queries.select(col(idCol).as("q_id")).limit(0)
-      .crossJoin(corpus.select(col(idCol).as("neighbor_id")).limit(0))
-      .withColumn("sim", lit(0.0)).withColumn("rank", lit(0))
-    def stats(df: DataFrame) = df
-      .agg(min(size(col(vecCol))).as("mn"), max(size(col(vecCol))).as("mx"),
-        count(lit(1)).as("n")).head()
-    val cs = stats(corpus)
-    if (cs.isNullAt(0)) return emptyResult
-    val qs = stats(queries)
-    if (qs.isNullAt(0)) return emptyResult
-    require(cs.getInt(0) == cs.getInt(1) && qs.getInt(0) == qs.getInt(1)
-      && cs.getInt(0) == qs.getInt(0),
-      s"pqTopK: vector column '$vecCol' has mixed dimensionality " +
-        s"(corpus ${cs.getInt(0)}..${cs.getInt(1)}, " +
-        s"queries ${qs.getInt(0)}..${qs.getInt(1)})")
-    val dim = cs.getInt(0)
+    // an empty input returns the empty typed result BEFORE KMeans is asked
+    // to fit nothing, and ragged dims would silently mis-slice subvectors
+    val shape = vectorShape("pqTopK", vecCol, corpus, queries)
+    if (shape.isEmpty) return emptyTopK(corpus, queries, idCol)
+    val (dim, nCorpus) = shape.get
     require(dim % m == 0, s"pqTopK: dim $dim not divisible into $m subspaces")
     val sd = dim / m
 
-    def normalized(df: DataFrame) = withVec(df, idCol, vecCol)
-      .withColumn("vh", transform(col("v"), x => x / col("nrm")))
-
+    val normCorpus = normalized(corpus, idCol, vecCol)
     // ---- train: one seeded KMeans per subspace, all over one cached scan
     // — or a caller-supplied fit (deterministic seeded fits ⇒ same output)
-    val models = fitted.map(checkPqFit(_, m, sd, ks)).getOrElse {
-      val trainBase = {
-        val n = normalized(corpus)
-        if (trainFraction < 1.0) n.sample(withReplacement = false, trainFraction, seed = 42)
-        else n
-      }
-      fitCodebooks(trainBase, m, sd, ks)
-    }
+    val models = fitted.map(checkPqFit(_, m, sd, ks)).getOrElse(
+      fitCodebooks(trainSample(normCorpus, trainFraction), m, sd, ks))
 
     // ---- encode the corpus: m chained assignments, fused into one scan
-    val encoded = encodeWith(models, normalized(corpus), m, sd)
-      .select(col("vid"), col("codes"))
-
-    // ---- per-query ADC table, broadcast with the queries
-    val q = normalized(queries).select(col("vid").as("q_id"), col("vh").as("qvh"))
-    val qt = q.withColumn("dtab", adcTable(models, sd)).select("q_id", "qvh", "dtab")
+    val encoded = encodeWith(models, normCorpus, m, sd).select(col("vid"), col("codes"))
 
     // ---- ADC scan: m lookups + adds per (corpus row, query); queries
     // (with their tables) broadcast, the corpus side never re-touches floats
+    val qt = normalized(queries, idCol, vecCol)
+      .select(col("vid").as("q_id"), col("vh").as("qvh"))
+      .withColumn("dtab", adcTableFrom(centersOf(models), sd, col("qvh")))
     val scored = encoded.join(broadcast(qt), col("vid") =!= col("q_id"))
       .withColumn("adist", adcDist(m))
     // Shortlist size: k·refine, FLOORED at shortlistC·√n. A fixed
@@ -476,22 +580,8 @@ object Similarity {
     // the corpus-fraction floor it replaces (which was 4×10⁷ at 10⁹,
     // defeating PQ's point).
     val shortlistN = math.max(k.toLong * refine,
-      math.ceil(shortlistC * math.sqrt(cs.getLong(2).toDouble)).toLong)
-    val wAdc = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("vid"))
-    val shortlist = scored
-      .withColumn("srn", row_number().over(wAdc))
-      .filter(col("srn") <= shortlistN)
-      .select(col("q_id"), col("qvh"), col("vid"))
-
-    // ---- exact re-rank of the shortlist: k·refine exact cosines per query
-    // (the shortlist is tiny and broadcasts back onto the corpus vectors)
-    val cvecs = normalized(corpus).select(col("vid"), col("vh"))
-    val exact = broadcast(shortlist).join(cvecs, "vid")
-      .withColumn("sim", dot(col("qvh"), col("vh")))
-    val wExact = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("vid"))
-    exact.withColumn("rn", row_number().over(wExact)).filter(col("rn") <= k)
-      .select(col("q_id"), col("vid").as("neighbor_id"), col("sim"),
-        col("rn").cast("int").as("rank"))
+      math.ceil(shortlistC * math.sqrt(nCorpus.toDouble)).toLong)
+    rerankShortlist(scored, normCorpus.select(col("vid"), col("vh")), shortlistN, topK)
   }
 
   /** IVFADC — IVF cells composed with PQ codes (Jégou et al. 2011,
@@ -499,6 +589,8 @@ object Similarity {
     * spherical-KMeans quantizer bounds each query's candidate set to its
     * `nProbe` nearest cells, ADC ranks the candidates by their m-byte
     * codes, a CONSTANT `k·refine` shortlist re-ranks with exact cosine.
+    * The search itself is [[ivfAdcSearch]], the same code a stored
+    * [[VectorIndex]] answers with.
     *
     * This is the scale composition of [[ivfTopK]] (which ranks probed
     * cells with full-width dots) and [[pqTopK]] (whose flat ADC scan needs
@@ -521,15 +613,12 @@ object Similarity {
     * per-(query, probed cell) ADC tables — nProbe·m·ks dots per query
     * instead of m·ks — still a per-query CONSTANT, and the coarse fit must
     * complete before codebook training (they fit concurrently in
-    * non-residual mode). Cross-cell ranking adds the per-probe constant
-    * ‖q̂ − c‖² back to the table distances: without it, ADC distances from
-    * different cells' tables are not comparable and the shortlist skews
-    * toward far cells.
+    * non-residual mode).
     *
     * `nCentroids <= 0` auto-sizes to ceil(√n) cells (see [[ivfTopK]]);
     * `nProbe <= 0` and `refine <= 0` similarly auto-size from cardinality
-    * (see the inline laws) — the mode for corpora whose scale isn't known
-    * at call-site authoring time. */
+    * ([[probeCount]], [[ivfShortlistSize]]) — the mode for corpora
+    * whose scale isn't known at call-site authoring time. */
   def ivfPqTopK(
       corpus: DataFrame,
       queries: DataFrame,
@@ -546,42 +635,23 @@ object Similarity {
       coarseFitted: Option[CoarseFit] = None,
       fitted: Option[PqFit] = None
   ): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val spark = corpus.sparkSession
-    import spark.implicits._
+    val topK = topKBySim("ivfPqTopK", k)
     require(!(residual && fitted.isDefined && coarseFitted.isEmpty),
       "residual codebooks encode v̂ − centroid and are meaningless without " +
         "the coarse quantizer they were fitted against — pass both")
-    // same guards as pqTopK: empty corpus/queries → empty typed result
-    // BEFORE KMeans is asked to fit nothing; ragged dims fail loudly
-    val emptyResult = queries.select(col(idCol).as("q_id")).limit(0)
-      .crossJoin(corpus.select(col(idCol).as("neighbor_id")).limit(0))
-      .withColumn("sim", lit(0.0)).withColumn("rank", lit(0))
-    def stats(df: DataFrame) = df
-      .agg(min(size(col(vecCol))).as("mn"), max(size(col(vecCol))).as("mx"),
-        count(lit(1)).as("n")).head()
-    val cs = stats(corpus)
-    if (cs.isNullAt(0)) return emptyResult
-    val qs = stats(queries)
-    if (qs.isNullAt(0)) return emptyResult
-    require(cs.getInt(0) == cs.getInt(1) && qs.getInt(0) == qs.getInt(1)
-      && cs.getInt(0) == qs.getInt(0),
-      s"ivfPqTopK: vector column '$vecCol' has mixed dimensionality " +
-        s"(corpus ${cs.getInt(0)}..${cs.getInt(1)}, " +
-        s"queries ${qs.getInt(0)}..${qs.getInt(1)})")
-    val dim = cs.getInt(0)
+    // same guard as pqTopK: empty input → empty typed result BEFORE KMeans
+    // is asked to fit nothing; ragged dims fail loudly
+    val shape = vectorShape("ivfPqTopK", vecCol, corpus, queries)
+    if (shape.isEmpty) return emptyTopK(corpus, queries, idCol)
+    val (dim, nCorpus) = shape.get
     require(dim % m == 0, s"ivfPqTopK: dim $dim not divisible into $m subspaces")
     val sd = dim / m
-
-    def normalized(df: DataFrame) = withVec(df, idCol, vecCol)
-      .withColumn("vh", transform(col("v"), x => x / col("nrm")))
 
     // The normalized corpus feeds TWO passes — the encode scan and the
     // exact re-rank's vector lookup — so the narrow (vid, vh) projection
     // persists for the call's duration (session-cache contract): one
     // parquet scan + normalize instead of two (r16).
-    val normCorpus = normalized(corpus).select(col("vid"), col("vh"))
+    val normCorpus = normalized(corpus, idCol, vecCol).select(col("vid"), col("vh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // ---- train: coarse quantizer + per-subspace codebooks over ONE cached
@@ -592,38 +662,15 @@ object Similarity {
     var baseUsed = false
     lazy val base = {
       baseUsed = true
-      normalized(corpus)
+      normalized(corpus, idCol, vecCol)
         .withColumn("fcoarse", array_to_vector(col("vh")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    def trainBase =
-      if (trainFraction < 1.0)
-        base.sample(withReplacement = false, trainFraction, seed = 42)
-      else base
+    def trainBase = trainSample(base, trainFraction)
     // nCentroids <= 0 → ceil(√n) cells (same auto-sizing as ivfTopK); the
-    // corpus count is already on hand from the dimensionality guard. A
-    // pre-fitted quantizer brings its own k.
-    val nCorpus = cs.getLong(2)
-    val kCells = coarseFitted.map(_.kCells).getOrElse(
-      if (nCentroids > 0) nCentroids else autoCellCount(nCorpus))
-    // nProbe <= 0 → ceil(3·√kCells), capped at kCells. The √kCells shape
-    // keeps probed-candidate count (nProbe·n/kCells) sublinear when kCells
-    // tracks √n; the 3× constant is calibrated on the weakly-clustered
-    // synthetic corpus (the ADVERSARIAL case for IVF — measured: 1·√kCells
-    // probes 9/71 cells at n=5000 for recall 0.59, 3·√kCells probes 24 for
-    // 0.86). Clustered real corpora hold recall at lower multiples — pin
-    // nProbe explicitly there; auto mode buys scale-safety, not optimality.
-    val probeN = if (nProbe > 0) nProbe else autoProbeCount(kCells)
-    // refine <= 0 → shortlist floored at 3·√n exact re-ranks per query
-    // (pinned refine keeps the constant-work contract; auto mode accepts
-    // the same 3√n law as pqTopK because ADC precision on weakly-clustered
-    // data decays with candidate count — measured at n=5000: shortlist 72
-    // → 0.74 recall even probing ALL cells, 144 → 0.87; the 3× constant
-    // holds auto mode within 0.05 of the sweep-tuned pinned recall at both
-    // verification scales).
-    val shortlistN =
-      if (refine > 0) k.toLong * refine
-      else math.max(8L * k, math.ceil(3.0 * math.sqrt(nCorpus.toDouble)).toLong)
+    // corpus count is already on hand from the guard. A pre-fitted
+    // quantizer brings its own k.
+    val kCells = coarseFitted.map(_.kCells).getOrElse(cellCount(nCentroids, nCorpus))
     // the coarse fit is independent of the m codebook fits in NON-residual
     // mode — run it as a concurrent Spark job alongside them (same pattern
     // and determinism argument as fitCodebooks; the per-iteration
@@ -634,36 +681,20 @@ object Similarity {
     val preModels = fitted.map(checkPqFit(_, m, sd, ks))
     val (coarse, models) =
       if (residual) {
-        val c = coarseFitted.map(_.model).getOrElse(
-          new KMeans().setK(kCells).setSeed(42).setMaxIter(3)
-            .setFeaturesCol("fcoarse").setPredictionCol("cluster").fit(base))
-        val ms = preModels.getOrElse {
-          val cents = c.clusterCenters.zipWithIndex
-            .map { case (cv, i) => (i, cv.toArray.toSeq) }
-            .toSeq.toDF("cluster", "cvec")
-          // residual train base: vh := v̂ − centroid(assigned cell); the
-          // centroid lookup is a broadcast join on the cell id, so auto-√n
-          // cell counts never become a giant literal in the plan
-          val resTrain = c.transform(trainBase)
-            .join(broadcast(cents), "cluster")
-            .withColumn("vh", zip_with(col("vh"), col("cvec"), (a, b) => a - b))
-          fitCodebooks(resTrain, m, sd, ks)
-        }
+        val c = coarseFitted.map(_.model).getOrElse(fitCoarse(base, kCells))
+        val ms = preModels.getOrElse(fitCodebooks(
+          residuals(c.transform(trainBase), centroidTable(corpus.sparkSession, c), "vh"),
+          m, sd, ks))
         (c, ms)
       } else (coarseFitted.map(_.model), preModels) match {
         case (Some(c), Some(ms)) => (c, ms)
         case (Some(c), None) => (c, fitCodebooks(trainBase, m, sd, ks))
-        case (None, Some(ms)) =>
-          (new KMeans().setK(kCells).setSeed(42).setMaxIter(3)
-            .setFeaturesCol("fcoarse").setPredictionCol("cluster").fit(base), ms)
+        case (None, Some(ms)) => (fitCoarse(base, kCells), ms)
         case (None, None) =>
           val coarseF = {
             import scala.concurrent.Future
             import scala.concurrent.ExecutionContext.Implicits.global
-            Future {
-              new KMeans().setK(kCells).setSeed(42).setMaxIter(3)
-                .setFeaturesCol("fcoarse").setPredictionCol("cluster").fit(base)
-            }
+            Future(fitCoarse(base, kCells))
           }
           val ms = fitCodebooks(trainBase, m, sd, ks)
           val c = {
@@ -677,70 +708,18 @@ object Similarity {
     // downstream encode pass recomputes from lineage
     if (baseUsed) base.unpersist(blocking = false)
 
-    val centroids = coarse.clusterCenters.zipWithIndex
-      .map { case (cv, i) =>
-        (i, cv.toArray.toSeq, cv.toArray.map(x => x * x).sum) }
-      .toSeq.toDF("cluster", "cvec", "cnorm2")
-
+    val centroids = centroidTable(corpus.sparkSession, coarse)
     // ---- encode: cell id + m codes per corpus vector, one fused scan
     // (residual mode re-points `vh` at v̂ − centroid before coding)
-    val assigned = coarse.transform(normCorpus
-      .withColumn("fcoarse", array_to_vector(col("vh"))))
-    val codeInput =
-      if (residual)
-        assigned.join(broadcast(centroids.select("cluster", "cvec")), "cluster")
-          .withColumn("vh", zip_with(col("vh"), col("cvec"), (a, b) => a - b))
-      else assigned
-    val encoded = encodeWith(models, codeInput, m, sd)
+    val assigned = assignCells(coarse, normCorpus)
+    val encoded = encodeWith(models,
+        if (residual) residuals(assigned, centroids, "vh") else assigned, m, sd)
       .select(col("vid"), col("cluster"), col("codes"))
 
-    // ---- probe: nProbe nearest cells per query by the assignment metric
-    // (‖q̂‖² constant → rank by ‖c‖² − 2·q̂·c); each probe row carries its
-    // ADC table so the candidate join needs nothing else. Non-residual:
-    // ONE table per query. Residual: one table per (query, probed cell)
-    // over the residual query q̂ − c, built AFTER the nProbe filter so only
-    // probed cells pay the nProbe·m·ks dots, plus the ‖q̂ − c‖² constant
-    // (`qc2`) that makes distances comparable across cells' tables.
-    val qt = normalized(queries)
-      .select(col("vid").as("q_id"), col("vh").as("qvh"))
-    val wProbe = Window.partitionBy(col("q_id")).orderBy(col("cdist"), col("cluster"))
-    val probed = qt.crossJoin(broadcast(centroids))
-      .withColumn("cdist", col("cnorm2") - lit(2.0) * dot(col("qvh"), col("cvec")))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter(col("prn") <= probeN)
-    val probes =
-      if (residual)
-        probed
-          .withColumn("rqvh", zip_with(col("qvh"), col("cvec"), (a, b) => a - b))
-          .withColumn("dtab", adcTable(models, sd, col("rqvh")))
-          .withColumn("qc2", dot(col("rqvh"), col("rqvh")))
-          .select(col("q_id"), col("qvh"), col("dtab"), col("qc2"), col("cluster"))
-      else probed
-        .withColumn("dtab", adcTable(models, sd))
-        .withColumn("qc2", lit(0.0))
-        .select(col("q_id"), col("qvh"), col("dtab"), col("qc2"), col("cluster"))
-
-    // ---- candidates: code scan × broadcast probes, equi-join on the cell
-    // id — the corpus side never shuffles and never re-touches floats
-    val cand = encoded.join(broadcast(probes), Seq("cluster"))
-      .filter(col("vid") =!= col("q_id"))
-      .withColumn("adist", col("qc2") + adcDist(m))
-    val wAdc = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("vid"))
-    val shortlist = cand
-      .withColumn("srn", row_number().over(wAdc))
-      .filter(col("srn") <= shortlistN)
-      .select(col("q_id"), col("qvh"), col("vid"))
-
-    // ---- exact re-rank: shortlistN exact cosines per query — a constant
-    // k·refine when refine is pinned (corpus-size independent, the
-    // difference from pqTopK), 2·√n under auto mode
-    val cvecs = normCorpus
-    val exact = broadcast(shortlist).join(cvecs, "vid")
-      .withColumn("sim", dot(col("qvh"), col("vh")))
-    val wExact = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("vid"))
-    exact.withColumn("rn", row_number().over(wExact)).filter(col("rn") <= k)
-      .select(col("q_id"), col("vid").as("neighbor_id"), col("sim"),
-        col("rn").cast("int").as("rank"))
+    ivfAdcSearch(
+      normalized(queries, idCol, vecCol).select(col("vid").as("q_id"), col("vh").as("qvh")),
+      centroids, centersOf(models), encoded, normCorpus, residual, m, sd,
+      probeCount(nProbe, kCells), ivfShortlistSize(k, refine, nCorpus), topK)
   }
 
   /** Embedding-cosine near-duplicate pairs over a corpus subset: exact
@@ -795,21 +774,17 @@ object Similarity {
       portableHash: Boolean = false
   ): DataFrame = {
     // Same up-front guard as lshTopK: empty input → empty typed result;
-    // ragged vector dims → loud failure (ArrayDot would silently truncate).
-    val dims = vecs.select(size(col(vecCol)).as("d"))
-      .agg(min(col("d")).as("mn"), max(col("d")).as("mx")).head()
+    // ragged vector dims → loud failure (cell codes over truncated vectors
+    // would be silently wrong).
+    val shape = vectorShape("semDedup", vecCol, vecs)
     // rep_id carries the ID COLUMN'S OWN type (min over a_id does in the
     // non-empty path) — a hardcoded long here would flip the schema with
     // input emptiness for int-typed ids
     val emptySchema = vecs.select(col(idCol).as("vec_id"), lit(0L).as("cell"),
       lit(true).as("kept"),
       lit(null).cast(vecs.schema(idCol).dataType).as("rep_id")).limit(0)
-    if (dims.isNullAt(0)) return emptySchema
-    require(dims.getInt(0) == dims.getInt(1),
-      s"semDedup: vector column '$vecCol' has mixed dimensionality " +
-        s"(${dims.getInt(0)}..${dims.getInt(1)}) — cell codes over truncated " +
-        "vectors would be silently wrong")
-    val dim = dims.getInt(0)
+    if (shape.isEmpty) return emptySchema
+    val dim = shape.get._1
     val sig =
       if (portableHash) portableHyperplaneSig(col("v"), planes, dim, 0)
       else hyperplaneSig(col("v"), planes, dim, 0)
@@ -859,24 +834,17 @@ object Similarity {
       portableHash: Boolean = false
   ): DataFrame = {
     require(cap >= 1, s"cellCapSample: cap must be >= 1, got $cap")
-    val dims = vecs.select(size(col(vecCol)).as("d"))
-      .agg(min(col("d")).as("mn"), max(col("d")).as("mx")).head()
-    val emptySchema = vecs.select(col(idCol).as("vec_id"), lit(0L).as("cell"))
-      .limit(0)
-    if (dims.isNullAt(0)) return emptySchema
-    require(dims.getInt(0) == dims.getInt(1),
-      s"cellCapSample: vector column '$vecCol' has mixed dimensionality " +
-        s"(${dims.getInt(0)}..${dims.getInt(1)})")
-    val dim = dims.getInt(0)
+    val shape = vectorShape("cellCapSample", vecCol, vecs)
+    if (shape.isEmpty)
+      return vecs.select(col(idCol).as("vec_id"), lit(0L).as("cell")).limit(0)
+    val dim = shape.get._1
     val sig =
       if (portableHash) portableHyperplaneSig(col("v"), planes, dim, 0)
       else hyperplaneSig(col("v"), planes, dim, 0)
-    val w = Window.partitionBy("cell").orderBy(col("vec_id"))
-    withVec(vecs, idCol, vecCol)
-      .select(col("vid").as("vec_id"), col("v"))
-      .withColumn("cell", sig)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= cap)
+    firstPer(withVec(vecs, idCol, vecCol)
+        .select(col("vid").as("vec_id"), col("v"))
+        .withColumn("cell", sig),
+      "cell", lit(cap), "rn", col("vec_id"))
       .select(col("vec_id"), col("cell"))
   }
 
@@ -916,28 +884,15 @@ object Similarity {
       multiProbe: Boolean = false,
       probeBudget: Int = 0
   ): DataFrame = {
+    val topK = topKBySim("lshTopK", k, nid = "neighbor_id")
     // One tiny metadata job: the plane matrix is materialized driver-side
     // (O(planes × dim) hash evals instead of per-row), which needs the fixed
-    // vector dimensionality up front. min/max over BOTH inputs rather than
-    // head-of-corpus: an empty corpus must return an empty result (not
-    // NoSuchElementException), and a ragged vector column must fail loudly
-    // (ArrayDot's min-length dot product would silently truncate the longer
-    // vector into wrong signatures and buckets).
-    val dims = corpus.select(size(col(vecCol)).as("d"))
-      .union(queries.select(size(col(vecCol)).as("d")))
-      .agg(min(col("d")).as("mn"), max(col("d")).as("mx")).head()
-    // q_id takes the QUERIES id type, neighbor_id the CORPUS id type —
-    // built from both inputs so the empty-path schema matches the
-    // non-empty one even when the two id columns differ in type
-    val emptySchema = queries.select(col(idCol).as("q_id")).limit(0)
-      .crossJoin(corpus.select(col(idCol).as("neighbor_id")).limit(0))
-      .withColumn("sim", lit(0.0)).withColumn("rank", lit(0))
-    if (dims.isNullAt(0)) return emptySchema
-    require(dims.getInt(0) == dims.getInt(1),
-      s"lshTopK: vector column '$vecCol' has mixed dimensionality " +
-        s"(${dims.getInt(0)}..${dims.getInt(1)}) across corpus+queries — " +
-        "signatures over truncated vectors would be silently wrong")
-    val dim = dims.getInt(0)
+    // vector dimensionality up front. The guard spans BOTH inputs: an empty
+    // one returns the empty result, and a ragged vector column fails loudly
+    // (signatures over truncated vectors would be silently wrong).
+    val shape = vectorShape("lshTopK", vecCol, corpus, queries)
+    if (shape.isEmpty) return emptyTopK(corpus, queries, idCol)
+    val dim = shape.get._1
     def sigOf(v: org.apache.spark.sql.Column, salt: Int) =
       if (portableHash) portableHyperplaneSig(v, planes, dim, salt)
       else hyperplaneSig(v, planes, dim, salt)
@@ -1007,15 +962,12 @@ object Similarity {
     val c = bucketed(corpus, "c", probe = false)
     val q = bucketed(queries, "q", probe = multiProbe)
       .withColumnRenamed("v", "qv").withColumnRenamed("nrm", "qnrm")
-    val cand = c.join(q,
+    topK(c.join(q,
       c("tbl") === q("tbl") && c("bucket") === q("bucket")
         && col("c_vid") =!= col("q_vid"))
       .select(col("q_vid").as("q_id"), col("c_vid").as("neighbor_id"),
         col("qv"), col("qnrm"), col("v"), col("nrm"))
       .dropDuplicates("q_id", "neighbor_id")
-      .withColumn("sim", dot(col("qv"), col("v")) / (col("qnrm") * col("nrm")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("neighbor_id"))
-    cand.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("q_id"), col("neighbor_id"), col("sim"), col("rn").cast("int").as("rank"))
+      .withColumn("sim", dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))))
   }
 }

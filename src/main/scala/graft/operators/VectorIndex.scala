@@ -1,9 +1,7 @@
 package graft.operators
 
-import graft.functions.VectorFunctions._
-import graft.operators.Similarity.{CoarseFit, PqFit, adcDist, adcTableFrom, autoProbeCount, encodeWith, subVec, withVec}
+import graft.operators.Similarity.{CoarseFit, PqFit, assignCells, centroidTable, encodeWith, ivfAdcSearch, ivfShortlistSize, normalized, probeCount, residuals, subVec, topKBySim, vectorShape}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Durable IVFADC index — the vector-side analog of the stored LSH index
@@ -11,9 +9,10 @@ import org.apache.spark.sql.functions._
   * answers were the only search family that re-fitted and re-encoded the
   * corpus on every call. `write` persists everything a LATER SESSION needs
   * to answer top-k without touching the corpus table again; `search`
-  * replays exactly the [[Similarity.ivfPqTopK]] pipeline from the stored
-  * artifacts, so (given the same fits) it returns IDENTICAL rows — the
-  * spec asserts equality, not a recall bar.
+  * runs [[Similarity.ivfPqTopK]]'s own search code
+  * ([[Similarity.ivfAdcSearch]]) over the stored artifacts, so (given the
+  * same fits) it returns IDENTICAL rows — the spec asserts equality, not a
+  * recall bar.
   *
   * Layout is [[Generations]]-structured (the ClosureStore/EditDistance
   * discipline): all components live inside one `gen-NNNNNNN` directory
@@ -74,7 +73,6 @@ object VectorIndex {
       coarseFitted: Option[CoarseFit] = None,
       fitted: Option[PqFit] = None
   ): Unit = {
-    import org.apache.spark.ml.functions.array_to_vector
     val spark = corpus.sparkSession
     import spark.implicits._
     val cf = coarseFitted.getOrElse(
@@ -89,10 +87,7 @@ object VectorIndex {
         else
           Similarity.fitPqCodebooks(corpus, m, ks, trainFraction, idCol, vecCol))
 
-    val centroids = cf.model.clusterCenters.zipWithIndex
-      .map { case (cv, i) =>
-        (i, cv.toArray.toSeq, cv.toArray.map(x => x * x).sum) }
-      .toSeq.toDF("cluster", "cvec", "cnorm2")
+    val centroids = centroidTable(spark, cf.model)
     val codebooks = pf.models.zipWithIndex.flatMap { case (mod, i) =>
       mod.clusterCenters.zipWithIndex.map { case (cv, j) =>
         (i, j, cv.toArray.toSeq) }
@@ -101,17 +96,8 @@ object VectorIndex {
     // encode: cell id + m codes per vector, one fused scan; `vh` keeps the
     // ORIGINAL normalized vector (the exact-re-rank payload) while residual
     // mode codes v̂ − centroid
-    val normalized = withVec(corpus, idCol, vecCol)
-      .withColumn("vh", transform(col("v"), x => x / col("nrm")))
-    val assigned = cf.model.transform(
-      normalized.withColumn("fcoarse", array_to_vector(col("vh"))))
-    val codeInput =
-      if (residual)
-        assigned.withColumnRenamed("vh", "vh0")
-          .join(broadcast(centroids.select("cluster", "cvec")), "cluster")
-          .withColumn("vh", zip_with(col("vh0"), col("cvec"), (a, b) => a - b))
-      else assigned.withColumn("vh0", col("vh"))
-    val encoded = encodeWith(pf.models, codeInput, m, sd)
+    val assigned = assignCells(cf.model, normalized(corpus, idCol, vecCol))
+    val encoded = encodeWith(pf.models, codeInput(assigned, centroids, residual), m, sd)
       .select(col("vid"), col("cluster"), col("codes"), col("vh0").as("vh"))
 
     // the ledger the new generation must carry (old ledger ∪ old live
@@ -135,6 +121,14 @@ object VectorIndex {
         .write.mode("overwrite").parquet(s"$staging/ingested")
     }
   }
+
+  /** What the codebooks encode: `vh`, which residual mode re-points at
+    * v̂ − centroid, beside `vh0`, the normalized vector the exact re-rank
+    * reads. */
+  private def codeInput(assigned: DataFrame, centroids: DataFrame,
+      residual: Boolean): DataFrame =
+    if (residual) residuals(assigned.withColumnRenamed("vh", "vh0"), centroids, "vh0")
+    else assigned.withColumn("vh0", col("vh"))
 
   private def parts(gen: String): Seq[String] =
     Seq(s"$gen/params", s"$gen/centroids", s"$gen/codebooks", s"$gen/codes",
@@ -233,16 +227,10 @@ object VectorIndex {
     val centroids = spark.read.parquet(s"$gen/centroids")
     val coarsePredict = predictorUdf(spark, s"$gen/centroids", "cvec", "cluster")
     val books = loadCodebookCenters(spark, gen)
-    val normalized = withVec(batch, idCol, vecCol)
-      .withColumn("vh", transform(col("v"), x => x / col("nrm")))
-    val assigned = normalized.withColumn("cluster", coarsePredict(col("vh")))
-    val codeInput =
-      if (residual)
-        assigned.withColumnRenamed("vh", "vh0")
-          .join(broadcast(centroids.select("cluster", "cvec")), "cluster")
-          .withColumn("vh", zip_with(col("vh0"), col("cvec"), (a, b) => a - b))
-      else assigned.withColumn("vh0", col("vh"))
-    val coded = books.zipWithIndex.foldLeft(codeInput) { case (d, (cbook, i)) =>
+    val assigned = normalized(batch, idCol, vecCol)
+      .withColumn("cluster", coarsePredict(col("vh")))
+    val coded = books.zipWithIndex.foldLeft(
+        codeInput(assigned, centroids, residual)) { case (d, (cbook, i)) =>
       d.withColumn(s"c_$i", mkPredictor(cbook)(subVec(col("vh"), i, sd)))
     }.withColumn("codes", array((0 until m).map(i => col(s"c_$i")): _*))
     Generations.requireNewBatch(spark, path, "IVFADC index", batchId,
@@ -295,11 +283,8 @@ object VectorIndex {
       composedCodes(spark, gen))
   }
 
-  /** Top-k search against a stored index: probes, ADC shortlist, exact
-    * re-rank — the [[Similarity.ivfPqTopK]] pipeline replayed from parquet.
-    * `nProbe <= 0` uses the stored cell count's auto law; `refine <= 0`
-    * floors the shortlist at 3·√n like the one-shot. The corpus table is
-    * never touched. One-shot convenience over [[searchLoaded]]. */
+  /** Top-k search against a stored index — [[searchLoaded]] after one
+    * [[load]]. The corpus table is never touched. */
   def search(
       queries: DataFrame,
       path: String,
@@ -312,7 +297,14 @@ object VectorIndex {
     searchLoaded(queries, load(queries.sparkSession, path),
       k, nProbe, refine, idCol, vecCol)
 
-  /** [[search]] against pre-[[load]]ed artifacts — the repeated-query path. */
+  /** The one IVFADC search path: [[Similarity.ivfAdcSearch]] — probes,
+    * per-probe ADC tables, candidate join on the cell, ADC shortlist,
+    * exact re-rank, top-k — the code [[Similarity.ivfPqTopK]] runs too,
+    * here over pre-[[load]]ed artifacts (the repeated-query path). The ADC
+    * pass reads the column-pruned code scan (vid, cluster, codes); `vh`
+    * stays on disk until the shortlist re-read. `nProbe <= 0` uses the
+    * stored cell count's auto law; `refine <= 0` floors the shortlist at
+    * 3·√n like the one-shot (one count of the codes). */
   def searchLoaded(
       queries: DataFrame,
       idx: Loaded,
@@ -322,59 +314,17 @@ object VectorIndex {
       idCol: String = "vec_id",
       vecCol: String = "embedding"
   ): DataFrame = {
+    val topK = topKBySim("VectorIndex.search", k)
     val Loaded(m, sd, _, dim, residual, kCells, centers, centroids, codes) = idx
-    val probeN = if (nProbe > 0) nProbe else autoProbeCount(kCells)
-    val shortlistN =
-      if (refine > 0) k.toLong * refine
-      else math.max(8L * k,
-        math.ceil(3.0 * math.sqrt(codes.count().toDouble)).toLong)
-
-    val qt = withVec(queries, idCol, vecCol)
-      .withColumn("qvh", transform(col("v"), x => x / col("nrm")))
-      .select(col("vid").as("q_id"), col("qvh"))
-    // one guard job, not two (r17): min/max come back NULL on an empty
-    // query set — the old isEmpty probe was a separate limit(1) job
-    require({
-      val qd = queries.agg(min(size(col(vecCol))), max(size(col(vecCol)))).head()
-      qd.isNullAt(0) || (qd.getInt(0) == dim && qd.getInt(1) == dim)
-    }, s"search: query dimensionality must be the index's $dim")
-
-    val wProbe = Window.partitionBy(col("q_id")).orderBy(col("cdist"), col("cluster"))
-    val probed = qt.crossJoin(broadcast(centroids))
-      .withColumn("cdist", col("cnorm2") - lit(2.0) * dot(col("qvh"), col("cvec")))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter(col("prn") <= probeN)
-    val probes =
-      if (residual)
-        probed
-          .withColumn("rqvh", zip_with(col("qvh"), col("cvec"), (a, b) => a - b))
-          .withColumn("dtab", adcTableFrom(centers, sd, col("rqvh")))
-          .withColumn("qc2", dot(col("rqvh"), col("rqvh")))
-          .select(col("q_id"), col("qvh"), col("dtab"), col("qc2"), col("cluster"))
-      else probed
-        .withColumn("dtab", adcTableFrom(centers, sd, col("qvh")))
-        .withColumn("qc2", lit(0.0))
-        .select(col("q_id"), col("qvh"), col("dtab"), col("qc2"), col("cluster"))
-
-    // ADC pass over the column-pruned code scan (vid, cluster, codes only —
-    // `vh` stays on disk until the shortlist re-read)
-    val cand = codes.select("vid", "cluster", "codes")
-      .join(broadcast(probes), Seq("cluster"))
-      .filter(col("vid") =!= col("q_id"))
-      .withColumn("adist", col("qc2") + adcDist(m))
-    val wAdc = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("vid"))
-    val shortlist = cand
-      .withColumn("srn", row_number().over(wAdc))
-      .filter(col("srn") <= shortlistN)
-      .select(col("q_id"), col("qvh"), col("vid"))
-
-    val exact = broadcast(shortlist)
-      .join(codes.select(col("vid"), col("vh")), "vid")
-      .withColumn("sim", dot(col("qvh"), col("vh")))
-    val wExact = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("vid"))
-    exact.withColumn("rn", row_number().over(wExact)).filter(col("rn") <= k)
-      .select(col("q_id"), col("vid").as("neighbor_id"), col("sim"),
-        col("rn").cast("int").as("rank"))
+    // one guard job; an empty query set passes and searches to no rows
+    vectorShape("VectorIndex.search", vecCol, queries).foreach { case (d, _) =>
+      require(d == dim, s"search: query dimensionality must be the index's $dim, got $d")
+    }
+    ivfAdcSearch(
+      normalized(queries, idCol, vecCol).select(col("vid").as("q_id"), col("vh").as("qvh")),
+      centroids, centers, codes.select("vid", "cluster", "codes"),
+      codes.select(col("vid"), col("vh")), residual, m, sd,
+      probeCount(nProbe, kCells), ivfShortlistSize(k, refine, codes.count()), topK)
   }
 
   /** Params of an already-verified generation — every read path

@@ -389,6 +389,47 @@ class SimilaritySpec extends SparkSpec {
     TestVec(3, Seq(0f, 0.9f, 0.1f)), // closest to 2
     TestVec(4, Seq(-1f, 0f, 0f))
   ).toDF()
+  private val noVecs = vecs.filter($"vec_id" < 0)
+
+  /** The typed empty top-k result, whichever path produced it. */
+  private def assertEmptyTopK(out: org.apache.spark.sql.DataFrame): Unit = {
+    assert(out.dtypes.toSeq == Seq("q_id" -> "LongType",
+      "neighbor_id" -> "LongType", "sim" -> "DoubleType", "rank" -> "IntegerType"))
+    assert(out.count() == 0)
+  }
+
+  /** `op` fails by name on a mixed dimensionality — at call time from a
+    * guard job, or from the in-plan check when the result is collected. */
+  private def assertMixedDims(op: String)(run: => org.apache.spark.sql.DataFrame): Unit = {
+    val e = intercept[Exception](run.collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .flatMap(t => Option(t.getMessage))
+      .exists(m => m.contains(s"$op: ") && m.contains("mixed dimensionality")),
+      e.getMessage)
+  }
+
+  test("every ANN top-k entry point rejects k < 1 by name, before any work") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sim-k").toString
+    VectorIndex.write(vecs, dir, nCentroids = 2, m = 3, ks = 2)
+    // empty inputs too: they used to short-cut to an empty frame unchecked
+    for (k <- Seq(0, -1); (corpus, queries) <- Seq((vecs, vecs), (noVecs, noVecs))) {
+      val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+        "bruteForceTopK" -> (() => Similarity.bruteForceTopK(corpus, queries, k = k)),
+        "filteredTopK" -> (() => Similarity.filteredTopK(corpus, queries, lit(true), k = k)),
+        "ivfTopK" -> (() => Similarity.ivfTopK(corpus, queries, k = k, nCentroids = 2)),
+        "pqTopK" -> (() => Similarity.pqTopK(corpus, queries, k = k, m = 3, ks = 2)),
+        "ivfPqTopK" -> (() => Similarity.ivfPqTopK(corpus, queries, k = k,
+          nCentroids = 2, m = 3, ks = 2)),
+        "lshTopK" -> (() => Similarity.lshTopK(corpus, queries, k = k)),
+        "VectorIndex.search" -> (() => VectorIndex.search(queries, dir, k = k)),
+        "VectorIndex.search" -> (() => VectorIndex.searchLoaded(queries,
+          VectorIndex.load(spark, dir), k = k)))
+      for ((op, run) <- ops) {
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains(s"$op: k must be >= 1, got $k"), e.getMessage)
+      }
+    }
+  }
 
   test("brute-force top-1 returns the true nearest neighbor") {
     val out = Similarity.bruteForceTopK(
@@ -513,10 +554,8 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("LSH ANN on an empty corpus returns an empty, correctly-typed result") {
-    val out = Similarity.lshTopK(
-      corpus = vecs.filter($"vec_id" < 0), queries = vecs, k = 2)
-    assert(out.columns.toSeq == Seq("q_id", "neighbor_id", "sim", "rank"))
-    assert(out.count() == 0)
+    assertEmptyTopK(Similarity.lshTopK(corpus = noVecs, queries = vecs, k = 2))
+    assertEmptyTopK(Similarity.lshTopK(corpus = vecs, queries = noVecs, k = 2))
   }
 
   test("LSH ANN rejects mixed vector dimensionality instead of truncating") {
@@ -554,10 +593,8 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("PQ ANN on an empty corpus returns an empty, correctly-typed result") {
-    val out = Similarity.pqTopK(
-      corpus = vecs.filter($"vec_id" < 0), queries = vecs, k = 2)
-    assert(out.columns.toSeq == Seq("q_id", "neighbor_id", "sim", "rank"))
-    assert(out.count() == 0)
+    assertEmptyTopK(Similarity.pqTopK(corpus = noVecs, queries = vecs, k = 2))
+    assertEmptyTopK(Similarity.pqTopK(corpus = vecs, queries = noVecs, k = 2, m = 3))
   }
 
   test("IVFADC recovers true neighbors on a twin-pair corpus") {
@@ -637,20 +674,38 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("IVFADC on an empty corpus returns an empty, correctly-typed result") {
-    val out = Similarity.ivfPqTopK(
-      corpus = vecs.filter($"vec_id" < 0), queries = vecs, k = 2, m = 3)
-    assert(out.columns.toSeq == Seq("q_id", "neighbor_id", "sim", "rank"))
-    assert(out.count() == 0)
+    assertEmptyTopK(Similarity.ivfPqTopK(corpus = noVecs, queries = vecs, k = 2, m = 3))
+    assertEmptyTopK(Similarity.ivfPqTopK(corpus = vecs, queries = noVecs, k = 2,
+      nCentroids = 2, m = 3))
+  }
+
+  test("IVF ANN and a stored-index search on empty queries return an empty, correctly-typed result") {
+    assertEmptyTopK(Similarity.ivfTopK(vecs, noVecs, k = 2, nCentroids = 2))
+    val dir = java.nio.file.Files.createTempDirectory("graft-sim-empty").toString
+    VectorIndex.write(vecs, dir, nCentroids = 2, m = 3, ks = 2)
+    assertEmptyTopK(VectorIndex.search(noVecs, dir, k = 2))
   }
 
   test("IVFADC rejects mixed vector dimensionality instead of truncating") {
     val ragged = Seq(
       TestVec(0L, Seq(1f, 2f, 3f)),
       TestVec(1L, Seq(1f, 2f, 3f, 4f))).toDF()
-    val e = intercept[IllegalArgumentException] {
-      Similarity.ivfPqTopK(corpus = ragged, queries = ragged, k = 1, m = 1)
-    }
-    assert(e.getMessage.contains("mixed dimensionality"))
+    assertMixedDims("ivfPqTopK")(
+      Similarity.ivfPqTopK(corpus = ragged, queries = ragged, k = 1, m = 1))
+    // the operators without a guard job: a query of another length than
+    // the corpus (and so than ivfTopK's centroids) fails in the plan,
+    // where ArrayDot would otherwise dot over the shorter array
+    val longQuery = Seq(TestVec(9L, Seq(1f, 0f, 0f, 1f))).toDF()
+    assertMixedDims("bruteForceTopK")(
+      Similarity.bruteForceTopK(corpus = ragged, queries = ragged, k = 1))
+    assertMixedDims("bruteForceTopK")(
+      Similarity.bruteForceTopK(corpus = vecs, queries = longQuery, k = 1))
+    assertMixedDims("filteredTopK")(
+      Similarity.filteredTopK(corpus = vecs, queries = longQuery, lit(true), k = 1))
+    assertMixedDims("ivfTopK")(
+      Similarity.ivfTopK(corpus = vecs, queries = longQuery, k = 1, nCentroids = 2))
+    assertMixedDims("pqTopK")(
+      Similarity.pqTopK(corpus = vecs, queries = longQuery, k = 1, m = 1))
   }
 
   test("cellCapSample truncates dense cells at cap, keeps sparse cells whole") {

@@ -21,9 +21,12 @@ class StoreCrashSpec extends CrashSpec {
       ArtifactStamp.verifyAligned(spark, "test store", parts(g))
       Map("a" -> ids(Seq(s"$g/a")))
     }
-    everyCrash(fixture, live) { p =>
+    val calls = everyCrash(fixture, live) { p =>
       Generations.publish(spark, p, parts)(s => rows(3L).write.parquet(s"$s/a"))
     }
+    // the new generation is staged beside its target, so the target's
+    // parent exists: the commit makes no directory of its own
+    assert(calls.nonEmpty && !calls.exists(_.contains("mkdirs")), calls)
   }
 
   test("crash: Generations.commitBatch shows the whole batch or none of it") {
