@@ -50,19 +50,19 @@ object Similarity {
   private[operators] def subVec(c: Column, i: Int, sd: Int) = slice(c, i * sd + 1, sd)
 
   /** The family's guard: ONE aggregate job over all `inputs`' vector
-    * lengths. `None` when any input is empty (or has no vector length at
-    * all); otherwise the common
-    * dimensionality and the row count of the first input. Mixed lengths
-    * fail naming `op`: ArrayDot dots over the shorter array, so ragged
-    * vectors would give wrong answers silently. */
+    * lengths. `None` when any input has no non-NULL vector (an all-NULL
+    * corpus must not reach a KMeans fit); otherwise the common
+    * dimensionality and the row count of the first input, NULL vectors
+    * included. Mixed lengths fail naming `op`: ArrayDot dots over the
+    * shorter array, so ragged vectors would give wrong answers silently. */
   private[operators] def vectorShape(op: String, vecCol: String,
       inputs: DataFrame*): Option[(Int, Long)] = {
     val sizes = inputs.zipWithIndex
       .map { case (df, i) => df.select(lit(i).as("side"), size(col(vecCol)).as("d")) }
       .reduce(_ union _)
-    val r = sizes.agg(min(col("d")), (max(col("d")) +: inputs.indices.map(i =>
-      count(when(col("side") === i, 1)))): _*).head()
-    if (r.isNullAt(0) || inputs.indices.exists(i => r.getLong(2 + i) == 0)) None
+    val r = sizes.agg(min(col("d")), (max(col("d")) +: count(when(col("side") === 0, 1)) +:
+      inputs.indices.map(i => count(when(col("side") === i, col("d"))))): _*).head()
+    if (inputs.indices.exists(i => r.getLong(3 + i) == 0)) None
     else {
       require(r.getInt(0) == r.getInt(1),
         s"$op: vector column '$vecCol' has mixed dimensionality " +
@@ -72,10 +72,13 @@ object Similarity {
   }
 
   /** `v`, or a task failure naming `op` when its length is not `dim`: the
-    * dimensionality check of the operators that run no guard job. */
+    * dimensionality check of the operators that run no guard job. A NULL
+    * vector, or the NULL length of a NULL query, passes: its dot is NULL
+    * and ranks last. */
   private[operators] def sameDim(op: String, v: Column, dim: Column): Column =
-    when(size(v) === dim, v).otherwise(raise_error(format_string(
-      s"$op: mixed dimensionality (%d against %d)", size(v), dim)))
+    when(v.isNull || dim.isNull || size(v) === dim, v)
+      .otherwise(raise_error(format_string(
+        s"$op: mixed dimensionality (%d against %d)", size(v), dim)))
 
   /** The empty top-k result: `q_id` typed as the queries' id column,
     * `neighbor_id` as the corpus one, so it matches the non-empty schema

@@ -390,6 +390,7 @@ class SimilaritySpec extends SparkSpec {
     TestVec(4, Seq(-1f, 0f, 0f))
   ).toDF()
   private val noVecs = vecs.filter($"vec_id" < 0)
+  private val nullVecs = Seq(TestVec(7, null)).toDF()
 
   /** The typed empty top-k result, whichever path produced it. */
   private def assertEmptyTopK(out: org.apache.spark.sql.DataFrame): Unit = {
@@ -398,10 +399,19 @@ class SimilaritySpec extends SparkSpec {
     assert(out.count() == 0)
   }
 
-  /** `op` fails by name on a mixed dimensionality — at call time from a
-    * guard job, or from the in-plan check when the result is collected. */
-  private def assertMixedDims(op: String)(run: => org.apache.spark.sql.DataFrame): Unit = {
-    val e = intercept[Exception](run.collect())
+  /** A guarded `op` fails by name on a mixed dimensionality when it is
+    * called, from its guard job. */
+  private def assertMixedDimsAtCall(op: String)(run: => org.apache.spark.sql.DataFrame): Unit = {
+    val e = intercept[IllegalArgumentException](run)
+    assert(e.getMessage.contains(s"$op: ") && e.getMessage.contains("mixed dimensionality"),
+      e.getMessage)
+  }
+
+  /** An `op` without a guard job builds its plan, then fails by name on a
+    * mixed dimensionality when the result is collected. */
+  private def assertMixedDimsInPlan(op: String)(run: => org.apache.spark.sql.DataFrame): Unit = {
+    val out = run
+    val e = intercept[Exception](out.collect())
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .flatMap(t => Option(t.getMessage))
       .exists(m => m.contains(s"$op: ") && m.contains("mixed dimensionality")),
@@ -432,12 +442,17 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("brute-force top-1 returns the true nearest neighbor") {
-    val out = Similarity.bruteForceTopK(
-      corpus = vecs, queries = vecs.filter($"vec_id" < 3), k = 1)
-      .collect().map(r => r.getAs[Long]("q_id") -> r.getAs[Long]("neighbor_id")).toMap
-    assert(out(0L) == 1L)
-    assert(out(1L) == 0L)
-    assert(out(2L) == 3L)
+    // a NULL embedding, in the corpus or among the queries, scores NULL
+    // and ranks last instead of failing the length check
+    val withNull = Seq(TestVec(5, null)).toDF()
+    for ((corpus, queries) <- Seq((vecs, vecs.filter($"vec_id" < 3)),
+        (vecs.union(withNull), vecs.filter($"vec_id" < 3).union(withNull)))) {
+      val out = Similarity.bruteForceTopK(corpus = corpus, queries = queries, k = 1)
+        .collect().map(r => r.getAs[Long]("q_id") -> r.getAs[Long]("neighbor_id")).toMap
+      assert(out(0L) == 1L)
+      assert(out(1L) == 0L)
+      assert(out(2L) == 3L)
+    }
   }
 
   test("brute-force top-k returns k ordered neighbors") {
@@ -555,6 +570,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("LSH ANN on an empty corpus returns an empty, correctly-typed result") {
     assertEmptyTopK(Similarity.lshTopK(corpus = noVecs, queries = vecs, k = 2))
+    assertEmptyTopK(Similarity.lshTopK(corpus = nullVecs, queries = vecs, k = 2))
     assertEmptyTopK(Similarity.lshTopK(corpus = vecs, queries = noVecs, k = 2))
   }
 
@@ -594,6 +610,8 @@ class SimilaritySpec extends SparkSpec {
 
   test("PQ ANN on an empty corpus returns an empty, correctly-typed result") {
     assertEmptyTopK(Similarity.pqTopK(corpus = noVecs, queries = vecs, k = 2))
+    // an all-NULL corpus has no vectors to fit codebooks on either
+    assertEmptyTopK(Similarity.pqTopK(corpus = nullVecs, queries = vecs, k = 2, m = 3))
     assertEmptyTopK(Similarity.pqTopK(corpus = vecs, queries = noVecs, k = 2, m = 3))
   }
 
@@ -675,6 +693,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("IVFADC on an empty corpus returns an empty, correctly-typed result") {
     assertEmptyTopK(Similarity.ivfPqTopK(corpus = noVecs, queries = vecs, k = 2, m = 3))
+    assertEmptyTopK(Similarity.ivfPqTopK(corpus = nullVecs, queries = vecs, k = 2, m = 3))
     assertEmptyTopK(Similarity.ivfPqTopK(corpus = vecs, queries = noVecs, k = 2,
       nCentroids = 2, m = 3))
   }
@@ -690,22 +709,22 @@ class SimilaritySpec extends SparkSpec {
     val ragged = Seq(
       TestVec(0L, Seq(1f, 2f, 3f)),
       TestVec(1L, Seq(1f, 2f, 3f, 4f))).toDF()
-    assertMixedDims("ivfPqTopK")(
+    val longQuery = Seq(TestVec(9L, Seq(1f, 0f, 0f, 1f))).toDF()
+    assertMixedDimsAtCall("ivfPqTopK")(
       Similarity.ivfPqTopK(corpus = ragged, queries = ragged, k = 1, m = 1))
+    assertMixedDimsAtCall("pqTopK")(
+      Similarity.pqTopK(corpus = vecs, queries = longQuery, k = 1, m = 1))
     // the operators without a guard job: a query of another length than
     // the corpus (and so than ivfTopK's centroids) fails in the plan,
     // where ArrayDot would otherwise dot over the shorter array
-    val longQuery = Seq(TestVec(9L, Seq(1f, 0f, 0f, 1f))).toDF()
-    assertMixedDims("bruteForceTopK")(
+    assertMixedDimsInPlan("bruteForceTopK")(
       Similarity.bruteForceTopK(corpus = ragged, queries = ragged, k = 1))
-    assertMixedDims("bruteForceTopK")(
+    assertMixedDimsInPlan("bruteForceTopK")(
       Similarity.bruteForceTopK(corpus = vecs, queries = longQuery, k = 1))
-    assertMixedDims("filteredTopK")(
+    assertMixedDimsInPlan("filteredTopK")(
       Similarity.filteredTopK(corpus = vecs, queries = longQuery, lit(true), k = 1))
-    assertMixedDims("ivfTopK")(
+    assertMixedDimsInPlan("ivfTopK")(
       Similarity.ivfTopK(corpus = vecs, queries = longQuery, k = 1, nCentroids = 2))
-    assertMixedDims("pqTopK")(
-      Similarity.pqTopK(corpus = vecs, queries = longQuery, k = 1, m = 1))
   }
 
   test("cellCapSample truncates dense cells at cap, keeps sparse cells whole") {
@@ -879,9 +898,13 @@ class SimilaritySpec extends SparkSpec {
       val b = base(i % 3)
       TestVec(i.toLong, b.map(x => x + rnd.nextFloat() * 0.1f))
     }.toDF()
-    val out = Similarity.ivfTopK(vecs, vecs.filter($"vec_id" < 3),
-      k = 1, nCentroids = 3, nProbe = 1)
-      .collect().map(r => r.getAs[Long]("q_id") -> r.getAs[Long]("neighbor_id")).toMap
+    // a query with a NULL embedding scores NULL instead of failing the
+    // length check against the quantizer
+    val queries = vecs.filter($"vec_id" < 3).union(Seq(TestVec(99L, null)).toDF())
+    val (nullQ, rows) = Similarity.ivfTopK(queries = queries, corpus = vecs,
+      k = 1, nCentroids = 3, nProbe = 1).collect().partition(_.getAs[Long]("q_id") == 99L)
+    assert(nullQ.forall(_.isNullAt(2)), nullQ.mkString)
+    val out = rows.map(r => r.getAs[Long]("q_id") -> r.getAs[Long]("neighbor_id")).toMap
     // top-1 neighbor must come from the same cluster (id ≡ q_id mod 3)
     assert(out.size == 3)
     out.foreach { case (q, n) => assert(n % 3 == q % 3) }
