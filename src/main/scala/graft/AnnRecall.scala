@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: measured recall@k of an ANN path against the brute-force truth
@@ -22,17 +21,8 @@ object AnnRecall {
     }.toMap
     def p(name: String, dflt: Int) = kv.getOrElse(name, dflt)
     val k = p("k", 3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false") // r17: guide §2.2/§9 — respect the advisory target (see Bench)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cores
+    val spark = Session(cpus)
     val emb = Tables.table(spark, sfDir, "embeddings")
     val qs = emb.filter(col("vec_id") < 50)
     val ann = op match {

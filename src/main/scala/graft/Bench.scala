@@ -45,25 +45,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cores
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Honor the advisory partition-size target when AQE coalesces, as
-      // Spark's docs recommend ("respect the configured target size"). With
-      // the default true, every sub-target shuffle is still split into
-      // defaultParallelism reduce tasks, so iterative/tiny-stage operators
-      // pay cores-many empty tasks per exchange (the measured
-      // 8c-faster-than-32c inversions). Operators whose rows expand after an
-      // exchange (the capped pair finders) are not merged onto one core by
-      // this: they carry their own partition floor (`Dedup.partitionFloor`).
-      // Scale-neutral: at real data volumes the 64MB advisory target governs.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(cpus)
     // Warm up the one-time costs (codegen, file-source init, shuffle env)
     // so per-query timings measure the queries, not session bring-up.
     spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -72,10 +56,8 @@ object Bench {
     // queries (full name or short code) — the attribution tool for "which
     // commit moved this query", without paying a 150-query sweep per probe.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      only.forall(s => s.contains(n) || s.contains(n.takeWhile(_ != '_')))
-    }
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val selected = only.fold(SparkEntry.queries.toSeq.sortBy(_._1))(SparkEntry.select)
 
     /** One timed pass over a query fn: n runs, cache/GC reset between runs
       * (leaked cache entries and deferred ContextCleaner work were the

@@ -6,10 +6,11 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 /** SparkSessionExtensions entry point: makes the engine's native
-  * expressions available to SQL. Attach at session build time:
+  * expressions available to SQL. [[graft.Session]] installs it on every
+  * engine session:
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions) ...
-  * // or: .config("spark.sql.extensions", "graft.GraftExtensions")
+  * val spark = graft.Session()
+  * // outside the engine: .config("spark.sql.extensions", "graft.GraftExtensions")
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

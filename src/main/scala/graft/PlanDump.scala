@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` for named queries to files —
   * the plans/rNN/<query>_{before,after}.txt evidence the optimization
   * rounds commit (the judge checks plan claims against these).
@@ -17,18 +15,9 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
-    val wanted = args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val sel = SparkEntry.select(args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false") // r17: guide §2.2/§9 — respect the advisory target (see Bench)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -36,10 +25,7 @@ object PlanDump {
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     })
-    val sel = SparkEntry.queries.filter { case (n, _) =>
-      wanted.contains(n) || wanted.contains(n.takeWhile(_ != '_'))
-    }
-    sel.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    sel.foreach { case (name, fn) =>
       try {
         jobs.set(0)
         val df = fn(spark, sfDir)

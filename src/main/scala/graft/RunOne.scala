@@ -1,32 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run a single registered query with timing and optional plan.
-  * Usage: runMain graft.RunOne <queryName> [sfDir] [explain]
+  * Usage: runMain graft.RunOne <queryName|shortCode> [sfDir] [explain]
   */
 object RunOne {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val (name, fn) = SparkEntry.select(Seq(args(0))).head
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val doExplain = args.contains("explain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    // diagnostic conf overrides: SPARK_GRAFT_CONF="key=value;key=value"
-    val extraConf = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
+    val spark = Session()
+    // diagnostic runtime conf overrides: SPARK_GRAFT_CONF="key=value;key=value"
+    // (set on the built session, so a static key fails loud)
+    sys.env.getOrElse("SPARK_GRAFT_CONF", "")
       .split(";").map(_.trim).filter(_.contains("="))
-      .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val builder = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false") // r17: guide §2.2/§9 — respect the advisory target (see Bench)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    extraConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val fn = SparkEntry.queries(name)
+      .foreach { kv => val i = kv.indexOf('='); spark.conf.set(kv.take(i), kv.drop(i + 1)) }
     // Optional job profile (SPARK_GRAFT_PROFILE=1): per-job wall time +
     // description — the attribution tool for "where do an eager operator's
     // seconds go" (checkpoint rounds vs convergence probes vs AQE stages).

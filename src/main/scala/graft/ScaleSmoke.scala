@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Dedup, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale smoke: run the LSH/dedup/ANN paths on a synthetic corpus 1–2
@@ -12,14 +11,8 @@ import org.apache.spark.sql.functions._
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val rows = if (args.nonEmpty) args(0).toLong else 200000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions).master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false") // r17: guide §2.2/§9 — respect the advisory target (see Bench)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cores
+    val spark = Session(cpus)
     def time(label: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()
       val n = f

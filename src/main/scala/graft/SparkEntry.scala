@@ -48,6 +48,17 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(q => q.name -> q.run).toMap
 
+  /** The queries `names` ask for, sorted by name. A name is a full query
+    * name or its short code (the part before the first '_': q01, d09); one
+    * that matches no query fails, naming itself. */
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    def matches(n: String, q: String) = n == q || n == q.takeWhile(_ != '_')
+    val all = queries.toSeq.sortBy(_._1)
+    val unknown = names.filterNot(n => all.exists(q => matches(n, q._1)))
+    require(unknown.isEmpty, s"unknown query: ${unknown.mkString(", ")}")
+    all.filter(q => names.exists(matches(_, q._1)))
+  }
+
   /** Bench tiering: the relational tier (TPC-H-ish + table maintenance)
     * vs the EXT tier (text/vector/pipeline/multimodal). Bench records a
     * subtotal per tier so close-sweep comparisons and A/B probes can be

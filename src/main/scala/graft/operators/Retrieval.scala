@@ -306,15 +306,9 @@ object Retrieval {
     val lex = bm25TopK(docs, queryTerms, k = poolK, maxDfFrac = maxDfFrac,
       idCol = docIdCol, textCol = textCol, qidCol = qidCol, termCol = termCol)
       .select(col(qidCol), col(docIdCol), col("rnk").as("lex_rnk"))
-    // Re-derive the vector ranks with bruteForceTopK's own ordering
-    // (sim DESC, id ASC) — k rows per query, so the window is trivial.
-    val wv = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    val vec = Similarity.bruteForceTopK(
-      embeddings, queryVecs, k = poolK, idCol = vecIdCol, vecCol = vecCol)
-      .withColumn("vec_rnk", row_number().over(wv))
+    val vec = Similarity.bruteForceRanked(embeddings, queryVecs, poolK, vecIdCol, vecCol)
       .select(col("q_id").as(qidCol), col("neighbor_id").as(docIdCol),
-        col("vec_rnk"))
+        col("rank").as("vec_rnk"))
     val contrib = (c: String) => coalesce(
       expr(s"CAST(1000000 AS BIGINT) DIV (CAST($rrfK AS BIGINT) + CAST($c AS BIGINT))"),
       lit(0L))

@@ -406,7 +406,12 @@ object Similarity {
       k: Int = 1,
       idCol: String = "vec_id",
       vecCol: String = "embedding"
-  ): DataFrame = {
+  ): DataFrame = bruteForceRanked(corpus, queries, k, idCol, vecCol).drop("rank")
+
+  /** [[bruteForceTopK]] with its per-query `rank` (1-based, sim DESC then
+    * neighbor id ASC) kept, for callers that fuse rankings. */
+  private[operators] def bruteForceRanked(corpus: DataFrame, queries: DataFrame,
+      k: Int, idCol: String, vecCol: String): DataFrame = {
     val topK = topKBySim("bruteForceTopK", k)
     val c = withVec(corpus, idCol, vecCol)
     val q = withVec(queries, idCol, vecCol)
@@ -416,7 +421,7 @@ object Similarity {
       .withColumn("sim", dot(col("qv"),
           sameDim("bruteForceTopK", col("v"), size(col("qv"))))
         / (col("qnrm") * col("nrm")))
-    topK(scored).drop("rank")
+    topK(scored)
   }
 
   /** Attribute-filtered exact top-k: each query searches only the corpus

@@ -15,6 +15,22 @@ object Advanced {
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.table(s, dir, n)
 
+  /** `events` with the browsed item (the `k` of `props`) as `item`: the
+    * vertices of the item browse graph that ag03, g02-g07 and g09 read. */
+  private def itemEvents(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir)
+      .select(col("user_id"), col("event_id"), col("ts"),
+        regexp_extract(col("props"), "\"k\": (\\d+)", 1).cast("long").as("item"))
+
+  /** The item browse graph's edges: one (dst, src) row per step between a
+    * user's consecutive events, ordered by (ts, event_id). */
+  private def itemTransitions(s: SparkSession, dir: String): DataFrame = {
+    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+    itemEvents(s, dir)
+      .select(col("item").as("dst"), lag(col("item"), 1).over(w).as("src"))
+      .filter(col("src").isNotNull)
+  }
+
   /** Shared by r03/r05: 30-min-gap activity sessions whose active window
     * extends through the timeout ([first_ts, last_ts + 30 min), µs), and
     * ±10-min incident windows around the same user's errors. Both sides
@@ -2130,16 +2146,8 @@ object Advanced {
       // endpoints, so lineage truncates every round — without that the
       // plan doubles per round.
       (s, dir) => {
-        val ev = Tables.events(s, dir)
-          .select(col("user_id"), col("event_id"), col("ts"),
-            regexp_extract(col("props"), "\"k\": (\\d+)", 1)
-              .cast("long").as("item"))
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))
-        val prefs = ev
-          .select(col("item").as("winner"),
-            lag(col("item"), 1).over(w).as("loser"))
-          .filter(col("loser").isNotNull)
+        val prefs = itemTransitions(s, dir)
+          .select(col("dst").as("winner"), col("src").as("loser"))
           .groupBy("winner", "loser").agg(count(lit(1)).as("n"))
         // 100 leaderboard items: the driver-side MM mode (identical
         // integer recurrence, spec-pinned bit-equal) skips 5 rounds of
@@ -2601,15 +2609,7 @@ object Advanced {
       // truncated every round (Components' checkpoint contract) so the
       // plan stays flat at any iteration count.
       (s, dir) => {
-        val ev = Tables.events(s, dir)
-          .select(col("user_id"), col("event_id"), col("ts"),
-            regexp_extract(col("props"), "\"k\": (\\d+)", 1)
-              .cast("long").as("item"))
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))
-        val edges = ev
-          .select(col("item").as("dst"), lag(col("item"), 1).over(w).as("src"))
-          .filter(col("src").isNotNull)
+        val edges = itemTransitions(s, dir)
           .groupBy("src", "dst").agg(count(lit(1)).as("w"))
         // 100 items vs 100k+ transitions: the small-vertex-set plan —
         // ranks broadcast, edges never shuffle, one |V|-key agg per round
@@ -2671,11 +2671,7 @@ object Advanced {
       // input recurses zero times; DuckDB replays the identical
       // recursion.
       (s, dir) => {
-        Tables.events(s, dir)
-          .select(col("user_id"), col("event_id"), col("ts"),
-            regexp_extract(col("props"), "\"k\": (\\d+)", 1)
-              .cast("long").as("item"))
-          .createOrReplaceTempView("g03_ev")
+        itemEvents(s, dir).createOrReplaceTempView("g03_ev")
         s.sql("""WITH RECURSIVE
             tr AS (SELECT item AS dst,
                 LAG(item) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS src
@@ -2721,15 +2717,7 @@ object Advanced {
       // count — the per-step-dedup form Spark's own WITH RECURSIVE
       // rejects (UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE, tried in g03).
       (s, dir) => {
-        val ev = Tables.events(s, dir)
-          .select(col("user_id"), col("event_id"), col("ts"),
-            regexp_extract(col("props"), "\"k\": (\\d+)", 1)
-              .cast("long").as("item"))
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))
-        val edges = ev
-          .select(col("item").as("dst"), lag(col("item"), 1).over(w).as("src"))
-          .filter(col("src").isNotNull)
+        val edges = itemTransitions(s, dir)
         // seed derives from the data (src = 0 rows), so a zero-row input
         // recurses zero times — g03's same contract
         val seeds = edges.filter(col("src") === 0L)
@@ -2771,15 +2759,7 @@ object Advanced {
       // longer-but-cheaper one — the case hop-count BFS cannot express
       // (GraphSpec pins it on a hand-built graph).
       (s, dir) => {
-        val ev = Tables.events(s, dir)
-          .select(col("user_id"), col("event_id"), col("ts"),
-            regexp_extract(col("props"), "\"k\": (\\d+)", 1)
-              .cast("long").as("item"))
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))
-        val edges = ev
-          .select(col("item").as("dst"), lag(col("item"), 1).over(w).as("src"))
-          .filter(col("src").isNotNull)
+        val edges = itemTransitions(s, dir)
           .groupBy("src", "dst").agg(count(lit(1)).as("n"))
           .select(col("src"), col("dst"), expr("1000000 DIV n").as("cost"))
         // seed derives from the data (src = 0 rows) — g03/g07's contract
@@ -2838,15 +2818,7 @@ object Advanced {
       // the 1-row verdict replays bit-for-bit; n_wedges rides along as
       // the audit number showing what the closure join had to filter.
       (s, dir) => {
-        val ev = Tables.events(s, dir)
-          .select(col("user_id"), col("event_id"), col("ts"),
-            regexp_extract(col("props"), "\"k\": (\\d+)", 1)
-              .cast("long").as("item"))
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))
-        val edges = ev
-          .select(col("item").as("dst"), lag(col("item"), 1).over(w).as("src"))
-          .filter(col("src").isNotNull)
+        val edges = itemTransitions(s, dir)
         graft.operators.Graph.triangleCount(edges)
       },
       Some("""WITH ev AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS t,
@@ -2892,15 +2864,7 @@ object Advanced {
       // labels broadcast (smallVertexSet), edges never shuffle after the
       // build.
       (s, dir) => {
-        val ev = Tables.events(s, dir)
-          .select(col("user_id"), col("event_id"), col("ts"),
-            regexp_extract(col("props"), "\"k\": (\\d+)", 1)
-              .cast("long").as("item"))
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))
-        val raw = ev
-          .select(col("item").as("dst"), lag(col("item"), 1).over(w).as("src"))
-          .filter(col("src").isNotNull)
+        val raw = itemTransitions(s, dir)
           .groupBy("src", "dst").agg(count(lit(1)).as("w"))
           .filter(col("src") =!= col("dst"))
         val topw = Window.partitionBy(col("src"))
@@ -2961,15 +2925,7 @@ object Advanced {
       // localCheckpoint (g02's lineage trap); the oracle unrolls all 6
       // peels as generated CTEs.
       (s, dir) => {
-        val ev = Tables.events(s, dir)
-          .select(col("user_id"), col("event_id"), col("ts"),
-            regexp_extract(col("props"), "\"k\": (\\d+)", 1)
-              .cast("long").as("item"))
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))
-        val raw = ev
-          .select(col("item").as("dst"), lag(col("item"), 1).over(w).as("src"))
-          .filter(col("src").isNotNull)
+        val raw = itemTransitions(s, dir)
           .groupBy("src", "dst").agg(count(lit(1)).as("w"))
           .filter(col("src") =!= col("dst"))
         val topw = Window.partitionBy(col("src"))

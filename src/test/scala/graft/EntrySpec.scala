@@ -546,11 +546,16 @@ class EntrySpec extends SparkSpec {
     org.apache.spark.sql.SparkSession.clearActiveSession()
     org.apache.spark.sql.SparkSession.clearDefaultSession()
     try {
-      val s = org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]").withExtensions(new GraftExtensions).getOrCreate()
+      val s = Session(2)
+      assert(s ne base, "Session(2) reused the suite session")
       val d = s.sql("SELECT array_dot(array(1.0d, 2.0d), array(2.0d, 3.0d)) AS d")
         .head().getDouble(0)
       assert(d == 8.0)
+      // the engine-wide settings every entry point runs with
+      assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+      assert(s.conf.get(
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst") == "false")
+      assert(s.conf.get("spark.sql.shuffle.partitions") == "2")
     } finally {
       org.apache.spark.sql.SparkSession.setDefaultSession(base)
       org.apache.spark.sql.SparkSession.setActiveSession(base)
