@@ -216,142 +216,68 @@ object EditDistance {
     * segment scheme is a function of k, so probing with a different k
     * would be silently incomplete — reads fail loud on mismatch instead.
     *
-    * Storage is [[Generations]]-structured (the ClosureStore layout):
-    * base components + an `ingested/` replay ledger + the `batches/`
-    * directory live inside one `gen-NNNNNNN` published whole.
-    * Rebuilding over a LIVE index is therefore safe — the new
-    * base supersedes the old base AND its batch directories together
-    * (an in-place rewrite would have silently composed the new base
-    * with stale batch segments), and the ledger carries forward (old
-    * ledger ∪ old batch ids) so a streaming replay of a batch folded
-    * before the rebuild is still recognized and skipped. The caller
-    * owns the corpus contract: `df` must be the full corpus the index
-    * should now describe; for pure batch-folding maintenance use
-    * [[compactIndex]], which re-fingerprints nothing. */
+    * The index is a [[Generations.Store]]: rebuilding over a LIVE index
+    * is safe, and the caller owns the corpus contract — `df` must be the
+    * full corpus the index should now describe; for pure batch-folding
+    * maintenance use [[compactIndex]], which re-fingerprints nothing. */
   def writeIndex(df: DataFrame, idCol: String, strCol: String,
       maxDist: Int, path: String): Unit = {
     require(maxDist >= 1, "maxDist must be >= 1")
     val spark = df.sparkSession
     import spark.implicits._
-    val carried: Seq[String] = Generations.carriedLedger(spark, path,
-      gen => batchDirs(spark, gen).map(_._1))
     val strs = strings(df, idCol, strCol)
-    Generations.publish(spark, path, baseParts) { staging =>
-      segments(strs, maxDist).write.mode("overwrite").parquet(s"$staging/segs")
-      strs.filter(col("len") <= 2 * maxDist + 1)
-        .write.mode("overwrite").parquet(s"$staging/shorts")
+    store.rebuild(spark, path) { staging =>
+      writeSegments(strs, maxDist, staging)
       Seq(maxDist).toDF("max_dist").coalesce(1)
         .write.mode("overwrite").parquet(s"$staging/meta")
-      carried.toDF("batch_id").coalesce(1)
-        .write.mode("overwrite").parquet(s"$staging/ingested")
     }
   }
 
-  /** Fold the live generation's batch directories into a fresh base —
-    * from the STORED artifacts only, zero re-fingerprinting: the
-    * composed segs/shorts reads are rewritten as single-directory
-    * tables, the replay ledger absorbs the batch ids, and the result
-    * publishes as the next generation. The read
-    * side is a plain multi-directory union, so what compaction buys is
-    * file-count hygiene: a year of daily [[appendIndex]] batches is
-    * ~700 small parquet directories whose listing and tiny files tax
-    * every probe — this folds them into one well-sized base on whatever
-    * cadence that is worth. Probes, appends, and [[batchIngested]]
-    * answers are invariant across a compact (spec-pinned). */
+  private def writeSegments(strs: DataFrame, k: Int, dir: String): Unit = {
+    segments(strs, k).write.mode("overwrite").parquet(s"$dir/segs")
+    strs.filter(col("len") <= 2 * k + 1)
+      .write.mode("overwrite").parquet(s"$dir/shorts")
+  }
+
+  /** Fold the live generation's batch directories into a fresh base,
+    * zero re-fingerprinting. The read side is a plain multi-directory
+    * union, so what compaction buys is file-count hygiene: a year of
+    * daily [[appendIndex]] batches is ~700 small parquet directories
+    * whose listing and tiny files tax every probe. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    import spark.implicits._
-    val gen = currentVerified(spark, path)
-    val ledger = Generations.carriedLedger(spark, path,
-      g => batchDirs(spark, g).map(_._1))
-    Generations.publish(spark, path, baseParts) { staging =>
-      indexPart(spark, gen, "segs")
-        .write.mode("overwrite").parquet(s"$staging/segs")
-      indexPart(spark, gen, "shorts")
-        .write.mode("overwrite").parquet(s"$staging/shorts")
-      spark.read.parquet(s"$gen/meta")
-        .coalesce(1).write.mode("overwrite").parquet(s"$staging/meta")
-      ledger.toDF("batch_id").coalesce(1)
-        .write.mode("overwrite").parquet(s"$staging/ingested")
-    }
-  }
+      path: String): Unit =
+    store.compact(spark, path)
 
-  private def baseParts(gen: String): Seq[String] =
-    Seq(s"$gen/segs", s"$gen/shorts", s"$gen/meta", s"$gen/ingested")
-
-  /** The live generation, stamp-verified — every read and write resolves
-    * through here (one choke point for the torn-build check). */
-  private def currentVerified(spark: org.apache.spark.sql.SparkSession,
-      path: String): String = {
-    val gen = Generations.current(spark, path, "editdist index")
-    ArtifactStamp.verifyAligned(spark, "editdist index", baseParts(gen))
-    gen
-  }
+  private[graft] val store = Generations.Store("editdist index",
+    stamped = Seq("segs", "shorts", "meta"), appended = Seq("segs", "shorts"))
 
   private def indexK(spark: org.apache.spark.sql.SparkSession,
       gen: String): Int =
     spark.read.parquet(s"$gen/meta").head().getAs[Int]("max_dist")
 
-  /** Committed (batchId, dir) pairs of a generation, ascending id —
-    * [[Generations.listBatches]]' raw-named layout. */
-  private def batchDirs(spark: org.apache.spark.sql.SparkSession,
-      gen: String): Seq[(String, String)] =
-    Generations.listBatches(spark, gen)
-
-  /** Has `batchId` already been folded in — by a live [[appendIndex]]
-    * batch directory of the current generation, or by one absorbed into
-    * the base (the `ingested` ledger, which [[compactIndex]] and
-    * [[writeIndex]]-over-live carry forward)? The idempotence probe a
-    * retrying or replaying ingest job runs before appending. */
+  /** The replay probe a retrying ingest job runs before [[appendIndex]]. */
   def batchIngested(spark: org.apache.spark.sql.SparkSession,
       path: String, batchId: String): Boolean =
-    Generations.batchKnown(spark, path, "editdist index", batchId)
+    store.batchIngested(spark, path, batchId)
 
-  /** Batch directories of the live generation not yet folded into the
-    * base — the small-file gauge a maintenance job (or
-    * [[graft.streaming.Streaming.editIndexSink]]'s `compactEvery`)
-    * watches to trigger [[compactIndex]]. */
+  /** The small-file gauge that triggers [[compactIndex]]. */
   def liveBatchCount(spark: org.apache.spark.sql.SparkSession,
       path: String): Int =
-    batchDirs(spark, Generations.current(spark, path, "editdist index")).size
+    store.liveBatchCount(spark, path)
 
   /** Fold a new batch into the stored index — O(|batch|) fingerprinting,
     * history untouched. Call AFTER [[incrementalPairs]] for the batch
-    * (the within-batch half is computed there).
-    *
-    * The fold is an ATOMIC, REPLAY-SAFE commit, not a parquet append: a
-    * plain append crashing between the segs and shorts writes would
-    * leave a half-folded batch, and a retry after a successful append
-    * would duplicate every segment — silently inflating candidates
-    * forever. Both tables commit as one `batches/<batchId>` directory
-    * ([[Generations.commitBatch]]), wholly visible or not at all.
-    * Re-submitting a committed batchId fails loud —
-    * retrying jobs probe [[batchIngested]] first (delete-by-key
-    * idempotence cannot apply here: segment rows are not deduped at
-    * read, by design — the read side is a straight multi-directory
-    * scan). */
+    * (the within-batch half is computed there). Segment rows are not
+    * deduped at read, by design (the read side is a straight
+    * multi-directory scan), so the store's replay-safe append is what
+    * keeps a retried batch from doubling its segments. */
   def appendIndex(batch: DataFrame, idCol: String, strCol: String,
-      path: String, batchId: String): Unit = {
-    val spark = batch.sparkSession
-    val gen = currentVerified(spark, path)
-    val k = indexK(spark, gen)
-    val strs = strings(batch, idCol, strCol)
-    Generations.requireNewBatch(spark, path, "editdist index", batchId,
-      "a blind retry would double every segment of the batch")
-    Generations.commitBatch(spark, path, gen, "editdist index", batchId) { staging =>
-      segments(strs, k).write.mode("overwrite").parquet(s"$staging/segs")
-      strs.filter(col("len") <= 2 * k + 1)
-        .write.mode("overwrite").parquet(s"$staging/shorts")
+      path: String, batchId: String): Unit =
+    store.append(batch.sparkSession, path, batchId) { gen =>
+      val k = indexK(batch.sparkSession, gen)
+      val strs = strings(batch, idCol, strCol)
+      staging => writeSegments(strs, k, staging)
     }
-  }
-
-  /** One index component (`segs`/`shorts`) across the base write and
-    * every committed batch directory of a generation — staging dirs are
-    * dot-prefixed and never listed, so readers see only whole batches. */
-  private def indexPart(spark: org.apache.spark.sql.SparkSession,
-      gen: String, part: String): DataFrame =
-    spark.read.parquet((s"$gen/$part" +:
-      batchDirs(spark, gen).map(d => s"${d._2}/$part")): _*)
 
   /** Every pair within the index's maxDist with AT LEAST ONE side in
     * `batch`: history×batch pairs probe the stored segments (pigeonhole
@@ -367,10 +293,10 @@ object EditDistance {
   def incrementalPairs(batch: DataFrame, idCol: String, strCol: String,
       path: String): DataFrame = {
     val spark = batch.sparkSession
-    val gen = currentVerified(spark, path)
+    val gen = store.current(spark, path)
     val k = indexK(spark, gen)
     val bStrs = strings(batch, idCol, strCol)
-    val seg = indexPart(spark, gen, "segs").select(
+    val seg = store.read(spark, gen, "segs").select(
       col("id").as("id_a"), col("len").as("len_a"), col("i").as("i_a"),
       col("spos"), col("v").as("v_a"), col("s").as("s_a"))
     val prb = probes(bStrs, k).select(col("id").as("id_b"),
@@ -384,7 +310,7 @@ object EditDistance {
           greatest(col("len_a"), col("len_b")) > 2 * k + 1)
         .select(col("id_a"), col("id_b"), col("s_a"), col("s_b"))
         .dropDuplicates("id_a", "id_b"), k)
-    val hShorts = indexPart(spark, gen, "shorts")
+    val hShorts = store.read(spark, gen, "shorts")
     val shortOldNew = shortPairs(hShorts, bStrs, k, ordered = false)
     oldNew.unionByName(shortOldNew)
       .select(least(col("id_a"), col("id_b")).as("id_a"),

@@ -145,8 +145,8 @@ object Retrieval {
   }
 
   /** Publish a [[bm25Index]] to disk as the three tables a retrieval
-    * service keeps — `postings/`, `df/`, `stats/` — inside one
-    * [[Generations]] directory stamped with ONE generation id: a crash
+    * service keeps — `postings/`, `df/`, `stats/` — as one
+    * [[Generations.Store]], stamped with ONE generation id: a crash
     * between the component writes of a rebuild would otherwise leave
     * yesterday's df beside today's postings, and BM25 scored with
     * mismatched df/stats is silently mis-ranked, not an error. A rewrite
@@ -161,7 +161,7 @@ object Retrieval {
   ): Unit = {
     val spark = docs.sparkSession
     val (postings, _, stats) = bm25Index(docs, idCol, textCol, termCol)
-    Generations.publish(spark, path, bm25Parts) { staging =>
+    bm25Store.rebuild(spark, path) { staging =>
       postings.write.mode("overwrite").parquet(s"$staging/postings")
       // df derives from the just-written postings (one row per (doc, term)
       // by construction), not from a second corpus tokenization — the
@@ -175,19 +175,17 @@ object Retrieval {
     }
   }
 
-  private def bm25Parts(gen: String): Seq[String] =
-    Seq(s"$gen/postings", s"$gen/df", s"$gen/stats")
+  private val bm25Store =
+    Generations.Store("BM25 index", stamped = Seq("postings", "df", "stats"))
 
   /** The stored [[writeBm25Index]] tables of the LIVE generation,
     * stamp-verified — the tuple [[bm25SearchIndexed]] /
     * `Streaming.bm25SearchStream` consume. */
   def readBm25Index(spark: org.apache.spark.sql.SparkSession, path: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val gen = Generations.current(spark, path, "BM25 index")
-    ArtifactStamp.verifyAligned(spark, "BM25 index", bm25Parts(gen))
-    (spark.read.parquet(s"$gen/postings"),
-      spark.read.parquet(s"$gen/df"),
-      spark.read.parquet(s"$gen/stats"))
+    val gen = bm25Store.current(spark, path)
+    (bm25Store.read(spark, gen, "postings"), bm25Store.read(spark, gen, "df"),
+      bm25Store.read(spark, gen, "stats"))
   }
 
   /** BM25 search against a STORED index ([[bm25Index]] tables): the

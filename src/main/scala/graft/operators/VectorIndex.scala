@@ -14,9 +14,7 @@ import org.apache.spark.sql.functions._
   * same fits) it returns IDENTICAL rows — the spec asserts equality, not a
   * recall bar.
   *
-  * Layout is [[Generations]]-structured (the ClosureStore/EditDistance
-  * discipline): all components live inside one `gen-NNNNNNN` directory
-  * published whole —
+  * The index is a [[Generations.Store]] of these components —
   *   - `params/`    one row: m, sd, ks, dim, residual, k_cells
   *   - `centroids/` (cluster, cvec ARRAY<DOUBLE>, cnorm2) — broadcast side
   *   - `codebooks/` (subspace, code, center ARRAY<DOUBLE>) — m·ks rows,
@@ -24,21 +22,14 @@ import org.apache.spark.sql.functions._
   *   - `codes/`     (vid, cluster, codes ARRAY<INT>, vh ARRAY<DOUBLE>) —
   *     the scan side: m small codes for ADC plus the normalized vector for
   *     the exact re-rank, co-located by cell id
-  *   - `ingested/`  the replay ledger: every batch id ever folded, carried
-  *     across [[compactIndex]] and rebuilds so [[batchIngested]] stays
-  *     truthful after the batch directories themselves are gone
-  *   - `batches/<batchId>/codes/` — committed [[appendBatch]] increments,
-  *     each wholly visible or not at all
+  *   - `ingested/`  the replay ledger
+  *   - `batches/NNNNNN-<batchId>/codes/` — committed [[appendBatch]]
+  *     increments
   *
-  * A rebuild over a LIVE index publishes a whole new generation, so the
-  * new fits can never silently compose with codes encoded under the old
-  * ones. A crashed or speculatively-retried ingest job is caught by
-  * the [[batchIngested]] probe — the raw-parquet-append design this
-  * replaces would double-encode the batch silently (duplicate code rows
-  * inflate candidate multiplicity and can displace distinct neighbors in
-  * the ADC shortlist) and a crash mid-append left a torn `codes/` no
-  * stamp mismatch could catch (only codes changed, so verifyAligned
-  * still passed).
+  * — so a rebuild's new fits never compose with codes encoded under the old
+  * ones, and a retried append cannot double-encode a batch (duplicate
+  * code rows inflate candidate multiplicity and can displace distinct
+  * neighbors in the ADC shortlist).
   *
   * 100 TB shape: `codes/` is the only corpus-sized table. The ADC pass
   * reads (vid, cluster, codes) — column-pruned to ~m bytes of codes per
@@ -56,10 +47,7 @@ object VectorIndex {
     * auto-sizes cells; pass `coarseFitted`/`fitted` to reuse session-shared
     * fits (and to make a subsequent one-shot [[Similarity.ivfPqTopK]] with
     * the same fits bit-identical to [[search]]). Rebuilding over a LIVE
-    * index is safe: the publish supersedes the old base AND its batch
-    * directories together, and the replay ledger carries forward (old
-    * ledger ∪ old batch ids) so a streaming replay of a batch folded
-    * before the rebuild is still recognized and skipped. */
+    * index is safe ([[Generations.Store]]). */
   def write(
       corpus: DataFrame,
       path: String,
@@ -100,25 +88,17 @@ object VectorIndex {
     val encoded = encodeWith(pf.models, codeInput(assigned, centroids, residual), m, sd)
       .select(col("vid"), col("cluster"), col("codes"), col("vh0").as("vh"))
 
-    // the ledger the new generation must carry (old ledger ∪ old live
-    // batch ids) — resolved BEFORE the publish supersedes them
-    val carried: Seq[String] = Generations.carriedLedger(spark, path,
-      gen => batchDirs(spark, gen).map(_._1))
-    // one generation publish + one stamp across all five components (the
-    // ClosureStore discipline): codes encoded against one fit joined with
-    // another build's codebooks would score garbage distances SILENTLY —
-    // the exact torn state a crash between component writes of an
-    // in-place rewrite leaves. Appends ([[appendBatch]]) commit whole
-    // batch directories beside the stamped base and never touch the stamp.
-    Generations.publish(spark, path, parts) { staging =>
+    // one stamp across all components: codes encoded against one fit
+    // joined with another build's codebooks would score garbage distances
+    // SILENTLY — the torn state a crash between component writes of an
+    // in-place rewrite leaves
+    store.rebuild(spark, path) { staging =>
       Seq((m, sd, ks, dim, residual, cf.kCells))
         .toDF("m", "sd", "ks", "dim", "residual", "k_cells")
         .write.mode("overwrite").parquet(s"$staging/params")
       centroids.write.mode("overwrite").parquet(s"$staging/centroids")
       codebooks.write.mode("overwrite").parquet(s"$staging/codebooks")
       encoded.write.mode("overwrite").parquet(s"$staging/codes")
-      carried.toDF("batch_id").coalesce(1)
-        .write.mode("overwrite").parquet(s"$staging/ingested")
     }
   }
 
@@ -130,90 +110,32 @@ object VectorIndex {
     if (residual) residuals(assigned.withColumnRenamed("vh", "vh0"), centroids, "vh0")
     else assigned.withColumn("vh0", col("vh"))
 
-  private def parts(gen: String): Seq[String] =
-    Seq(s"$gen/params", s"$gen/centroids", s"$gen/codebooks", s"$gen/codes",
-      s"$gen/ingested")
+  private[graft] val store = Generations.Store("IVFADC index",
+    stamped = Seq("params", "centroids", "codebooks", "codes"),
+    appended = Seq("codes"))
 
-  /** Committed (batchId, dir) pairs of a generation, ascending id —
-    * [[Generations.listBatches]]' raw-named layout (order is cosmetic:
-    * codes are append-only, reads are a plain union). */
-  private def batchDirs(spark: SparkSession,
-      gen: String): Seq[(String, String)] =
-    Generations.listBatches(spark, gen)
-
-  /** The live generation, stamp-verified — every read and write resolves
-    * through here (one choke point for the torn-build check). */
-  private def currentVerified(spark: SparkSession, path: String): String = {
-    val gen = Generations.current(spark, path, "IVFADC index")
-    ArtifactStamp.verifyAligned(spark, "IVFADC index", parts(gen))
-    gen
-  }
-
-  /** The composed code table: base + every committed batch directory —
-    * staging is dot-prefixed and never listed, so readers see only whole
-    * batches. */
-  private def composedCodes(spark: SparkSession, gen: String): DataFrame =
-    spark.read.parquet((s"$gen/codes" +:
-      batchDirs(spark, gen).map(d => s"${d._2}/codes")): _*)
-
-  /** Has `batchId` already been folded in — by a live [[appendBatch]]
-    * batch directory of the current generation, or by one absorbed into
-    * the base (the `ingested` ledger, which [[compactIndex]] and
-    * [[write]]-over-live carry forward)? The idempotence probe a
-    * retrying or replaying ingest job runs before appending. */
+  /** The replay probe a retrying ingest job runs before [[appendBatch]]. */
   def batchIngested(spark: SparkSession, path: String,
       batchId: String): Boolean =
-    Generations.batchKnown(spark, path, "IVFADC index", batchId)
+    store.batchIngested(spark, path, batchId)
 
-  /** Batch directories of the live generation not yet folded into the
-    * base — the small-file gauge a maintenance job (or
-    * [[graft.streaming.Streaming.annIndexSink]]'s `compactEvery`)
-    * watches to trigger [[compactIndex]]. */
+  /** The small-file gauge that triggers [[compactIndex]]. */
   def liveBatchCount(spark: SparkSession, path: String): Int =
-    batchDirs(spark, Generations.current(spark, path, "IVFADC index")).size
+    store.liveBatchCount(spark, path)
 
-  /** Fold the live generation's batch directories into a fresh base —
-    * from the STORED artifacts only, zero re-encoding: the composed
-    * codes read is rewritten as one single-directory table, fits and
-    * params copy over verbatim, the replay ledger absorbs the batch
-    * ids, and the result publishes as the next generation. Searches,
-    * appends, and [[batchIngested]] answers
-    * are invariant across a compact (spec-pinned). */
-  def compactIndex(spark: SparkSession, path: String): Unit = {
-    import spark.implicits._
-    val gen = currentVerified(spark, path)
-    val ledger = Generations.carriedLedger(spark, path,
-      g => batchDirs(spark, g).map(_._1))
-    Generations.publish(spark, path, parts) { staging =>
-      spark.read.parquet(s"$gen/params")
-        .coalesce(1).write.mode("overwrite").parquet(s"$staging/params")
-      spark.read.parquet(s"$gen/centroids")
-        .write.mode("overwrite").parquet(s"$staging/centroids")
-      spark.read.parquet(s"$gen/codebooks")
-        .write.mode("overwrite").parquet(s"$staging/codebooks")
-      composedCodes(spark, gen)
-        .write.mode("overwrite").parquet(s"$staging/codes")
-      ledger.toDF("batch_id").coalesce(1)
-        .write.mode("overwrite").parquet(s"$staging/ingested")
-    }
-  }
+  /** Fold the live generation's batch directories into a fresh base,
+    * zero re-encoding: fits and params copy over verbatim. */
+  def compactIndex(spark: SparkSession, path: String): Unit =
+    store.compact(spark, path)
 
   /** Encode a NEW batch with the stored fits and commit it beside
     * `codes/` — incremental ingest without refit or history re-scan (the
     * IVF analog of `Dedup.incrementalNeardupPairs`' never-history×history
     * contract). Centroids/codebooks stay frozen: the standard FAISS-style
     * tradeoff that drift in the data distribution degrades cell balance
-    * until the next rebuild, in exchange for O(batch) ingest cost.
-    *
-    * The commit is ATOMIC and REPLAY-SAFE, not a parquet append
-    * ([[EditDistance.appendIndex]]'s discipline): the encoded codes
-    * commit as one `batches/<batchId>` directory, wholly visible or not
-    * at all, and re-submitting a committed batchId fails loud (retrying
-    * jobs probe [[batchIngested]] first).
-    * The raw append this replaces was the one stored artifact whose
-    * failure/retry semantics contradicted the repo's standard: a retried
-    * ingest double-encoded the batch silently, and only `codes` changed,
-    * so the cross-component stamp could not catch the tear. */
+    * until the next rebuild, in exchange for O(batch) ingest cost. A
+    * batch whose vectors do not have the index's dimensionality fails
+    * before anything is staged. */
   def appendBatch(
       batch: DataFrame,
       path: String,
@@ -222,24 +144,21 @@ object VectorIndex {
       vecCol: String = "embedding"
   ): Unit = {
     val spark = batch.sparkSession
-    val gen = currentVerified(spark, path)
-    val (m, sd, _, _, residual, _) = readParamsGen(spark, gen)
-    val centroids = spark.read.parquet(s"$gen/centroids")
-    val coarsePredict = predictorUdf(spark, s"$gen/centroids", "cvec", "cluster")
-    val books = loadCodebookCenters(spark, gen)
-    val assigned = normalized(batch, idCol, vecCol)
-      .withColumn("cluster", coarsePredict(col("vh")))
-    val coded = books.zipWithIndex.foldLeft(
-        codeInput(assigned, centroids, residual)) { case (d, (cbook, i)) =>
-      d.withColumn(s"c_$i", mkPredictor(cbook)(subVec(col("vh"), i, sd)))
-    }.withColumn("codes", array((0 until m).map(i => col(s"c_$i")): _*))
-    Generations.requireNewBatch(spark, path, "IVFADC index", batchId,
-      "a blind retry would double-encode the batch (duplicate code rows " +
-        "inflate candidate multiplicity and can displace distinct " +
-        "neighbors in the ADC shortlist)")
-    Generations.commitBatch(spark, path, gen, "IVFADC index", batchId) { staging =>
-      coded.select(col("vid"), col("cluster"), col("codes"), col("vh0").as("vh"))
-        .write.mode("overwrite").parquet(s"$staging/codes")
+    store.append(spark, path, batchId) { gen =>
+      val (m, sd, _, dim, residual, _) = readParamsGen(spark, gen)
+      requireDim("VectorIndex.appendBatch", vecCol, batch, dim)
+      val centroids = spark.read.parquet(s"$gen/centroids")
+      val coarsePredict = predictorUdf(spark, s"$gen/centroids", "cvec", "cluster")
+      val books = loadCodebookCenters(spark, gen)
+      val assigned = normalized(batch, idCol, vecCol)
+        .withColumn("cluster", coarsePredict(col("vh")))
+      val coded = books.zipWithIndex.foldLeft(
+          codeInput(assigned, centroids, residual)) { case (d, (cbook, i)) =>
+        d.withColumn(s"c_$i", mkPredictor(cbook)(subVec(col("vh"), i, sd)))
+      }.withColumn("codes", array((0 until m).map(i => col(s"c_$i")): _*))
+      staging =>
+        coded.select(col("vid"), col("cluster"), col("codes"), col("vh0").as("vh"))
+          .write.mode("overwrite").parquet(s"$staging/codes")
     }
   }
 
@@ -275,12 +194,12 @@ object VectorIndex {
       centroids: DataFrame, codes: DataFrame)
 
   def load(spark: SparkSession, path: String): Loaded = {
-    val gen = currentVerified(spark, path)
+    val gen = store.current(spark, path)
     val (m, sd, ks, dim, residual, kCells) = readParamsGen(spark, gen)
     Loaded(m, sd, ks, dim, residual, kCells,
       loadCodebookCenters(spark, gen),
       spark.read.parquet(s"$gen/centroids"),
-      composedCodes(spark, gen))
+      store.read(spark, gen, "codes"))
   }
 
   /** Top-k search against a stored index — [[searchLoaded]] after one
@@ -317,9 +236,7 @@ object VectorIndex {
     val topK = topKBySim("VectorIndex.search", k)
     val Loaded(m, sd, _, dim, residual, kCells, centers, centroids, codes) = idx
     // one guard job; an empty query set passes and searches to no rows
-    vectorShape("VectorIndex.search", vecCol, queries).foreach { case (d, _) =>
-      require(d == dim, s"search: query dimensionality must be the index's $dim, got $d")
-    }
+    requireDim("VectorIndex.search", vecCol, queries, dim)
     ivfAdcSearch(
       normalized(queries, idCol, vecCol).select(col("vid").as("q_id"), col("vh").as("qvh")),
       centroids, centers, codes.select("vid", "cluster", "codes"),
@@ -327,9 +244,16 @@ object VectorIndex {
       probeCount(nProbe, kCells), ivfShortlistSize(k, refine, codes.count()), topK)
   }
 
-  /** Params of an already-verified generation — every read path
-    * ([[load]]/[[search]]/[[appendBatch]]) resolves the generation through
-    * [[currentVerified]] first, one choke point for the torn-build check. */
+  /** [[Similarity.vectorShape]]'s guard job, and its vectors must have
+    * the index's dimensionality; no non-NULL vector passes. */
+  private def requireDim(fn: String, vecCol: String, df: DataFrame,
+      dim: Int): Unit =
+    vectorShape(fn, vecCol, df).foreach { case (d, _) =>
+      require(d == dim, s"$fn: vector dimensionality must be the index's $dim, got $d")
+    }
+
+  /** Params of a generation already resolved through the store's
+    * stamp-verified current. */
   private def readParamsGen(spark: SparkSession, gen: String)
       : (Int, Int, Int, Int, Boolean, Int) = {
     val p = spark.read.parquet(s"$gen/params").head()

@@ -169,18 +169,8 @@ object Winnowing {
     * probing a k=3 index with k=5 batch fingerprints would produce
     * disjoint values and a silently-EMPTY overlap set (the
     * EditDistance maxDist-pin precedent); reads fail loud on mismatch
-    * instead.
-    *
-    * Storage is [[Generations]]-structured (r16 — the ClosureStore /
-    * EditDistance / VectorIndex layout): base components + an
-    * `ingested/` replay ledger + the `batches/` directory of committed
-    * [[appendIndex]] increments live inside one `gen-NNNNNNN` published
-    * whole. A torn rebuild (postings rewritten, meta not, or either
-    * alone) stays an error ([[ArtifactStamp]]). Rebuilding over a LIVE
-    * index supersedes the old base and its batch directories together;
-    * the ledger carries forward (old ledger ∪ old batch ids), so a
-    * streaming replay of a batch folded before the rebuild is still
-    * recognized and skipped. */
+    * instead. The index is a [[Generations.Store]], so rebuilding over a
+    * LIVE index is safe. */
   def writeFingerprintIndex(
       docs: DataFrame,
       path: String,
@@ -191,36 +181,16 @@ object Winnowing {
   ): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val carried: Seq[String] = Generations.carriedLedger(spark, path,
-      gen => batchDirs(spark, gen).map(_._1))
-    Generations.publish(spark, path, fpParts) { staging =>
+    store.rebuild(spark, path) { staging =>
       fingerprintIndex(docs, k, w, idCol, textCol)
         .write.mode("overwrite").parquet(s"$staging/postings")
       Seq((k, w)).toDF("k", "w").coalesce(1)
         .write.mode("overwrite").parquet(s"$staging/meta")
-      carried.toDF("batch_id").coalesce(1)
-        .write.mode("overwrite").parquet(s"$staging/ingested")
     }
   }
 
-  private def fpParts(gen: String): Seq[String] =
-    Seq(s"$gen/postings", s"$gen/meta", s"$gen/ingested")
-
-  /** Committed (batchId, dir) pairs of a generation, ascending id —
-    * [[Generations.listBatches]]' raw-named layout (order is cosmetic:
-    * postings are append-only, reads are a union). */
-  private def batchDirs(spark: org.apache.spark.sql.SparkSession,
-      gen: String): Seq[(String, String)] =
-    Generations.listBatches(spark, gen)
-
-  /** The live generation, stamp-verified — every read and write resolves
-    * through here (one choke point for the torn-build check). */
-  private def currentVerified(spark: org.apache.spark.sql.SparkSession,
-      path: String): String = {
-    val gen = Generations.current(spark, path, "winnowing index")
-    ArtifactStamp.verifyAligned(spark, "winnowing index", fpParts(gen))
-    gen
-  }
+  private[graft] val store = Generations.Store("winnowing index",
+    stamped = Seq("postings", "meta"), appended = Seq("postings"))
 
   /** The (k, w) scheme a generation pins. */
   private def storedScheme(spark: org.apache.spark.sql.SparkSession,
@@ -229,80 +199,40 @@ object Winnowing {
     (m.getAs[Int]("k"), m.getAs[Int]("w"))
   }
 
-  /** Has `batchId` already been folded in — by a live [[appendIndex]]
-    * batch directory of the current generation, or by one absorbed into
-    * the base (the `ingested` ledger, which [[compactIndex]] and
-    * [[writeFingerprintIndex]]-over-live carry forward)? The idempotence
-    * probe a retrying or replaying ingest job runs before appending. */
+  /** The replay probe a retrying ingest job runs before [[appendIndex]]. */
   def batchIngested(spark: org.apache.spark.sql.SparkSession,
       path: String, batchId: String): Boolean =
-    Generations.batchKnown(spark, path, "winnowing index", batchId)
+    store.batchIngested(spark, path, batchId)
 
-  /** Batch directories of the live generation not yet folded into the
-    * base — the small-file gauge a maintenance job (or
-    * [[graft.streaming.Streaming.fingerprintIndexSink]]'s `compactEvery`)
-    * watches to trigger [[compactIndex]]. */
+  /** The small-file gauge that triggers [[compactIndex]]. */
   def liveBatchCount(spark: org.apache.spark.sql.SparkSession,
       path: String): Int =
-    batchDirs(spark, Generations.current(spark, path, "winnowing index")).size
+    store.liveBatchCount(spark, path)
 
   /** Fold a new batch of documents into the stored index — the d51
     * contract's own words made executable: "appending the batch's
     * postings IS the next day's index". O(|batch|) fingerprinting under
     * the STORED (k, w) scheme (no caller-supplied scheme to mismatch),
-    * history untouched. The commit is ATOMIC and REPLAY-SAFE
-    * ([[EditDistance.appendIndex]]'s discipline): postings commit as
-    * one `batches/<batchId>` directory, wholly visible or not at all,
-    * and re-submitting a committed batchId fails loud (retrying jobs
-    * probe [[batchIngested]] first). */
+    * history untouched. */
   def appendIndex(
       batch: DataFrame,
       path: String,
       batchId: String,
       idCol: String = "doc_id",
       textCol: String = "text"
-  ): Unit = {
-    val spark = batch.sparkSession
-    val gen = currentVerified(spark, path)
-    val (k, w) = storedScheme(spark, gen)
-    Generations.requireNewBatch(spark, path, "winnowing index", batchId,
-      "a blind retry would double every posting of the batch (inflating " +
-        "n_shared counts and overlap fractions silently)")
-    Generations.commitBatch(spark, path, gen, "winnowing index", batchId) { staging =>
-      fingerprintIndex(batch, k, w, idCol, textCol)
-        .write.mode("overwrite").parquet(s"$staging/postings")
+  ): Unit =
+    store.append(batch.sparkSession, path, batchId) { gen =>
+      val (k, w) = storedScheme(batch.sparkSession, gen)
+      val postings = fingerprintIndex(batch, k, w, idCol, textCol)
+      staging => postings.write.mode("overwrite").parquet(s"$staging/postings")
     }
-  }
 
-  /** Fold the live generation's batch directories into a fresh base —
-    * from the STORED postings only, zero re-fingerprinting: the composed
-    * posting read is rewritten as one table, meta copies verbatim (the
-    * (k, w) pin survives), the replay ledger absorbs the batch ids, and
-    * the result publishes as the next generation. Probes, appends, and
-    * [[batchIngested]] answers are
-    * invariant across a compact (spec-pinned). */
+  /** Fold the live generation's batch directories into a fresh base,
+    * zero re-fingerprinting; meta copies verbatim, so the (k, w) pin
+    * survives. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    import spark.implicits._
-    val gen = currentVerified(spark, path)
-    val ledger = Generations.carriedLedger(spark, path,
-      g => batchDirs(spark, g).map(_._1))
-    Generations.publish(spark, path, fpParts) { staging =>
-      composedPostings(spark, gen)
-        .write.mode("overwrite").parquet(s"$staging/postings")
-      spark.read.parquet(s"$gen/meta")
-        .coalesce(1).write.mode("overwrite").parquet(s"$staging/meta")
-      ledger.toDF("batch_id").coalesce(1)
-        .write.mode("overwrite").parquet(s"$staging/ingested")
-    }
-  }
-
-  /** The composed posting table: base + every committed batch directory
-    * (staging is dot-prefixed and never listed). */
-  private def composedPostings(spark: org.apache.spark.sql.SparkSession,
-      gen: String): DataFrame =
-    spark.read.parquet((s"$gen/postings" +:
-      batchDirs(spark, gen).map(d => s"${d._2}/postings")): _*)
+      path: String): Unit =
+    store.compact(spark, path)
 
   /** The stored posting table — base + committed appends — stamp-verified
     * and (k, w)-pinned: the `index` frame [[incrementalOverlapPairs]]
@@ -313,14 +243,14 @@ object Winnowing {
       k: Int = 3,
       w: Int = 4
   ): DataFrame = {
-    val gen = currentVerified(spark, path)
+    val gen = store.current(spark, path)
     val (sk, sw) = storedScheme(spark, gen)
     require(sk == k && sw == w,
       s"winnowing index at $path was built with (k=$sk, w=$sw), probed " +
         s"with (k=$k, w=$w) — the fingerprint schemes are disjoint and " +
         "the overlap would be silently empty; rebuild or match the " +
         "stored scheme")
-    composedPostings(spark, gen)
+    store.read(spark, gen, "postings")
   }
 
   /** Incremental MOSS overlap: a NEW batch against a stored

@@ -406,13 +406,16 @@ object VectorQueries {
       (s, dir) => {
         val emb = Tables.table(s, dir, "embeddings")
         val qs = emb.filter(col("vec_id") < 50)
+        // the fits resolve BEFORE the index memo: a memo body that enters
+        // the same ConcurrentHashMap breaks computeIfAbsent's contract
+        // ("Recursive update" when the keys share a bin)
+        val (coarse, pq) = (sharedCoarse(s, dir), sharedPq(s, dir))
         val idxPath = memo(s"ivfindex:$dir") {
           val p = java.nio.file.Files
             .createTempDirectory("graft-ivfindex").toString
           graft.operators.VectorIndex.write(emb, p,
             nCentroids = 0, m = 8, ks = 32, residual = false,
-            coarseFitted = Some(sharedCoarse(s, dir)),
-            fitted = Some(sharedPq(s, dir)))
+            coarseFitted = Some(coarse), fitted = Some(pq))
           p
         }
         val fromIndex = graft.operators.VectorIndex.search(

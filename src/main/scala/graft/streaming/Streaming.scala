@@ -1052,37 +1052,63 @@ object Streaming {
     true
   }
 
-  /** STREAM-MAINTAINED contamination closure —
-    * [[graft.operators.ClosureStore.advance]] as a streaming consumer:
-    * each micro-batch of documents folds into the stored closure state
-    * (batch chunking, touched-chunk star swap, escape-point BFS — all
-    * delta-proportional), with the batch's own seed rows (those matching
-    * `seedPredicate`) entering the seed set at depth 0. The continuous
-    * form of the daily g08 job: contamination lineage that is current to
-    * the last micro-batch.
+  /** One micro-batch of a stream-maintained stored index (the four
+    * sinks below), factored out so replay semantics are directly
+    * testable: probe the store for the batch, skip an empty batch,
+    * `append` it under the id `b<batchId>`, then compact once
+    * `compactEvery` (0 disables) or more live batch directories remain.
+    * Returns true when the batch was committed, false when recognized as
+    * already-committed or empty.
     *
-    * Exactly-once WITHOUT a separate marker: ClosureStore's commit is a
-    * single atomic rename of one batch directory keyed by the streaming
-    * batch id — a crash mid-batch leaves nothing visible (replay simply
-    * re-runs the fold), and a crash AFTER the commit but before the
-    * checkpoint records it is caught by the `batchIngested` probe on
-    * re-delivery, which skips the batch whole. The commit IS the marker
-    * — strictly stronger than [[idempotentForeachBatchSink]]'s
+    * Exactly-once WITHOUT a separate marker: the store's append is ONE
+    * atomic rename of one batch directory keyed by the streaming batch
+    * id ([[graft.operators.Generations.Store]]) — a crash mid-batch
+    * leaves nothing visible (replay re-stages), and a crash AFTER the
+    * commit but before the checkpoint records it is caught by the probe
+    * on re-delivery, which skips the batch whole. The commit IS the
+    * marker — strictly stronger than [[idempotentForeachBatchSink]]'s
     * manifest-beside-the-data pattern, because here the data write and
     * the marker are one filesystem operation. Empty micro-batches commit
     * nothing (skipped consistently on replay too).
     *
-    * `compactEvery` bounds read amplification over an UNBOUNDED stream:
-    * the store's merge-on-read edge composition pays one anti join per
-    * live batch directory, so after a commit that leaves `compactEvery`
-    * or more of them, the sink runs [[graft.operators.ClosureStore
-    * .compact]] — stored-artifact-only, batch ids absorbed into the
-    * replay ledger, published as a new generation by one rename. The
-    * compaction sits OUTSIDE the exactly-once argument: a crash between
-    * the batch commit and the compact just leaves compaction for a later
-    * batch, and replays of absorbed batches are still skipped (the
-    * ledger). 0 disables (the daily-job default: compact on an external
-    * cadence). */
+    * `compactEvery` bounds read amplification and small-file growth over
+    * an UNBOUNDED stream. The compaction sits OUTSIDE the exactly-once
+    * argument: a crash between the batch commit and the compact just
+    * leaves compaction for a later batch, and replays of absorbed
+    * batches are still skipped (the replay ledger). */
+  private[graft] def applyIndexBatch(batch: DataFrame,
+      store: graft.operators.Generations.Store, path: String, batchId: Long,
+      compactEvery: Int = 0)(append: (DataFrame, String) => Unit): Boolean = {
+    val spark = batch.sparkSession
+    val id = s"b$batchId"
+    if (store.batchIngested(spark, path, id))
+      return false // crash-after-commit replay: skip whole
+    if (batch.isEmpty) return false
+    append(batch, id)
+    if (compactEvery > 0 && store.liveBatchCount(spark, path) >= compactEvery)
+      store.compact(spark, path)
+    true
+  }
+
+  private def indexSink(data: DataFrame, store: graft.operators.Generations.Store,
+      path: String, trigger: Trigger, compactEvery: Int)(
+      append: (DataFrame, String) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
+    data.writeStream.trigger(trigger).foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
+        applyIndexBatch(batch, store, path, batchId, compactEvery)(append)
+        ()
+    }
+
+  /** STREAM-MAINTAINED contamination closure —
+    * [[graft.operators.ClosureStore.advance]] as a streaming consumer
+    * ([[applyIndexBatch]]): each micro-batch of documents folds into the
+    * stored closure state (batch chunking, touched-chunk star swap,
+    * escape-point BFS — all delta-proportional), with the batch's own
+    * seed rows (those matching `seedPredicate`) entering the seed set at
+    * depth 0. The continuous form of the daily g08 job: contamination
+    * lineage that is current to the last micro-batch. `compactEvery`
+    * runs [[graft.operators.ClosureStore.compact]]: the merge-on-read
+    * edge composition pays one anti join per live batch directory. */
   def closureSink(
       docs: DataFrame,
       path: String,
@@ -1092,68 +1118,29 @@ object Streaming {
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0
   ): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.trigger(trigger).foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        applyClosureBatch(batch, path, seedPredicate, idCol, textCol, batchId,
-          compactEvery)
-        ()
+    indexSink(docs, graft.operators.ClosureStore.store, path, trigger,
+        compactEvery) { (batch, id) =>
+      graft.operators.ClosureStore.advance(batch,
+        batch.filter(seedPredicate).select(idCol), path, id, idCol, textCol)
+      ()
     }
-
-  /** One micro-batch of [[closureSink]], factored out so replay
-    * semantics are directly testable. Returns true when the batch was
-    * committed, false when recognized as already-committed or empty. */
-  private[graft] def applyClosureBatch(
-      batch: DataFrame, path: String,
-      seedPredicate: org.apache.spark.sql.Column,
-      idCol: String, textCol: String, batchId: Long,
-      compactEvery: Int = 0): Boolean = {
-    val spark = batch.sparkSession
-    val id = s"b$batchId"
-    if (graft.operators.ClosureStore.batchIngested(spark, path, id))
-      return false // crash-after-commit replay: skip whole
-    if (batch.isEmpty) return false
-    graft.operators.ClosureStore.advance(
-      batch, batch.filter(seedPredicate).select(idCol), path, id,
-      idCol, textCol)
-    if (compactEvery > 0 &&
-        graft.operators.ClosureStore.liveBatchCount(spark, path) >= compactEvery)
-      graft.operators.ClosureStore.compact(spark, path)
-    true
-  }
 
   /** STREAM-MAINTAINED edit-distance segment index —
     * [[graft.operators.EditDistance.appendIndex]] as a streaming
-    * consumer: each micro-batch of documents fingerprints itself
-    * (O(batch) — history is never re-read, let alone re-fingerprinted)
-    * and folds into the stored segment/short tables, so
+    * consumer ([[applyIndexBatch]]): each micro-batch of documents
+    * fingerprints itself (O(batch) — history is never re-read, let alone
+    * re-fingerprinted) and folds into the stored segment/short tables, so
     * [[graft.operators.EditDistance.incrementalPairs]] probes are
-    * current to the last micro-batch. The character-level twin of
-    * [[closureSink]], sharing its exactly-once discipline: the index
-    * commit is ONE atomic rename of one batch directory keyed by the
-    * streaming batch id — a crash mid-batch leaves nothing visible
-    * (replay re-stages), and a crash AFTER the commit but before the
-    * checkpoint records it is caught by the `batchIngested` probe on
-    * re-delivery, which skips the batch whole. The commit IS the
-    * marker. Bootstrap the base with
+    * current to the last micro-batch. Bootstrap the base with
     * [[graft.operators.EditDistance.writeIndex]] first (an empty frame
-    * is a valid base). Empty micro-batches commit nothing (skipped
-    * consistently on replay too).
+    * is a valid base).
     *
     * Pair emission stays a READ, deliberately: emitting pairs from
     * inside the sink would put the output on the wrong side of the
     * commit marker (pairs delivered but batch uncommitted on crash, or
     * vice versa). A consumer that wants the pair stream runs
     * `incrementalPairs(batch, …)` BEFORE the fold, or queries the
-    * maintained index on its own cadence.
-    *
-    * `compactEvery` bounds small-file growth over an UNBOUNDED stream:
-    * after a commit that leaves that many live batch directories the
-    * sink runs [[graft.operators.EditDistance.compactIndex]] —
-    * stored-artifact-only (zero re-fingerprinting), batch ids absorbed
-    * into the replay ledger, published as a new generation by one
-    * rename. Outside the exactly-once argument, as in [[closureSink]]:
-    * a crash between commit and compact just defers the compaction, and
-    * replays of absorbed batches still skip via the ledger. 0 disables. */
+    * maintained index on its own cadence. */
   def editIndexSink(
       docs: DataFrame,
       path: String,
@@ -1162,56 +1149,19 @@ object Streaming {
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0
   ): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.trigger(trigger).foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        applyEditIndexBatch(batch, path, idCol, strCol, batchId, compactEvery)
-        ()
-    }
-
-  /** One micro-batch of [[editIndexSink]], factored out so replay
-    * semantics are directly testable. Returns true when the batch was
-    * committed, false when recognized as already-committed or empty. */
-  private[graft] def applyEditIndexBatch(
-      batch: DataFrame, path: String,
-      idCol: String, strCol: String, batchId: Long,
-      compactEvery: Int = 0): Boolean = {
-    val spark = batch.sparkSession
-    val id = s"b$batchId"
-    if (graft.operators.EditDistance.batchIngested(spark, path, id))
-      return false // crash-after-commit replay: skip whole
-    if (batch.isEmpty) return false
-    graft.operators.EditDistance.appendIndex(batch, idCol, strCol, path, id)
-    if (compactEvery > 0 &&
-        graft.operators.EditDistance.liveBatchCount(spark, path) >= compactEvery)
-      graft.operators.EditDistance.compactIndex(spark, path)
-    true
-  }
+    indexSink(docs, graft.operators.EditDistance.store, path, trigger,
+      compactEvery)(graft.operators.EditDistance.appendIndex(_, idCol, strCol, path, _))
 
   /** STREAM-MAINTAINED IVFADC index —
-    * [[graft.operators.VectorIndex.appendBatch]] as a streaming consumer:
-    * each micro-batch of embeddings encodes with the FROZEN stored fits
-    * (O(batch) — the corpus is never re-read, the codebooks never refit)
-    * and commits beside the stored codes, so [[annSearchStream]] serves
-    * results current to the last compaction-visible state and a reload
-    * picks up every committed batch. The vector twin of [[closureSink]] /
-    * [[editIndexSink]], sharing their exactly-once discipline: the commit
-    * is ONE atomic rename of one batch directory keyed by the streaming
-    * batch id — a crash mid-batch leaves nothing visible (replay
-    * re-stages), and a crash AFTER the commit but before the checkpoint
-    * records it is caught by the `batchIngested` probe on re-delivery,
-    * which skips the batch whole. The commit IS the marker. Bootstrap the
-    * base with [[graft.operators.VectorIndex.write]] first (the fits have
-    * to come from somewhere — a training sample of the corpus). Empty
-    * micro-batches commit nothing (skipped consistently on replay too).
-    *
-    * `compactEvery` bounds small-file growth over an UNBOUNDED stream:
-    * after a commit that leaves that many live batch directories the sink
-    * runs [[graft.operators.VectorIndex.compactIndex]] — stored-artifact-
-    * only (zero re-encoding), batch ids absorbed into the replay ledger,
-    * published as a new generation by one rename. Outside the
-    * exactly-once argument, as in [[closureSink]]: a crash between commit
-    * and compact just defers the compaction, and replays of absorbed
-    * batches still skip via the ledger. 0 disables. */
+    * [[graft.operators.VectorIndex.appendBatch]] as a streaming consumer
+    * ([[applyIndexBatch]]): each micro-batch of embeddings encodes with
+    * the FROZEN stored fits (O(batch) — the corpus is never re-read, the
+    * codebooks never refit) and commits beside the stored codes, so
+    * [[annSearchStream]] serves results current to the last
+    * compaction-visible state and a reload picks up every committed
+    * batch. Bootstrap the base with [[graft.operators.VectorIndex.write]]
+    * first (the fits have to come from somewhere — a training sample of
+    * the corpus). */
   def annIndexSink(
       vectors: DataFrame,
       path: String,
@@ -1220,48 +1170,20 @@ object Streaming {
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0
   ): DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream.trigger(trigger).foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        applyAnnIndexBatch(batch, path, idCol, vecCol, batchId, compactEvery)
-        ()
-    }
-
-  /** One micro-batch of [[annIndexSink]], factored out so replay
-    * semantics are directly testable. Returns true when the batch was
-    * committed, false when recognized as already-committed or empty. */
-  private[graft] def applyAnnIndexBatch(
-      batch: DataFrame, path: String,
-      idCol: String, vecCol: String, batchId: Long,
-      compactEvery: Int = 0): Boolean = {
-    val spark = batch.sparkSession
-    val id = s"b$batchId"
-    if (graft.operators.VectorIndex.batchIngested(spark, path, id))
-      return false // crash-after-commit replay: skip whole
-    if (batch.isEmpty) return false
-    graft.operators.VectorIndex.appendBatch(batch, path, id, idCol, vecCol)
-    if (compactEvery > 0 &&
-        graft.operators.VectorIndex.liveBatchCount(spark, path) >= compactEvery)
-      graft.operators.VectorIndex.compactIndex(spark, path)
-    true
-  }
+    indexSink(vectors, graft.operators.VectorIndex.store, path, trigger,
+      compactEvery)(graft.operators.VectorIndex.appendBatch(_, path, _, idCol, vecCol))
 
   /** STREAM-MAINTAINED winnowing fingerprint index —
-    * [[graft.operators.Winnowing.appendIndex]] as a streaming consumer:
-    * each micro-batch of documents fingerprints itself under the STORED
-    * (k, w) scheme (O(batch) — history is never re-read) and commits its
-    * posting rows beside the stored index, so
+    * [[graft.operators.Winnowing.appendIndex]] as a streaming consumer
+    * ([[applyIndexBatch]]): each micro-batch of documents fingerprints
+    * itself under the STORED (k, w) scheme (O(batch) — history is never
+    * re-read) and commits its posting rows beside the stored index, so
     * [[graft.operators.Winnowing.incrementalOverlapPairs]] probes are
     * current to the last micro-batch — the continuous form of the
     * submission-checking service d51 describes ("appending the batch's
-    * postings IS the next day's index"). Shares the
-    * [[closureSink]]/[[editIndexSink]]/[[annIndexSink]] exactly-once
-    * discipline: the commit is ONE atomic rename keyed by the streaming
-    * batch id; a crash mid-batch leaves nothing visible, a crash after
-    * the commit is caught by the `batchIngested` probe on re-delivery.
-    * Bootstrap the base with
+    * postings IS the next day's index"). Bootstrap the base with
     * [[graft.operators.Winnowing.writeFingerprintIndex]] first (an empty
-    * frame is a valid base — it pins the scheme). Empty micro-batches
-    * commit nothing. `compactEvery` bounds small-file growth; 0 disables. */
+    * frame is a valid base — it pins the scheme). */
   def fingerprintIndexSink(
       docs: DataFrame,
       path: String,
@@ -1270,31 +1192,8 @@ object Streaming {
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0
   ): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.trigger(trigger).foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        applyFingerprintIndexBatch(batch, path, idCol, textCol, batchId,
-          compactEvery)
-        ()
-    }
-
-  /** One micro-batch of [[fingerprintIndexSink]], factored out so replay
-    * semantics are directly testable. Returns true when the batch was
-    * committed, false when recognized as already-committed or empty. */
-  private[graft] def applyFingerprintIndexBatch(
-      batch: DataFrame, path: String,
-      idCol: String, textCol: String, batchId: Long,
-      compactEvery: Int = 0): Boolean = {
-    val spark = batch.sparkSession
-    val id = s"b$batchId"
-    if (graft.operators.Winnowing.batchIngested(spark, path, id))
-      return false // crash-after-commit replay: skip whole
-    if (batch.isEmpty) return false
-    graft.operators.Winnowing.appendIndex(batch, path, id, idCol, textCol)
-    if (compactEvery > 0 &&
-        graft.operators.Winnowing.liveBatchCount(spark, path) >= compactEvery)
-      graft.operators.Winnowing.compactIndex(spark, path)
-    true
-  }
+    indexSink(docs, graft.operators.Winnowing.store, path, trigger,
+      compactEvery)(graft.operators.Winnowing.appendIndex(_, path, _, idCol, textCol))
 
   /** The read path of the [[paretoSink]] artifact: the current
     * non-dominated set over everything delivered so far. */

@@ -1,8 +1,8 @@
 package graft.operators
 
 /** [[CrashSpec]] over the generation-structured stores and versioned
-  * snapshots: [[Generations.publish]], [[Generations.commitBatch]] (and
-  * [[ClosureStore.advance]] through it) and [[Snapshot.publish]]. */
+  * snapshots: [[Generations.publish]], a [[Generations.Store]] append
+  * (and [[ClosureStore.advance]] through it) and [[Snapshot.publish]]. */
 class StoreCrashSpec extends CrashSpec {
   import spark.implicits._
 
@@ -31,17 +31,13 @@ class StoreCrashSpec extends CrashSpec {
 
   test("crash: Generations.commitBatch shows the whole batch or none of it") {
     val fixture = tmpDir("graft-crash-batch")
-    Generations.publish(spark, fixture, g => Seq(s"$g/ingested"))(s =>
-      Seq.empty[String].toDF("batch_id").write.parquet(s"$s/ingested"))
-    val batches = (p: String) => Map("batches" -> ids(Generations
-      .listBatches(spark, Generations.current(spark, p, "test store"))
-      .map(b => s"${b._2}/a")))
-    everyCrash(fixture, batches) { p =>
-      if (!Generations.batchKnown(spark, p, "test store", "b1")) {
-        Generations.requireNewBatch(spark, p, "test store", "b1", "test")
-        Generations.commitBatch(spark, p, Generations.current(spark, p,
-          "test store"), "test store", "b1")(s => rows(7L, 8L).write.parquet(s"$s/a"))
-      }
+    val store = Generations.Store("test store", Seq("a"), appended = Seq("a"))
+    store.rebuild(spark, fixture)(s => rows().write.parquet(s"$s/a"))
+    val composed = (p: String) => Map("a" ->
+      store.read(spark, store.current(spark, p), "a").as[Long].collect().toSet)
+    everyCrash(fixture, composed) { p =>
+      if (!store.batchIngested(spark, p, "b1"))
+        store.append(spark, p, "b1")(_ => s => rows(7L, 8L).write.parquet(s"$s/a"))
     }
   }
 

@@ -137,6 +137,21 @@ class VectorIndexSpec extends SparkSpec {
     assert(VectorIndex.load(spark, dir).codes.count() == n)
   }
 
+  test("appendBatch refuses a batch of another dimensionality before staging it") {
+    val dir = tmp("dim")
+    VectorIndex.write(emb.filter(col("vec_id") < 250), dir, m = 8, ks = 8)
+    val dim = VectorIndex.load(spark, dir).dim
+    val short = emb.filter(col("vec_id") >= 250)
+      .select(col("vec_id"), slice(col("embedding"), 1, 8).as("embedding"))
+    val e = intercept[IllegalArgumentException] {
+      VectorIndex.appendBatch(short, dir, "day1")
+    }
+    assert(e.getMessage.contains("appendBatch") &&
+      e.getMessage.contains(s"index's $dim, got 8"), e.getMessage)
+    assert(!VectorIndex.batchIngested(spark, dir, "day1"))
+    assert(!new java.io.File(s"${currentGenDir(dir)}/batches").exists())
+  }
+
   test("a crash mid-append leaves nothing visible (staging is invisible)") {
     val dir = tmp("tornbatch")
     VectorIndex.write(emb.filter(col("vec_id") < 250), dir, m = 8, ks = 8)

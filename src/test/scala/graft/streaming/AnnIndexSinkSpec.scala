@@ -16,6 +16,11 @@ class AnnIndexSinkSpec extends SparkSpec {
   private val dim = 8
 
   /** Deterministic synthetic vectors — enough spread for 4 cells. */
+  /** One micro-batch as [[Streaming.annIndexSink]] applies it. */
+  private def applyBatch(batch: DataFrame, path: String, id: Long): Boolean =
+    Streaming.applyIndexBatch(batch, VectorIndex.store, path, id)(
+      VectorIndex.appendBatch(_, path, _, "vec_id", "embedding"))
+
   private def vec(i: Long): Seq[Double] =
     (0 until dim).map(j => (((i * 31 + j * 7) % 13) - 6).toDouble + 0.25)
 
@@ -70,27 +75,23 @@ class AnnIndexSinkSpec extends SparkSpec {
     // the compaction cadence held, and absorbed batches still refuse replay
     assert(VectorIndex.liveBatchCount(spark, live) < 3)
     assert(VectorIndex.batchIngested(spark, live, "b0"))
-    assert(!Streaming.applyAnnIndexBatch(
-      df(rest.take(7)), live, "vec_id", "embedding", 0L))
+    assert(!applyBatch(df(rest.take(7)), live, 0L))
   }
 
   test("a crash-replayed committed batch is skipped whole; empty batches commit nothing") {
     val live = java.nio.file.Files.createTempDirectory("annsink-replay").toString
     writeWithFits(base, live)
-    assert(Streaming.applyAnnIndexBatch(
-      df(rest.take(12)), live, "vec_id", "embedding", 0L))
+    assert(applyBatch(df(rest.take(12)), live, 0L))
     val before = answer(live)
     val n = VectorIndex.load(spark, live).codes.count()
     // crash after commit, before the checkpoint recorded it: re-delivery
     // must not double-encode the batch (duplicate code rows would inflate
     // candidate multiplicity in the ADC shortlist forever)
-    assert(!Streaming.applyAnnIndexBatch(
-      df(rest.take(12)), live, "vec_id", "embedding", 0L))
+    assert(!applyBatch(df(rest.take(12)), live, 0L))
     assert(answer(live) == before)
     assert(VectorIndex.load(spark, live).codes.count() == n)
     // an empty micro-batch is a consistent no-op (no batch dir committed)
-    assert(!Streaming.applyAnnIndexBatch(
-      df(Nil), live, "vec_id", "embedding", 1L))
+    assert(!applyBatch(df(Nil), live, 1L))
     assert(!VectorIndex.batchIngested(spark, live, "b1"))
   }
 }

@@ -24,6 +24,14 @@ class ClosureSinkSpec extends SparkSpec {
     8L -> chunkC,                        // SEED arriving late: pulls C docs in
     3L -> "nothing shared at all zz yy")
 
+  /** One micro-batch as [[Streaming.closureSink]] applies it. */
+  private def applyBatch(batch: org.apache.spark.sql.DataFrame, path: String,
+      seedPredicate: org.apache.spark.sql.Column, id: Long): Boolean =
+    Streaming.applyIndexBatch(batch, ClosureStore.store, path, id) { (b, bid) =>
+      ClosureStore.advance(b, b.filter(seedPredicate).select("doc_id"), path, bid)
+      ()
+    }
+
   private def fromScratch(docs: Seq[(Long, String)]): Set[Long] = {
     val df = docs.toDF("doc_id", "text")
     val star = Dedup.chunkShareEdges(df)
@@ -89,30 +97,27 @@ class ClosureSinkSpec extends SparkSpec {
     assert(ClosureStore.liveBatchCount(spark, root) < 4)
     // absorbed batches still refuse replay (the ledger carried their ids)
     assert(ClosureStore.batchIngested(spark, root, "b0"))
-    assert(!Streaming.applyClosureBatch(
-      feed.take(2).toDF("doc_id", "text"), root, col("doc_id") % 2 === 0,
-      "doc_id", "text", 0L))
+    assert(!applyBatch(feed.take(2).toDF("doc_id", "text"), root,
+      col("doc_id") % 2 === 0, 0L))
   }
 
   test("a crash-replayed committed batch is skipped whole; empty batches commit nothing") {
     val root = emptyStore()
     val pred = col("doc_id") % 2 === 0
-    assert(Streaming.applyClosureBatch(
-      feed.take(4).toDF("doc_id", "text"), root, pred, "doc_id", "text", 0L))
-    assert(Streaming.applyClosureBatch(
-      feed.slice(4, 8).toDF("doc_id", "text"), root, pred, "doc_id", "text", 1L))
+    assert(applyBatch(feed.take(4).toDF("doc_id", "text"), root, pred, 0L))
+    assert(applyBatch(
+      feed.slice(4, 8).toDF("doc_id", "text"), root, pred, 1L))
     val before = ClosureStore.storedClosure(spark, root)
       .select("node").as[Long].collect().toSet
     assert(before == fromScratch(feed))
     // crash after commit, before the checkpoint recorded it: re-delivery
-    assert(!Streaming.applyClosureBatch(
-      feed.slice(4, 8).toDF("doc_id", "text"), root, pred, "doc_id", "text", 1L))
+    assert(!applyBatch(
+      feed.slice(4, 8).toDF("doc_id", "text"), root, pred, 1L))
     assert(ClosureStore.storedClosure(spark, root)
       .select("node").as[Long].collect().toSet == before)
     // an empty micro-batch is a consistent no-op (no batch dir committed)
-    assert(!Streaming.applyClosureBatch(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), root, pred,
-      "doc_id", "text", 2L))
+    assert(!applyBatch(
+      Seq.empty[(Long, String)].toDF("doc_id", "text"), root, pred, 2L))
     assert(!ClosureStore.batchIngested(spark, root, "b2"))
   }
 }

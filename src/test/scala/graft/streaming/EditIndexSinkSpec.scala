@@ -26,6 +26,12 @@ class EditIndexSinkSpec extends SparkSpec {
     100L -> "abcde fghij", 101L -> "zzz", 102L -> "abcdX fghiq")
     .toDF("doc_id", "text")
 
+  /** One micro-batch as [[Streaming.editIndexSink]] applies it. */
+  private def applyBatch(batch: org.apache.spark.sql.DataFrame, path: String,
+      id: Long): Boolean =
+    Streaming.applyIndexBatch(batch, EditDistance.store, path, id)(
+      EditDistance.appendIndex(_, "doc_id", "text", path, _))
+
   private def emptyIndex(): String = {
     val p = java.nio.file.Files.createTempDirectory("edsink").toString
     EditDistance.writeIndex(
@@ -92,27 +98,22 @@ class EditIndexSinkSpec extends SparkSpec {
     // the cadence held, and absorbed batches still refuse replay
     assert(EditDistance.liveBatchCount(spark, live) < 4)
     assert(EditDistance.batchIngested(spark, live, "b0"))
-    assert(!Streaming.applyEditIndexBatch(
-      feed.take(2).toDF("doc_id", "text"), live, "doc_id", "text", 0L))
+    assert(!applyBatch(feed.take(2).toDF("doc_id", "text"), live, 0L))
   }
 
   test("a crash-replayed committed batch is skipped whole; empty batches commit nothing") {
     val live = emptyIndex()
-    assert(Streaming.applyEditIndexBatch(
-      feed.take(4).toDF("doc_id", "text"), live, "doc_id", "text", 0L))
-    assert(Streaming.applyEditIndexBatch(
-      feed.slice(4, 8).toDF("doc_id", "text"), live, "doc_id", "text", 1L))
+    assert(applyBatch(feed.take(4).toDF("doc_id", "text"), live, 0L))
+    assert(applyBatch(feed.slice(4, 8).toDF("doc_id", "text"), live, 1L))
     val before = probePairs(live)
     // crash after commit, before the checkpoint recorded it: re-delivery
     // must not double the batch's segments (which would inflate
     // candidates forever)
-    assert(!Streaming.applyEditIndexBatch(
-      feed.slice(4, 8).toDF("doc_id", "text"), live, "doc_id", "text", 1L))
+    assert(!applyBatch(feed.slice(4, 8).toDF("doc_id", "text"), live, 1L))
     assert(probePairs(live) == before)
     // an empty micro-batch is a consistent no-op (no batch dir committed)
-    assert(!Streaming.applyEditIndexBatch(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), live,
-      "doc_id", "text", 2L))
+    assert(!applyBatch(
+      Seq.empty[(Long, String)].toDF("doc_id", "text"), live, 2L))
     assert(!EditDistance.batchIngested(spark, live, "b2"))
   }
 }

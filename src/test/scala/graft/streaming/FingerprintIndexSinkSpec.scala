@@ -24,6 +24,12 @@ class FingerprintIndexSinkSpec extends SparkSpec {
     6L -> "final doc with its own vocabulary nothing shared",
     7L -> (shared + " seven eight nine"))
 
+  /** One micro-batch as [[Streaming.fingerprintIndexSink]] applies it. */
+  private def applyBatch(batch: org.apache.spark.sql.DataFrame, path: String,
+      id: Long): Boolean =
+    Streaming.applyIndexBatch(batch, Winnowing.store, path, id)(
+      Winnowing.appendIndex(_, path, _, "doc_id", "text"))
+
   private def df(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
 
   private def postings(path: String): Set[(Long, Int, Long)] =
@@ -66,24 +72,20 @@ class FingerprintIndexSinkSpec extends SparkSpec {
     } finally q.stop()
     assert(Winnowing.liveBatchCount(spark, live) < 3)
     assert(Winnowing.batchIngested(spark, live, "b0"))
-    assert(!Streaming.applyFingerprintIndexBatch(
-      df(feed.take(2)), live, "doc_id", "text", 0L))
+    assert(!applyBatch(df(feed.take(2)), live, 0L))
   }
 
   test("a crash-replayed committed batch is skipped whole; empty batches commit nothing") {
     val live = java.nio.file.Files.createTempDirectory("fpsink-replay").toString
     Winnowing.writeFingerprintIndex(df(feed.take(3)), live, k = 3, w = 4)
-    assert(Streaming.applyFingerprintIndexBatch(
-      df(feed.drop(3)), live, "doc_id", "text", 0L))
+    assert(applyBatch(df(feed.drop(3)), live, 0L))
     val before = postings(live)
     // crash after commit, before the checkpoint recorded it: re-delivery
     // must not double the batch's postings (n_shared inflates silently)
-    assert(!Streaming.applyFingerprintIndexBatch(
-      df(feed.drop(3)), live, "doc_id", "text", 0L))
+    assert(!applyBatch(df(feed.drop(3)), live, 0L))
     assert(postings(live) == before)
     // an empty micro-batch is a consistent no-op
-    assert(!Streaming.applyFingerprintIndexBatch(
-      df(Nil), live, "doc_id", "text", 1L))
+    assert(!applyBatch(df(Nil), live, 1L))
     assert(!Winnowing.batchIngested(spark, live, "b1"))
   }
 }
