@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Dec, GQ, Tables}
+import graft.{Artifacts, Dec, GQ, Tables}
 import graft.Dec._
 import graft.functions.TextFunctions._
 import graft.operators.{AsOfJoin, IntervalJoin, Merge, Scd}
@@ -60,16 +60,6 @@ object Advanced {
     (sessions, errors)
   }
 
-  /** Session-scoped memo for the hive-partitioned layouts pp01/pp02 read —
-    * same contract as VectorQueries' fit/index memo: the layout is a
-    * DERIVED artifact (a partitioned copy of a testdata table in a temp
-    * dir), written once per (dir, JVM); every query run reads it fresh
-    * from disk, so the partition-pruning behavior under test is the real
-    * parquet-scan path, not a cache effect. At 100 TB this write IS the
-    * ingest job's layout decision — you pay it once at write time and
-    * every downstream date/key query stops scanning the other partitions. */
-  private val layoutMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   /** A ZERO-ROW input degrades to a plain (unpartitioned) write: an empty
     * partitioned layout has no `col=value` directories at all, so the
     * read-back cannot even infer a schema — the plain parquet file keeps
@@ -78,30 +68,33 @@ object Advanced {
   private def writeLayout(df: DataFrame, p: String, parts: Seq[String]): Unit =
     if (df.isEmpty) df.write.mode("overwrite").parquet(p)
     else graft.sources.Sinks.parquetPartitioned(df, p, parts)
+  /** A stored-table artifact: `build` writes the table at `<dir>/t`, so its
+    * writers' staging and aside siblings stay inside the artifact. */
+  private def table(s: SparkSession, name: String, dir: String)(
+      build: String => Unit): String =
+    Artifacts.dir(s, name, dir)(d => build(s"$d/t")) + "/t"
+  /** pp01/pp02's hive-partitioned copies of a testdata table. At 100 TB
+    * this write IS the ingest job's layout decision: you pay it once at
+    * write time and every downstream date/key query stops scanning the
+    * other partitions. */
   private def ordersByYear(s: SparkSession, dir: String): String =
-    layoutMemo.computeIfAbsent(s"orders_by_year:$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-pp-orders").toString
+    Artifacts.dir(s, "orders_by_year", dir) { p =>
       writeLayout(
         t(s, dir, "orders").withColumn("o_year", year(col("o_orderdate"))),
         p, Seq("o_year"))
-      p
-    })
+    }
   private def customerByNation(s: SparkSession, dir: String): String =
-    layoutMemo.computeIfAbsent(s"customer_by_nation:$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-pp-customer").toString
+    Artifacts.dir(s, "customer_by_nation", dir) { p =>
       writeLayout(t(s, dir, "customer"), p, Seq("c_nationkey"))
-      p
-    })
+    }
 
   /** u01's MERGED layout: orders partitioned by o_year, then a
     * deterministic change batch (1996 updates + inserts) committed through
-    * [[Merge.upsert]] — memoized so every query run reads the POST-merge
-    * table from disk: the artifact under test is the committed layout
+    * [[Merge.upsert]]: the artifact under test is the committed layout
     * after the copy-on-write rewrite, not an in-memory frame. A zero-row
     * input degrades to a plain write and an empty batch (Merge no-ops). */
   private def mergedOrders(s: SparkSession, dir: String): String =
-    layoutMemo.computeIfAbsent(s"merge_orders:$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-mrg-orders").toString + "/t"
+    table(s, "merge_orders", dir) { p =>
       val base = t(s, dir, "orders").withColumn("o_year", year(col("o_orderdate")))
       writeLayout(base, p, Seq("o_year"))
       if (!base.isEmpty) {
@@ -113,8 +106,7 @@ object Advanced {
         Merge.upsert(s, p, updates.unionByName(inserts),
           keyCols = Seq("o_orderkey"), partCols = Seq("o_year"))
       }
-      p
-    })
+    }
 
   /** z05's layout: the MERGE × MANIFEST composition — u01's COW upsert
     * against a table that carries a stats manifest, with the manifest
@@ -127,8 +119,7 @@ object Advanced {
     * row-identical to the declarative MERGE result, which is exactly
     * what the oracle replays. */
   private def mergedManifestOrders(s: SparkSession, dir: String): String =
-    layoutMemo.computeIfAbsent(s"mergeman_orders:$dir", _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft-mm-orders").toString
+    Artifacts.dir(s, "mergeman_orders", dir) { root =>
       val p = s"$root/t"
       val base = t(s, dir, "orders").withColumn("o_year", year(col("o_orderdate")))
       writeLayout(base, p, Seq("o_year"))
@@ -143,16 +134,14 @@ object Advanced {
           keyCols = Seq("o_orderkey"), partCols = Seq("o_year"),
           manifestPath = Some(s"$root/m"))
       }
-      root
-    })
+    }
 
   /** cdc01's VERSION PAIR: the 1996 orders slice published as v1, then
     * v2 with every 7th price bumped, every 13th row deleted, and a new
     * +1e9-keyed row inserted for every 17th — all four CDC row classes
     * (insert / delete / update_pre / update_post) non-vacuous. */
   private def cdcOrders(s: SparkSession, dir: String): String =
-    layoutMemo.computeIfAbsent(s"cdc_orders:$dir", _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft-cdc-orders").toString + "/t"
+    table(s, "cdc_orders", dir) { root =>
       val y96 = t(s, dir, "orders")
         .filter(year(col("o_orderdate")) === 1996)
         .select("o_orderkey", "o_totalprice")
@@ -164,8 +153,7 @@ object Advanced {
         .unionByName(y96.filter(col("o_orderkey") % 17 === 0)
           .withColumn("o_orderkey", col("o_orderkey") + 1000000000L))
       graft.operators.Snapshot.publish(v2, root)
-      root
-    })
+    }
 
   /** pp04's PARTITION-SPEC EVOLUTION layout: generation 1 (≤1995) is
     * partitioned by o_year alone; generation 2 (≥1996) adopted the finer
@@ -175,16 +163,14 @@ object Advanced {
     * composes the generations with per-generation predicate translation
     * (pp04's query body). */
   private def partEvolvedOrders(s: SparkSession, dir: String): String =
-    layoutMemo.computeIfAbsent(s"pevolve_orders:$dir", _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft-pe-orders").toString
+    Artifacts.dir(s, "pevolve_orders", dir) { root =>
       val base = t(s, dir, "orders").withColumn("o_year", year(col("o_orderdate")))
       writeLayout(base.filter(col("o_year") <= 1995), s"$root/g1", Seq("o_year"))
       writeLayout(
         base.filter(col("o_year") >= 1996)
           .withColumn("o_month", month(col("o_orderdate"))),
         s"$root/g2", Seq("o_year", "o_month"))
-      root
-    })
+    }
 
   /** mv02's JOIN VIEW: revenue by customer nation = orders ⋈ customer,
     * maintained by the delta-join rule Δ(F ⋈ D) = ΔF ⋈ D
@@ -193,8 +179,7 @@ object Advanced {
     * and merges additively — history is never rescanned. Stored revenue
     * stays DECIMAL so additive merges are exact in any order. */
   private def joinViewOrders(s: SparkSession, dir: String): String =
-    layoutMemo.computeIfAbsent(s"ivm_orders:$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-ivm-orders").toString + "/v"
+    table(s, "ivm_orders", dir) { p =>
       def view(df: DataFrame): DataFrame = df
         .join(broadcast(t(s, dir, "customer").select("c_custkey", "c_nationkey")),
           col("o_custkey") === col("c_custkey"))
@@ -209,8 +194,7 @@ object Advanced {
       if (!delta.isEmpty)
         graft.operators.Ivm.maintainAdditive(s, p, view(delta),
           keys = Seq("c_nationkey"), addCols = Seq("n_orders", "revenue"))
-      p
-    })
+    }
 
   /** u04's MERGE-ON-READ layout: orders partitioned by o_year plus an
     * UNFOLDED equality-delete sidecar (every 11th 1995 order) — the query
@@ -218,8 +202,7 @@ object Advanced {
     * rewrite having happened. The fold path (sidecar → COW → cleared,
     * incl. manifest composition) is MergeOnReadSpec's territory. */
   private def morOrders(s: SparkSession, dir: String): String =
-    layoutMemo.computeIfAbsent(s"mor_orders:$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-mor-orders").toString + "/t"
+    table(s, "mor_orders", dir) { p =>
       val base = t(s, dir, "orders").withColumn("o_year", year(col("o_orderdate")))
       writeLayout(base, p, Seq("o_year"))
       if (!base.isEmpty) {
@@ -229,8 +212,7 @@ object Advanced {
         graft.operators.MergeOnRead.appendDeletes(s, p, keys,
           keyCols = Seq("o_orderkey"), partCols = Seq("o_year"))
       }
-      p
-    })
+    }
 
   /** u03's VERSIONED root: two immutable published snapshots of the 1996
     * orders slice — v1 the original, v2 after the u01-style price bump on
@@ -238,8 +220,7 @@ object Advanced {
     * root itself is hive-readable, so the cross-version audit is ONE scan
     * with `v` as a partition column. */
   private def versionedOrders(s: SparkSession, dir: String): String =
-    layoutMemo.computeIfAbsent(s"ver_orders:$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-ver-orders").toString + "/t"
+    table(s, "ver_orders", dir) { p =>
       val y96 = t(s, dir, "orders")
         .filter(year(col("o_orderdate")) === 1996)
         .select("o_orderkey", "o_totalprice")
@@ -248,16 +229,14 @@ object Advanced {
         y96.withColumn("o_totalprice",
           when(col("o_orderkey") % 7 === 0, col("o_totalprice") + 1000.0)
             .otherwise(col("o_totalprice"))), p)
-      p
-    })
+    }
 
   /** z02's stats-manifest root: orders z-ordered on (o_custkey,
     * o_orderkey) into 16 files (tight per-file ranges — the write-side
     * half), plus the stored per-file min/max manifest over both columns
     * (`FileManifest.build` — the read-side half). */
   private def manifestOrders(s: SparkSession, dir: String): String =
-    layoutMemo.computeIfAbsent(s"manifest_orders:$dir", _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft-fm-orders").toString
+    Artifacts.dir(s, "manifest_orders", dir) { root =>
       graft.operators.Layout.zorderWrite(
         t(s, dir, "orders"), Seq("o_custkey", "o_orderkey"), s"$root/t", nFiles = 16)
       graft.operators.FileManifest.build(
@@ -268,33 +247,28 @@ object Advanced {
       graft.operators.FileManifest.buildWithBloom(
         s, s"$root/t", Seq("o_custkey"), Seq("o_orderkey"), s"$root/mb",
         expectedPerFile = 50000L)
-      root
-    })
+    }
 
   /** c02's COMPACTED layout: orders partitioned by o_year, deliberately
     * fragmented (12-way repartition before the write → up to 12 small
     * files per year directory — the shape a per-micro-batch ingest
     * leaves), then bin-packed by [[graft.operators.Compaction.compact]]
-    * to one file per directory. Memoized so every run reads the
-    * POST-compaction layout from disk. */
+    * to one file per directory. */
   private def compactedOrders(s: SparkSession, dir: String): String =
-    layoutMemo.computeIfAbsent(s"compact_orders:$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-cmp-orders").toString + "/t"
+    table(s, "compact_orders", dir) { p =>
       writeLayout(
         t(s, dir, "orders").withColumn("o_year", year(col("o_orderdate")))
           .repartition(12),
         p, Seq("o_year"))
       graft.operators.Compaction.compact(
         s, p, Seq("o_year"), targetBytes = 1L << 30)
-      p
-    })
+    }
 
   /** c03's layout: fragmented like c02's, but compacted in OPTIMIZE-ZORDER
     * mode — bin packing AND (o_custkey, o_orderkey) Morton clustering
     * restored in the same single rewrite of the fragmented directories. */
   private def zCompactedOrders(s: SparkSession, dir: String): String =
-    layoutMemo.computeIfAbsent(s"zcompact_orders:$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-zc-orders").toString + "/t"
+    table(s, "zcompact_orders", dir) { p =>
       writeLayout(
         t(s, dir, "orders").withColumn("o_year", year(col("o_orderdate")))
           .repartition(12),
@@ -302,8 +276,7 @@ object Advanced {
       graft.operators.Compaction.compact(
         s, p, Seq("o_year"), targetBytes = 1L << 30,
         zorderBy = Seq("o_custkey", "o_orderkey"))
-      p
-    })
+    }
 
   /** sv01's EVOLVED layout: two ingest generations in one partitioned
     * table — 1995 written with the original schema, 1996 appended later
@@ -312,8 +285,7 @@ object Advanced {
     * the reader reconciles via parquet schema merging, old rows surface
     * NULL for the new column. */
   private def evolvedOrders(s: SparkSession, dir: String): String =
-    layoutMemo.computeIfAbsent(s"evolve_orders:$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-ev-orders").toString + "/t"
+    table(s, "evolve_orders", dir) { p =>
       val base = t(s, dir, "orders").withColumn("o_year", year(col("o_orderdate")))
       val g1 = base.filter(col("o_year") === 1995)
       val g2 = base.filter(col("o_year") === 1996)
@@ -329,8 +301,7 @@ object Advanced {
         g1.write.mode("overwrite").partitionBy("o_year").parquet(p)
         g2.write.mode("append").partitionBy("o_year").parquet(p)
       }
-      p
-    })
+    }
 
   /** mv01's MAINTAINED rollup: a stored monthly revenue aggregate kept
     * current by INCREMENTAL refresh — the materialized-view pattern. The
@@ -343,8 +314,7 @@ object Advanced {
     * dodge. mv01's oracle recomputes the whole rollup from scratch:
     * incremental maintenance must be indistinguishable from recompute. */
   private def rollupOrders(s: SparkSession, dir: String): String =
-    layoutMemo.computeIfAbsent(s"rollup_orders:$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-mv-orders").toString + "/t"
+    table(s, "rollup_orders", dir) { p =>
       val base = t(s, dir, "orders")
         .withColumn("o_year", year(col("o_orderdate")))
         .withColumn("o_month", month(col("o_orderdate")))
@@ -361,16 +331,14 @@ object Advanced {
         Merge.upsert(s, p, refreshed,
           keyCols = Seq("o_year", "o_month"), partCols = Seq("o_year"))
       }
-      p
-    })
+    }
 
   /** u02's PURGED layout: the delete-side twin of [[mergedOrders]] — every
     * fifth 1997 order purged by key through [[Merge.delete]] (the
     * right-to-be-forgotten shape: keys ship WITH their partition values,
     * so only the named directories are read or rewritten). */
   private def purgedOrders(s: SparkSession, dir: String): String =
-    layoutMemo.computeIfAbsent(s"purge_orders:$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-del-orders").toString + "/t"
+    table(s, "purge_orders", dir) { p =>
       val base = t(s, dir, "orders").withColumn("o_year", year(col("o_orderdate")))
       writeLayout(base, p, Seq("o_year"))
       if (!base.isEmpty) {
@@ -380,8 +348,7 @@ object Advanced {
         Merge.delete(s, p, keys,
           keyCols = Seq("o_orderkey"), partCols = Seq("o_year"))
       }
-      p
-    })
+    }
 
   /** u05/fs01's SCD2 customer dimension (`operators/Scd`): initial load at
     * v1, then two deterministic change batches —
@@ -392,13 +359,11 @@ object Advanced {
     *       current slice, so it compounds on v2's bump — the realistic
     *       feed shape where batches derive from live state).
     *
-    * Memoized like [[mergedOrders]]: the artifact under test is the
-    * committed partitioned history on disk (open slice in `scd_part=cur`,
-    * versions closed at v in append-only `scd_part=v`), read fresh by the
-    * queries. */
+    * The artifact under test is the committed partitioned history on disk
+    * (open slice in `scd_part=cur`, versions closed at v in append-only
+    * `scd_part=v`). */
   private def scdCustomers(s: SparkSession, dir: String): String =
-    layoutMemo.computeIfAbsent(s"scd_customers:$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-scd-cust").toString + "/t"
+    table(s, "scd_customers", dir) { p =>
       val c = t(s, dir, "customer")
       Scd.init(s, p, c, version = 1L)
       if (!c.isEmpty) {
@@ -414,17 +379,14 @@ object Advanced {
           .withColumn("c_acctbal", col("c_acctbal") + 50.0)
         Scd.applyChanges(s, p, b3, Seq("c_custkey"), version = 3L)
       }
-      p
-    })
+    }
 
   /** fs02's second and third SCD2 dimensions — supplier and part histories
     * with ONE change round each (v2 bumps a deterministic key slice), so
     * the two-dim point-in-time join has version skew to exercise on both
-    * axes while the oracle's replay CTEs stay readable. Same stored-table
-    * memo contract as [[scdCustomers]]. */
+    * axes while the oracle's replay CTEs stay readable. */
   private def scdSuppliers(s: SparkSession, dir: String): String =
-    layoutMemo.computeIfAbsent(s"scd_suppliers:$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-scd-supp").toString + "/t"
+    table(s, "scd_suppliers", dir) { p =>
       val sup = t(s, dir, "supplier")
       Scd.init(s, p, sup, version = 1L)
       if (!sup.isEmpty) {
@@ -432,12 +394,10 @@ object Advanced {
           .withColumn("s_acctbal", col("s_acctbal") + 100.0)
         Scd.applyChanges(s, p, b2, Seq("s_suppkey"), version = 2L)
       }
-      p
-    })
+    }
 
   private def scdParts(s: SparkSession, dir: String): String =
-    layoutMemo.computeIfAbsent(s"scd_parts:$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-scd-part").toString + "/t"
+    table(s, "scd_parts", dir) { p =>
       val part = t(s, dir, "part")
       Scd.init(s, p, part, version = 1L)
       if (!part.isEmpty) {
@@ -445,8 +405,7 @@ object Advanced {
           .withColumn("p_retailprice", col("p_retailprice") + 10.0)
         Scd.applyChanges(s, p, b2, Seq("p_partkey"), version = 2L)
       }
-      p
-    })
+    }
 
   val queries: Seq[GQ] = Seq(
     GQ("a01_asof_join", // point-in-time: latest order at/before each event

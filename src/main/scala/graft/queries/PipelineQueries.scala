@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{GQ, Tables}
+import graft.{Artifacts, GQ, Tables}
 import graft.core._
 import org.apache.spark.sql.functions._
 
@@ -21,25 +21,19 @@ case class LiRow(
   */
 object PipelineQueries {
 
-  /** Session-scoped memo for c01's text-format dumps (same contract as the
-    * pp01/pp02 layout memo): nation → csv, region → jsonl, written once
-    * per (dir, JVM) into a temp dir; the query then exercises the REAL
-    * csv/jsonl read paths (`Sources.csv` / `Sources.jsonl`, schema
-    * inference included) against the DuckDB oracle on the parquet
-    * originals — format must never change answers. */
-  private val dumpMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** c01's text-format dumps: nation → csv, region → jsonl. The query then
+    * exercises the REAL csv/jsonl read paths (`Sources.csv` /
+    * `Sources.jsonl`, schema inference included) against the DuckDB
+    * oracle on the parquet originals — format must never change answers. */
   private def textDumps(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    dumpMemo.computeIfAbsent(s"c01:$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-textfmt").toString
+    Artifacts.dir(s, "textfmt", dir) { p =>
       graft.sources.Sinks.csv(
         Tables.table(s, dir, "nation")
           .select("n_nationkey", "n_name", "n_regionkey"), s"$p/nation_csv")
       graft.sources.Sinks.jsonl(
         Tables.table(s, dir, "region")
           .select("r_regionkey", "r_name"), s"$p/region_jsonl")
-      p
-    })
+    }
 
   val queries: Seq[GQ] = Seq(
     // The non-parquet read paths, oracled end to end: nation comes back
@@ -67,21 +61,19 @@ object PipelineQueries {
 
     // The ORC read/write paths (`Sinks.orc` / `Sources.orc` — Spark's
     // native columnar sibling to parquet), oracled end to end the same
-    // way as c01: supplier round-trips through ORC once per (dir, JVM),
+    // way as c01: supplier round-trips through ORC once (an artifact),
     // the query aggregates the ORC read, and the DuckDB oracle runs on
     // the parquet original — storage format must never change answers.
     // DECIMAL/VARCHAR/BIGINT all cross the format boundary; the grouped
     // sum stays DECIMAL-exact.
     GQ("c04_orc_roundtrip",
       (s, dir) => {
-        val p = dumpMemo.computeIfAbsent(s"c04:$dir", _ => {
-          val d = java.nio.file.Files.createTempDirectory("graft-orc").toString
+        val p = Artifacts.dir(s, "orc", dir) { d =>
           graft.sources.Sinks.orc(
             Tables.table(s, dir, "supplier")
               .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal"),
             s"$d/supplier_orc")
-          d
-        })
+        }
         graft.sources.Sources.orc(s, s"$p/supplier_orc")
           .groupBy("s_nationkey")
           .agg(count(lit(1)).as("n_suppliers"),

@@ -15,13 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Sources {
 
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** A named table of the star-schema test layout: `dir/name.parquet`. */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
   def csv(spark: SparkSession, path: String, header: Boolean = true): DataFrame =
     spark.read.option("header", header.toString).option("inferSchema", "true").csv(path)
 

@@ -8,6 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+  /** A fresh empty scratch directory under the per-JVM [[Artifacts]] root,
+    * deleted with it when the JVM exits. */
+  def tmpDir(prefix: String): String = Artifacts.scratch(prefix)
 }
 
 object SparkSpec {

@@ -28,7 +28,7 @@ class TablesSpec extends SparkSpec {
     // branch floors to the same µs TimestampType value.
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val base = java.nio.file.Files.createTempDirectory("graft-ts-forms")
+    val base = tmpDir("graft-ts-forms")
     val micros = 1704067200123456L // 2024-01-01 00:00:00.123456 UTC
     val nanos = micros * 1000L + 829L // sub-µs tail must floor away
     def dir(form: String): String = s"$base/$form"

@@ -102,7 +102,7 @@ class BpeSpec extends SparkSpec {
 
   test("stored artifact round-trips, and OOV words fall back to character count") {
     val train = Seq((0L, "low low low lowest")).toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("bpe-spec").toString
+    val path = tmpDir("bpe-spec")
     Bpe.fitAndStore(train, path, rounds = 3)
     val merges = Bpe.storedMerges(spark, path)
       .as[(Int, String, String, Long)].collect().toSeq.sortBy(_._1)
@@ -123,7 +123,7 @@ class BpeSpec extends SparkSpec {
     // train on "aa aa bb": one merge round learns (a,a); aa → 1 token,
     // bb → 2 tokens; ref rate = 1e6·(2·1 + 1·2) div 3 = 1333333
     val train = Seq((0L, "aa aa bb")).toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("bpe-drift").toString
+    val path = tmpDir("bpe-drift")
     Bpe.fitAndStore(train, path, rounds = 1)
     val vocab = Bpe.storedVocab(spark, path)
     val batch = Seq(

@@ -46,7 +46,7 @@ class ClosureStoreSpec extends SparkSpec {
   }
 
   test("foldDelta equals the from-scratch closure over the union, hub move included") {
-    val p = java.nio.file.Files.createTempDirectory("cstore").toString
+    val p = tmpDir("cstore")
     ClosureStore.build(oldDocs, Seq(2L).toDF("doc_id"), p)
     val folded = ClosureStore.foldDelta(newDocs, spark.emptyDataset[Long].toDF("doc_id"), p)
       .select("node").as[Long].collect().toSet
@@ -56,7 +56,7 @@ class ClosureStoreSpec extends SparkSpec {
   }
 
   test("new seeds in the batch expand through the delta region") {
-    val p = java.nio.file.Files.createTempDirectory("cstore-seeds").toString
+    val p = tmpDir("cstore-seeds")
     ClosureStore.build(oldDocs, Seq(2L).toDF("doc_id"), p)
     val folded = ClosureStore.foldDelta(newDocs, Seq(3L).toDF("doc_id"), p)
       .select("node").as[Long].collect().toSet
@@ -70,7 +70,7 @@ class ClosureStoreSpec extends SparkSpec {
   }
 
   test("advance commits the daily cycle: two chained batches equal from-scratch") {
-    val p = java.nio.file.Files.createTempDirectory("cstore-adv").toString
+    val p = tmpDir("cstore-adv")
     ClosureStore.build(oldDocs, Seq(2L).toDF("doc_id"), p)
     // day 1: the hub-moving batch commits
     val day1 = ClosureStore.advance(newDocs, Seq(3L).toDF("doc_id"), p, "day1")
@@ -119,7 +119,7 @@ class ClosureStoreSpec extends SparkSpec {
   }
 
   test("storedPostings/storedClosure equal their inline derivations (the g10/d58 steady-state pin)") {
-    val p = java.nio.file.Files.createTempDirectory("cstore-read").toString
+    val p = tmpDir("cstore-read")
     ClosureStore.build(oldDocs, Seq(2L).toDF("doc_id"), p)
     ClosureStore.advance(newDocs, Seq(3L).toDF("doc_id"), p, "day1")
     val docs = oldDocs.unionByName(newDocs)
@@ -144,7 +144,7 @@ class ClosureStoreSpec extends SparkSpec {
   }
 
   test("compact folds batches into a fresh base: reads, folds, and probes invariant") {
-    val p = java.nio.file.Files.createTempDirectory("cstore-cmp").toString
+    val p = tmpDir("cstore-cmp")
     ClosureStore.build(oldDocs, Seq(2L).toDF("doc_id"), p)
     ClosureStore.advance(newDocs, Seq(3L).toDF("doc_id"), p, "day1")
     val day2Docs = Seq((0L, chunkA), (9L, "isolated brand new content words"))
@@ -178,7 +178,7 @@ class ClosureStoreSpec extends SparkSpec {
       .select("node").as[Long].collect().toSet == foldBefore)
     // ≡ from-scratch build over the accumulated corpus
     val all = oldDocs.unionByName(newDocs).unionByName(day2Docs)
-    val p2 = java.nio.file.Files.createTempDirectory("cstore-cmp2").toString
+    val p2 = tmpDir("cstore-cmp2")
     ClosureStore.build(all, Seq(2L, 3L).toDF("doc_id"), p2)
     assert(ClosureStore.storedClosure(spark, p2)
       .select("node").as[Long].collect().toSet == before)
@@ -206,7 +206,7 @@ class ClosureStoreSpec extends SparkSpec {
   }
 
   test("a crash mid-compact leaves the old generation fully readable") {
-    val p = java.nio.file.Files.createTempDirectory("cstore-crash").toString
+    val p = tmpDir("cstore-crash")
     ClosureStore.build(oldDocs, Seq(2L).toDF("doc_id"), p)
     ClosureStore.advance(newDocs, Seq(3L).toDF("doc_id"), p, "day1")
     val before = ClosureStore.storedClosure(spark, p)
@@ -226,7 +226,7 @@ class ClosureStoreSpec extends SparkSpec {
   }
 
   test("rebuild over a live store supersedes base AND batches, keeps the ledger") {
-    val p = java.nio.file.Files.createTempDirectory("cstore-rebuild").toString
+    val p = tmpDir("cstore-rebuild")
     ClosureStore.build(oldDocs, Seq(2L).toDF("doc_id"), p)
     ClosureStore.advance(newDocs, Seq(3L).toDF("doc_id"), p, "day1")
     // rebuild over a FILTERED corpus (docs 3, 5 dropped on purpose) — the
@@ -249,7 +249,7 @@ class ClosureStoreSpec extends SparkSpec {
   }
 
   test("a torn generation (one component rebuilt without restamping) fails loud") {
-    val p = java.nio.file.Files.createTempDirectory("cstore-torn").toString
+    val p = tmpDir("cstore-torn")
     ClosureStore.build(oldDocs, Seq(2L).toDF("doc_id"), p)
     // simulate a crashed partial rebuild: the closure is rewritten alone —
     // the parquet overwrite wipes its generation stamp
@@ -265,8 +265,8 @@ class ClosureStoreSpec extends SparkSpec {
   }
 
   test("stamps from two different builds never align") {
-    val p1 = java.nio.file.Files.createTempDirectory("cstore-g1").toString
-    val p2 = java.nio.file.Files.createTempDirectory("cstore-g2").toString
+    val p1 = tmpDir("cstore-g1")
+    val p2 = tmpDir("cstore-g2")
     ClosureStore.build(oldDocs, Seq(2L).toDF("doc_id"), p1)
     ClosureStore.build(oldDocs, Seq(2L).toDF("doc_id"), p2)
     // cross-wiring components of two builds is the mixed-generation state

@@ -6,9 +6,6 @@ import org.apache.spark.sql.functions._
 class CompactionSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
-
   private def fileSig(path: String, part: String): Set[(String, Long, Long)] = {
     val base = new java.io.File(s"$path/$part")
     if (!base.exists()) Set.empty
@@ -17,7 +14,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("compacts a many-small-files partition, leaves healthy partitions' files untouched") {
-    val path = tmp("graft-compact")
+    val path = tmpDir("graft-compact") + "/t"
     // yr=1 fragmented into 8 files; yr=2 healthy with 1 file
     (1 to 400).map(i => (i.toLong, s"v$i", 1)).toDF("id", "v", "yr")
       .repartition(8)
@@ -41,7 +38,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("escaped string partition values: the fragmented directory is compacted in place") {
-    val path = tmp("graft-compact-esc")
+    val path = tmpDir("graft-compact-esc") + "/t"
     // `a:b` is written `p=a%3Ab`: the prune filter must match the value,
     // and the swap must land on the directory as written
     (1 to 200).map(i => (i.toLong, "a:b")).toDF("id", "p")
@@ -56,7 +53,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("respects the per-partition size target (multiple output files when bytes demand it)") {
-    val path = tmp("graft-compact-sz")
+    val path = tmpDir("graft-compact-sz") + "/t"
     (1 to 20000).map(i => (i.toLong, "x" * 100, 1)).toDF("id", "v", "yr")
       .repartition(32)
       .write.partitionBy("yr").parquet(path)
@@ -69,7 +66,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("no-op when everything is healthy; stats lists every partition") {
-    val path = tmp("graft-compact-noop")
+    val path = tmpDir("graft-compact-noop") + "/t"
     Seq((1L, 1), (2L, 2)).toDF("id", "yr")
       .repartition(1)
       .write.partitionBy("yr").parquet(path)
@@ -81,7 +78,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("two-level partitioning: stats walks leaves, compaction rewrites only fragmented ones") {
-    val path = tmp("graft-compact-2lvl")
+    val path = tmpDir("graft-compact-2lvl") + "/t"
     (1 to 200).map(i => (i.toLong, 2024, 1 + i % 2)).toDF("id", "yr", "mo")
       .repartition(6)
       .write.partitionBy("yr", "mo").parquet(path)
@@ -96,7 +93,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("string partition columns round-trip through the dir-name parse") {
-    val path = tmp("graft-compact-str")
+    val path = tmpDir("graft-compact-str") + "/t"
     (1 to 100).map(i => (i.toLong, if (i % 2 == 0) "en" else "de"))
       .toDF("id", "lang").repartition(6)
       .write.partitionBy("lang").parquet(path)
@@ -108,7 +105,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("zorder mode: row-identical, packed to target count, clustering restored") {
-    val path = tmp("graft-compact-z")
+    val path = tmpDir("graft-compact-z") + "/t"
     // one directory, 20k uniform 2-D points scattered across 16 files —
     // the post-ingest worst case: fragmented AND unclustered
     val rnd = new scala.util.Random(23)
@@ -145,8 +142,8 @@ class CompactionSpec extends SparkSpec {
     // "hilbert") restores it without a second rewrite — same locality
     // bar as the morton test, same row-identity contract, and the
     // manifest refresh rides the commit like every maintenance op.
-    val path = tmp("graft-compact-h")
-    val man = tmp("graft-compact-h-man")
+    val path = tmpDir("graft-compact-h") + "/t"
+    val man = tmpDir("graft-compact-h-man") + "/t"
     val rnd = new scala.util.Random(29)
     val pts = Seq.fill(20000)((rnd.nextInt(1000).toLong, rnd.nextInt(1000).toLong))
       .zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y, 1) }
@@ -184,7 +181,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("unknown curve fails loud before any file is touched") {
-    val path = tmp("graft-compact-badcurve")
+    val path = tmpDir("graft-compact-badcurve") + "/t"
     (1 to 100).map(i => (i.toLong, i % 10L, i % 7L, 1)).toDF("id", "x", "y", "yr")
       .repartition(4).write.partitionBy("yr").parquet(path)
     val sig = fileSig(path, "yr=1")

@@ -92,7 +92,7 @@ class ComponentsSpec extends SparkSpec {
     // checkpointDir switches lineage truncation to durable checkpoint
     // blocks (the executor-churn-safe cluster mode); the labels — and the
     // d18-style oracle on top of them — must be identical in both modes
-    val dir = java.nio.file.Files.createTempDirectory("graft-ccp").toString
+    val dir = tmpDir("graft-ccp")
     val rnd = new Random(31)
     val edges = Seq.fill(120) {
       (rnd.nextInt(50).toLong, rnd.nextInt(50).toLong)

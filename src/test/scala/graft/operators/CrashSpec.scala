@@ -15,9 +15,6 @@ import graft.SparkSpec
 trait CrashSpec extends SparkSpec {
   spark.sparkContext.hadoopConfiguration.set("fs.crash.impl", classOf[CrashFs].getName)
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   /** A fresh copy of the local directory `fixture`, addressed through the
     * crash scheme. */
   def crashCopy(fixture: String): String = {

@@ -56,7 +56,7 @@ class DsirSpec extends SparkSpec {
     val docs = Seq(
       (1L, "a b x y"), (2L, "x y a b"), (3L, "a b a b x y")
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("dsir-spec").toString
+    val dir = tmpDir("dsir-spec")
     Dsir.fitAndStore(target, rawFit, dir)
     val mem = weighted(docs).orderBy("doc_id").collect().toSeq
     val stored = Dsir.weightsWithStored(spark, docs, dir)

@@ -112,7 +112,7 @@ class EditDistanceSpec extends SparkSpec {
   test("incremental pairs vs a stored index equal the full join restricted to batch-touching pairs") {
     val all = (0L until 220L).map(i => (i, mkStr(i)))
     val (hist, batch) = all.partition(_._1 % 5 != 2)
-    val root = java.nio.file.Files.createTempDirectory("ed-index").toString
+    val root = tmpDir("ed-index")
     EditDistance.writeIndex(hist.toDF("id", "s"), "id", "s", 2, root)
     val got = EditDistance.incrementalPairs(
         batch.toDF("id", "s"), "id", "s", root)
@@ -147,7 +147,7 @@ class EditDistanceSpec extends SparkSpec {
     val all = (0L until 160L).map(i => (i, mkStr(i)))
     val (hist, rest) = all.partition(_._1 % 3 == 0)
     val (b1, b2) = rest.partition(_._1 % 3 == 1)
-    val root = java.nio.file.Files.createTempDirectory("ed-compact").toString
+    val root = tmpDir("ed-compact")
     EditDistance.writeIndex(hist.toDF("id", "s"), "id", "s", 2, root)
     EditDistance.appendIndex(b1.toDF("id", "s"), "id", "s", root, "b1")
     EditDistance.appendIndex(b2.toDF("id", "s"), "id", "s", root, "b2")
@@ -167,7 +167,7 @@ class EditDistanceSpec extends SparkSpec {
     // compact-then-probe ≡ composed-probe ≡ from-scratch writeIndex
     assert(EditDistance.incrementalPairs(probe, "id", "s", root)
       .as[(Long, Long, Int)].collect().toSet == before)
-    val fresh = java.nio.file.Files.createTempDirectory("ed-compact2").toString
+    val fresh = tmpDir("ed-compact2")
     EditDistance.writeIndex(all.toDF("id", "s"), "id", "s", 2, fresh)
     assert(EditDistance.incrementalPairs(probe, "id", "s", fresh)
       .as[(Long, Long, Int)].collect().toSet == before)
@@ -192,7 +192,7 @@ class EditDistanceSpec extends SparkSpec {
   test("rebuild over a live index supersedes base AND batches, keeps the ledger") {
     val all = (0L until 120L).map(i => (i, mkStr(i)))
     val (hist, batch) = all.partition(_._1 % 4 != 3)
-    val root = java.nio.file.Files.createTempDirectory("ed-rebuild").toString
+    val root = tmpDir("ed-rebuild")
     EditDistance.writeIndex(hist.toDF("id", "s"), "id", "s", 2, root)
     EditDistance.appendIndex(batch.toDF("id", "s"), "id", "s", root, "day1")
     // rebuild over a FILTERED corpus (batch docs dropped on purpose): an
@@ -212,7 +212,7 @@ class EditDistanceSpec extends SparkSpec {
   test("appendIndex commits whole batches: double-append fails loud, a crashed staging dir is invisible") {
     val all = (0L until 120L).map(i => (i, mkStr(i)))
     val (hist, batch) = all.partition(_._1 % 4 != 3)
-    val root = java.nio.file.Files.createTempDirectory("ed-atomic").toString
+    val root = tmpDir("ed-atomic")
     EditDistance.writeIndex(hist.toDF("id", "s"), "id", "s", 2, root)
     EditDistance.appendIndex(batch.toDF("id", "s"), "id", "s", root, "b1")
     assert(EditDistance.batchIngested(spark, root, "b1"))
@@ -243,7 +243,7 @@ class EditDistanceSpec extends SparkSpec {
 
   test("a torn index base (one component rewritten without restamping) fails loud") {
     val all = (0L until 60L).map(i => (i, mkStr(i)))
-    val root = java.nio.file.Files.createTempDirectory("ed-torn").toString
+    val root = tmpDir("ed-torn")
     EditDistance.writeIndex(all.toDF("id", "s"), "id", "s", 2, root)
     // simulate a crashed partial rebuild: shorts rewritten alone — the
     // parquet overwrite wipes its generation stamp

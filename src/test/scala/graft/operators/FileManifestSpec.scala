@@ -6,11 +6,8 @@ import org.apache.spark.sql.functions._
 class FileManifestSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   test("range read via the manifest skips non-intersecting files, result row-identical") {
-    val base = tmp("graft-fm")
+    val base = tmpDir("graft-fm")
     val (table, man) = (s"$base/t", s"$base/m")
     // 8 files with tight, disjoint id ranges (sorted write = the z01 idea)
     spark.range(0, 8000).select(col("id"), (col("id") % 97).as("v"))
@@ -31,7 +28,7 @@ class FileManifestSpec extends SparkSpec {
   }
 
   test("conjunctive ranges intersect per column; no match returns empty with schema") {
-    val base = tmp("graft-fm2")
+    val base = tmpDir("graft-fm2")
     val (table, man) = (s"$base/t", s"$base/m")
     spark.range(0, 1000).select(col("id"), (col("id") * 2).as("w"))
       .repartitionByRange(4, col("id")).sortWithinPartitions("id")
@@ -49,7 +46,7 @@ class FileManifestSpec extends SparkSpec {
   }
 
   test("incremental refresh rides the delta: new files added, vanished dropped, rest kept") {
-    val base = tmp("graft-fm4")
+    val base = tmpDir("graft-fm4")
     val (table, man) = (s"$base/t", s"$base/m")
     spark.range(0, 100).select(col("id")).coalesce(1).write.parquet(table)
     FileManifest.build(spark, table, Seq("id"), man)
@@ -73,7 +70,7 @@ class FileManifestSpec extends SparkSpec {
   }
 
   test("countFast: contained files counted from stats, only boundary files scanned") {
-    val base = tmp("graft-fm5")
+    val base = tmpDir("graft-fm5")
     val (table, man) = (s"$base/t", s"$base/m")
     spark.range(0, 8000).select(col("id"))
       .repartitionByRange(8, col("id")).sortWithinPartitions("id")
@@ -90,7 +87,7 @@ class FileManifestSpec extends SparkSpec {
   }
 
   test("per-file blooms prune point lookups range stats cannot, with no false negatives") {
-    val base = tmp("graft-fm6")
+    val base = tmpDir("graft-fm6")
     val (table, man) = (s"$base/t", s"$base/m")
     // keys SHUFFLED across files (hash partitioning): every file's id
     // range spans ~[0, 8000), so range stats prune nothing — the bloom
@@ -113,7 +110,7 @@ class FileManifestSpec extends SparkSpec {
   }
 
   test("refresh membership plans as a broadcast semi-join, never an In-literal list") {
-    val base = tmp("graft-fm7")
+    val base = tmpDir("graft-fm7")
     val (table, man) = (s"$base/t", s"$base/m")
     // 128 files — small enough to build fast, enough that an In-list would
     // already be an expression-tree smell; the assertion is on the PLAN
@@ -138,7 +135,7 @@ class FileManifestSpec extends SparkSpec {
   }
 
   test("merge commit refreshes the manifest: vanished files never served, new rows visible") {
-    val base = tmp("graft-fm8")
+    val base = tmpDir("graft-fm8")
     val (table, man) = (s"$base/t", s"$base/m")
     spark.range(0, 2000)
       .select(col("id"), (col("id") % 2).cast("int").as("part"),
@@ -169,7 +166,7 @@ class FileManifestSpec extends SparkSpec {
 
     // control: the same merge WITHOUT manifestPath leaves a stale manifest
     // whose paths are gone — the failure mode the wiring exists to prevent
-    val base2 = tmp("graft-fm9")
+    val base2 = tmpDir("graft-fm9")
     val (table2, man2) = (s"$base2/t", s"$base2/m")
     spark.range(0, 2000)
       .select(col("id"), (col("id") % 2).cast("int").as("part"),
@@ -184,7 +181,7 @@ class FileManifestSpec extends SparkSpec {
   }
 
   test("compaction commit refreshes the manifest through the same contract") {
-    val base = tmp("graft-fm10")
+    val base = tmpDir("graft-fm10")
     val (table, man) = (s"$base/t", s"$base/m")
     spark.range(0, 4000)
       .select(col("id"), lit(1).cast("int").as("part"))
@@ -202,7 +199,7 @@ class FileManifestSpec extends SparkSpec {
   }
 
   test("schema-derived refresh rebuilds bloom stats with the stored bit size") {
-    val base = tmp("graft-fm11")
+    val base = tmpDir("graft-fm11")
     val (table, man) = (s"$base/t", s"$base/m")
     spark.range(0, 4000).select(col("id"), (col("id") % 7).as("v"))
       .repartition(4, col("id")).write.parquet(table)
@@ -226,7 +223,7 @@ class FileManifestSpec extends SparkSpec {
     // crash after Merge's commit rename but before its manifest refresh.
     // A manifestPath-less upsert IS that state — the commit bumped the
     // table generation, nothing refreshed the manifest.
-    val base = tmp("graft-fm12")
+    val base = tmpDir("graft-fm12")
     val (table, man) = (s"$base/t", s"$base/m")
     spark.range(0, 2000)
       .select(col("id"), (col("id") % 2).cast("int").as("part"),
@@ -265,7 +262,7 @@ class FileManifestSpec extends SparkSpec {
   }
 
   test("never-stamped tables verify trivially: externally-built manifests keep working") {
-    val base = tmp("graft-fm13")
+    val base = tmpDir("graft-fm13")
     val (table, man) = (s"$base/t", s"$base/m")
     spark.range(0, 100).select(col("id")).coalesce(1).write.parquet(table)
     FileManifest.build(spark, table, Seq("id"), man)
@@ -280,7 +277,7 @@ class FileManifestSpec extends SparkSpec {
   }
 
   test("bloom probe plans without a ScalaUDF node") {
-    val base = tmp("graft-fm14")
+    val base = tmpDir("graft-fm14")
     val (table, man) = (s"$base/t", s"$base/m")
     spark.range(0, 4000).select(col("id"))
       .repartition(4, col("id")).write.parquet(table)
@@ -298,7 +295,7 @@ class FileManifestSpec extends SparkSpec {
   }
 
   test("files with NULL stats for a predicated column are kept, never wrongly skipped") {
-    val base = tmp("graft-fm3")
+    val base = tmpDir("graft-fm3")
     val (table, man) = (s"$base/t", s"$base/m")
     Seq((1L, Some(5L)), (2L, Some(6L))).toDF("id", "x")
       .coalesce(1).write.parquet(table)

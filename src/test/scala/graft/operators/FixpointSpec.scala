@@ -72,7 +72,7 @@ class FixpointSpec extends SparkSpec {
     // loop stops after its first round
     val star = Seq((1L, 2L), (1L, 3L)).toDF("a_id", "b_id")
     contract("cc converged")(Components.connected(star))
-    val dir = java.nio.file.Files.createTempDirectory("fixpoint-cc").toString
+    val dir = tmpDir("fixpoint-cc")
     contract("cc durable", durable = true)(
       Components.connected(star, checkpointDir = Some(dir)))
   }
@@ -176,7 +176,7 @@ class FixpointSpec extends SparkSpec {
       override def onJobStart(js: SparkListenerJobStart): Unit =
         js.stageInfos.foreach(s => details.add(s.details))
     }
-    val dir = java.nio.file.Files.createTempDirectory("fixpoint-infer").toString
+    val dir = tmpDir("fixpoint-infer")
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("a_id", "b_id")
     spark.sparkContext.addSparkListener(listener)
     try {

@@ -12,7 +12,7 @@ class GenerationsSpec extends SparkSpec {
   import spark.implicits._
 
   test("generation dirs match past 7 digits and order numerically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-genwidth").toString
+    val dir = tmpDir("graft-genwidth")
     // lexicographically "gen-10000000" < "gen-9999999" — a string sort
     // would resolve the SUPERSEDED generation as current, and the 7-char
     // fixed regex would not match the new name at all (the published
@@ -70,7 +70,7 @@ class GenerationsSpec extends SparkSpec {
 
   for (st <- stores)
     test(s"a ${st.name} batch sequence past its 6-digit padding keeps replay protection") {
-      val dir = java.nio.file.Files.createTempDirectory("graft-batchwidth").toString
+      val dir = tmpDir("graft-batchwidth")
       st.build(dir)
       st.append(dir, "day1")
       assert(st.ids(dir) == st.served)

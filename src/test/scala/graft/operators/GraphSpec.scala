@@ -48,7 +48,7 @@ class GraphSpec extends SparkSpec {
     val a = ranks(Graph.pageRank(edges, iterations = 6))
     val b = ranks(Graph.pageRank(edges.repartition(13), iterations = 6))
     assert(a == b)
-    val dir = java.nio.file.Files.createTempDirectory("graft-pr-spec").toString
+    val dir = tmpDir("graft-pr-spec")
     val c = ranks(Graph.pageRank(edges, iterations = 6, checkpointDir = Some(dir)))
     assert(a == c)
   }
@@ -139,7 +139,7 @@ class GraphSpec extends SparkSpec {
       edges.toDF("src", "dst", "w").repartition(17), iterations = 4)
       .as[(Long, Long)].collect().toMap
     assert(a == b)
-    val dir = java.nio.file.Files.createTempDirectory("lpa-ckpt").toString
+    val dir = tmpDir("lpa-ckpt")
     val c = Graph.labelPropagation(edges.toDF("src", "dst", "w"),
       iterations = 4, checkpointDir = Some(dir))
       .as[(Long, Long)].collect().toMap
@@ -406,7 +406,7 @@ class GraphSpec extends SparkSpec {
     val b = Graph.reachableFrom(edges.repartition(17), seeds)
       .as[(Long, Int)].collect().toMap
     assert(a == b)
-    val dir = java.nio.file.Files.createTempDirectory("bfs-ckpt").toString
+    val dir = tmpDir("bfs-ckpt")
     val c = Graph.reachableFrom(edges, seeds, checkpointDir = Some(dir))
       .as[(Long, Int)].collect().toMap
     assert(a == c)

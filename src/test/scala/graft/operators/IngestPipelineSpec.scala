@@ -17,9 +17,6 @@ import org.apache.spark.sql.functions._
 class IngestPipelineSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(p: String): String =
-    java.nio.file.Files.createTempDirectory(p).toString
-
   /** Gate-passing English text (18 words, en-stopword scaffold) whose
     * unique words interleave the scaffold, so two docs with different
     * fillers share NO 3-shingle — near-dup pairs exist only where the
@@ -34,7 +31,7 @@ class IngestPipelineSpec extends SparkSpec {
     rows.toDF("doc_id", "lang", "source", "text")
 
   test("gate -> incremental dedup -> merge -> artifact refresh composes, and the day replays as a no-op") {
-    val root = tmp("graft-ingest")
+    val root = tmpDir("graft-ingest")
     val table = s"$root/corpus"
     val manifest = s"$root/manifest"
     val fpIdx = s"$root/fp"
@@ -89,7 +86,7 @@ class IngestPipelineSpec extends SparkSpec {
       // the delta once and pointing every artifact update at the landed
       // file is the production shape anyway (the delta is the day's
       // auditable output).
-      val landing = tmp("graft-ingest-landing") + "/delta"
+      val landing = tmpDir("graft-ingest-landing") + "/delta"
       afterExact
         .join(nd.select(col("new_id").as("doc_id")).distinct(),
           Seq("doc_id"), "left_anti")

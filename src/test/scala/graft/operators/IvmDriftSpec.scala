@@ -22,7 +22,7 @@ class IvmDriftSpec extends SparkSpec {
     val f2 = Seq((3L, 1.25), (1L, 0.75)).toDF("k", "amt")
     val f3 = Seq((2L, 100.0)).toDF("k", "amt")
 
-    val p = java.nio.file.Files.createTempDirectory("graft-ivm").toString + "/v"
+    val p = tmpDir("graft-ivm") + "/v"
     view(f1).write.parquet(p)
     Ivm.maintainAdditive(spark, p, view(f2), Seq("grp"), Seq("n", "rev"))
     Ivm.maintainAdditive(spark, p, view(f3), Seq("grp"), Seq("n", "rev"))

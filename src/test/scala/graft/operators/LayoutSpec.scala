@@ -60,7 +60,7 @@ class LayoutSpec extends SparkSpec {
     val pts = Seq.fill(40000)((rnd.nextInt(1000).toLong, rnd.nextInt(1000).toLong))
       .zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
       .toDF("id", "x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("graft-layout").toFile
+    val dir = new java.io.File(tmpDir("graft-layout"))
     val natural = s"$dir/natural"
     val zordered = s"$dir/zorder"
     pts.repartition(16).write.mode("overwrite").parquet(natural)
@@ -82,7 +82,7 @@ class LayoutSpec extends SparkSpec {
     val pts = Seq.fill(40000)((rnd.nextInt(1000).toLong, rnd.nextInt(1000).toLong))
       .zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
       .toDF("id", "x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("graft-hilbert").toFile
+    val dir = new java.io.File(tmpDir("graft-hilbert"))
     val natural = s"$dir/natural"
     val hilberted = s"$dir/hilbert"
     pts.repartition(16).write.mode("overwrite").parquet(natural)

@@ -64,7 +64,7 @@ class LmSpec extends SparkSpec {
   }
 
   test("stored gate artifact: fit once, score later runs identically from disk") {
-    val root = java.nio.file.Files.createTempDirectory("graft-lm-spec").toString
+    val root = tmpDir("graft-lm-spec")
     val refDocs = (1 to 40).map(i =>
       (i.toLong, s"a b w${i % 5} a c token${i % 3} a b")).toDF("doc_id", "text")
     Lm.fitAndStoreGate(refDocs, root)
@@ -81,7 +81,7 @@ class LmSpec extends SparkSpec {
       .orderBy("doc_id").collect().map(_.mkString("|")).toSeq
     assert(stored == inline)
     // a second fit over the same slice reproduces the artifact bit-for-bit
-    val root2 = java.nio.file.Files.createTempDirectory("graft-lm-spec2").toString
+    val root2 = tmpDir("graft-lm-spec2")
     Lm.fitAndStoreGate(refDocs.repartition(7), root2)
     assert(spark.read.parquet(s"$root2/thresholds").head().toSeq ==
       thr.toSeq, "threshold fit must be sample- and partitioning-deterministic")
@@ -97,7 +97,7 @@ class LmSpec extends SparkSpec {
       (1L, "a b a b a b"), (2L, "a b a c"),
       (3L, "a c a c"), (4L, "z z")
     ).toDF("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft-lm-drift").toString
+    val root = tmpDir("graft-lm-drift")
     Lm.fitAndStoreGate(ref, root)
     val stored = spark.read.parquet(s"$root/thresholds").head()
     assert(stored.getAs[Long]("head_min") == 742856L

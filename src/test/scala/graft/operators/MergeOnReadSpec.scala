@@ -7,8 +7,7 @@ class MergeOnReadSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): String = {
-    val p = java.nio.file.Files
-      .createTempDirectory("graft-mor").toString + "/t"
+    val p = tmpDir("graft-mor") + "/t"
     spark.range(0, 1000)
       .select(col("id"), (col("id") % 4).cast("int").as("part"),
         (col("id") * 3).as("v"))
@@ -70,8 +69,7 @@ class MergeOnReadSpec extends SparkSpec {
   }
 
   test("NULL keys never match: null-keyed rows survive, null delete keys are inert") {
-    val p = java.nio.file.Files
-      .createTempDirectory("graft-mor-null").toString + "/t"
+    val p = tmpDir("graft-mor-null") + "/t"
     Seq((Some(1L), 0, "a"), (None, 0, "b"), (Some(2L), 0, "c"))
       .toDF("id", "part", "x")
       .write.partitionBy("part").parquet(p)

@@ -7,9 +7,6 @@ import org.apache.spark.sql.functions._
 class MergeSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
-
   /** (relative path, length, mtime) of every data file under a partition
     * dir — the copy-on-write invariant: untouched partitions keep their
     * exact files, byte-for-byte and timestamp-for-timestamp. */
@@ -28,7 +25,7 @@ class MergeSpec extends SparkSpec {
     ).toDF("id", "v", "yr", "amt")
 
   test("upsert replaces matched rows, inserts the rest, leaves untouched partitions' files alone") {
-    val path = tmp("graft-merge-up")
+    val path = tmpDir("graft-merge-up") + "/t"
     graft.sources.Sinks.parquetPartitioned(base(), path, Seq("yr"))
     val sig2023 = fileSig(path, "yr=2023")
     val sig2025 = fileSig(path, "yr=2025")
@@ -54,7 +51,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("upsert is idempotent: re-applying the same batch converges") {
-    val path = tmp("graft-merge-idem")
+    val path = tmpDir("graft-merge-idem") + "/t"
     graft.sources.Sinks.parquetPartitioned(base(), path, Seq("yr"))
     val batch = Seq((4L, "D!", 2024, 44.0), (99L, "new", 2024, 99.0))
       .toDF("id", "v", "yr", "amt")
@@ -67,7 +64,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("the target read is partition-pruned to the batch's partitions") {
-    val path = tmp("graft-merge-prune")
+    val path = tmpDir("graft-merge-prune") + "/t"
     graft.sources.Sinks.parquetPartitioned(base(), path, Seq("yr"))
     val batch = Seq((4L, "D!", 2024, 44.0)).toDF("id", "v", "yr", "amt")
     // same filter Merge builds internally; assert it resolves to
@@ -81,7 +78,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("delete removes matched keys, drops fully-emptied partition dirs, keeps the rest") {
-    val path = tmp("graft-merge-del")
+    val path = tmpDir("graft-merge-del") + "/t"
     graft.sources.Sinks.parquetPartitioned(base(), path, Seq("yr"))
     val sig2023 = fileSig(path, "yr=2023")
 
@@ -99,7 +96,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("two-level partitioning: upsert and delete touch only the named leaf dirs") {
-    val path = tmp("graft-merge-2lvl")
+    val path = tmpDir("graft-merge-2lvl") + "/t"
     val base2 = Seq(
       (1L, 2023, 1, "a"), (2L, 2023, 2, "b"),
       (3L, 2024, 1, "c"), (4L, 2024, 1, "d"), (5L, 2024, 2, "e")
@@ -134,7 +131,7 @@ class MergeSpec extends SparkSpec {
     // row alive in the untouched directory. Partition columns must be
     // stable row properties (event date, language) — never mutable
     // attributes.
-    val path = tmp("graft-merge-move")
+    val path = tmpDir("graft-merge-move") + "/t"
     graft.sources.Sinks.parquetPartitioned(base(), path, Seq("yr"))
     val moved = Seq((1L, "a!", 2024, 99.0)).toDF("id", "v", "yr", "amt") // was yr=2023
     Merge.upsert(spark, path, moved, Seq("id"), Seq("yr"))
@@ -144,7 +141,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("empty change batch is a no-op") {
-    val path = tmp("graft-merge-empty")
+    val path = tmpDir("graft-merge-empty") + "/t"
     graft.sources.Sinks.parquetPartitioned(base(), path, Seq("yr"))
     val sig = Seq("yr=2023", "yr=2024", "yr=2025").map(fileSig(path, _))
     val empty = Seq.empty[(Long, String, Int, Double)].toDF("id", "v", "yr", "amt")
@@ -158,7 +155,7 @@ class MergeSpec extends SparkSpec {
     // Spark escapes some characters of partition values in directory
     // names (`a:b` is written `p=a%3Ab`): the emptied set must compare
     // names as written, never re-format `col=value`
-    val path = tmp("graft-merge-esc")
+    val path = tmpDir("graft-merge-esc") + "/t"
     val rows = Seq((1L, "a:b"), (2L, "x y"), (3L, "plain"), (4L, "plain"))
       .toDF("id", "p")
     graft.sources.Sinks.parquetPartitioned(rows, path, Seq("p"))
@@ -180,7 +177,7 @@ class MergeSpec extends SparkSpec {
 
   test("date and timestamp partitions: upsert swaps and delete empties the right leaves") {
     import java.sql.{Date, Timestamp}
-    val path = tmp("graft-merge-dt")
+    val path = tmpDir("graft-merge-dt") + "/t"
     val (d1, d2) = (Date.valueOf("2024-01-01"), Date.valueOf("2024-01-02"))
     val (t1, t2) = (Timestamp.valueOf("2024-01-01 10:30:00"),
       Timestamp.valueOf("2024-01-01 11:45:00"))
@@ -207,7 +204,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("upsert writes every row once: task recordsWritten equals rowsWritten") {
-    val path = tmp("graft-merge-once")
+    val path = tmpDir("graft-merge-once") + "/t"
     graft.sources.Sinks.parquetPartitioned(base(), path, Seq("yr"))
     val batch = Seq((1L, "A!", 2023, 11.0), (4L, "D!", 2024, 44.0),
       (99L, "new", 2024, 99.0)).toDF("id", "v", "yr", "amt")
@@ -240,7 +237,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("a crashed attempt's leftover staging tree never reaches the table") {
-    val path = tmp("graft-merge-leftover")
+    val path = tmpDir("graft-merge-leftover") + "/t"
     graft.sources.Sinks.parquetPartitioned(base(), path, Seq("yr"))
     // what a crash between the staged write and the swap leaves behind: a
     // staged leaf for a touched partition and one for an untouched one

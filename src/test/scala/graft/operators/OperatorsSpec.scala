@@ -419,7 +419,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("every ANN top-k entry point rejects k < 1 by name, before any work") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sim-k").toString
+    val dir = tmpDir("graft-sim-k")
     VectorIndex.write(vecs, dir, nCentroids = 2, m = 3, ks = 2)
     // empty inputs too: they used to short-cut to an empty frame unchecked
     for (k <- Seq(0, -1); (corpus, queries) <- Seq((vecs, vecs), (noVecs, noVecs))) {
@@ -700,7 +700,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("IVF ANN and a stored-index search on empty queries return an empty, correctly-typed result") {
     assertEmptyTopK(Similarity.ivfTopK(vecs, noVecs, k = 2, nCentroids = 2))
-    val dir = java.nio.file.Files.createTempDirectory("graft-sim-empty").toString
+    val dir = tmpDir("graft-sim-empty")
     VectorIndex.write(vecs, dir, nCentroids = 2, m = 3, ks = 2)
     assertEmptyTopK(VectorIndex.search(noVecs, dir, k = 2))
   }
@@ -1024,7 +1024,7 @@ class SinksSpec extends SparkSpec {
   import spark.implicits._
 
   test("parquet/jsonl/csv/orc sinks round-trip") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sinks").toString
+    val dir = tmpDir("graft-sinks")
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "name")
     graft.sources.Sinks.parquet(df, s"$dir/p")
     graft.sources.Sinks.jsonl(df, s"$dir/j")
@@ -1057,7 +1057,7 @@ object SinkState {
 class SourcesSpec extends SparkSpec {
 
   test("textLines drops blank lines") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-src").toFile
+    val dir = new java.io.File(tmpDir("graft-src"))
     val f = new java.io.File(dir, "a.txt")
     val w = new java.io.PrintWriter(f)
     w.println("hello"); w.println("   "); w.println(""); w.println("world")
@@ -1067,7 +1067,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("partitioned parquet layout prunes non-matching partitions at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val dir = tmpDir("graft-part")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     graft.sources.Sinks.parquetPartitioned(docs, s"$dir/docs", Seq("lang"))
     val langs = docs.select("lang").distinct().collect().map(_.getString(0))
@@ -1087,7 +1087,7 @@ class SourcesSpec extends SparkSpec {
 
   test("dynamic partition overwrite replaces only the written partitions (daily-ingest contract)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-dpo").toString
+    val dir = tmpDir("graft-dpo")
     def rows(p: String): Set[(Int, Long)] =
       spark.read.parquet(p).select("day", "id").collect()
         .map(r => (r.getInt(0), r.getLong(1))).toSet
@@ -1108,7 +1108,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("localFiles filters by postfix and exposes basename id") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-files").toFile
+    val dir = new java.io.File(tmpDir("graft-files"))
     for (n <- Seq("x.json", "y.json", "z.txt", ".hidden.json")) {
       val w = new java.io.PrintWriter(new java.io.File(dir, n)); w.print("{}"); w.close()
     }
@@ -1122,7 +1122,7 @@ class SourcesSpec extends SparkSpec {
     // column is a conflict, not a silent cast — widening means rewriting
     // or view-casting, never mergeSchema. Pin both sides.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-sev").toString
+    val dir = tmpDir("graft-sev")
     Seq((1, "a")).toDF("id", "x").write.parquet(s"$dir/t/g=1")
     Seq((2L, "b", 9.0)).toDF("id", "x", "extra").write.parquet(s"$dir/t2/g=1")
     // additive: ok

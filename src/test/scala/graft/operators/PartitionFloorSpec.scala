@@ -68,7 +68,7 @@ class PartitionFloorSpec extends SparkSpec {
   /** `rows` as a parquet table, read like the corpora the finders serve
     * (a local relation would be pre-shingled by the optimizer). */
   private def table[T <: Product : org.apache.spark.sql.Encoder](rows: Seq[T]): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-floor").resolve("t").toString
+    val dir = tmpDir("graft-floor") + "/t"
     rows.toDF("doc_id", "text").write.parquet(dir)
     spark.read.parquet(dir)
   }

@@ -128,7 +128,7 @@ class RetrievalSpec extends SparkSpec {
       .toDF("qid", "term")
     val inline = Retrieval.bm25TopK(docs, qs, k = 10).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSet
-    val root = java.nio.file.Files.createTempDirectory("bm25-idx").toString
+    val root = tmpDir("bm25-idx")
     Retrieval.writeBm25Index(docs, root)
     val (p, d, st) = Retrieval.readBm25Index(spark, root)
     val stored = Retrieval.bm25SearchIndexed(p, d, st, qs, k = 10).collect()

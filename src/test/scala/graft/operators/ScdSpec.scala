@@ -7,7 +7,7 @@ class ScdSpec extends SparkSpec {
   import spark.implicits._
 
   private def mkTable(): String = {
-    val p = java.nio.file.Files.createTempDirectory("graft-scd").toString + "/t"
+    val p = tmpDir("graft-scd") + "/t"
     val dim = Seq(
       (1L, "alice", "GOLD", 100.0),
       (2L, "bob", "SILVER", 50.0),
@@ -111,7 +111,7 @@ class ScdSpec extends SparkSpec {
   }
 
   test("null-safe change detection: value<->NULL transitions are changes, NULL==NULL is not") {
-    val p = java.nio.file.Files.createTempDirectory("graft-scd-n").toString + "/t"
+    val p = tmpDir("graft-scd-n") + "/t"
     Scd.init(spark, p,
       Seq((1L, Some("GOLD")), (2L, None))
         .toDF("id", "tier"), 1L)

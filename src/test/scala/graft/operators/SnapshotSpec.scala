@@ -20,7 +20,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("versioned publish / time-travel read / retention") {
-    val root = java.nio.file.Files.createTempDirectory("graft-ver").toString + "/t"
+    val root = tmpDir("graft-ver") + "/t"
     assert(Snapshot.versions(spark, root).isEmpty)
     assert(Snapshot.publish(Seq((1L, "a")).toDF("id", "x"), root) == 1)
     assert(Snapshot.publish(Seq((1L, "a2"), (2L, "b")).toDF("id", "x"), root) == 2)
@@ -101,7 +101,7 @@ class SnapshotSpec extends SparkSpec {
     // version (plans a DataFrame on it), a retention sweep deletes it
     // before the job acts. The contract: the pinned read must THROW at
     // action time — a silent empty result would quietly train on nothing.
-    val root = java.nio.file.Files.createTempDirectory("graft-ret").toString + "/t"
+    val root = tmpDir("graft-ret") + "/t"
     Snapshot.publish(spark.range(0, 100).toDF("id"), root)
     Snapshot.publish(spark.range(0, 50).toDF("id"), root)
     val pinned = Snapshot.readVersion(spark, root, Some(1)) // planned, not acted

@@ -20,9 +20,6 @@ class VectorIndexSpec extends SparkSpec {
     df.collect().map(r => (r.getLong(0), r.getLong(1),
       r.getDouble(2), r.getInt(3))).toSet
 
-  private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-vindex-$tag").toString
-
   /** Committed generation directories of a store, ascending (local FS —
     * tests only). */
   private def genDirs(dir: String): Seq[java.io.File] =
@@ -38,7 +35,7 @@ class VectorIndexSpec extends SparkSpec {
     val oneShot = Similarity.ivfPqTopK(emb, qs, k = 3,
       nCentroids = 8, nProbe = 4, m = 8, ks = 8, refine = 8,
       residual = false, coarseFitted = Some(cf), fitted = Some(pf))
-    val dir = tmp("plain")
+    val dir = tmpDir("graft-vindex-plain")
     VectorIndex.write(emb, dir, m = 8, ks = 8, residual = false,
       coarseFitted = Some(cf), fitted = Some(pf))
     val fromIndex = VectorIndex.search(qs, dir, k = 3, nProbe = 4, refine = 8)
@@ -52,7 +49,7 @@ class VectorIndexSpec extends SparkSpec {
     val oneShot = Similarity.ivfPqTopK(emb, qs, k = 3,
       nCentroids = 8, nProbe = 4, m = 8, ks = 8, refine = 8,
       residual = true, coarseFitted = Some(cf), fitted = Some(pf))
-    val dir = tmp("residual")
+    val dir = tmpDir("graft-vindex-residual")
     VectorIndex.write(emb, dir, m = 8, ks = 8, residual = true,
       coarseFitted = Some(cf), fitted = Some(pf))
     val fromIndex = VectorIndex.search(qs, dir, k = 3, nProbe = 4, refine = 8)
@@ -60,7 +57,7 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("auto nProbe rides the stored cell count") {
-    val dir = tmp("auto")
+    val dir = tmpDir("graft-vindex-auto")
     VectorIndex.write(emb, dir, nCentroids = 0, m = 8, ks = 8)
     // auto cells at 500 vectors → 23; auto probes → ceil(3·√23) = 15 —
     // sanity: the search runs and fills k slots for every query
@@ -69,7 +66,7 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("a torn index (one component rebuilt without restamping) fails loud") {
-    val dir = tmp("torn")
+    val dir = tmpDir("graft-vindex-torn")
     VectorIndex.write(emb, dir, nCentroids = 8, m = 8, ks = 8)
     VectorIndex.search(qs, dir, k = 3, nProbe = 4, refine = 8).count()
     // simulate a crashed partial hand-rolled rebuild INSIDE the live
@@ -97,11 +94,11 @@ class VectorIndexSpec extends SparkSpec {
     val pf = Similarity.fitPqCodebooks(emb, m = 8, ks = 8)
     val first = emb.filter(col("vec_id") % 2 === 0)
     val second = emb.filter(col("vec_id") % 2 === 1)
-    val incDir = tmp("inc")
+    val incDir = tmpDir("graft-vindex-inc")
     VectorIndex.write(first, incDir, m = 8, ks = 8,
       coarseFitted = Some(cf), fitted = Some(pf))
     VectorIndex.appendBatch(second, incDir, "b1")
-    val fullDir = tmp("full")
+    val fullDir = tmpDir("graft-vindex-full")
     VectorIndex.write(emb, fullDir, m = 8, ks = 8,
       coarseFitted = Some(cf), fitted = Some(pf))
     // the appended half must carry the same (cluster, codes) the one-pass
@@ -121,7 +118,7 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("a replayed batch id fails loud; batchIngested is the retry probe") {
-    val dir = tmp("replay")
+    val dir = tmpDir("graft-vindex-replay")
     VectorIndex.write(emb.filter(col("vec_id") % 2 === 0), dir, m = 8, ks = 8)
     val batch = emb.filter(col("vec_id") % 2 === 1)
     assert(!VectorIndex.batchIngested(spark, dir, "day1"))
@@ -138,7 +135,7 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("appendBatch refuses a batch of another dimensionality before staging it") {
-    val dir = tmp("dim")
+    val dir = tmpDir("graft-vindex-dim")
     VectorIndex.write(emb.filter(col("vec_id") < 250), dir, m = 8, ks = 8)
     val dim = VectorIndex.load(spark, dir).dim
     val short = emb.filter(col("vec_id") >= 250)
@@ -153,7 +150,7 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("a crash mid-append leaves nothing visible (staging is invisible)") {
-    val dir = tmp("tornbatch")
+    val dir = tmpDir("graft-vindex-tornbatch")
     VectorIndex.write(emb.filter(col("vec_id") < 250), dir, m = 8, ks = 8)
     val n0 = VectorIndex.load(spark, dir).codes.count()
     // simulate the crash: a half-staged batch directory that never renamed
@@ -172,7 +169,7 @@ class VectorIndexSpec extends SparkSpec {
   test("compactIndex folds batches into the base; search and replay probes invariant") {
     val cf = Similarity.fitCoarseQuantizer(emb, nCentroids = 8)
     val pf = Similarity.fitPqCodebooks(emb, m = 8, ks = 8)
-    val dir = tmp("compact")
+    val dir = tmpDir("graft-vindex-compact")
     VectorIndex.write(emb.filter(col("vec_id") % 3 === 0), dir, m = 8, ks = 8,
       coarseFitted = Some(cf), fitted = Some(pf))
     VectorIndex.appendBatch(emb.filter(col("vec_id") % 3 === 1), dir, "b1")
@@ -194,7 +191,7 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("a crash mid-rewrite leaves the previous generation fully readable") {
-    val dir = tmp("crashgen")
+    val dir = tmpDir("graft-vindex-crashgen")
     VectorIndex.write(emb.filter(col("vec_id") < 250), dir, m = 8, ks = 8)
     val answer = rows(VectorIndex.search(qs, dir, k = 3, nProbe = 4, refine = 8))
     // simulate a rebuild that crashed mid-stage: a half-written staging

@@ -149,7 +149,7 @@ class WinnowingSpec extends SparkSpec {
   test("the stored fingerprint index round-trips; scheme mismatch and torn store fail loud") {
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
     val hist = docs.filter(col("doc_id") < 250)
-    val root = java.nio.file.Files.createTempDirectory("win-idx").toString
+    val root = tmpDir("win-idx")
     Winnowing.writeFingerprintIndex(hist, root, k = 3, w = 4)
     val stored = Winnowing.readFingerprintIndex(spark, root, k = 3, w = 4)
       .as[(Long, Int, Long)].collect().toSet
@@ -201,7 +201,7 @@ class WinnowingSpec extends SparkSpec {
     // CAST_INVALID_INPUT on its first incremental probe
     val strDocs = Seq(("a", "one two three four five six seven"))
       .toDF("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("winnow-strid").toString
+    val root = tmpDir("winnow-strid")
     Winnowing.writeFingerprintIndex(
       Seq((1L, "one two three four five six")).toDF("doc_id", "text"), root)
     for (call <- Seq[() => Any](
@@ -218,7 +218,7 @@ class WinnowingSpec extends SparkSpec {
   test("appendIndex: cross pairs through the appended index equal overlapPairs on the union, at every uneven cut") {
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
     val hist = docs.filter(col("doc_id") < 250)
-    val root = java.nio.file.Files.createTempDirectory("win-append").toString
+    val root = tmpDir("win-append")
     Winnowing.writeFingerprintIndex(hist, root, k = 3, w = 4)
     // feed the rest in uneven committed batches; after each commit the
     // maintained index must answer EXACTLY like a from-scratch fingerprint
@@ -272,7 +272,7 @@ class WinnowingSpec extends SparkSpec {
 
   test("appendIndex replay and crash: double-append fails loud, staged litter is invisible") {
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
-    val root = java.nio.file.Files.createTempDirectory("win-replay").toString
+    val root = tmpDir("win-replay")
     Winnowing.writeFingerprintIndex(
       docs.filter(col("doc_id") < 250), root, k = 3, w = 4)
     val batch = docs.filter(col("doc_id") >= 250 && col("doc_id") < 300)

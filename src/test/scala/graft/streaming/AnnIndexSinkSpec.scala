@@ -50,7 +50,7 @@ class AnnIndexSinkSpec extends SparkSpec {
 
   test("live index equals a from-scratch build after every micro-batch, through mid-stream compaction") {
     implicit val sqlCtx = spark.sqlContext
-    val live = java.nio.file.Files.createTempDirectory("annsink").toString
+    val live = tmpDir("annsink")
     writeWithFits(base, live)
     val mem = MemoryStream[(Long, Seq[Double])]
     val q = Streaming.annIndexSink(
@@ -64,8 +64,7 @@ class AnnIndexSinkSpec extends SparkSpec {
         mem.addData(rest.slice(from, to))
         q.processAllAvailable()
         from = to
-        val fresh = java.nio.file.Files
-          .createTempDirectory(s"annsink-fresh-$to").toString
+        val fresh = tmpDir(s"annsink-fresh-$to")
         writeWithFits(base ++ rest.take(to), fresh)
         assert(answer(live) == answer(fresh),
           s"live index diverged from from-scratch after ${16 + to} vectors")
@@ -79,7 +78,7 @@ class AnnIndexSinkSpec extends SparkSpec {
   }
 
   test("a crash-replayed committed batch is skipped whole; empty batches commit nothing") {
-    val live = java.nio.file.Files.createTempDirectory("annsink-replay").toString
+    val live = tmpDir("annsink-replay")
     writeWithFits(base, live)
     assert(applyBatch(df(rest.take(12)), live, 0L))
     val before = answer(live)

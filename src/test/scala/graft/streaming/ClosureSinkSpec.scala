@@ -44,7 +44,7 @@ class ClosureSinkSpec extends SparkSpec {
   }
 
   private def emptyStore(): String = {
-    val p = java.nio.file.Files.createTempDirectory("closure-sink").toString
+    val p = tmpDir("closure-sink")
     ClosureStore.build(Seq.empty[(Long, String)].toDF("doc_id", "text"),
       Seq.empty[Long].toDF("doc_id"), p)
     p

@@ -33,7 +33,7 @@ class EditIndexSinkSpec extends SparkSpec {
       EditDistance.appendIndex(_, "doc_id", "text", path, _))
 
   private def emptyIndex(): String = {
-    val p = java.nio.file.Files.createTempDirectory("edsink").toString
+    val p = tmpDir("edsink")
     EditDistance.writeIndex(
       Seq.empty[(Long, String)].toDF("doc_id", "text"),
       "doc_id", "text", maxDist = 2, p)
@@ -61,8 +61,7 @@ class EditIndexSinkSpec extends SparkSpec {
         mem.addData(feed.slice(from, to))
         q.processAllAvailable()
         from = to
-        val fresh = java.nio.file.Files
-          .createTempDirectory(s"edsink-fresh-$to").toString
+        val fresh = tmpDir(s"edsink-fresh-$to")
         EditDistance.writeIndex(feed.take(to).toDF("doc_id", "text"),
           "doc_id", "text", maxDist = 2, fresh)
         assert(probePairs(live) == probePairs(fresh),
@@ -87,8 +86,7 @@ class EditIndexSinkSpec extends SparkSpec {
         mem.addData(feed.slice(from, to))
         q.processAllAvailable()
         from = to
-        val fresh = java.nio.file.Files
-          .createTempDirectory(s"edsink-cmp-$to").toString
+        val fresh = tmpDir(s"edsink-cmp-$to")
         EditDistance.writeIndex(feed.take(to).toDF("doc_id", "text"),
           "doc_id", "text", maxDist = 2, fresh)
         assert(probePairs(live) == probePairs(fresh),

@@ -38,7 +38,7 @@ class FingerprintIndexSinkSpec extends SparkSpec {
 
   test("live index equals a from-scratch build after every micro-batch, through mid-stream compaction") {
     implicit val sqlCtx = spark.sqlContext
-    val live = java.nio.file.Files.createTempDirectory("fpsink").toString
+    val live = tmpDir("fpsink")
     // an empty base is a valid bootstrap — it pins the (k, w) scheme
     Winnowing.writeFingerprintIndex(
       df(Nil), live, k = 3, w = 4)
@@ -54,8 +54,7 @@ class FingerprintIndexSinkSpec extends SparkSpec {
         mem.addData(feed.slice(from, to))
         q.processAllAvailable()
         from = to
-        val fresh = java.nio.file.Files
-          .createTempDirectory(s"fpsink-fresh-$to").toString
+        val fresh = tmpDir(s"fpsink-fresh-$to")
         Winnowing.writeFingerprintIndex(
           df(feed.take(to)), fresh, k = 3, w = 4)
         assert(postings(live) == postings(fresh),
@@ -76,7 +75,7 @@ class FingerprintIndexSinkSpec extends SparkSpec {
   }
 
   test("a crash-replayed committed batch is skipped whole; empty batches commit nothing") {
-    val live = java.nio.file.Files.createTempDirectory("fpsink-replay").toString
+    val live = tmpDir("fpsink-replay")
     Winnowing.writeFingerprintIndex(df(feed.take(3)), live, k = 3, w = 4)
     assert(applyBatch(df(feed.drop(3)), live, 0L))
     val before = postings(live)

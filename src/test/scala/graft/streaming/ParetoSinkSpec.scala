@@ -15,7 +15,7 @@ class ParetoSinkSpec extends SparkSpec {
   test("stored front equals the batch skyline after every micro-batch, whatever the boundaries") {
     implicit val sqlCtx = spark.sqlContext
     val all = pts(0 until 300)
-    val root = java.nio.file.Files.createTempDirectory("pareto-sink").toString
+    val root = tmpDir("pareto-sink")
     val mem = MemoryStream[(Long, Long, Long)]
     val q = Streaming.paretoSink(
       mem.toDF().toDF("id", "x", "y"), root, "x", "y",
@@ -38,7 +38,7 @@ class ParetoSinkSpec extends SparkSpec {
   }
 
   test("a crash-replayed committed batch is detected and skipped whole") {
-    val root = java.nio.file.Files.createTempDirectory("pareto-replay").toString
+    val root = tmpDir("pareto-replay")
     val b0 = pts(0 until 50).toDF("id", "x", "y")
     val b1 = pts(50 until 90).toDF("id", "x", "y")
     assert(Streaming.applyParetoBatch(b0, root, "x", "y", batchId = 0L))
@@ -51,7 +51,7 @@ class ParetoSinkSpec extends SparkSpec {
   }
 
   test("crash between the swap renames: reads fall back to the aside and replaying the batch converges") {
-    val root = java.nio.file.Files.createTempDirectory("pareto-crash").toString
+    val root = tmpDir("pareto-crash")
     val all = pts(0 until 90)
     assert(Streaming.applyParetoBatch(
       all.take(50).toDF("id", "x", "y"), root, "x", "y", 0L))
@@ -81,7 +81,7 @@ class ParetoSinkSpec extends SparkSpec {
   }
 
   test("a partial staging write left by a crash is discarded, never read") {
-    val root = java.nio.file.Files.createTempDirectory("pareto-stage").toString
+    val root = tmpDir("pareto-stage")
     val all = pts(0 until 80)
     assert(Streaming.applyParetoBatch(
       all.take(40).toDF("id", "x", "y"), root, "x", "y", 0L))
@@ -98,7 +98,7 @@ class ParetoSinkSpec extends SparkSpec {
   }
 
   test("a batch that improves nothing leaves the front unchanged; one that dominates everything replaces it") {
-    val root = java.nio.file.Files.createTempDirectory("pareto-fold").toString
+    val root = tmpDir("pareto-fold")
     val base = Seq((1L, 10L, 10L), (2L, 20L, 20L)).toDF("id", "x", "y")
     assert(Streaming.applyParetoBatch(base, root, "x", "y", 0L))
     // strictly dominated newcomers: front unchanged

@@ -12,7 +12,7 @@ class PpsSinkSpec extends SparkSpec {
   test("stream-fed sample converges to the batch-mode draw, whatever the batch boundaries") {
     implicit val sqlCtx = spark.sqlContext
     val all = (1L to 120L).map(i => (i, words((i % 11).toInt + 1)))
-    val root = java.nio.file.Files.createTempDirectory("pps-sink").toString
+    val root = tmpDir("pps-sink")
     val mem = MemoryStream[(Long, String)]
     val q = Streaming.ppsSampleSink(
       mem.toDF().toDF("doc_id", "text"), root, k = 15,
@@ -37,7 +37,7 @@ class PpsSinkSpec extends SparkSpec {
   }
 
   test("a crash-replayed committed batch is detected and skipped whole (stats not double-counted)") {
-    val root = java.nio.file.Files.createTempDirectory("pps-replay").toString
+    val root = tmpDir("pps-replay")
     val b0 = (1L to 40L).map(i => (i, words((i % 5).toInt + 1))).toDF("doc_id", "text")
     val b1 = (41L to 80L).map(i => (i, words((i % 7).toInt + 1))).toDF("doc_id", "text")
     assert(Streaming.applyPpsBatch(b0, root, k = 10, salt = "", batchId = 0L))

@@ -239,7 +239,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions.col
     val emb = graft.Tables.table(spark, sf(), "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("graft-annstream").toString
+    val dir = tmpDir("graft-annstream")
     graft.operators.VectorIndex.write(emb, dir, nCentroids = 8, m = 8, ks = 8)
     val queries = emb.filter(col("vec_id") < 16)
       .collect().map(r => (r.getLong(0),
@@ -420,7 +420,7 @@ class StreamingSpec extends SparkSpec {
 
   test("quantile drift stream gates batches against the stored reference sketch") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift").toString
+    val dir = tmpDir("graft_drift")
     // reference distribution: uniform 0..9999
     graft.operators.Drift.writeReferenceSketch(
       (0 until 10000).map(_.toDouble).toDF("value"), "value", 0.01, s"$dir/ref")
@@ -451,7 +451,7 @@ class StreamingSpec extends SparkSpec {
 
   test("categorical drift stream gates batches against the stored reference distribution") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_catdrift").toString
+    val dir = tmpDir("graft_catdrift")
     val ref = (Seq.fill(50)("a") ++ Seq.fill(50)("b")).toDF("cat")
     graft.operators.Drift.writeCategoricalReference(ref, "cat", s"$dir/ref")
     val inDist = (0 until 25).flatMap(_ => Seq(("g1", "a"), ("g1", "b")))
@@ -483,7 +483,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ewma sink: state equals the batch fold at every prefix; replay and late cells no-op") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ewma").toString
+    val dir = tmpDir("graft_ewma")
     def cells(rows: (String, Int, Long)*) = rows.toDF("k", "t", "x")
     def state() = Streaming.storedEwmaState(spark, dir).collect()
       .map(r => r.getString(0) -> ((r.getInt(1), r.getLong(2)))).toMap
@@ -849,7 +849,7 @@ class StreamingSpec extends SparkSpec {
     // Spark-native one is checkpointed offsets + idempotent file commits:
     // stop a query, restart it on the SAME checkpoint, and every input
     // record lands in the sink exactly once.
-    val base = java.nio.file.Files.createTempDirectory("graft-eo").toString
+    val base = tmpDir("graft-eo")
     val (inDir, outDir, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")
     def addFile(i: Int): Unit =
       Seq((i.toLong, s"doc$i")).toDF("id", "txt")
@@ -877,7 +877,7 @@ class StreamingSpec extends SparkSpec {
     // batch N but before the checkpoint records it. Simulated by deleting the
     // newest entry in <ckpt>/commits — on restart Spark re-delivers that
     // batch; the manifest marker must suppress the second external commit.
-    val base = java.nio.file.Files.createTempDirectory("graft-ifb").toString
+    val base = tmpDir("graft-ifb")
     val (inDir, ckpt, manifest) = (s"$base/in", s"$base/ckpt", s"$base/manifest")
     Seq(1L, 2L).toDF("id").coalesce(1).write.mode("append").parquet(inDir)
     val schema = spark.read.parquet(inDir).schema
@@ -915,7 +915,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("jsonl source captures malformed records instead of failing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl").toFile
+    val dir = new java.io.File(tmpDir("graft-jsonl"))
     val w = new java.io.PrintWriter(new java.io.File(dir, "a.jsonl"))
     w.println("""{"id": 1, "name": "ok"}""")
     w.println("""{broken json!!""")
@@ -935,7 +935,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("rate-limited file stream admits bounded files per micro-batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val dir = tmpDir("graft-stream")
     // three separate files
     (1 to 3).foreach { i =>
       Seq((i.toLong, s"doc$i")).toDF("id", "txt")
@@ -1026,7 +1026,7 @@ class StreamingSpec extends SparkSpec {
     //   (2) the untouched yr=2024 partition keeps its exact files,
     //   (3) a crash-replay of a committed batch leaves the table
     //       IDENTICAL — idempotence comes from the merge key, no manifest.
-    val base = java.nio.file.Files.createTempDirectory("graft-mus").toString
+    val base = tmpDir("graft-mus")
     val (inDir, ckpt, table) = (s"$base/in", s"$base/ckpt", s"$base/table")
     def addBatch(rows: Seq[(Long, String, Int, Double)]): Unit =
       rows.toDF("id", "v", "yr", "amt")
@@ -1075,7 +1075,7 @@ class StreamingSpec extends SparkSpec {
     //   (3) a crash-replayed batch appends redundant sidecar rows that
     //       change no answer (delete-by-key idempotence),
     //   (4) the maintenance fold applies the backlog and clears it.
-    val base = java.nio.file.Files.createTempDirectory("graft-mords").toString
+    val base = tmpDir("graft-mords")
     val (inDir, ckpt, table) = (s"$base/in", s"$base/ckpt", s"$base/table")
     spark.range(0, 500)
       .select(col("id"), (col("id") % 2).cast("int").as("part"))
@@ -1120,7 +1120,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming scd2 sink: per-batch versions, in-batch seq dedupe, replay converges") {
     import graft.operators.Scd
-    val base = java.nio.file.Files.createTempDirectory("graft-scds").toString
+    val base = tmpDir("graft-scds")
     val (inDir, ckpt, table) = (s"$base/in", s"$base/ckpt", s"$base/table")
     Scd.init(spark,
       table, Seq((1L, "GOLD"), (2L, "SILVER"), (3L, "GOLD")).toDF("id", "tier"),
@@ -1167,7 +1167,7 @@ class StreamingSpec extends SparkSpec {
 
   test("validated merge sink quarantines a contract-violating batch, table stays clean") {
     import graft.operators.Expectations._
-    val base = java.nio.file.Files.createTempDirectory("graft-vmus").toString
+    val base = tmpDir("graft-vmus")
     val (inDir, ckpt, table, quar) =
       (s"$base/in", s"$base/ckpt", s"$base/table", s"$base/quar")
     def addBatch(rows: Seq[(Long, Double, Int)]): Unit =
