@@ -40,6 +40,11 @@ object Artifacts {
 
   private val cells = new ConcurrentHashMap[(String, String), FutureTask[Any]]()
   private val seq = new AtomicLong()
+  private val completed = new AtomicLong()
+
+  /** How many builds have completed in this JVM: a timed run during which
+    * it moved paid a one-time build. */
+  private[graft] def builds: Long = completed.get
 
   private[graft] lazy val root: java.nio.file.Path = {
     val r = java.nio.file.Files.createTempDirectory("graft-")
@@ -58,7 +63,7 @@ object Artifacts {
   def value[T](spark: SparkSession, name: String, dataDir: String)(build: => T): T = {
     val key = (name, dataDir)
     val task = new FutureTask[Any](() =>
-      try tagged(spark, name)(build)
+      try { val v = tagged(spark, name)(build); completed.incrementAndGet(); v }
       catch { case e: Throwable => cells.remove(key); throw e })
     val cell = Option(cells.putIfAbsent(key, task)).getOrElse { task.run(); task }
     try cell.get().asInstanceOf[T]

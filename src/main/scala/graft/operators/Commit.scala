@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
   * or replaces committed state — [[Merge]]'s partition leaves (and so
   * [[Compaction]], [[Scd]], [[Ivm]]), [[Generations]]' generations and
   * batch directories, [[Snapshot]] versions, [[FileManifest]]'s manifest
-  * and stamps, the stream sinks' state and markers — takes three steps:
+  * and stamps, the stream sinks' state with its replay ledger and their
+  * quarantined batches — takes three steps:
   *
   *   - '''stage''': recover (below), then write the new copy into the
   *     dot-prefixed sibling `.<name>.inprogress`, hidden from Spark's

@@ -274,13 +274,12 @@ object Streaming {
       portableHash: Boolean = false,
       trigger: Trigger = Trigger.AvailableNow())(
       onPairs: (DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    newDocs.writeStream.trigger(trigger).foreachBatch {
-      (batch: DataFrame, id: Long) =>
-        val (pairs, sig) = graft.operators.Dedup.incrementalNeardupPairsImpl(
-          batch, historyBands, historyShingles, numHashes, bands, shingleK,
-          threshold, idCol, textCol, portableHash)
-        try onPairs(pairs, id)
-        finally sig.unpersist()
+    foreachBatchSink(newDocs, trigger) { (batch, id) =>
+      val (pairs, sig) = graft.operators.Dedup.incrementalNeardupPairsImpl(
+        batch, historyBands, historyShingles, numHashes, bands, shingleK,
+        threshold, idCol, textCol, portableHash)
+      try onPairs(pairs, id)
+      finally sig.unpersist()
     }
 
   /** Continuous BM25 search: a STREAM of query terms served against a
@@ -308,11 +307,10 @@ object Streaming {
       termCol: String = "term",
       trigger: Trigger = Trigger.AvailableNow())(
       onResults: (DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    queryStream.writeStream.trigger(trigger).foreachBatch {
-      (batch: DataFrame, id: Long) =>
-        onResults(graft.operators.Retrieval.bm25SearchIndexed(
-          postings, dfT, stats, batch, k, k1, b, maxDfFrac,
-          idCol, qidCol, termCol), id)
+    foreachBatchSink(queryStream, trigger) { (batch, id) =>
+      onResults(graft.operators.Retrieval.bm25SearchIndexed(
+        postings, dfT, stats, batch, k, k1, b, maxDfFrac,
+        idCol, qidCol, termCol), id)
     }
 
   /** Continuous ANN serving: a STREAM of query vectors served against a
@@ -343,10 +341,9 @@ object Streaming {
     // collect, and parquet listing ONCE, not per micro-batch
     val idx = graft.operators.VectorIndex.load(
       queryStream.sparkSession, indexPath)
-    queryStream.writeStream.trigger(trigger).foreachBatch {
-      (batch: DataFrame, id: Long) =>
-        onResults(graft.operators.VectorIndex.searchLoaded(
-          batch, idx, k, nProbe, refine, idCol, vecCol), id)
+    foreachBatchSink(queryStream, trigger) { (batch, id) =>
+      onResults(graft.operators.VectorIndex.searchLoaded(
+        batch, idx, k, nProbe, refine, idCol, vecCol), id)
     }
   }
 
@@ -375,11 +372,10 @@ object Streaming {
       mode: String = "overlaps",
       trigger: Trigger = Trigger.AvailableNow())(
       onMatches: (DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    intervalStream.writeStream.trigger(trigger).foreachBatch {
-      (batch: DataFrame, id: Long) =>
-        onMatches(graft.operators.IntervalJoin.overlapJoin(
-          batch, staticIntervals, keys,
-          leftStart, leftEnd, rightStart, rightEnd, bucketWidth, mode), id)
+    foreachBatchSink(intervalStream, trigger) { (batch, id) =>
+      onMatches(graft.operators.IntervalJoin.overlapJoin(
+        batch, staticIntervals, keys,
+        leftStart, leftEnd, rightStart, rightEnd, bucketWidth, mode), id)
     }
 
   /** Ingest-time curation gating: [[graft.operators.Curation.gate]]
@@ -423,10 +419,9 @@ object Streaming {
       onVerdicts: (DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] = {
     val ref = graft.operators.Drift.loadReferenceSketch(
       valueStream.sparkSession, referencePath)
-    valueStream.writeStream.trigger(trigger).foreachBatch {
-      (batch: DataFrame, id: Long) =>
-        onVerdicts(graft.operators.Drift.driftVerdicts(
-          batch, ref, probs, tolerance, valueCol), id)
+    foreachBatchSink(valueStream, trigger) { (batch, id) =>
+      onVerdicts(graft.operators.Drift.driftVerdicts(
+        batch, ref, probs, tolerance, valueCol), id)
     }
   }
 
@@ -461,10 +456,9 @@ object Streaming {
     val spark = curStream.sparkSession
     val raw = spark.read.parquet(referencePath)
     val refCounts = spark.createDataFrame(raw.collectAsList(), raw.schema)
-    curStream.writeStream.trigger(trigger).foreachBatch {
-      (batch: DataFrame, id: Long) =>
-        onVerdicts(graft.operators.Drift.categoricalDriftAgainst(
-          refCounts, batch, catCol, groupCol, driftMillionths), id)
+    foreachBatchSink(curStream, trigger) { (batch, id) =>
+      onVerdicts(graft.operators.Drift.categoricalDriftAgainst(
+        refCounts, batch, catCol, groupCol, driftMillionths), id)
     }
   }
 
@@ -652,14 +646,16 @@ object Streaming {
     * the process dies AFTER `fn` commits batch N to the external system but
     * BEFORE the checkpoint records it, restart re-delivers batch N.
     *
-    * This wrapper closes that window with a sink-side commit manifest: a
-    * `batch-<id>` marker file is committed ([[graft.operators.Commit]])
-    * only after `fn` returns, and re-delivered batchIds whose marker
-    * exists are skipped.
+    * This wrapper closes that window with a sink-side commit manifest: the
+    * replay ledger of the state sinks ([[applyStateBatch]]), committed
+    * under `manifestDir/current` only after `fn` returns. Batch ids are
+    * monotone within one checkpoint, so a re-delivered batch is one whose
+    * id is at or below the ledger's, and it is skipped. One manifest
+    * therefore serves one checkpoint.
     * `fn` itself may still run more than once for a batch that FAILED
-    * mid-write (markers only demote re-delivery of COMMITTED batches), so
-    * `fn`'s writes should target an idempotent key when the external system
-    * allows it — same contract the reference's ES sink gets from
+    * mid-write (the ledger only demotes re-delivery of COMMITTED batches),
+    * so `fn`'s writes should target an idempotent key when the external
+    * system allows it — same contract the reference's ES sink gets from
     * document-id upserts (reference examples/dump_es_ids.py:43-80).
     *
     * `manifestDir` must live next to the external sink's data (same
@@ -669,26 +665,14 @@ object Streaming {
       manifestDir: String,
       trigger: Trigger = Trigger.AvailableNow())(
       fn: (DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream.trigger(trigger).foreachBatch { (batch: DataFrame, id: Long) =>
-      applyMarkedBatch(batch, id, manifestDir)(fn)
-      ()
-    }
+    foreachBatchSink(df, trigger)(applyMarkedBatch(_, _, manifestDir)(fn))
 
   /** One micro-batch of [[idempotentForeachBatchSink]], factored out so
     * replay semantics are directly testable. Returns true when `fn` ran,
-    * false when the batch's marker showed it already committed. */
+    * false when the ledger showed the batch already committed. */
   private[graft] def applyMarkedBatch(batch: DataFrame, id: Long,
-      manifestDir: String)(fn: (DataFrame, Long) => Unit): Boolean = {
-    val spark = batch.sparkSession
-    val marker = s"$manifestDir/batch-$id"
-    if (pathExists(spark, Commit.resolve(spark, marker))) false
-    else {
-      fn(batch, id)
-      Commit.replace(spark, marker)(staged => Commit.fs(spark, staged)
-        .create(new org.apache.hadoop.fs.Path(staged), true).close())
-      true
-    }
-  }
+      manifestDir: String)(fn: (DataFrame, Long) => Unit): Boolean =
+    applyStateBatch(batch, manifestDir, id)((_, _) => fn(batch, id))
 
   private def pathExists(spark: SparkSession, path: String): Boolean =
     Commit.fs(spark, path).exists(new org.apache.hadoop.fs.Path(path))
@@ -702,7 +686,7 @@ object Streaming {
     * (re-applying a batch replaces the same rows with the same rows), so
     * a replayed micro-batch after a crash converges instead of
     * duplicating — the key-based complement of
-    * [[idempotentForeachBatchSink]]'s marker protocol, with the stronger
+    * [[idempotentForeachBatchSink]]'s replay ledger, with the stronger
     * property that it also dedups ACROSS batches: a key updated in batch
     * 3 and again in batch 7 holds batch 7's row, not two rows.
     * Cost per batch is |touched partitions|, never |table| — the batch
@@ -721,13 +705,14 @@ object Streaming {
 
   /** [[mergeUpsertSink]] with an ADMISSION gate: each micro-batch must
     * pass the [[graft.operators.Expectations]] suite before it may merge;
-    * a failing batch is appended UNCHANGED to `quarantinePath` (with its
-    * violation report beside it as JSONL) and the curated table stays
-    * untouched — a poisoned upstream batch quarantines instead of
-    * polluting every downstream consumer. The gate costs one aggregate
-    * over the batch being processed anyway. Re-admission is a replay of
-    * the quarantined files through the same sink once the contract or
-    * the data is fixed. */
+    * a failing batch is written UNCHANGED to `quarantinePath/batch-<id>`
+    * (with its violation report beside it as JSONL, `batch-<id>.report`,
+    * each committed whole, so a redelivered batch lands once) and the
+    * curated table stays untouched — a poisoned upstream batch
+    * quarantines instead of polluting every downstream consumer. The gate
+    * costs one aggregate over the batch being processed anyway.
+    * Re-admission is a replay of the quarantined files through the same
+    * sink once the contract or the data is fixed. */
   def validatedMergeUpsertSink(
       df: DataFrame,
       tablePath: String,
@@ -739,26 +724,20 @@ object Streaming {
   ): DataStreamWriter[org.apache.spark.sql.Row] = {
     require(expectations.isEmpty || quarantinePath.nonEmpty,
       "a gated sink needs a quarantinePath for failing batches")
-    df.writeStream.trigger(trigger).foreachBatch {
-      (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val admitted = expectations.isEmpty ||
-          graft.operators.Expectations.passes(batch, expectations)
-        if (!admitted) {
-          batch.write.mode("append").parquet(s"$quarantinePath/batch-$id")
+    foreachBatchSink(df, trigger) { (batch, id) =>
+      val spark = batch.sparkSession
+      val admitted = expectations.isEmpty ||
+        graft.operators.Expectations.passes(batch, expectations)
+      if (!admitted) {
+        Commit.replace(spark, s"$quarantinePath/batch-$id")(batch.write.parquet(_))
+        Commit.replace(spark, s"$quarantinePath/batch-$id.report")(
           graft.operators.Expectations.check(batch, expectations)
-            .filter(!org.apache.spark.sql.functions.col("passed"))
-            .write.mode("overwrite").json(s"$quarantinePath/batch-$id.report")
-        } else {
-          if (!pathExists(spark, tablePath)) {
-            // first admitted batch bootstraps the table (Merge needs a target)
-            Commit.replace(spark, tablePath)(
-              batch.write.partitionBy(partCols: _*).parquet(_))
-          } else {
-            graft.operators.Merge.upsert(spark, tablePath, batch, keyCols, partCols)
-            ()
-          }
-        }
+            .filter(!col("passed")).write.json(_))
+      } else if (!pathExists(spark, tablePath)) {
+        // first admitted batch bootstraps the table (Merge needs a target)
+        Commit.replace(spark, tablePath)(
+          batch.write.partitionBy(partCols: _*).parquet(_))
+      } else graft.operators.Merge.upsert(spark, tablePath, batch, keyCols, partCols)
     }
   }
 
@@ -791,19 +770,17 @@ object Streaming {
       baseVersion: Long = 1000L,
       trigger: Trigger = Trigger.AvailableNow()
   ): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream.trigger(trigger).foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(keyCols.map(col): _*).orderBy(col(seqCol).desc)
-          val latest = batch
-            .withColumn("__graft_rk", row_number().over(w))
-            .filter(col("__graft_rk") === 1)
-            .drop("__graft_rk", seqCol)
-          graft.operators.Scd.applyChanges(batch.sparkSession, tablePath,
-            latest, keyCols, version = baseVersion + batchId)
-          ()
-        }
+    foreachBatchSink(df, trigger) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(keyCols.map(col): _*).orderBy(col(seqCol).desc)
+        val latest = batch
+          .withColumn("__graft_rk", row_number().over(w))
+          .filter(col("__graft_rk") === 1)
+          .drop("__graft_rk", seqCol)
+        graft.operators.Scd.applyChanges(batch.sparkSession, tablePath,
+          latest, keyCols, version = baseVersion + batchId)
+      }
     }
 
   /** Stream-maintained πps SAMPLE artifact — the streaming counterpart of
@@ -817,14 +794,14 @@ object Streaming {
     * re-deliveries cannot change it (spec-pinned).
     *
     * Artifact layout: `path/current/sample` (the bottom-k priority rows)
-    * and `path/current/stats` (1 row: running token total + doc count +
-    * last applied batch id), committed together as one directory
-    * ([[committed]]). The token total accumulates per BATCH, so it is
-    * guarded by the batch id — a crash-replayed committed batch is
-    * detected (`batchId <= last_batch_id`) and skipped whole, the
-    * standard idempotent-foreachBatch recipe. Per batch: one batch scan
-    * (its own bottom-k pre-cut), a k+k-row merge, one KB-scale commit.
-    * Read the weighted sample back with [[storedPpsSample]]. */
+    * and `path/current/stats` (1 row: running token total + doc count),
+    * committed together with the replay ledger as one directory
+    * ([[applyStateBatch]]). The token total accumulates per BATCH, so it
+    * is guarded by the batch id — a crash-replayed committed batch is
+    * detected and skipped whole, the standard idempotent-foreachBatch
+    * recipe. Per batch: one batch scan (its own bottom-k pre-cut), a
+    * k+k-row merge, one KB-scale commit. Read the weighted sample back
+    * with [[storedPpsSample]]. */
   def ppsSampleSink(
       docs: DataFrame,
       path: String,
@@ -833,11 +810,7 @@ object Streaming {
       trigger: Trigger = Trigger.AvailableNow()
   ): DataStreamWriter[org.apache.spark.sql.Row] = {
     require(k >= 1, s"k must be >= 1, got $k")
-    docs.writeStream.trigger(trigger).foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        applyPpsBatch(batch, path, k, salt, batchId)
-        ()
-    }
+    foreachBatchSink(docs, trigger)(applyPpsBatch(_, path, k, salt, _))
   }
 
   /** One micro-batch of [[ppsSampleSink]], factored out so replay
@@ -845,70 +818,87 @@ object Streaming {
     * applied, false when it was recognized as already-committed. */
   private[graft] def applyPpsBatch(
       batch: DataFrame, path: String, k: Int, salt: String,
-      batchId: Long): Boolean = {
-    import org.apache.spark.sql.functions._
-    val spark = batch.sparkSession
-    val dir = committed(spark, path)
-    val statsPath = s"$dir/stats"
-    val samplePath = s"$dir/sample"
-    val hasStats = pathExists(spark, statsPath)
-    val (oldW, oldN, lastId) =
-      if (!hasStats) (0L, 0L, -1L)
-      else {
-        val r = spark.read.parquet(statsPath).head()
-        (r.getAs[Long]("w_total"), r.getAs[Long]("n_docs"),
-          r.getAs[Long]("last_batch_id"))
-      }
-    if (batchId <= lastId) return false // replay of a committed batch
-    val pri = graft.operators.Curation
-      .ppsPriorities(batch, "doc_id", "text", salt)
-      .persist()
-    // batch-side aggregates land on the driver as scalars — the stats
-    // row is built from values, never from a plan that reads its own path
-    val agg = pri.agg(
-      coalesce(sum(col("n_words")), lit(0L)).as("w"),
-      count(lit(1)).as("n")).head()
-    val (bw, bn) = (agg.getAs[Long]("w"), agg.getAs[Long]("n"))
-    val cand = pri.orderBy(col("priority"), col("doc_id")).limit(k)
-    val merged =
-      (if (hasStats)
-        spark.read.parquet(samplePath).unionByName(cand)
-          // a re-delivered doc recomputes the same priority (identical
-          // rows); a MUTATED re-delivery keeps the smallest (priority,
-          // size) deterministically rather than an arbitrary row
-          .groupBy(col("doc_id"))
-          .agg(min(struct(col("priority"), col("n_words"))).as("m"))
-          .select(col("doc_id"), col("m.n_words").as("n_words"),
-            col("m.priority").as("priority"))
-      else cand)
-        .orderBy(col("priority"), col("doc_id")).limit(k)
-        .localCheckpoint(true) // materialize before replacing its source
-    pri.unpersist()
-    import spark.implicits._
-    Commit.replace(spark, dir) { staged =>
-      merged.coalesce(1).write.parquet(s"$staged/sample")
-      Seq((oldW + bw, oldN + bn, batchId))
-        .toDF("w_total", "n_docs", "last_batch_id")
-        .coalesce(1).write.parquet(s"$staged/stats")
+      batchId: Long): Boolean =
+    applyStateBatch(batch, path, batchId) { (previous, staged) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val pri = graft.operators.Curation
+        .ppsPriorities(batch, "doc_id", "text", salt)
+        .persist()
+      try {
+        // batch-side aggregates land on the driver as scalars — the stats
+        // row is built from values, never from a plan that reads its own path
+        val agg = pri.agg(
+          coalesce(sum(col("n_words")), lit(0L)).as("w"),
+          count(lit(1)).as("n")).head()
+        val cand = pri.orderBy(col("priority"), col("doc_id")).limit(k)
+        val (sample, oldW, oldN) = previous.fold((cand, 0L, 0L)) { dir =>
+          val r = spark.read.parquet(s"$dir/stats").head()
+          (spark.read.parquet(s"$dir/sample").unionByName(cand)
+            // a re-delivered doc recomputes the same priority (identical
+            // rows); a MUTATED re-delivery keeps the smallest (priority,
+            // size) deterministically rather than an arbitrary row
+            .groupBy(col("doc_id"))
+            .agg(min(struct(col("priority"), col("n_words"))).as("m"))
+            .select(col("doc_id"), col("m.n_words").as("n_words"),
+              col("m.priority").as("priority")),
+            r.getAs[Long]("w_total"), r.getAs[Long]("n_docs"))
+        }
+        sample.orderBy(col("priority"), col("doc_id")).limit(k)
+          .coalesce(1).write.parquet(s"$staged/sample")
+        Seq((oldW + agg.getAs[Long]("w"), oldN + agg.getAs[Long]("n")))
+          .toDF("w_total", "n_docs").coalesce(1).write.parquet(s"$staged/stats")
+      } finally pri.unpersist()
     }
-    true
-  }
 
-  /** The committed directory of a replay-guarded sink artifact
-    * ([[ppsSampleSink]], [[ewmaSink]], [[paretoSink]]): `path/current`,
-    * holding the state beside `stats`, its `last_batch_id` ledger, so
-    * one [[Commit]] publishes both. Recovered first: the writer reads it
-    * next. */
-  private def committed(spark: SparkSession, path: String): String = {
+  /** The one replay ledger of the sinks that get Spark's monotone
+    * `foreachBatch` ids: a file holding the last committed batch id,
+    * beside the state it guards. */
+  private val Ledger = "last_batch_id"
+
+  /** The one apply of the replay-guarded sinks ([[ppsSampleSink]],
+    * [[ewmaSink]], [[paretoSink]], [[idempotentForeachBatchSink]]):
+    * recover `path/current`, read its ledger (a filesystem read, no Spark
+    * job), and skip a replay — a batch id at or below the ledger's. A new
+    * batch is one [[Commit.replace]] of `path/current`: `write` fills the
+    * staged directory it is given, reading the previous committed
+    * directory (None before the first batch), and the ledger is written
+    * beside the state, so one rename commits both. The previous directory
+    * stays in place until the staged write has finished, so the sink's
+    * lazy fold may read it. Returns true when the batch was committed. */
+  private def applyStateBatch(batch: DataFrame, path: String, batchId: Long)(
+      write: (Option[String], String) => Unit): Boolean = {
+    import org.apache.hadoop.fs.Path
+    import java.nio.charset.StandardCharsets.UTF_8
+    val spark = batch.sparkSession
     val dir = s"$path/current"
     Commit.recover(spark, dir)
-    dir
+    val ledger = new Path(dir, Ledger)
+    val fs = Commit.fs(spark, dir)
+    val last = if (!fs.exists(ledger)) None else {
+      val in = fs.open(ledger)
+      try Some(new String(in.readAllBytes(), UTF_8).trim.toLong) finally in.close()
+    }
+    if (last.exists(batchId <= _)) false // replay of a committed batch
+    else {
+      Commit.replace(spark, dir) { staged =>
+        write(last.map(_ => dir), staged)
+        val out = fs.create(new Path(staged, Ledger), true)
+        try out.write(batchId.toString.getBytes(UTF_8)) finally out.close()
+      }
+      true
+    }
   }
 
-  /** The last batch id committed under `dir`, -1 before the first. */
-  private def lastBatchId(spark: SparkSession, dir: String): Long =
-    if (!pathExists(spark, s"$dir/stats")) -1L
-    else spark.read.parquet(s"$dir/stats").head().getAs[Long]("last_batch_id")
+  /** The committed directory of a replay-guarded sink's artifact under
+    * `path`, for its readers: `path/current`, or its aside mid-swap.
+    * Fails naming `sink` and `path` when no batch was ever committed. */
+  private def storedState(spark: SparkSession, sink: String, path: String): String = {
+    val dir = Commit.resolve(spark, s"$path/current")
+    if (!pathExists(spark, s"$dir/$Ledger"))
+      throw new IllegalStateException(s"$sink: no batch committed under $path")
+    dir
+  }
 
   /** STREAM-MAINTAINED EWMA state — ts04's control chart as a continuously
     * updated artifact (`path/current/state`: one row per key,
@@ -922,12 +912,11 @@ object Streaming {
     * dropped (watermark semantics re-expressed against stored state; an
     * EWMA is order-defined, so retro-inserting a day would require
     * refolding history — rebuild from the cell table if that happens,
-    * stated). Replay is guarded by the last-batch-id stamp (ppsSampleSink's
-    * idempotent-foreachBatch recipe): a crash-replayed committed batch is
-    * recognized and skipped whole, so no cell ever double-folds. Everything
-    * is |keys|-scale — the corpus-scale reduction to cells happens
-    * upstream. State and ledger commit as one directory (`path/current`,
-    * [[ppsSampleSink]]'s layout). */
+    * stated). Replay is guarded by the replay ledger
+    * ([[applyStateBatch]]): a crash-replayed committed batch is
+    * recognized and skipped whole, so no cell ever double-folds.
+    * Everything is |keys|-scale — the corpus-scale reduction to cells
+    * happens upstream. */
   def ewmaSink(
       cells: DataFrame,
       path: String,
@@ -939,11 +928,8 @@ object Streaming {
   ): DataStreamWriter[org.apache.spark.sql.Row] = {
     require(alphaPpm > 0 && alphaPpm < 1000000L,
       s"alphaPpm must be in (0, 1e6), got $alphaPpm")
-    cells.writeStream.trigger(trigger).foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        applyEwmaBatch(batch, path, keyCol, tCol, xCol, alphaPpm, batchId)
-        ()
-    }
+    foreachBatchSink(cells, trigger)(
+      applyEwmaBatch(_, path, keyCol, tCol, xCol, alphaPpm, _))
   }
 
   /** One micro-batch of [[ewmaSink]], factored out so replay and
@@ -951,53 +937,42 @@ object Streaming {
     * batch was applied, false when recognized as already-committed. */
   private[graft] def applyEwmaBatch(
       batch: DataFrame, path: String, keyCol: String, tCol: String,
-      xCol: String, alphaPpm: Long, batchId: Long): Boolean = {
-    import org.apache.spark.sql.functions._
-    val spark = batch.sparkSession
-    val dir = committed(spark, path)
-    val statePath = s"$dir/state"
-    if (batchId <= lastBatchId(spark, dir)) return false // replay of a committed batch
-    val beta = 1000000L - alphaPpm
-    val newCells = batch
-      .select(col(keyCol).as("k"), col(tCol).as("t"), col(xCol).cast("long").as("x"))
-      .groupBy("k", "t").agg(sum(col("x")).as("x"))
-    val st =
-      if (pathExists(spark, statePath)) spark.read.parquet(statePath)
-      // typed empty frame: borrow the cell schema so k/t types always match
-      else newCells.select(col("k"), col("t").as("last_t"),
-        col("x").as("ewma")).limit(0)
-    val fresh = newCells.join(st, Seq("k"), "left")
-      // late by the artifact's clock → dropped, stated in the scaladoc
-      .filter(col("last_t").isNull || col("t") > col("last_t"))
-    val folded = fresh
-      .groupBy(col("k"), col("ewma").as("seed")) // seed constant per key
-      .agg(sort_array(collect_list(struct(col("t"), col("x")))).as("s"))
-      .select(col("k"),
-        expr("element_at(s, -1).t").as("last_t"),
-        expr(
-          s"""element_at(aggregate(transform(s, e -> e.x),
-             CASE WHEN seed IS NULL THEN CAST(array() AS ARRAY<BIGINT>)
-                  ELSE array(seed) END,
-             (acc, x) -> concat(acc, array(CASE WHEN size(acc) = 0 THEN x
-               ELSE (x * ${alphaPpm}L + element_at(acc, -1) * ${beta}L) DIV 1000000L
-               END))), -1)""").as("ewma"))
-    // keys untouched this batch (no cells, or only late cells) carry over
-    val newState = st.join(folded.select("k"), Seq("k"), "left_anti")
-      .unionByName(folded)
-      .localCheckpoint(true) // materialize before replacing its source
-    import spark.implicits._
-    Commit.replace(spark, dir) { staged =>
-      newState.coalesce(1).write.parquet(s"$staged/state")
-      Seq(batchId).toDF("last_batch_id").coalesce(1).write.parquet(s"$staged/stats")
+      xCol: String, alphaPpm: Long, batchId: Long): Boolean =
+    applyStateBatch(batch, path, batchId) { (previous, staged) =>
+      val beta = 1000000L - alphaPpm
+      val newCells = batch
+        .select(col(keyCol).as("k"), col(tCol).as("t"), col(xCol).cast("long").as("x"))
+        .groupBy("k", "t").agg(sum(col("x")).as("x"))
+      val st = previous.fold(
+        // typed empty frame: borrow the cell schema so k/t types always match
+        newCells.select(col("k"), col("t").as("last_t"), col("x").as("ewma")).limit(0))(
+        dir => batch.sparkSession.read.parquet(s"$dir/state"))
+      val fresh = newCells.join(st, Seq("k"), "left")
+        // late by the artifact's clock → dropped, stated in the scaladoc
+        .filter(col("last_t").isNull || col("t") > col("last_t"))
+      val folded = fresh
+        .groupBy(col("k"), col("ewma").as("seed")) // seed constant per key
+        .agg(sort_array(collect_list(struct(col("t"), col("x")))).as("s"))
+        .select(col("k"),
+          expr("element_at(s, -1).t").as("last_t"),
+          expr(
+            s"""element_at(aggregate(transform(s, e -> e.x),
+               CASE WHEN seed IS NULL THEN CAST(array() AS ARRAY<BIGINT>)
+                    ELSE array(seed) END,
+               (acc, x) -> concat(acc, array(CASE WHEN size(acc) = 0 THEN x
+                 ELSE (x * ${alphaPpm}L + element_at(acc, -1) * ${beta}L) DIV 1000000L
+                 END))), -1)""").as("ewma"))
+      // keys untouched this batch (no cells, or only late cells) carry over
+      st.join(folded.select("k"), Seq("k"), "left_anti")
+        .unionByName(folded)
+        .coalesce(1).write.parquet(s"$staged/state")
     }
-    true
-  }
 
   /** The read path of the [[ewmaSink]] artifact: current per-key smoothed
     * level — the |keys|-row table an alerting job joins today's volume
     * against. */
   def storedEwmaState(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"${Commit.resolve(spark, s"$path/current")}/state")
+    spark.read.parquet(s"${storedState(spark, "ewmaSink", path)}/state")
 
   /** STREAM-MAINTAINED PARETO FRONTIER — sk01's skyline as a continuously
     * updated artifact (`path/current/front`): each micro-batch folds as
@@ -1008,10 +983,9 @@ object Streaming {
     * on the front), so stored-front-after-any-prefix ≡ the batch skyline
     * over exactly the rows delivered (spec-pinned across uneven batch
     * boundaries). State is front-sized, never corpus-sized; replay is
-    * guarded by the last-batch-id stamp (ppsSampleSink's
-    * idempotent-foreachBatch recipe) so a crash-replayed committed batch
-    * is skipped whole. Batches must carry the same columns as the first
-    * batch (the artifact's schema). */
+    * guarded by the replay ledger ([[applyStateBatch]]) so a
+    * crash-replayed committed batch is skipped whole. Batches must carry
+    * the same columns as the first batch (the artifact's schema). */
   def paretoSink(
       points: DataFrame,
       path: String,
@@ -1019,38 +993,23 @@ object Streaming {
       yCol: String,
       trigger: Trigger = Trigger.AvailableNow()
   ): DataStreamWriter[org.apache.spark.sql.Row] =
-    points.writeStream.trigger(trigger).foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        applyParetoBatch(batch, path, xCol, yCol, batchId)
-        ()
-    }
+    foreachBatchSink(points, trigger)(applyParetoBatch(_, path, xCol, yCol, _))
 
   /** One micro-batch of [[paretoSink]], factored out so replay semantics
     * are directly testable. Returns true when the batch was applied,
     * false when recognized as already-committed. The front and its
-    * ledger commit as one directory ([[ppsSampleSink]]'s layout): the
-    * front is never overwritten in place, which would let a crash LOSE
-    * the accumulated frontier while the ledger had replay rebuild from
-    * an empty front. */
+    * ledger commit as one directory: the front is never overwritten in
+    * place, which would let a crash LOSE the accumulated frontier while
+    * the ledger had replay rebuild from an empty front. */
   private[graft] def applyParetoBatch(
       batch: DataFrame, path: String, xCol: String, yCol: String,
-      batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    val dir = committed(spark, path)
-    if (batchId <= lastBatchId(spark, dir)) return false // replay of a committed batch
-    val front =
-      if (pathExists(spark, s"$dir/front")) spark.read.parquet(s"$dir/front")
-      else batch.limit(0)
-    val merged = graft.operators.Skyline
-      .pareto2d(front.unionByName(batch), xCol, yCol)
-      .localCheckpoint(true) // materialize before replacing its source
-    import spark.implicits._
-    Commit.replace(spark, dir) { staged =>
-      merged.coalesce(1).write.parquet(s"$staged/front")
-      Seq(batchId).toDF("last_batch_id").coalesce(1).write.parquet(s"$staged/stats")
+      batchId: Long): Boolean =
+    applyStateBatch(batch, path, batchId) { (previous, staged) =>
+      val front = previous.fold(batch.limit(0))(
+        dir => batch.sparkSession.read.parquet(s"$dir/front"))
+      graft.operators.Skyline.pareto2d(front.unionByName(batch), xCol, yCol)
+        .coalesce(1).write.parquet(s"$staged/front")
     }
-    true
-  }
 
   /** One micro-batch of a stream-maintained stored index (the four
     * sinks below), factored out so replay semantics are directly
@@ -1090,15 +1049,6 @@ object Streaming {
     true
   }
 
-  private def indexSink(data: DataFrame, store: graft.operators.Generations.Store,
-      path: String, trigger: Trigger, compactEvery: Int)(
-      append: (DataFrame, String) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    data.writeStream.trigger(trigger).foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        applyIndexBatch(batch, store, path, batchId, compactEvery)(append)
-        ()
-    }
-
   /** STREAM-MAINTAINED contamination closure —
     * [[graft.operators.ClosureStore.advance]] as a streaming consumer
     * ([[applyIndexBatch]]): each micro-batch of documents folds into the
@@ -1118,12 +1068,11 @@ object Streaming {
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0
   ): DataStreamWriter[org.apache.spark.sql.Row] =
-    indexSink(docs, graft.operators.ClosureStore.store, path, trigger,
-        compactEvery) { (batch, id) =>
+    foreachBatchSink(docs, trigger)(applyIndexBatch(_, graft.operators.ClosureStore.store,
+        path, _, compactEvery) { (batch, id) =>
       graft.operators.ClosureStore.advance(batch,
         batch.filter(seedPredicate).select(idCol), path, id, idCol, textCol)
-      ()
-    }
+    })
 
   /** STREAM-MAINTAINED edit-distance segment index —
     * [[graft.operators.EditDistance.appendIndex]] as a streaming
@@ -1149,8 +1098,8 @@ object Streaming {
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0
   ): DataStreamWriter[org.apache.spark.sql.Row] =
-    indexSink(docs, graft.operators.EditDistance.store, path, trigger,
-      compactEvery)(graft.operators.EditDistance.appendIndex(_, idCol, strCol, path, _))
+    foreachBatchSink(docs, trigger)(applyIndexBatch(_, graft.operators.EditDistance.store,
+      path, _, compactEvery)(graft.operators.EditDistance.appendIndex(_, idCol, strCol, path, _)))
 
   /** STREAM-MAINTAINED IVFADC index —
     * [[graft.operators.VectorIndex.appendBatch]] as a streaming consumer
@@ -1170,8 +1119,8 @@ object Streaming {
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0
   ): DataStreamWriter[org.apache.spark.sql.Row] =
-    indexSink(vectors, graft.operators.VectorIndex.store, path, trigger,
-      compactEvery)(graft.operators.VectorIndex.appendBatch(_, path, _, idCol, vecCol))
+    foreachBatchSink(vectors, trigger)(applyIndexBatch(_, graft.operators.VectorIndex.store,
+      path, _, compactEvery)(graft.operators.VectorIndex.appendBatch(_, path, _, idCol, vecCol)))
 
   /** STREAM-MAINTAINED winnowing fingerprint index —
     * [[graft.operators.Winnowing.appendIndex]] as a streaming consumer
@@ -1192,25 +1141,19 @@ object Streaming {
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0
   ): DataStreamWriter[org.apache.spark.sql.Row] =
-    indexSink(docs, graft.operators.Winnowing.store, path, trigger,
-      compactEvery)(graft.operators.Winnowing.appendIndex(_, path, _, idCol, textCol))
+    foreachBatchSink(docs, trigger)(applyIndexBatch(_, graft.operators.Winnowing.store,
+      path, _, compactEvery)(graft.operators.Winnowing.appendIndex(_, path, _, idCol, textCol)))
 
   /** The read path of the [[paretoSink]] artifact: the current
     * non-dominated set over everything delivered so far. */
-  def storedParetoFront(spark: SparkSession, path: String): DataFrame = {
-    val front = s"${Commit.resolve(spark, s"$path/current")}/front"
-    if (!pathExists(spark, front))
-      throw new IllegalStateException(s"no pareto front stored under $path")
-    spark.read.parquet(front)
-  }
+  def storedParetoFront(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(s"${storedState(spark, "paretoSink", path)}/front")
 
   /** The weighted read path of the [[ppsSampleSink]] artifact: the stored
     * bottom-k rows with Horvitz–Thompson weights derived from the stored
     * running token total — identical columns to `Curation.ppsSample`. */
-  def storedPpsSample(
-      spark: org.apache.spark.sql.SparkSession, path: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val dir = Commit.resolve(spark, s"$path/current")
+  def storedPpsSample(spark: SparkSession, path: String, k: Int): DataFrame = {
+    val dir = storedState(spark, "ppsSampleSink", path)
     graft.operators.Curation.ppsWeighted(
       spark.read.parquet(s"$dir/sample"), k,
       spark.read.parquet(s"$dir/stats").select(col("w_total")))
@@ -1240,13 +1183,10 @@ object Streaming {
       partCols: Seq[String],
       trigger: Trigger = Trigger.AvailableNow()
   ): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream.trigger(trigger).foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.MergeOnRead.appendDeletes(
-            batch.sparkSession, tablePath, batch, keyCols, partCols)
-          ()
-        }
+    foreachBatchSink(df, trigger) { (batch, _) =>
+      if (!batch.isEmpty)
+        graft.operators.MergeOnRead.appendDeletes(
+          batch.sparkSession, tablePath, batch, keyCols, partCols)
     }
 }
 

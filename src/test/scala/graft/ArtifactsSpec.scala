@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 class ArtifactsSpec extends SparkSpec {
   private val data = "artifacts-spec"
@@ -12,20 +11,6 @@ class ArtifactsSpec extends SparkSpec {
     Files.write(Paths.get(dir, "v.txt"), text.getBytes("UTF-8"))
   private def read(dir: String): String =
     new String(Files.readAllBytes(Paths.get(dir, "v.txt")), "UTF-8")
-
-  /** The job descriptions of the Spark jobs `body` starts. */
-  private def jobsOf(body: => Unit): Seq[Option[String]] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        seen.add(Option(js.properties.getProperty(Artifacts.Description)))
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; org.apache.spark.sql.GraftBridge.drainListenerBus(spark) }
-    finally spark.sparkContext.removeSparkListener(l)
-    import scala.jdk.CollectionConverters._
-    seen.asScala.toSeq
-  }
 
   test("a build that requests another key's build returns both") {
     val outer = Artifacts.dir(spark, "outer", data) { d =>
@@ -82,9 +67,12 @@ class ArtifactsSpec extends SparkSpec {
     def build() = Artifacts.dir(spark, "once", data) { d =>
       spark.range(3).write.parquet(s"$d/t")
     }
+    val built = Artifacts.builds
     val first = build()
+    assert(Artifacts.builds == built + 1)
     var second = ""
     assert(jobsOf { second = build() }.isEmpty)
     assert(second == first)
+    assert(Artifacts.builds == built + 1)
   }
 }

@@ -113,4 +113,10 @@ class ParetoSinkSpec extends SparkSpec {
     assert(Streaming.storedParetoFront(spark, root)
       .as[(Long, Long, Long)].collect().toSet == Set((4L, 1L, 99L)))
   }
+
+  test("storedParetoFront on a path with no committed batch fails naming the sink and the path") {
+    val root = tmpDir("pareto-none")
+    val e = intercept[IllegalStateException](Streaming.storedParetoFront(spark, root))
+    assert(e.getMessage.contains("paretoSink") && e.getMessage.contains(root))
+  }
 }

@@ -59,4 +59,10 @@ class PpsSinkSpec extends SparkSpec {
       .select(max(col("ht_weight_ppm"))).head().getLong(0)
     assert(w == ws)
   }
+
+  test("storedPpsSample on a path with no committed batch fails naming the sink and the path") {
+    val root = tmpDir("pps-none")
+    val e = intercept[IllegalStateException](Streaming.storedPpsSample(spark, root, k = 10))
+    assert(e.getMessage.contains("ppsSampleSink") && e.getMessage.contains(root))
+  }
 }

@@ -2,11 +2,12 @@ package graft.streaming
 
 import graft.operators.CrashSpec
 
-/** [[CrashSpec]] over the stream sinks whose state replaces itself per
-  * micro-batch — the πps sample, the EWMA state, the pareto front, each
-  * committed with its `last_batch_id` ledger as one directory — and the
-  * idempotent foreachBatch marker. Each writer is the batch AFTER the
-  * fixture's first one; its replay is the redelivered batch. */
+/** [[CrashSpec]] over the stream sinks behind the one replay ledger —
+  * the πps sample, the EWMA state and the pareto front, each committed
+  * with its `last_batch_id` ledger file as one directory, and the
+  * idempotent foreachBatch sink, whose manifest is that ledger alone.
+  * Each writer is the batch AFTER the fixture's first one; its replay is
+  * the redelivered batch. */
 class SinkCrashSpec extends CrashSpec {
   import spark.implicits._
 

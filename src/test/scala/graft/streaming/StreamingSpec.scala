@@ -14,6 +14,20 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(minute: Int) = Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")
 
+  /** The crash window of a foreachBatch sink: drop the newest commit
+    * record under the checkpoint `ckpt`, so a restarted query re-delivers
+    * the batch the sink already committed. */
+  private def dropNewestCommit(ckpt: String): Unit = {
+    val dir = new java.io.File(s"$ckpt/commits")
+    val commits = dir.listFiles().filterNot(_.getName.startsWith("."))
+    assert(commits.nonEmpty)
+    val newest = commits.maxBy(_.getName.toLong)
+    // the local ChecksumFs keeps a .N.crc sidecar; it must go too or the
+    // restarted query's commit rename fails on the stale checksum
+    new java.io.File(dir, s".${newest.getName}.crc").delete()
+    assert(newest.delete())
+  }
+
   test("windowed counts over a memory stream with watermark") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
@@ -513,6 +527,12 @@ class StreamingSpec extends SparkSpec {
     assert(state() == s1)
   }
 
+  test("storedEwmaState on a path with no committed batch fails naming the sink and the path") {
+    val dir = tmpDir("graft_ewma_none")
+    val e = intercept[IllegalStateException](Streaming.storedEwmaState(spark, dir))
+    assert(e.getMessage.contains("ewmaSink") && e.getMessage.contains(dir))
+  }
+
   test("empty / all-null drift batch yields an explicit false verdict, never NULL") {
     // an empty micro-batch has no quantiles: batch_q is NULL, and before
     // the coalesce the verdict was NULL too — a `drifted == true` consumer
@@ -889,23 +909,13 @@ class StreamingSpec extends SparkSpec {
     val q1 = startQuery(); q1.awaitTermination(60000)
     assert(sunk.asScala.toSeq.sorted == Seq(1L, 2L))
     // simulate the crash window: drop the newest checkpoint commit record
-    def dropNewestCommit(): Unit = {
-      val dir = new java.io.File(s"$ckpt/commits")
-      val commits = dir.listFiles().filterNot(_.getName.startsWith("."))
-      assert(commits.nonEmpty)
-      val newest = commits.maxBy(_.getName.toLong)
-      // the local ChecksumFs keeps a .N.crc sidecar; it must go too or the
-      // restarted query's commit rename fails on the stale checksum
-      new java.io.File(dir, s".${newest.getName}.crc").delete()
-      assert(newest.delete())
-    }
-    dropNewestCommit()
+    dropNewestCommit(ckpt)
     val q2 = startQuery(); q2.awaitTermination(60000) // re-delivers the batch
     assert(sunk.asScala.toSeq.sorted == Seq(1L, 2L),
       "replayed committed batch must not re-commit externally")
     // contrast: the PLAIN foreachBatch sink double-commits under the same
     // replay, which is exactly the gap the manifest closes
-    dropNewestCommit()
+    dropNewestCommit(ckpt)
     val q3 = Streaming.foreachBatchSink(
       spark.readStream.schema(schema).parquet(inDir)) { (batch, _) =>
         batch.select("id").collect().foreach(r => sunk.add(r.getLong(0)))
@@ -1058,11 +1068,7 @@ class StreamingSpec extends SparkSpec {
     assert(files2024() == sig2024, "untouched partition must keep its files")
     // crash window: drop the newest checkpoint commit so the restarted
     // query re-delivers the already-merged batch
-    val commits = new java.io.File(s"$ckpt/commits")
-      .listFiles().filterNot(_.getName.startsWith("."))
-    val newest = commits.maxBy(_.getName.toLong)
-    new java.io.File(s"$ckpt/commits", s".${newest.getName}.crc").delete()
-    assert(newest.delete())
+    dropNewestCommit(ckpt)
     run() // re-delivers batch 1
     assert(snapshot() == want, "replayed batch must converge, not duplicate")
   }
@@ -1103,11 +1109,7 @@ class StreamingSpec extends SparkSpec {
     run()
     assert(visible() == 496)
     // crash window: drop the newest commit so the batch re-delivers
-    val commits = new java.io.File(s"$ckpt/commits")
-      .listFiles().filterNot(_.getName.startsWith("."))
-    val newest = commits.maxBy(_.getName.toLong)
-    new java.io.File(s"$ckpt/commits", s".${newest.getName}.crc").delete()
-    assert(newest.delete())
+    dropNewestCommit(ckpt)
     run()
     assert(visible() == 496, "replayed delete batch must converge, not over-delete")
     // maintenance fold: physical table == the streamed view, sidecar gone
@@ -1153,11 +1155,7 @@ class StreamingSpec extends SparkSpec {
     val before = Scd.history(spark, table)
       .orderBy("id", "scd_valid_from").collect().toSeq
     // crash window: drop the newest commit so the batch re-delivers
-    val commits = new java.io.File(s"$ckpt/commits")
-      .listFiles().filterNot(_.getName.startsWith("."))
-    val newest = commits.maxBy(_.getName.toLong)
-    new java.io.File(s"$ckpt/commits", s".${newest.getName}.crc").delete()
-    assert(newest.delete())
+    dropNewestCommit(ckpt)
     run()
     val after = Scd.history(spark, table)
       .orderBy("id", "scd_valid_from").collect().toSeq
@@ -1196,5 +1194,32 @@ class StreamingSpec extends SparkSpec {
     run()
     assert(spark.read.parquet(table).select("id").as[Long].collect().toSet
       == Set(1L, 2L, 3L))
+  }
+
+  test("validated merge sink: a redelivered quarantined batch lands once") {
+    import graft.operators.Expectations._
+    val base = tmpDir("graft-vmus-replay")
+    val (inDir, ckpt, table, quar) =
+      (s"$base/in", s"$base/ckpt", s"$base/table", s"$base/quar")
+    def addBatch(rows: Seq[(Long, Double, Int)]): Unit =
+      rows.toDF("id", "amt", "yr")
+        .coalesce(1).write.mode("append").parquet(inDir)
+    addBatch(Seq((1L, 10.0, 2024), (2L, 20.0, 2024)))
+    val schema = spark.read.parquet(inDir).schema
+    def run(): Unit = {
+      val q = Streaming.validatedMergeUpsertSink(
+        spark.readStream.schema(schema).parquet(inDir),
+        table, Seq("id"), Seq("yr"), Seq(InRange("amt", 0.0, 100.0)), quar)
+        .option("checkpointLocation", ckpt).start()
+      q.awaitTermination(60000)
+    }
+    run()
+    addBatch(Seq((3L, 999.0, 2024), (4L, 40.0, 2024)))
+    run() // quarantines batch 1
+    dropNewestCommit(ckpt)
+    run() // re-delivers batch 1
+    assert(spark.read.parquet(s"$quar/batch-1").count() == 2)
+    assert(spark.read.json(s"$quar/batch-1.report").count() == 1)
+    assert(spark.read.parquet(table).count() == 2)
   }
 }
